@@ -27,12 +27,15 @@ import org.apache.spark.sql.types._
   * (max ccos, min cid) exactly like
   * `row_number() OVER (ORDER BY ccos DESC, cid)`. ccos values are never
   * NaN/-0.0 (long-derived, den > 0 guard), so primitive comparisons
-  * equal Spark's SQL double ordering on this domain. */
+  * equal Spark's SQL double ordering on this domain.
+  *
+  * An EMPTY table is legal but must never be evaluated: the collect in
+  * graft.sim.Ann gates the corpus to no rows in that case. */
 final class IvfCents(val cids: Array[Long],
                      val ces: Array[Array[Long]],
                      val cns: Array[Long]) extends Serializable {
-  require(cids.nonEmpty && cids.length == ces.length && cids.length == cns.length,
-    s"IvfCents: ragged or empty centroid table (${cids.length}/${ces.length}/${cns.length})")
+  require(cids.length == ces.length && cids.length == cns.length,
+    s"IvfCents: ragged centroid table (${cids.length}/${ces.length}/${cns.length})")
 
   /** ccos of centroid c against (fx, nsq); nsqValid=false replicates the
     * NULL-norm → otherwise(0.0) fall-through. */

@@ -26,14 +26,18 @@ import org.apache.spark.sql.types._
   * FixedDot; distance = ‖x‖² + ‖c‖² − 2·x·c as exact longs; argmin
   * ties break to the smallest code id (codes iterate in ascending cid
   * order with a strict '<'), matching ArgMaxBy(cid, −dist) — exact
-  * because |d| stays far below 2^53 in the fx4 domain. */
+  * because |d| stays far below 2^53 in the fx4 domain.
+  *
+  * An all-EMPTY codebook is legal but must never be evaluated: the
+  * collect in graft.sim.Quantize gates the corpus to no rows then. */
 final class PqCodebook(val m: Int,
                        val cids: Array[Array[Long]],
                        val ces: Array[Array[Array[Long]]],
                        val cns: Array[Array[Long]]) extends Serializable {
   require(cids.length == m && ces.length == m && cns.length == m,
     s"PqCodebook: need $m subspaces, got ${cids.length}/${ces.length}/${cns.length}")
-  require(cids.forall(_.nonEmpty), "PqCodebook: empty subspace codebook")
+  require(cids.forall(_.nonEmpty) || cids.forall(_.isEmpty),
+    "PqCodebook: some subspace codebooks are empty")
 
   def encode(fx: ArrayData): InternalRow = {
     val n = fx.numElements()

@@ -76,15 +76,11 @@ object Pipeline extends QFamily {
     * bounded long collected once (the qcut convention). */
   private def pagerankIters(s: org.apache.spark.sql.SparkSession, dir: String,
       iters: Int): org.apache.spark.sql.DataFrame = {
-    // node table checkpointed ONCE: it feeds the max-id collect, the
-    // edge derivation (src side + semi-join target side) and every
-    // iteration's left join — as a lazy scan each of those re-read the
-    // corpus (6 scans at iters=1, 11 at iters=2); as a LogicalRDD the
-    // whole query reads the parquet exactly once (guide §2.4/§6; the
-    // connectedComponents checkpoint convention, inside the timed
-    // construction window like the qcut boundary collect)
+    // the edge table is materialized once inside
+    // Rank.pagerankIterations, so the node scan needs no checkpoint of
+    // its own: it is read by the max-id collect, the edge checkpoint and
+    // each iteration's left join
     val ids = t(s, dir, "documents").select(col("doc_id").as("node_id"))
-      .localCheckpoint(true)
     val n = ids.agg(max(col("node_id"))).head().getLong(0) + 1
     val eraw = ids
       .select(col("node_id").as("src"),
@@ -734,7 +730,7 @@ object Pipeline extends QFamily {
       (s, dir) => pagerankIters(s, dir, 1)),
 
     // the loop the single step hands off to, oracled at two chained
-    // iterations as ONE lazy plan (the q_kmeans_2iter convention);
+    // iterations as ONE lazy plan;
     // Rank.pagerankFit is the tol-stopped library loop (spec-pinned)
     QDef("q_pagerank_2iter",
       Some(pagerankSql(2)),
@@ -944,7 +940,7 @@ object Pipeline extends QFamily {
       Some(graft.sim.Ann.kmeansStepSql("embeddings", 25, 7)),
       (s, dir) => graft.sim.Ann.kmeansStep(t(s, dir, "embeddings"), 25, 7)),
 
-    // two chained Lloyd iterations as ONE lazy plan — the oracled proof
+    // two chained Lloyd iterations — the oracled proof
     // that Ann.kmeansFit's loop body (re-assign to the 6dp means,
     // re-average) is cross-engine deterministic round over round
     QDef("q_kmeans_2iter",

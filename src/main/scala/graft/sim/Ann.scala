@@ -93,76 +93,71 @@ object Ann {
   def seedWhere(centMod: Int, centOff: Int): String =
     s"vec_id % $centMod = $centOff ORDER BY vec_id LIMIT $MaxSeeds"
 
-  /** Collect the bounded coarse-quantizer centroid table (≤ [[MaxSeeds]]
-    * rows — the same KB-scale driver-table class as the PQ codebook and
-    * the silhouette centroids) for the scan-local
+  /** The seeded centroid table (cid, ce, cn) of a [[scaledBase]] frame:
+    * the [[seedRows]] members with their scaled vectors and norms. */
+  private def seedTable(base: DataFrame, centMod: Int, centOff: Int): DataFrame =
+    seedRows(base, centMod, centOff)
+      .select(col("vec_id").as("cid"), col("fxe").as("ce"), col("nsq").as("cn"))
+
+  /** Collect a centroid table (cid, ce, cn) — at most [[MaxSeeds]] rows,
+    * the same KB-scale class as the collected PQ codebook and
+    * silhouette centroids — for the scan-local
     * [[graft.functions.IvfAssign]] / [[graft.functions.IvfProbes]]
-    * projections. Rows sorted cid-ascending (the tie-break order). None
-    * when the seed class is empty (degenerate corpus) — callers keep
-    * the legacy crossJoin→argmax path, whose empty joins produce the
-    * identical (empty) results. NULL vector components read as 0,
-    * matching ArrayData.getLong on the legacy path. */
-  private def collectCents(base: DataFrame, centMod: Int,
-      centOff: Int): Option[graft.functions.IvfCents] = {
-    val rows = seedRows(base, centMod, centOff)
-      .select(col("vec_id"), col("fxe"), col("nsq")).collect()
-      .sortBy(_.getLong(0))
-    if (rows.isEmpty) None
-    else Some(new graft.functions.IvfCents(
-      rows.map(_.getLong(0)),
-      rows.map(r => if (r.isNullAt(1)) null
+    * projections, and gate `corpus` on it. This is the ONE place the
+    * empty table (a corpus whose seed class is empty) is handled: the
+    * corpus is returned as `where(lit(false))`, which Catalyst folds to
+    * an empty relation, so every assignment downstream is empty — the
+    * result the crossJoin → argmax plans gave there. A non-empty table
+    * returns `where(lit(true))`, which Catalyst prunes. Rows are sorted
+    * cid-ascending (the tie-break order). A table over [[MaxSeeds]] rows
+    * or with a NULL cid fails loudly. NULL vector components read as 0
+    * and a NULL vector or norm scores 0.0 (the IvfCents contract). */
+  private def collectCents(corpus: DataFrame,
+      cents: DataFrame): (DataFrame, graft.functions.IvfCents) = {
+    val rows = cents.select(col("cid"), col("ce"), col("cn"))
+      .limit(MaxSeeds + 1).collect()
+    require(rows.length <= MaxSeeds,
+      s"centroid table has more than $MaxSeeds rows (the MaxSeeds cap)")
+    require(!rows.exists(_.isNullAt(0)), "centroid table has a NULL cid")
+    val sorted = rows.sortBy(_.getLong(0))
+    val cb = new graft.functions.IvfCents(
+      sorted.map(_.getLong(0)),
+      sorted.map(r => if (r.isNullAt(1)) null
         else r.getSeq[Any](1).map(x =>
           if (x == null) 0L else x.asInstanceOf[Long]).toArray),
-      rows.map(r => if (r.isNullAt(2)) 0L else r.getLong(2))))
+      sorted.map(r => if (r.isNullAt(2)) 0L else r.getLong(2)))
+    (corpus.where(lit(sorted.nonEmpty)), cb)
   }
 
   /** (members, probes) with scan-LOCAL list assignment: `members` = the
     * base rows plus their assigned `list_id` (a pure projection —
     * [[graft.functions.IvfAssign]] over the embedded centroid table);
     * `probes` = the queryMod-sampled rows exploded to their `maxP`
-    * probed lists with 1-based `probe_rn`. Replaces the
-    * crossJoin(broadcast(cents)) → N×K argmax aggregation → corpus
-    * rejoin (+ the Q×K probe window's exchange) with zero shuffles at
-    * any scale; values/ties are bit-identical by the IvfCents
-    * arithmetic contract. Falls back to the legacy form when the seed
-    * class is empty (identical — empty — results there). */
+    * probed lists with 1-based `probe_rn`. Zero shuffles at any scale;
+    * values/ties are bit-identical to the crossJoin → argmax / probe
+    * window form by the IvfCents arithmetic contract. */
   private def listAssignment(base: DataFrame, queryMod: Int, centMod: Int,
-      centOff: Int, maxP: Int): (DataFrame, DataFrame) =
-    collectCents(base, centMod, centOff) match {
-      case Some(cb) =>
-        val members = base.withColumn("list_id",
-          graft.functions.IvfAssign(col("fxe"), cb).getField("cid"))
-        val probes = base.filter(col("vec_id") % queryMod === 0)
-          .withColumn("__p", explode(graft.functions.IvfProbes(col("fxe"), cb, maxP)))
-          .withColumn("list_id", col("__p").getField("cid"))
-          .withColumn("probe_rn", col("__p").getField("rn"))
-          .drop("__p")
-        (members, probes)
-      case None =>
-        val cents = seedRows(base, centMod, centOff)
-          .select(col("vec_id").as("cid"), col("fxe").as("ce"), col("nsq").as("cn"))
-        def scoreCents(df: DataFrame): DataFrame = df.crossJoin(broadcast(cents))
-          .withColumn("ccos", cosExpr(FixedDot(col("ce"), col("fxe")), col("cn"), col("nsq")))
-        val assign = scoreCents(base).groupBy("vec_id")
-          .agg(graft.functions.ArgMaxBy.argmax(col("cid"), col("ccos")).as("list_id"))
-        val members = base.join(assign, "vec_id")
-        val wA = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid"))
-        val probes = scoreCents(base.filter(col("vec_id") % queryMod === 0))
-          .withColumn("probe_rn", row_number().over(wA))
-          .filter(col("probe_rn") <= maxP)
-          .select(base.columns.map(col) ++ Seq(col("cid").as("list_id"), col("probe_rn")): _*)
-        (members, probes)
-    }
+      centOff: Int, maxP: Int): (DataFrame, DataFrame) = {
+    val (corpus, cb) = collectCents(base, seedTable(base, centMod, centOff))
+    val members = corpus.withColumn("list_id",
+      graft.functions.IvfAssign(col("fxe"), cb).getField("cid"))
+    val probes = corpus.filter(col("vec_id") % queryMod === 0)
+      .withColumn("__p", explode(graft.functions.IvfProbes(col("fxe"), cb, maxP)))
+      .withColumn("list_id", col("__p").getField("cid"))
+      .withColumn("probe_rn", col("__p").getField("rn"))
+      .drop("__p")
+    (members, probes)
+  }
 
   /** Scan-local coarse-assignment COLUMN over the raw `embedding`
     * column, for composition outside this object (the IVF-PQ serving
     * path fuses it with the PQ coding projection into one corpus
-    * pass). None when the seed class is empty — callers keep their
-    * legacy join path. */
+    * pass), returned with `vecs` gated by [[collectCents]]. */
   private[sim] def ivfAssignCol(vecs: DataFrame, centMod: Int,
-      centOff: Int): Option[Column] =
-    collectCents(scaledBase(vecs), centMod, centOff).map(cb =>
-      graft.functions.IvfAssign(scaled(col("embedding")), cb).getField("cid"))
+      centOff: Int): (DataFrame, Column) = {
+    val (corpus, cb) = collectCents(vecs, seedTable(scaledBase(vecs), centMod, centOff))
+    (corpus, graft.functions.IvfAssign(scaled(col("embedding")), cb).getField("cid"))
+  }
 
   /** Per-vector squared norm table: (vec_id, nsq raw-scale long). */
   def normSq(vecs: DataFrame): DataFrame =
@@ -260,7 +255,7 @@ object Ann {
   /** IVF-blocked hard-negative mining — the sub-quadratic form of
     * [[hardNegatives]] (the documented 100 TB path, registered end-to-end
     * rather than by analogy): every vector is assigned to its max-cosine
-    * IVF list (same native hash-aggregable argmax as [[ivfTopK]]), each
+    * IVF list (the scan-local assignment of [[ivfTopK]]), each
     * anchor probes its `nprobe` nearest lists, and only DIFFERENT-label
     * members of the probed lists are scored — the corpus side touches
     * N·nprobe/K candidate rows instead of the brute-force N·Q. At
@@ -569,40 +564,18 @@ object Ann {
           FixedDot(scaled(col("embedding")), scaled(col("embedding")))), 6).as("cosine"))
       .orderBy("query_id", "rank")
 
-  /** IVF-list-blocked embedding near-dup pairs (cosine ≥ th): every
-    * vector is assigned to its max-cosine centroid (same native argmax as
-    * [[ivfTopK]]), and pairs are generated WITHIN a list only. This is
-    * the content-blocked scale path the label-blocked [[embeddingPairs]]
-    * lacks: label blocks are unbounded (one hot label → quadratic pairs
-    * on one reducer), whereas list sizes average N/K and the centroid
-    * count K grows with the corpus, keeping per-list work bounded; at
-    * cluster scale list_id doubles as the partition key. Near-identical
-    * vectors land in the same list by construction (their centroid
-    * cosines are near-identical), so near-dup recall matches
-    * label-blocking in practice. */
-  /** Nearest-centroid list assignment (vec_id → list_id): the native
-    * hash-aggregable argmax ([[graft.functions.ArgMaxBy]]) over
-    * broadcast centroids — no window, no sort. This
-    * is also the partitioning function for a list-partitioned layout —
-    * writing the corpus `partitionBy("list_id")` lets a probe prune to
-    * its nprobe lists at the scan (asserted in ScaleSpec). */
+  /** Nearest-centroid list assignment (vec_id → list_id): a pure
+    * projection on the scan ([[graft.functions.IvfAssign]] over the
+    * collected ≤ MaxSeeds centroid table) — no window, no sort, zero
+    * shuffles at any scale. This is also the partitioning function for
+    * a list-partitioned layout — writing the corpus
+    * `partitionBy("list_id")` lets a probe prune to its nprobe lists at
+    * the scan (asserted in ScaleSpec). */
   def assignLists(vecs: DataFrame, centMod: Int, centOff: Int): DataFrame = {
     val base = scaledBase(vecs)
-    collectCents(base, centMod, centOff) match {
-      case Some(cb) =>
-        // scan-local: the assignment is a pure projection on the scan
-        // ([[graft.functions.IvfAssign]] over the embedded ≤ MaxSeeds
-        // centroid table) — zero shuffles at any scale
-        base.select(col("vec_id"),
-          graft.functions.IvfAssign(col("fxe"), cb).getField("cid").as("list_id"))
-      case None =>
-        val cents = seedRows(base, centMod, centOff)
-          .select(col("vec_id").as("cid"), col("fxe").as("ce"), col("nsq").as("cn"))
-        base.crossJoin(broadcast(cents))
-          .withColumn("ccos", cosExpr(FixedDot(col("ce"), col("fxe")), col("cn"), col("nsq")))
-          .groupBy("vec_id")
-          .agg(graft.functions.ArgMaxBy.argmax(col("cid"), col("ccos")).as("list_id"))
-    }
+    val (corpus, cb) = collectCents(base, seedTable(base, centMod, centOff))
+    corpus.select(col("vec_id"),
+      graft.functions.IvfAssign(col("fxe"), cb).getField("cid").as("list_id"))
   }
 
   /** Contrastive training triplets (the DPR/SimCSE batch-construction
@@ -669,8 +642,8 @@ object Ann {
   /** IVF-blocked contrastive triplets — the sub-quadratic form of
     * [[triplets]], registered end-to-end (the same completion
     * [[hardNegativesIvf]] gave [[hardNegatives]]): every vector is
-    * assigned to its max-cosine IVF list via the native hash-aggregable
-    * argmax, each anchor probes its `nprobe` nearest lists, and ONLY
+    * assigned to its max-cosine IVF list by the scan-local assignment
+    * of [[ivfTopK]], each anchor probes its `nprobe` nearest lists, and ONLY
     * members of the probed lists are scored — N·nprobe/K candidate rows
     * instead of the brute-force N·Q. ONE window partitioned by
     * (anchor, same-label?) takes both top-1s (WindowGroupLimit 1-row
@@ -741,31 +714,30 @@ object Ann {
     * (ties → smaller centroid id) for every query vector — the coarse
     * quantizer step [[ivfTopK]] runs inline, exposed for composition
     * with other within-list scorers (the PQ serving path probes lists
-    * with it before ADC). Queries score only against the broadcast
-    * K-row centroid table; the top-nprobe window partitions by query. */
+    * with it before ADC). A scan-local top-nprobe selection
+    * ([[graft.functions.IvfProbes]]) over the collected centroid table:
+    * no Q×K crossJoin, no window exchange. */
   def probeLists(vecs: DataFrame, queryMod: Int, centMod: Int, centOff: Int,
       nprobe: Int): DataFrame = {
     val base = scaledBase(vecs)
-    collectCents(base, centMod, centOff) match {
-      case Some(cb) =>
-        // scan-local top-nprobe selection ([[graft.functions.IvfProbes]])
-        // — no Q×K crossJoin, no window exchange
-        base.filter(col("vec_id") % queryMod === 0)
-          .select(col("vec_id").as("query_id"),
-            explode(graft.functions.IvfProbes(col("fxe"), cb, nprobe)
-              .getField("cid")).as("list_id"))
-      case None =>
-        val cents = seedRows(base, centMod, centOff)
-          .select(col("vec_id").as("cid"), col("fxe").as("ce"), col("nsq").as("cn"))
-        val w = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid"))
-        base.filter(col("vec_id") % queryMod === 0).crossJoin(broadcast(cents))
-          .withColumn("ccos", cosExpr(FixedDot(col("ce"), col("fxe")), col("cn"), col("nsq")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= nprobe)
-          .select(col("vec_id").as("query_id"), col("cid").as("list_id"))
-    }
+    val (corpus, cb) = collectCents(base, seedTable(base, centMod, centOff))
+    corpus.filter(col("vec_id") % queryMod === 0)
+      .select(col("vec_id").as("query_id"),
+        explode(graft.functions.IvfProbes(col("fxe"), cb, nprobe)
+          .getField("cid")).as("list_id"))
   }
 
+  /** IVF-list-blocked embedding near-dup pairs (cosine ≥ th): every
+    * vector is assigned to its max-cosine centroid (the scan-local
+    * assignment of [[ivfTopK]]), and pairs are generated WITHIN a list
+    * only. This is the content-blocked scale path the label-blocked
+    * [[embeddingPairs]] lacks: label blocks are unbounded (one hot label → quadratic pairs
+    * on one reducer), whereas list sizes average N/K and the centroid
+    * count K grows with the corpus, keeping per-list work bounded; at
+    * cluster scale list_id doubles as the partition key. Near-identical
+    * vectors land in the same list by construction (their centroid
+    * cosines are near-identical), so near-dup recall matches
+    * label-blocking in practice. */
   def embeddingPairsIvf(vecs: DataFrame, th: Double,
                         centMod: Int, centOff: Int): DataFrame = {
     val base = scaledBase(vecs)
@@ -773,16 +745,11 @@ object Ann {
     // within-list pair self-join read the checkpointed (vec_id, fxe,
     // nsq, list_id) blocks instead of re-scanning the corpus and
     // re-running the K-centroid assignment per side (the
-    // connectedComponents checkpoint convention; replaces the former
-    // N×K crossJoin → argmax aggregation → corpus rejoin, whose
-    // exchange-reuse collapse this shape used to depend on)
-    val m = collectCents(base, centMod, centOff) match {
-      case Some(cb) =>
-        base.withColumn("list_id",
-          graft.functions.IvfAssign(col("fxe"), cb).getField("cid"))
-          .localCheckpoint(true)
-      case None => base.join(assignLists(vecs, centMod, centOff), "vec_id")
-    }
+    // connectedComponents checkpoint convention)
+    val (corpus, cb) = collectCents(base, seedTable(base, centMod, centOff))
+    val m = corpus.withColumn("list_id",
+        graft.functions.IvfAssign(col("fxe"), cb).getField("cid"))
+      .localCheckpoint(true)
     val a = m.select(col("list_id"), col("vec_id").as("vec_a"),
       col("fxe").as("ea"), col("nsq").as("na"))
     val b = m.select(col("list_id"), col("vec_id").as("vec_b"),
@@ -824,11 +791,14 @@ object Ann {
     * the next round's centroids) until centroid drift converges, each
     * round an independent linear job.
     *
-    * Determinism/scale: assignment is the hash-aggregable native
-    * argmax over broadcast centroids (no window, no sort) with the
-    * vector carried through the same aggregate (its K broadcast copies
-    * collapse map-side), so the corpus shuffles ONCE per iteration;
-    * the mean is an exact long sum of the 1e8 fixed-point components
+    * Determinism/scale: the step collects its ≤ [[MaxSeeds]]-row
+    * centroid table (the IVF collect, [[collectCents]]) and assigns
+    * with the scan-local [[graft.functions.IvfAssign]] (max cosine,
+    * ties to the smallest cid), so assignment and the per-cluster
+    * partial sums run as ONE corpus pass — a projection feeding one
+    * map-side-combined aggregate, with no N×K aggregate and no rejoin
+    * shuffle. Rows with a NULL vec_id are left out.
+    * The mean is an exact long sum of the 1e8 fixed-point components
     * (associative — partial-aggregation order can't change it) with
     * one double division at the end, so Spark and a single-node engine
     * bit-agree. Sum envelope: |component| ≤ ~1e9·1e8 = 1e17 per row —
@@ -838,24 +808,17 @@ object Ann {
     * keep Σ < 2^63 up to ~9e9 vectors per cluster. */
   def kmeansStep(vecs: DataFrame, centMod: Int, centOff: Int): DataFrame = {
     val base = scaledBase(vecs)
-    val cents = seedRows(base, centMod, centOff)
-      .select(col("vec_id").as("cid"), col("fxe").as("ce"), col("nsq").as("cn"))
-    meansOf(assignTo(base, cents))
+    lloydStep(base, seedTable(base, centMod, centOff))
   }
 
-  /** Assignment half of a Lloyd iteration: (vec_id, cluster_id, fxe)
-    * via the native hash-aggregable argmax over broadcast pre-scaled
-    * centroids (ccos desc, cid asc tie-break). SLIM aggregate + rejoin
-    * (see [[semDedup]]'s note): argmax-only ~24-byte buffers stay
-    * hash-based; fxe re-attaches from base by vec_id instead of riding
-    * a first() buffer through 200M-row partial aggregation. */
-  private def assignTo(base: DataFrame, cents: DataFrame): DataFrame = {
-    val slim = base.crossJoin(broadcast(cents))
-      .withColumn("ccos", cosExpr(FixedDot(col("ce"), col("fxe")), col("cn"), col("nsq")))
-      .groupBy("vec_id")
-      .agg(graft.functions.ArgMaxBy.argmax(col("cid"), col("ccos")).as("cluster_id"))
-    base.select(col("vec_id"), col("fxe")).join(slim, Seq("vec_id"))
-      .select(col("vec_id"), col("cluster_id"), col("fxe"))
+  /** One Lloyd iteration of a [[scaledBase]] frame against a centroid
+    * table (cid, ce, cn): NULL-vec_id rows dropped up front, the table
+    * collected by [[collectCents]], the corpus assigned by
+    * [[graft.functions.IvfAssign]] and averaged by [[meansOf]]. */
+  private def lloydStep(base: DataFrame, cents: DataFrame): DataFrame = {
+    val (corpus, cb) = collectCents(base.filter(col("vec_id").isNotNull), cents)
+    meansOf(corpus.withColumn("cluster_id",
+      graft.functions.IvfAssign(col("fxe"), cb).getField("cid")))
   }
 
   /** Update half of a Lloyd iteration: per-cluster exact element-wise
@@ -1039,12 +1002,13 @@ object Ann {
     * vec_id-seeded to arbitrary centroids so [[kmeansFit]] can loop it.
     * Centroids re-enter the fixed-point domain through the same
     * quantizer as the corpus ([[scaled]]), so a 6dp-mean centroid scores
-    * bit-identically in any engine. Same single-corpus-shuffle shape as
-    * [[kmeansStep]]. */
+    * bit-identically in any engine. Same one-corpus-pass shape as
+    * [[kmeansStep]]: the table is collected, so it must hold at most
+    * [[MaxSeeds]] rows and no NULL cid (either fails loudly). */
   def kmeansIter(vecs: DataFrame, cents: DataFrame): DataFrame = {
     val c = cents.select(col("cid"), scaled(col("cembedding")).as("ce"))
       .withColumn("cn", FixedDot(col("ce"), col("ce")))
-    meansOf(assignTo(scaledBase(vecs), c))
+    lloydStep(scaledBase(vecs), c)
   }
 
   /** Centroid table (cid, cembedding) from a [[kmeansIter]]/
@@ -1064,13 +1028,11 @@ object Ann {
     * clusters surviving the round — an empty cluster drops out, the
     * standard Lloyd behavior) is ≤ `tol` or `maxIter` rounds ran.
     *
-    * Scale: each round is ONE linear job (the kmeansStep contract);
-    * centroids stay a K-row DataFrame end-to-end — localCheckpoint(true)
-    * truncates the per-round lineage exactly as dup_clusters'
-    * label-propagation loop does, so the plan stays constant-size and
-    * centroids never collect to the driver (K ~ √N can be millions of
-    * rows at corpus scale). The only driver-side value per round is the
-    * scalar drift. */
+    * Scale: each round is ONE corpus pass (the kmeansStep contract)
+    * over the round's centroid table, which [[kmeansIter]] collects —
+    * at most [[MaxSeeds]] rows, so the plan stays constant-size. Each round's K-row table is localCheckpointed once,
+    * because it feeds both the next round's collect and the drift join;
+    * the drift is one scalar per round. */
   final case class KMeansFit(centroids: DataFrame, iters: Int,
                              drifts: Seq[Double], converged: Boolean)
 
@@ -1099,17 +1061,12 @@ object Ann {
   }
 
   /** Fixed-2-iteration oracled form: seed → means → re-assign to the
-    * 6dp means → means again. The K-row centroid table between the
-    * iterations is localCheckpoint-materialized (the [[kmeansFit]]
-    * loop-body convention): values are identical to the fully-lazy
-    * chained composition (PcaSpec pins it), but each iteration's plan
-    * is the SAME shape, so whole-stage codegen compiles half the code
-    * and the doubly-chained N×K crossJoin never plans as one deep
-    * tree (measured ~2× lower first-run cost at sf0.1; no driver data
-    * round-trip — only the K-row table materializes). */
+    * 6dp means → means again. [[kmeansIter]] collects the K-row
+    * iteration-1 table, so iteration 2 plans as the same one-pass shape
+    * as iteration 1 and never as one deep chained tree; values are
+    * identical to the manual composition (PcaSpec pins it). */
   def kmeans2Iter(vecs: DataFrame, centMod: Int, centOff: Int): DataFrame =
-    kmeansIter(vecs,
-      centsFromMeans(kmeansStep(vecs, centMod, centOff)).localCheckpoint(true))
+    kmeansIter(vecs, centsFromMeans(kmeansStep(vecs, centMod, centOff)))
 
   /** DuckDB mirror of [[kmeans2Iter]]: iteration 1 is [[kmeansStepSql]]'s
     * assignment/means; the 6dp means re-quantize at 1e8
@@ -1344,11 +1301,12 @@ object Ann {
     * transitive form). Returns (vec_id, cluster_id, cent_sim,
     * kept INT) ordered by vec_id.
     *
-    * Scale (100 TB): assignment is the [[assignLists]] shape — K
-    * broadcast centroids, hash-aggregable argmax, ONE corpus shuffle;
-    * the pair enumeration self-joins CLUSTER blocks (the paper's
-    * whole point: clusters make the quadratic step tractable), so
-    * pair count is Σ n_c² bounded by the largest cluster —
+    * Scale (100 TB): assignment is the [[assignLists]] shape — the
+    * collected ≤ [[MaxSeeds]]-row centroid table, a scan-local
+    * projection, no corpus shuffle; the pair enumeration self-joins
+    * CLUSTER blocks (the paper's whole point: clusters make the
+    * quadratic step tractable), so pair count is Σ n_c² bounded by the
+    * largest cluster —
     * [[graft.util.Guard.pairBlockCap]] fail-fasts any cluster block
     * over the documented bound instead of letting one hot cluster
     * melt a reducer. More/tighter clusters (bigger centMod spread or
@@ -1361,31 +1319,13 @@ object Ann {
     // Scan-local assignment ([[graft.functions.IvfAssign]]: cluster_id
     // AND cent_sim — the argmax's ccos IS max(ccos)), materialized ONCE:
     // four consumers read the assignment (block counts, both pair
-    // sides, the final report), so the checkpoint replaces both the
-    // former N×K crossJoin → slim argmax aggregation → corpus rejoin
-    // and the identical-subtree barrier that kept its four copies
-    // collapsible via runtime exchange reuse. The checkpointed blocks
-    // are the same byte volume the reused exchange used to hold, with
-    // no N×K aggregation and no rejoin shuffle in front. Legacy path
-    // only for the empty-seed degenerate corpus (identical — empty —
-    // result).
-    val assigned = collectCents(base, centMod, centOff) match {
-      case Some(cb) =>
-        base.withColumn("__a", graft.functions.IvfAssign(col("fxe"), cb))
-          .select(col("vec_id"), col("fxe"), col("nsq"),
-            col("__a").getField("cid").as("cluster_id"),
-            graft.util.D.r(col("__a").getField("ccos"), 6).as("cent_sim"))
-          .localCheckpoint(true)
-      case None =>
-        val cents = seedRows(base, centMod, centOff)
-          .select(col("vec_id").as("cid"), col("fxe").as("ce"), col("nsq").as("cn"))
-        val slim = base.crossJoin(broadcast(cents))
-          .withColumn("ccos", cosExpr(FixedDot(col("ce"), col("fxe")), col("cn"), col("nsq")))
-          .groupBy("vec_id")
-          .agg(graft.functions.ArgMaxBy.argmax(col("cid"), col("ccos")).as("cluster_id"),
-            graft.util.D.r(max(col("ccos")), 6).as("cent_sim"))
-        base.join(slim, Seq("vec_id"))
-    }
+    // sides, the final report), so one checkpoint serves them all.
+    val (corpus, cb) = collectCents(base, seedTable(base, centMod, centOff))
+    val assigned = corpus.withColumn("__a", graft.functions.IvfAssign(col("fxe"), cb))
+      .select(col("vec_id"), col("fxe"), col("nsq"),
+        col("__a").getField("cid").as("cluster_id"),
+        graft.util.D.r(col("__a").getField("ccos"), 6).as("cent_sim"))
+      .localCheckpoint(true)
     // Hot-cluster guard: same count-broadcast-back idiom as
     // embeddingPairs — the error fires on the first streamed rows of a
     // hot block, before its quadratic pair set materializes.

@@ -138,16 +138,6 @@ object Quantize {
     FixedDot(x, x) + cn - lit(2L) * FixedDot(x, ce)
   }
 
-  /** Per (vec_id, s): the nearest code id (ties → smallest cid) and its
-    * exact distance. One broadcast join + one map-side-combined argmin. */
-  private def nearestCode(xs: DataFrame, cb: DataFrame): DataFrame =
-    xs.join(broadcast(cb), "s")
-      .withColumn("dist", sqDist(col("fxs"), col("cn"), col("ce")))
-      .groupBy("vec_id", "s")
-      .agg(graft.functions.ArgMaxBy.argmax(col("cid"),
-          -col("dist").cast(DoubleType)).as("code"),
-        min(col("dist")).as("d"))
-
   /** Product-quantization codes (Jégou et al. 2011 — the FAISS IVF-PQ
     * compression step): split each vector into `m` contiguous
     * subvectors, quantize every subvector to its nearest code in a
@@ -170,66 +160,49 @@ object Quantize {
     * score is an EXACT double: |d|² ≤ dsub·(2·1e4)² ≈ 3e9 per
     * subspace), distances are exact longs via ‖x‖² + ‖c‖² − 2x·c on
     * [[graft.functions.FixedDot]], argmin ties break to the smallest
-    * code id ([[graft.functions.ArgMaxBy]] = the oracle's ORDER BY
-    * dist, cid), and the error emits at the 1e8 (= 1e4²) scale.
+    * code id (the oracle's ORDER BY dist, cid — the
+    * [[graft.functions.PqCodebook]] contract), and the error emits at
+    * the 1e8 (= 1e4²) scale.
     *
-    * Scale: the codebook is m×K rows (broadcast at any corpus size);
-    * the corpus side is one narrow subvector explode (m rows/vector)
-    * joined against it, then two map-side-combined aggregations
-    * ((vec, s) argmin → per-vec code word). The bounded
-    * collect_list/transform runs on m=8 structs per vector — the
-    * family's bounded post-aggregation HOF convention. */
+    * Scale: the m×K codebook is collected once ([[pqEncoder]]) and the
+    * whole coding is a projection on the corpus scan — zero shuffles;
+    * values/ties/err are bit-identical to the explode → join → argmin
+    * form by the PqCodebook arithmetic contract. */
   def pqCodes(vecs: DataFrame, m: Int, centMod: Int, centOff: Int): DataFrame = {
     require(m >= 1, s"m must be >= 1, got $m")
-    pqEncoder(vecs, m, centMod, centOff) match {
-      case Some(enc) =>
-        // scan-local coding (see [[pqEncoder]]): the whole assignment
-        // is a projection — the explode → broadcast-join → two
-        // aggregations of the legacy path (two m·N-row shuffles)
-        // disappear; values/ties/err are bit-identical by the
-        // PqCodebook arithmetic contract
-        vecs.select(col("vec_id"), enc.as("pq"))
-          .select(col("vec_id"),
-            concat_ws("-", transform(col("pq.codes"),
-              x => x.cast(StringType))).as("codes"),
-            graft.util.D.r(col("pq.dsum").cast(DoubleType) / lit(1e8), 6).as("err_sq"))
-          .orderBy("vec_id")
-      case None => // empty seeded codebook (degenerate corpus): the
-        // legacy inner join yields the matching EMPTY result
-        val best = nearestCode(subs(vecs, "vec_id", m),
-          codebook(vecs, m, centMod, centOff))
-        best.groupBy("vec_id")
-          .agg(concat_ws("-",
-              transform(array_sort(collect_list(struct(col("s"), col("code")))),
-                t => t.getField("code").cast(StringType))).as("codes"),
-            graft.util.D.r(sum(col("d")).cast(DoubleType) / lit(1e8), 6).as("err_sq"))
-          .orderBy("vec_id")
-    }
+    val (corpus, enc) = pqEncoder(vecs, m, centMod, centOff)
+    corpus.select(col("vec_id"), enc.as("pq"))
+      .select(col("vec_id"),
+        concat_ws("-", transform(col("pq.codes"),
+          x => x.cast(StringType))).as("codes"),
+        graft.util.D.r(col("pq.dsum").cast(DoubleType) / lit(1e8), 6).as("err_sq"))
+      .orderBy("vec_id")
   }
 
   /** Collect the bounded seeded codebook (≤ m×[[MaxCodes]] rows — the
     * same KB-scale driver-table class as the silhouette centroids) and
     * build the scan-local [[graft.functions.PqEncode]] column over the
-    * full fx4-scaled vector. None when the seed class is empty (the
-    * degenerate-corpus case) — callers keep the legacy join path,
-    * whose inner join produces the identical empty result. fx4 is
+    * full fx4-scaled vector, returned with `vecs` gated on the
+    * codebook: an empty seed class (a degenerate corpus) gates the
+    * corpus to `where(lit(false))`, which Catalyst folds to an empty
+    * relation, so every result downstream is empty — what the former
+    * inner join against the empty codebook gave; a non-empty codebook
+    * leaves the plan untouched (`where(lit(true))` is pruned). fx4 is
     * elementwise, so fx4(full)[s·dsub..] == fx4(slice) exactly. */
   private def pqEncoder(vecs: DataFrame, m: Int,
-      cbMod: Int, cbOff: Int): Option[Column] = {
+      cbMod: Int, cbOff: Int): (DataFrame, Column) = {
     val rows = codebook(vecs, m, cbMod, cbOff)
       .select(col("s"), col("cid"), col("ce"), col("cn"))
       .orderBy("s", "cid").collect()
-    if (rows.isEmpty) None
-    else {
-      val bys = rows.groupBy(_.getInt(0))
-      require(bys.keySet == (0 until m).toSet,
-        s"pqEncoder: codebook covers subspaces ${bys.keySet.toSeq.sorted}, want 0..${m - 1}")
-      val cids = Array.tabulate(m)(s => bys(s).map(_.getLong(1)))
-      val ces = Array.tabulate(m)(s => bys(s).map(_.getSeq[Long](2).toArray))
-      val cns = Array.tabulate(m)(s => bys(s).map(_.getLong(3)))
-      Some(graft.functions.PqEncode(fx4(col("embedding")),
-        new graft.functions.PqCodebook(m, cids, ces, cns)))
-    }
+    val bys = rows.groupBy(_.getInt(0)).withDefaultValue(Array.empty)
+    require(rows.isEmpty || bys.keySet == (0 until m).toSet,
+      s"pqEncoder: codebook covers subspaces ${bys.keySet.toSeq.sorted}, want 0..${m - 1}")
+    val cids = Array.tabulate(m)(s => bys(s).map(_.getLong(1)))
+    val ces = Array.tabulate(m)(s => bys(s).map(_.getSeq[Long](2).toArray))
+    val cns = Array.tabulate(m)(s => bys(s).map(_.getLong(3)))
+    val enc = graft.functions.PqEncode(fx4(col("embedding")),
+      new graft.functions.PqCodebook(m, cids, ces, cns))
+    (vecs.where(lit(rows.nonEmpty)), enc)
   }
 
   /** Shared DuckDB CTEs for the PQ family (m fixed at 8 — the registered
@@ -312,19 +285,9 @@ object Quantize {
     val cbIdx = cb.withColumn("idx", row_number().over(wIdx))
     // one row per corpus vector: its m dense code indices, s-ordered —
     // scan-local via PqEncode (dense idx = 1-based cid rank, exactly
-    // cbIdx's row_number); legacy join path only for the empty-seed
-    // degenerate corpus (identical empty result)
-    val codes = pqEncoder(vecs, m, centMod, centOff) match {
-      case Some(enc) =>
-        vecs.select(col("vec_id"), enc.getField("idxs").as("cidx"))
-      case None =>
-        nearestCode(subs(vecs, "vec_id", m), cb)
-          .join(broadcast(cbIdx.select(col("s"), col("cid").as("code"), col("idx"))),
-            Seq("s", "code"))
-          .groupBy("vec_id")
-          .agg(transform(array_sort(collect_list(struct(col("s"), col("idx")))),
-            t => t.getField("idx")).as("cidx"))
-    }
+    // cbIdx's row_number)
+    val (corpus, enc) = pqEncoder(vecs, m, centMod, centOff)
+    val codes = corpus.select(col("vec_id"), enc.getField("idxs").as("cidx"))
     // one row per query: m K-arrays of exact subspace distances,
     // positioned by dense code index
     val qd = subs(vecs.filter(col("vec_id") % queryMod === 0)
@@ -364,7 +327,8 @@ object Quantize {
     * composes in front"), proven here as its own checked artifact
     * rather than by analogy.
     *
-    * Scale: the coarse assignment is the one-shuffle native argmax;
+    * Scale: the coarse assignment is scan-local and fused with the PQ
+    * coding into one corpus pass;
     * the candidate join is an EQUI-join on list_id (never a corpus
     * cross join); ADC scoring reuses [[adcTopK]]'s shape — dense code
     * indices on the candidate rows, the per-query m×K lookup ARRAYS
@@ -388,27 +352,13 @@ object Quantize {
     // assignment and the PQ coding are BOTH scan-local projections, so
     // the corpus is scanned once for the whole serving path — the
     // former shape ran a separate assignLists aggregate and re-joined
-    // the codes on vec_id (a corpus-keyed shuffle at scale). Legacy
-    // join path only for the empty-seed degenerate corpus.
-    val codedLists = (pqEncoder(vecs, m, cbMod, cbOff),
-        Ann.ivfAssignCol(vecs, listMod, listOff)) match {
-      case (Some(enc), Some(ac)) =>
-        vecs.select(col("vec_id"), ac.as("list_id"),
-          enc.getField("idxs").as("cidx"))
-      case (encOpt, _) =>
-        val codes = encOpt match {
-          case Some(enc) =>
-            vecs.select(col("vec_id"), enc.getField("idxs").as("cidx"))
-          case None =>
-            nearestCode(subs(vecs, "vec_id", m), cb)
-              .join(broadcast(cbIdx.select(col("s"), col("cid").as("code"), col("idx"))),
-                Seq("s", "code"))
-              .groupBy("vec_id")
-              .agg(transform(array_sort(collect_list(struct(col("s"), col("idx")))),
-                t => t.getField("idx")).as("cidx"))
-        }
-        codes.join(Ann.assignLists(vecs, listMod, listOff), "vec_id")
-    }
+    // the codes on vec_id (a corpus-keyed shuffle at scale). Each
+    // collect gates the corpus, so an empty codebook or an empty coarse
+    // seed class leaves no candidate.
+    val (coded, enc) = pqEncoder(vecs, m, cbMod, cbOff)
+    val (corpus, ac) = Ann.ivfAssignCol(coded, listMod, listOff)
+    val codedLists = corpus.select(col("vec_id"), ac.as("list_id"),
+      enc.getField("idxs").as("cidx"))
     val probes = Ann.probeLists(vecs, queryMod, listMod, listOff, nprobe)
     val cand = codedLists.join(broadcast(probes), "list_id")
       .filter(col("vec_id") =!= col("query_id"))

@@ -7,6 +7,44 @@ import org.scalatest.funsuite.AnyFunSuite
 class ScaleSpec extends AnyFunSuite {
   import TestSession._
 
+  /** Plan-class checks for the centroid-assignment pins. The walks go
+    * through AQE query stages, so they see the final adaptive plan. */
+  private object Assign extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    import org.apache.spark.sql.execution.SparkPlan
+
+    /** Nodes that evaluate a scan-local assignment expression. */
+    def nodes(p: SparkPlan): Seq[SparkPlan] = collect(p) {
+      case n if n.expressions.exists(_.exists(e =>
+        e.prettyName == "ivf_assign" || e.prettyName == "ivf_probes")) => n
+    }
+
+    /** N×K assignment aggregates: an argmax_by keyed on vec_id. */
+    def argmaxAggs(p: SparkPlan): Seq[SparkPlan] = collect(p) {
+      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+        if a.groupingExpressions.exists(_.references.exists(_.name == "vec_id")) &&
+          a.aggregateExpressions.exists(_.aggregateFunction.prettyName == "argmax_by") => a
+    }
+
+    /** Every assignment node reads its scan with no shuffle in between. */
+    def scanLocal(p: SparkPlan): Boolean = {
+      val ns = nodes(p)
+      ns.nonEmpty && ns.forall(n =>
+        collect(n) { case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => x }.isEmpty &&
+          collect(n) { case x: org.apache.spark.sql.execution.FileSourceScanExec => x }.nonEmpty)
+    }
+
+    /** The assignment was materialized once and nothing recomputes it:
+      * every leaf of the final plan (bar reused exchanges) reads the
+      * same checkpointed RDD. */
+    def readsOneCheckpoint(p: SparkPlan): Boolean = {
+      val leaves = collectLeaves(p).filterNot(
+        _.isInstanceOf[org.apache.spark.sql.execution.exchange.ReusedExchangeExec])
+      val rdds = leaves.collect { case r: org.apache.spark.sql.execution.RDDScanExec => r.rdd.id }
+      leaves.nonEmpty && rdds.size == leaves.size && rdds.distinct.size == 1 &&
+        nodes(p).isEmpty && argmaxAggs(p).isEmpty
+    }
+  }
+
   test("bucketed join runs without a shuffle exchange") {
     val li = graft.util.D.t(spark, sf, "lineitem")
       .select("l_orderkey", "l_quantity", "l_extendedprice")
@@ -148,18 +186,28 @@ class ScaleSpec extends AnyFunSuite {
     }
   }
 
-  test("IVF centroid assignment aggregates hash-based (no SortAggregate)") {
-    // max_by(id, struct(...)) planned the N×K assignment as
-    // SortAggregate (per-partition sorts of the scored table); the
-    // native ArgMaxBy must keep it in ObjectHashAggregate
-    for (name <- Seq("q_ann_ivf", "q_dedup_embedding_ivf", "q_kmeans_step", "q_semdedup",
-      "q_hard_negatives_ivf")) {
-      val plan = graft.SparkEntry.queries(name)(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("argmax_by"),
-        s"$name lost the native argmax aggregate:\n${plan.take(1200)}")
-      assert(!plan.contains("SortAggregate"),
-        s"$name plans a SortAggregate:\n${plan.take(1600)}")
+  test("IVF centroid assignment is a scan-local projection (no N×K aggregate, no SortAggregate)") {
+    // the assignment must be an ivf_assign/ivf_probes projection over
+    // the collected centroid table, evaluated on the embeddings scan
+    // with no shuffle in between — never an N×K argmax_by aggregate
+    // keyed on vec_id, nor a SortAggregate. q_dedup_embedding_ivf and
+    // q_semdedup assign inside their checkpoint, so their final plans
+    // only read it back.
+    for (name <- Seq("q_ann_ivf", "q_dedup_embedding_ivf", "q_kmeans_step", "q_kmeans_2iter",
+      "q_semdedup", "q_hard_negatives_ivf")) {
+      val df = graft.SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      assert(Assign.argmaxAggs(plan).isEmpty,
+        s"$name plans an N×K argmax_by aggregate:\n${plan.toString.take(1600)}")
+      assert(plan.collect { case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a }
+        .isEmpty, s"$name plans a SortAggregate:\n${plan.toString.take(1600)}")
+      if (name == "q_dedup_embedding_ivf" || name == "q_semdedup")
+        assert(Assign.readsOneCheckpoint(plan),
+          s"$name recomputes its assignment:\n${plan.toString.take(1600)}")
+      else
+        assert(Assign.scanLocal(plan),
+          s"$name lost the scan-local assignment:\n${plan.toString.take(1600)}")
     }
   }
 
@@ -348,21 +396,15 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("semDedup's N x K assignment executes exactly once") {
-    // the contains("ReusedExchange") check below is satisfiable by the
-    // cents BROADCAST reuse alone while the expensive vec_id exchange
-    // still runs four times — which is exactly what happened when the
-    // pair-side joins inferred isnotnull(vec_id) into their copies of
-    // the scan and broke subtree identity (fixed by pinning the filter
-    // on every copy in Ann.semDedup). Count the assignment aggregates
-    // in the FINAL adaptive plan: exactly one may survive.
+    // four consumers read the assignment (block counts, both pair
+    // sides, the report), all from one checkpoint: in the FINAL
+    // adaptive plan every leaf must read that one checkpointed RDD,
+    // and no assignment may be recomputed.
     val df = graft.SparkEntry.queries("q_semdedup")(spark, sf)
     df.collect()
-    val finalPlan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    val n = "partial_argmax_by".r.findAllIn(finalPlan).size
-    assert(n === 1,
-      s"q_semdedup plans the N x K assignment $n times (want 1 + ReusedExchange):\n" +
-        finalPlan.take(1600))
+    val plan = df.queryExecution.executedPlan
+    assert(Assign.readsOneCheckpoint(plan),
+      s"q_semdedup does not read one materialized assignment:\n${plan.toString.take(1600)}")
   }
 
   test("derived totals reuse the grouped exchange at runtime") {
@@ -372,12 +414,22 @@ class ScaleSpec extends AnyFunSuite {
     // reuse collapses them to one scan — assert the final adaptive
     // plan actually contains ReusedExchange nodes
     for (name <- Seq("q_value_counts", "q_dsir",
-                     "q_tfidf_terms", "q_bm25", "q_semdedup", "q_dedup_embedding_ivf")) {
+                     "q_tfidf_terms", "q_bm25")) {
       val df = graft.SparkEntry.queries(name)(spark, sf)
       df.collect()
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("ReusedExchange"),
         s"$name: no runtime exchange reuse — identical-subtree property regressed:\n${p.take(1200)}")
+    }
+    // q_semdedup and q_dedup_embedding_ivf share their assignment
+    // through one checkpoint instead of a reused exchange: every leaf
+    // of their final plans must read that one materialized RDD
+    for (name <- Seq("q_semdedup", "q_dedup_embedding_ivf")) {
+      val df = graft.SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      assert(Assign.readsOneCheckpoint(p),
+        s"$name: consumers do not share one materialized assignment:\n${p.toString.take(1200)}")
     }
     // q_outlier_explain left the ReusedExchange list in round 7: reuse
     // never actually collapsed its three differently-pruned cube
@@ -652,15 +704,19 @@ class ScaleSpec extends AnyFunSuite {
   test("round-7 operators: IVF triplets list-keyed; phash pairs band-joined") {
     // q_triplets_ivf is the registered sub-quadratic path: candidates
     // must meet anchors through the list_id equi-join (the
-    // hardNegativesIvf contract) with the native hash-aggregable argmax
-    // assignment — the only BroadcastNestedLoopJoin allowed is the N×K
-    // centroid scoring
-    val ti = graft.SparkEntry.queries("q_triplets_ivf")(spark, sf)
-      .queryExecution.executedPlan.toString
+    // hardNegativesIvf contract) with the scan-local ivf_assign /
+    // ivf_probes list assignment — no N×K aggregate, no SortAggregate
+    val tiPlan = graft.SparkEntry.queries("q_triplets_ivf")(spark, sf)
+      .queryExecution.executedPlan
+    val ti = tiPlan.toString
     assert(ti.contains("BroadcastHashJoin [list_id"),
       s"q_triplets_ivf probe join not list-keyed:\n${ti.take(1600)}")
-    assert(ti.contains("argmax_by") && !ti.contains("SortAggregate"),
-      s"q_triplets_ivf lost the hash-aggregable list assignment:\n${ti.take(1600)}")
+    val assignNames = Assign.nodes(tiPlan)
+      .flatMap(_.expressions.flatMap(_.collect { case e => e.prettyName })).toSet
+    assert(assignNames("ivf_assign") && assignNames("ivf_probes") &&
+      Assign.argmaxAggs(tiPlan).isEmpty &&
+      tiPlan.collect { case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a }.isEmpty,
+      s"q_triplets_ivf lost the scan-local list assignment:\n${ti.take(1600)}")
     assert(!ti.contains("CartesianProduct"))
     // q_multimodal_phash_pairs: candidates come from the 4×15-bit band
     // self-join on (k, band) — never an unkeyed pair join over payloads;
@@ -732,7 +788,7 @@ class ScaleSpec extends AnyFunSuite {
     }
   }
 
-  test("nprobe curve: one scoring pass serves every point — one assignment aggregate, no per-point corpus rescans") {
+  test("nprobe curve: one scoring pass serves every point — one assignment, no per-point corpus rescans") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
     // the nprobeCurve scaladoc's claim, pinned: candidates are scored
     // ONCE at depth max(probes); the per-nprobe re-rank works off that
@@ -740,14 +796,17 @@ class ScaleSpec extends AnyFunSuite {
     // multiply the corpus-side work
     val qe = graft.SparkEntry.queries("q_ann_nprobe_curve")(spark, sf).queryExecution
     val plan = qe.optimizedPlan
-    // exactly ONE list-assignment aggregate (groupBy vec_id argmax) in
-    // the whole curve plan — a per-point rescan would plan five
-    val assigns = plan.collect {
-      case a: Aggregate
-        if a.groupingExpressions.exists(_.references.map(_.name).toSeq.contains("vec_id")) &&
-           a.aggregateExpressions.exists(_.toString.contains("argmax_by")) => a }
-    assert(assigns.size === 1,
-      s"curve should plan exactly one IVF assignment aggregate, got ${assigns.size}")
+    // exactly ONE member assignment (ivf_assign) and ONE probe selection
+    // (ivf_probes) in the whole curve plan — a per-point rescan would
+    // plan five of each — and no N×K argmax aggregate at all
+    def assignsNamed(n: String) = plan.collect {
+      case x if x.expressions.exists(_.exists(_.prettyName == n)) => x }
+    assert(assignsNamed("ivf_assign").size === 1 && assignsNamed("ivf_probes").size === 1,
+      s"curve should plan exactly one IVF assignment and one probe selection, got " +
+        s"${assignsNamed("ivf_assign").size} and ${assignsNamed("ivf_probes").size}")
+    val argmaxAggs = plan.collect {
+      case a: Aggregate if a.aggregateExpressions.exists(_.exists(_.prettyName == "argmax_by")) => a }
+    assert(argmaxAggs.isEmpty, s"curve plans ${argmaxAggs.size} argmax_by aggregates")
     // the member-side probe join (members ⋈ probes on list_id) appears
     // once, not once per nprobe point
     val listJoins = plan.collect {
