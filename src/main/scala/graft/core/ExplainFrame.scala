@@ -1,7 +1,7 @@
 package graft.core
 
 import graft.explain._
-import graft.util.D
+import graft.util.{D, Mirror}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DateType, DoubleType, LongType, NumericType, StringType, TimestampNTZType, TimestampType}
@@ -281,7 +281,7 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
           case Some(c) => Fedex.binCountsFiltered(s2, c, attrs)
           case None => Fedex.binCounts(s2, hashSample(res, src.columns.toSeq, mod), attrs)
         }
-        Fedex.binShapley(counts).orderBy("attribute", "bin")
+        Fedex.binShapley(counts)
       case Some(JoinOp(left, right, res, on, _)) =>
         // join shapley (the Spotify fedex notebook's
         // explain(explainer='shapley', value=…, attr=…, consider=…)
@@ -314,7 +314,7 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
         val counts = Fedex.binCounts(
           hashSample(side, sideCols, mod),
           hashSample(res.select(sideCols.map(col): _*), sideCols, mod), attrs)
-        Fedex.binShapley(counts).orderBy("attribute", "bin")
+        Fedex.binShapley(counts)
       case _ => throw new IllegalArgumentException(
         "shapley explainer requires a filter or join operation")
     }
@@ -481,8 +481,9 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
         hashSample(res.select(sideCols.map(col): _*), sideCols, mod), attrs)
       deviationTopK(counts, topK)
     case Some(g: GroupByOp) =>
-      val m = meltGroupBy(g)
-      GroupByExplain.zdev(m).orderBy(col("zdev").desc, col("measure"), col("grp")).limit(topK)
+      GroupByExplain.zdevTable(meltGroupBy(g))
+        .orderBy(Mirror.desc("zdev"), Mirror.asc("measure"), Mirror.asc("grp"))
+        .limit(topK).toDF(df.sparkSession)
     case _ =>
       throw new IllegalStateException("explainFedex requires a filter/join/groupBy operation")
   }
@@ -495,15 +496,12 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
     } else defaultAttrs(src, excludeExtra)
 
   private def deviationTopK(counts: DataFrame, topK: Int): DataFrame =
-    // deviation + influence from Fedex's single attribute-level
-    // aggregation — a join of the two would re-plan the scan twice
-    Fedex.influenceCells(counts)
-      .select(col("attribute"), col("kl_score"), explode(col("infl")).as("p"))
-      .select(col("attribute"), col("kl_score"), col("p.bin").as("bin"),
-        col("p.ns").as("ns"), col("p.nr").as("nr"),
-        (col("kl_score") - col("p.score_excl")).as("influence"))
-      .orderBy(col("kl_score").desc, col("influence").desc, col("attribute"), col("bin"))
-      .limit(topK)
+    // deviation + influence from Fedex's one collected count table,
+    // ranked on the driver: the explanation is a LocalRelation
+    Fedex.influenceTable(counts)
+      .orderBy(Mirror.desc("kl_score"), Mirror.desc("influence"),
+        Mirror.asc("attribute"), Mirror.asc("bin"))
+      .limit(topK).toDF(counts.sparkSession)
 
   private def meltGroupBy(g: GroupByOp): DataFrame =
     // both measures exploded from the single aggregated row — a
@@ -531,8 +529,9 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
           if (useSampling) hashSample(g.source, g.source.columns.toSeq,
             sampleMod(approxRows(g.source), sampleSize))
           else g.source
-        Outlier.explain(src, g.groupCols.head, g.aggCol, target, d, attrs)
-          .orderBy(col("influence").desc, col("attribute"), col("bin"))
+        Outlier.explainTable(src, g.groupCols.head, g.aggCol, target, d, attrs)
+          .orderBy(Mirror.desc("influence"), Mirror.asc("attribute"), Mirror.asc("bin"))
+          .toDF(src.sparkSession)
       case _ => throw new IllegalStateException("explainOutlier requires a groupBy operation")
     }
 

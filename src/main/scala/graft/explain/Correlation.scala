@@ -1,6 +1,6 @@
 package graft.explain
 
-import graft.util.D
+import graft.util.{D, Mirror}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -284,9 +284,10 @@ object Correlation {
 
   // ---- driver-side exact mirrors (suite finish) ---------------------
   // The suite's finishing math runs on the driver over the bounded cell
-  // table; each helper replicates the corresponding Catalyst expression
-  // BIT-EXACTLY (same Java BigDecimal entry points Spark's Cast/Round
-  // use), pinned by QuantizeSpec's suite-vs-solo parity test.
+  // table; each helper (these two and graft.util.Mirror's) replicates
+  // the corresponding Catalyst expression BIT-EXACTLY (same Java
+  // BigDecimal entry points Spark's Cast/Round use), pinned by
+  // QuantizeSpec's suite-vs-solo parity test.
 
   /** Mirror of value6(u).cast(dec25).cast(Double): exact unscaled-6
     * decimal → double (java.math.BigDecimal.doubleValue, the same
@@ -298,21 +299,6 @@ object Correlation {
   private def emit0D(u: java.math.BigInteger): Double =
     new java.math.BigDecimal(u, 6)
       .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** Mirror of Spark's double→DecimalType(18,6) cast (Decimal(BigDecimal
-    * (d)) routes through BigDecimal.valueOf — the toString canonical —
-    * then HALF_UP to scale 6). */
-  private def dvalD(t: Double): java.math.BigDecimal =
-    java.math.BigDecimal.valueOf(t).setScale(6, java.math.RoundingMode.HALF_UP)
-
-  /** Mirror of [[graft.util.D.r]]: round(x·10^s, 0)/10^s where Spark's
-    * Round on a double rounds the EXACT binary expansion HALF_UP
-    * (half away from zero). */
-  private def rD(x: Double, s: Int): Double = {
-    val f = math.pow(10, s)
-    new java.math.BigDecimal(x * f)
-      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue() / f
-  }
 
   /** The full correlation suite — Pearson over `pairs`, η(cat → num),
     * Cramér's V(cat, cat2) — in ONE corpus scan (was two; the r6 judge
@@ -380,7 +366,7 @@ object Correlation {
         val numr = n * sp - sx * sy
         val den = math.sqrt(math.max(n * ssx - sx * sx, 0.0)) *
           math.sqrt(math.max(n * ssy - sy * sy, 0.0))
-        if (den > 1e-9) rD(numr / den, 6) else 0.0
+        if (den > 1e-9) Mirror.r(numr / den, 6) else 0.0
       }
       ("pearson", x, y, java.lang.Double.valueOf(v.getOrElse(0.0)))
     }
@@ -398,9 +384,9 @@ object Correlation {
             .foldLeft(Option.empty[java.math.BigInteger])(addOpt)
             .map(emit6D).getOrElse(0.0)
           val d = sg / ng - mean
-          dvalD(ng * d * d)
+          Mirror.castDec(ng * d * d, 18, 6)
         }.reduce(_.add(_)).doubleValue()
-        rD(math.sqrt(ssb / math.max(ss - nD * (s / nD) * (s / nD), 1e-9)), 6)
+        Mirror.r(math.sqrt(ssb / math.max(ss - nD * (s / nD) * (s / nD), 1e-9)), 6)
       }
       Seq(("eta", cat, num, v.map(java.lang.Double.valueOf).orNull))
     }
@@ -419,9 +405,9 @@ object Correlation {
       val chi2 = nonNullCells.map { r =>
         val o = r.getLong(r.fieldIndex("o"))
         val e = (rnByCa(r.get(r.fieldIndex("ca"))) * cnByCb(r.get(r.fieldIndex("cb")))).toDouble / n.toDouble
-        dvalD((o - e) * (o - e) / e)
+        Mirror.castDec((o - e) * (o - e) / e, 18, 6)
       }.reduce(_.add(_)).doubleValue()
-      val v = rD(math.sqrt(chi2 / (n * math.max(math.min(rCnt, kCnt) - 1L, 1L)).toDouble), 6)
+      val v = Mirror.r(math.sqrt(chi2 / (n * math.max(math.min(rCnt, kCnt) - 1L, 1L)).toDouble), 6)
       Seq(("cramers_v", cat, cat2, java.lang.Double.valueOf(v)))
     }
 

@@ -57,30 +57,33 @@ object Explainers extends QFamily {
       |    CAST(COUNT(*) AS DOUBLE) AS v_cnt
       |  FROM orders GROUP BY 1)""".stripMargin
 
+  // The Fedex, zdev and outlier explainers return LocalRelations already
+  // in the order their oracles sort by; a global sort on top would plan
+  // a range exchange (two jobs) over rows that are already local.
   val defs: Seq[QDef] = Seq(
     QDef("q_fedex_filter",
       Some(s"$filterCountsSqlPrefix\n${Fedex.deviationSelectSql}"),
-      (s, dir) => Fedex.filterDeviation(filterCounts(s, dir)).orderBy("attribute")),
+      (s, dir) => Fedex.filterDeviation(filterCounts(s, dir))),
 
     QDef("q_fedex_filter_influence",
       Some(s"$filterCountsSqlPrefix\n${Fedex.influenceSelectSql}"),
-      (s, dir) => Fedex.binInfluence(filterCounts(s, dir)).orderBy("attribute", "bin")),
+      (s, dir) => Fedex.binInfluence(filterCounts(s, dir))),
 
     QDef("q_fedex_shapley",
       Some(s"$filterCountsSqlPrefix\n${Fedex.shapleySelectSql}"),
-      (s, dir) => Fedex.binShapley(filterCounts(s, dir)).orderBy("attribute", "bin")),
+      (s, dir) => Fedex.binShapley(filterCounts(s, dir))),
 
     QDef("q_fedex_groupby",
       Some(s"""${GroupByExplain.zdevSql(gbMeltSql)}
               |SELECT measure, MAX(n_groups) AS n_groups, MAX(zdev) AS exceptionality
               |FROM z GROUP BY measure ORDER BY measure""".stripMargin),
-      (s, dir) => GroupByExplain.exceptionality(gbMelt(s, dir)).orderBy("measure")),
+      (s, dir) => GroupByExplain.exceptionality(gbMelt(s, dir))),
 
     QDef("q_fedex_groupby_influence",
       Some(s"""${GroupByExplain.zdevSql(gbMeltSql)}
               |SELECT measure, grp, value, zdev FROM z ORDER BY measure, grp""".stripMargin),
       (s, dir) => GroupByExplain.zdev(gbMelt(s, dir))
-        .select("measure", "grp", "value", "zdev").orderBy("measure", "grp")),
+        .select("measure", "grp", "value", "zdev")),
 
     // datetime bins (reference custom_bins/date_time_bin.py: Months +
     // Seasons): months 1-3 Winter, 4-6 Spring, 7-9 Summer, 10-12 Autumn
@@ -102,7 +105,6 @@ object Explainers extends QFamily {
       val attrs = Seq(Fedex.Attr("ship_month", numeric = false), Fedex.Attr("ship_season", numeric = false))
       Fedex.filterDeviation(
         Fedex.binCountsFiltered(withBins, col("l_quantity") >= 30, attrs))
-        .orderBy("attribute")
     }),
 
     QDef("q_outlier_explain",

@@ -1,6 +1,8 @@
 package graft.explain
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.util.Mirror
+import graft.util.Mirror.asc
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,18 +26,18 @@ import org.apache.spark.sql.types._
   *   deviation.
   *
   * Scale: ONE scan of source + ONE of result produce the (attribute, bin)
-  * count table (exploded attr→bin pairs, map-side combined); a second
-  * aggregation gathers each attribute's bins into an array, and every
-  * measure — deviation, Shapley, leave-one-out influence — is array math
-  * over that single row (no self-join, no second reference to the scan).
-  * Cross-engine float determinism: ln terms are rounded to DECIMAL(18,9)
-  * and summed as exact long nano-units — see klSumNanos.
+  * count table (exploded attr→bin pairs, map-side combined), and ONE
+  * bounded collect brings its bins to the driver. Every measure —
+  * deviation, Shapley, leave-one-out influence — is driver arithmetic
+  * over an attribute's cells, returned as a LocalRelation (no
+  * self-join, no second reference to the scan, and consuming the result
+  * launches no Spark job). Cross-engine float determinism: ln terms are
+  * rounded to DECIMAL(18,9) and summed as exact long nano-units — see
+  * termNanos.
   */
 object Fedex {
 
   final case class Attr(name: String, numeric: Boolean)
-
-  private val termDec = DecimalType(18, 9)
 
   /** NULL-PRESERVING: Spark's least() skips nulls, so an unguarded
     * least(floor(null/...), nb-1) silently bins a NULL value into the
@@ -107,102 +109,138 @@ object Fedex {
       .agg(count(lit(1)).as("ns"), sum(col("inres")).as("nr"))
   }
 
-  private def klTerm(nr: Column, ns: Column, nRes: Column, nSrc: Column, k: Column): Column = {
-    val q = (nr + lit(0.5)) / (nRes + lit(0.5) * k)
-    val p = (ns + lit(0.5)) / (nSrc + lit(0.5) * k)
-    (q * log(q / p)).cast(termDec)
+  /** One attribute's count-table cells (bins with ns > 0) and totals. */
+  private final case class Cell(bin: String, ns: Long, nr: java.lang.Long)
+  private final case class AttrCells(attribute: String, cells: Seq[Cell],
+                                     nSrc: Long, nRes: java.lang.Long) {
+    def k: Long = cells.size.toLong
   }
 
-  /** ONE aggregation gathering each attribute's bins and totals; every
-    * downstream measure (deviation, Shapley, leave-one-out influence) is
-    * array math over the gathered cells. The earlier form enriched the
-    * count table with window totals and re-referenced it per measure
-    * (full score + both sides of the leave-one-out self-join), which
-    * re-planned the corpus scan per reference — the same duplicated-
-    * subtree cost the metainsight rewrite removed. Determinism: terms
-    * are DECIMAL(18,9) and decimal sums are exact and associative, so
-    * nothing depends on collect_list's arrival order.
+  /** ONE bounded collect of the count table's ns > 0 rows, grouped per
+    * attribute on the driver; every measure (deviation, Shapley,
+    * leave-one-out influence) is then driver arithmetic over an
+    * attribute's cells, mirroring the in-plan array math it replaced
+    * ([[graft.util.Mirror]]). In-plan, that tail runs as several tiny
+    * jobs whose planning, not their data, dominates an explain cell's
+    * latency.
     *
-    * Cardinality contract: one row holds ALL of an attribute's bins,
-    * and the leave-one-out is O(k²) within it — sized for explanation
-    * bins (numeric attrs have `nb` bins; categorical attrs are
-    * expected to be low-cardinality dimensions, as in the reference,
+    * Cardinality contract: the collect holds every attribute's bins,
+    * and the leave-one-out is O(k²) within an attribute — sized for
+    * explanation bins (numeric attrs have `nb` bins; categorical attrs
+    * are expected to be low-cardinality dimensions, as in the reference,
     * whose per-value binning has the same contract). Do not feed
     * ID-like categorical attributes — enforced fail-fast by
-    * [[graft.util.Guard.cellCap]]. */
-  private def attrCells(counts: DataFrame): DataFrame =
-    counts.filter(col("ns") > 0)
-      .groupBy("attribute")
-      .agg(collect_list(struct(col("bin"), col("ns"), col("nr"))).as("cells"),
-        sum(col("ns")).as("n_src"), sum(col("nr")).as("n_res"), count(lit(1)).as("k"))
-      .withColumn("k", graft.util.Guard.cellCap(col("k"), col("k"), "Fedex.attrCells"))
+    * [[graft.util.Guard.gatherCells]]. */
+  private def attrCells(counts: DataFrame): Seq[AttrCells] = {
+    require(counts.schema("attribute").dataType == StringType &&
+      counts.schema("bin").dataType == StringType &&
+      counts.schema("ns").dataType == LongType && counts.schema("nr").dataType == LongType,
+      s"a count table has string attribute/bin and long ns/nr, got ${counts.schema.simpleString}")
+    val rows = graft.util.Guard.gatherCells(
+      counts.filter(col("ns") > 0).select("attribute", "bin", "ns", "nr"), "Fedex.attrCells")
+    rows.toSeq.groupBy(_.getString(0)).toSeq.map { case (a, rs) =>
+      val cells = rs.map(r => Cell(r.getString(1), r.getLong(2),
+        if (r.isNullAt(3)) null else r.getLong(3)))
+      val nrs = cells.flatMap(c => Option(c.nr)).map(_.longValue)
+      AttrCells(a, cells, cells.map(_.ns).sum,
+        if (nrs.isEmpty) null else java.lang.Long.valueOf(nrs.sum))
+    }
+  }
 
-  /** Exact Σ of klTerm over `cells`, accumulated as LONG nano-units:
-    * terms are DECIMAL(18,9), so term × 10⁹ is an exact integer
-    * (Decimal(18,9) × int literal stays at scale 9 — a LONG multiplier
-    * would widen past 38 digits and Spark truncates decimal additions
-    * and over-wide products to scale 8, silently losing the 9th
-    * decimal). Long addition is exact and associative, so the sum is
-    * order-independent and bit-equal to the oracle's decimal SUM;
-    * |term| ≤ ~40 and bin counts are bounded, so no overflow. */
-  private def klSumNanos(cells: Column, nRes: Column, nSrc: Column, k: Column): Column =
-    aggregate(cells, lit(0L),
-      (acc, c) => acc +
-        (klTerm(c.getField("nr"), c.getField("ns"), nRes, nSrc, k) * lit(1000000000)).cast(LongType))
+  /** One bin's KL term in nano-units:
+    *   q = (nr + 0.5)/(nRes + 0.5k), p = (ns + 0.5)/(nSrc + 0.5k),
+    *   term = q·ln(q/p) as DECIMAL(18,9), × 10⁹ exactly.
+    * Terms are DECIMAL(18,9) so a sum of them is exact and
+    * order-independent as long nano-units, bit-equal to the oracle's
+    * decimal SUM; |term| ≤ ~40 and bin counts are bounded, so no
+    * overflow. NULL when a count is NULL. */
+  private def termNanos(nr: java.lang.Long, ns: Long, nRes: java.lang.Long,
+                        nSrc: Long, k: Long): java.lang.Long =
+    if (nr == null || nRes == null) null
+    else {
+      val q = (nr.longValue + 0.5) / (nRes.longValue + 0.5 * k)
+      val p = (ns + 0.5) / (nSrc + 0.5 * k)
+      val ln = Mirror.log(q / p)
+      if (ln == null) null
+      else Mirror.castDec(q * ln, 18, 9).unscaledValue.longValueExact
+    }
 
-  /** nano-units → the same double the decimal-sum → double cast gave. */
-  private def nanosToDouble(nanos: Column): Column =
-    (nanos.cast(DecimalType(28, 0)) * lit(new java.math.BigDecimal("0.000000001")))
-      .cast(DoubleType)
+  /** Σ of the cells' terms as a double; NULL if any term is NULL. */
+  private def klSum(cells: Seq[Cell], nRes: java.lang.Long, nSrc: Long,
+                    k: Long): java.lang.Double = {
+    var acc = 0L
+    for (c <- cells) {
+      val t = termNanos(c.nr, c.ns, nRes, nSrc, k)
+      if (t == null) return null
+      acc = Math.addExact(acc, t.longValue)
+    }
+    Mirror.nanosToDouble(acc)
+  }
 
-  private def klSum(cells: Column, nRes: Column, nSrc: Column, k: Column): Column =
-    nanosToDouble(klSumNanos(cells, nRes, nSrc, k))
+  private def field(counts: DataFrame, name: String): StructField = counts.schema(name)
+  private def derived(name: String, t: DataType) = StructField(name, t, nullable = true)
 
   /** Per-attribute KL deviation: (attribute, n_bins, kl_score). */
   def filterDeviation(counts: DataFrame): DataFrame =
-    attrCells(counts).select(col("attribute"), col("k").as("n_bins"),
-      klSum(col("cells"), col("n_res"), col("n_src"), col("k")).as("kl_score"))
+    Mirror.Table(
+      StructType(Seq(field(counts, "attribute"), derived("n_bins", LongType),
+        derived("kl_score", DoubleType))),
+      attrCells(counts).map(a => Row(a.attribute, a.k, klSum(a.cells, a.nRes, a.nSrc, a.k))))
+      .orderBy(asc("attribute")).toDF(counts.sparkSession)
 
   /** Shapley attribution per bin: the deviation measure is additive over
     * bins (score = Σ_b term_b), so the exact Shapley value of bin b IS its
     * own term — no sampling needed (reference explainer='shapley'). */
   def binShapley(counts: DataFrame): DataFrame =
-    attrCells(counts)
-      .select(col("attribute"), explode(transform(col("cells"), c => struct(
-        c.getField("bin").as("bin"), c.getField("ns").as("ns"), c.getField("nr").as("nr"),
-        klTerm(c.getField("nr"), c.getField("ns"), col("n_res"), col("n_src"), col("k"))
-          .cast(DoubleType).as("shapley")))).as("p"))
-      .select(col("attribute"), col("p.bin"), col("p.ns"), col("p.nr"), col("p.shapley"))
+    Mirror.Table(
+      StructType(Seq("attribute", "bin", "ns", "nr").map(field(counts, _)) :+
+        derived("shapley", DoubleType)),
+      attrCells(counts).flatMap(a => a.cells.map { c =>
+        val t = termNanos(c.nr, c.ns, a.nRes, a.nSrc, a.k)
+        Row(a.attribute, c.bin, c.ns, c.nr,
+          if (t == null) null else java.lang.Double.valueOf(Mirror.nanosToDouble(t)))
+      }))
+      .orderBy(asc("attribute"), asc("bin")).toDF(counts.sparkSession)
 
   def shapleySelectSql: String =
     s"""SELECT attribute, bin, ns, nr,
        |  CAST(${klTermSql("nr", "ns", "n_res", "n_src", "k")} AS DOUBLE) AS shapley
        |FROM en ORDER BY attribute, bin""".stripMargin
 
-  /** (attribute, kl_score, per-bin influence structs) from the single
-    * aggregation — the shared core of [[binInfluence]] and
-    * ExplainFrame's combined deviation+influence ranking. Leave-one-out
-    * is a nested array pass: for bin e, Σ over the other bins of the
-    * term with e's counts removed from the totals — O(k²) on
-    * bin-cardinality arrays, no self-join, no second scan. */
-  def influenceCells(counts: DataFrame): DataFrame =
-    // single-bin attributes have no leave-one-out (removing the only
-    // bin leaves nothing): dropped, matching the oracle's self-join on
-    // bin <> bin which produces no row for k = 1
-    attrCells(counts).filter(col("k") > 1).select(col("attribute"),
-      klSum(col("cells"), col("n_res"), col("n_src"), col("k")).as("kl_score"),
-      transform(col("cells"), e => struct(
-        e.getField("bin").as("bin"), e.getField("ns").as("ns"), e.getField("nr").as("nr"),
-        klSum(filter(col("cells"), x => x.getField("bin") =!= e.getField("bin")),
-          col("n_res") - e.getField("nr"), col("n_src") - e.getField("ns"), col("k") - 1)
-          .as("score_excl"))).as("infl"))
+  /** (attribute, kl_score, bin, ns, nr, influence) per bin — the shared
+    * core of [[binInfluence]] and ExplainFrame's combined deviation +
+    * influence ranking, in (attribute, bin) order. The leave-one-out of
+    * bin e sums the other bins' terms with e's counts removed from the
+    * totals over k − 1 bins — O(k²) on bin-cardinality lists. */
+  private[graft] def influenceTable(counts: DataFrame): Mirror.Table =
+    Mirror.Table(
+      StructType(Seq(field(counts, "attribute"), derived("kl_score", DoubleType)) ++
+        Seq("bin", "ns", "nr").map(field(counts, _)) :+ derived("influence", DoubleType)),
+      // single-bin attributes have no leave-one-out (removing the only
+      // bin leaves nothing): dropped, matching the oracle's self-join on
+      // bin <> bin which produces no row for k = 1
+      attrCells(counts).filter(_.k > 1).flatMap { a =>
+        val kl = klSum(a.cells, a.nRes, a.nSrc, a.k)
+        a.cells.map { e =>
+          // a NULL bin is unequal to nothing, so its leave-one-out is empty
+          val others = a.cells.filter(x => x.bin != null && e.bin != null && x.bin != e.bin)
+          val nRes = if (a.nRes == null || e.nr == null) null
+            else java.lang.Long.valueOf(a.nRes - e.nr)
+          val excl = klSum(others, nRes, a.nSrc - e.ns, a.k - 1)
+          Row(a.attribute, kl, e.bin, e.ns, e.nr,
+            if (kl == null || excl == null) null else java.lang.Double.valueOf(kl - excl))
+        }
+      })
+      .orderBy(asc("attribute"), asc("bin"))
 
   /** Leave-one-bin-out influence: (attribute, bin, ns, nr, influence). */
-  def binInfluence(counts: DataFrame): DataFrame =
-    influenceCells(counts)
-      .select(col("attribute"), col("kl_score"), explode(col("infl")).as("p"))
-      .select(col("attribute"), col("p.bin"), col("p.ns"), col("p.nr"),
-        (col("kl_score") - col("p.score_excl")).as("influence"))
+  def binInfluence(counts: DataFrame): DataFrame = {
+    val t = influenceTable(counts)
+    val keep = Seq("attribute", "bin", "ns", "nr", "influence").map(t.schema.fieldIndex)
+    Mirror.Table(StructType(keep.map(t.schema.fields(_))),
+      t.rows.map(r => Row.fromSeq(keep.map(r.get))))
+      .toDF(counts.sparkSession)
+  }
 
   // ---------------------------------------------------------------- SQL --
 
@@ -235,7 +273,7 @@ object Fedex {
   }
 
   /** DuckDB CTE prefix producing the bin counts + per-attribute totals
-    * (`en`) that [[attrCells]] gathers on the Spark side. */
+    * (`en`) that [[attrCells]] gathers on the driver. */
   def countsSql(table: String, srcWhere: String, resWhere: String,
                 num: Seq[String], cat: Seq[String], nb: Int = 10): String = {
     val statCols = num.map(a => s"MIN($a) AS lo_$a, MAX($a) AS hi_$a").mkString(", ")

@@ -1,6 +1,7 @@
 package graft.explain
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.util.{Guard, Mirror}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -26,40 +27,69 @@ object GroupByExplain {
   def sigmaExpr(sv: Column, svv: Column, k: Column): Column =
     sqrt(greatest(svv / k - (sv / k) * (sv / k), lit(0.0)))
 
+  /** Driver mirror of the per-term decimal moment sums and [[sigmaExpr]]
+    * over a group of `k` rows whose non-NULL values are `vs`: (Σv, σ).
+    * Σv is NULL without values, and σ is then 0 (greatest() skips the
+    * NULL moment). */
+  private[graft] def sumSigma(vs: Seq[Double], k: Long): (java.lang.Double, Double) = {
+    val sv = Mirror.decSum(vs, 18, 6)
+    val svv = Mirror.decSum(vs.map(v => v * v), 24, 2)
+    val sigma =
+      if (sv == null) 0.0
+      else math.sqrt(Mirror.greatest(svv / k - (sv / k) * (sv / k), 0.0))
+    (sv, sigma)
+  }
+
   def sigmaSql(sv: String, svv: String, k: String): String =
     s"SQRT(GREATEST($svv / $k - ($sv / $k) * ($sv / $k), 0))"
 
   /** Standardized deviation per (measure, grp): z = |v − μ| / σ (0 when
-    * σ≈0). ONE aggregation gathers the per-measure groups and the z
-    * math runs as array expressions — joining the stats back onto the
-    * melt would reference (and re-plan) the source subtree twice.
-    * Decimal sums keep the stats order-independent. Cardinality
-    * contract: one row holds every group of a measure — sized for
-    * explanation-grade groupbys (the exceptionality measure itself is
-    * meaningless over ID-like grouping keys); enforced fail-fast by
-    * [[graft.util.Guard.cellCap]]. */
-  def zdev(m: DataFrame): DataFrame = {
-    val g = m.groupBy("measure")
-      .agg(count(lit(1)).as("n_groups"),
-        sum(col("v").cast(dval)).cast(DoubleType).as("sv"),
-        sum((col("v") * col("v")).cast(dbig)).cast(DoubleType).as("svv"),
-        collect_list(struct(col("grp"), col("v"))).as("cells"))
-      .withColumn("n_groups",
-        graft.util.Guard.cellCap(col("n_groups"), col("n_groups"), "GroupByExplain.zdev"))
-    val mu = col("sv") / col("n_groups")
-    val sigma = sigmaExpr(col("sv"), col("svv"), col("n_groups"))
-    g.select(col("measure"), col("n_groups"), explode(transform(col("cells"), c => struct(
-        c.getField("grp").as("grp"), c.getField("v").as("value"),
-        when(sigma > 1e-12, graft.util.D.r(abs(c.getField("v") - mu) / sigma, 6))
-          .otherwise(lit(0.0)).as("zdev")))).as("p"))
-      .select(col("measure"), col("p.grp").as("grp"), col("p.value").as("value"),
-        col("n_groups"), col("p.zdev").as("zdev"))
+    * σ≈0). ONE bounded collect brings the melt (measure, grp, v) to the
+    * driver, and the per-measure stats and z run there through the exact
+    * expression mirrors of [[graft.util.Mirror]]: decimal sums keep the
+    * stats order-independent, and the result is a LocalRelation in
+    * (measure, grp) order, so consuming it launches no Spark job.
+    * Cardinality contract: the collect holds every group of every
+    * measure — sized for explanation-grade groupbys (the exceptionality
+    * measure itself is meaningless over ID-like grouping keys); enforced
+    * fail-fast by [[graft.util.Guard.gatherCells]]. */
+  def zdev(m: DataFrame): DataFrame = zdevTable(m).toDF(m.sparkSession)
+
+  /** [[zdev]]'s rows on the driver, for callers that re-rank them. */
+  private[graft] def zdevTable(m: DataFrame): Mirror.Table = {
+    require(m.schema("v").dataType == DoubleType,
+      s"a melt has a double column v, got ${m.schema("v").dataType.simpleString}")
+    val rows = Guard.gatherCells(m.select("measure", "grp", "v"), "GroupByExplain.zdev")
+    val schema = StructType(Seq(m.schema("measure"), m.schema("grp"),
+      m.schema("v").copy(name = "value"),
+      StructField("n_groups", LongType, nullable = true),
+      StructField("zdev", DoubleType, nullable = true)))
+    val out = rows.toSeq.groupBy(r => Mirror.groupKey(r.get(0))).values.toSeq.flatMap { cells =>
+      val n = cells.size.toLong
+      val (sv, sigma) = sumSigma(
+        cells.flatMap(r => if (r.isNullAt(2)) None else Some(r.getDouble(2))), n)
+      cells.map { r =>
+        val z: java.lang.Double =
+          if (Mirror.compareDoubles(sigma, 1e-12) <= 0) 0.0
+          else if (r.isNullAt(2)) null
+          else Mirror.r(math.abs(r.getDouble(2) - sv / n) / sigma, 6)
+        Row(r.get(0), r.get(1), r.get(2), n, z)
+      }
+    }
+    Mirror.Table(schema, out).orderBy(Mirror.asc("measure"), Mirror.asc("grp"))
   }
 
   /** Exceptionality per measure = max standardized deviation. */
-  def exceptionality(m: DataFrame): DataFrame =
-    zdev(m).groupBy("measure")
-      .agg(max(col("n_groups")).as("n_groups"), max(col("zdev")).as("exceptionality"))
+  def exceptionality(m: DataFrame): DataFrame = {
+    val z = zdevTable(m)
+    val schema = StructType(Seq(z.schema("measure"),
+      StructField("n_groups", LongType, nullable = true),
+      StructField("exceptionality", DoubleType, nullable = true)))
+    val out = z.rows.groupBy(r => Mirror.groupKey(r.get(0))).values.toSeq.map(g =>
+      Row(g.head.get(0), g.head.getLong(3),
+        Mirror.maxD(g.map(r => if (r.isNullAt(4)) null else java.lang.Double.valueOf(r.getDouble(4))))))
+    Mirror.Table(schema, out).orderBy(Mirror.asc("measure")).toDF(m.sparkSession)
+  }
 
   /** DuckDB CTE: melted orders measures → z table. `meltSql` must yield
     * columns (measure, grp, v). */

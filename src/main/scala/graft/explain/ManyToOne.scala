@@ -65,7 +65,7 @@ object ManyToOne {
     if (numAttrs.isEmpty) return Nil
     val ps = (1 until nb).map(_.toDouble / nb)
     numAttrs.map(a => NumBin(a,
-      graft.util.ExactQuantile.quantiles(src, a, ps).map(graft.util.D.rDriver(_, 6))))
+      graft.util.ExactQuantile.quantiles(src, a, ps).map(graft.util.Mirror.r(_, 6))))
   }
 
   def quantileBinSql(a: String, ps: Seq[Double]): String =
@@ -92,7 +92,7 @@ object ManyToOne {
         // histogram-refined exact quantiles (see [[quantileBins]] — the
         // former percentile() aggregate buffered every label value)
         NumBin(labelCol, graft.util.ExactQuantile.quantiles(src, labelCol, ps)
-          .map(graft.util.D.rDriver(_, 6))).expr
+          .map(graft.util.Mirror.r(_, 6))).expr
       else when(col(labelCol).isNotNull, Fedex.binExpr(col(labelCol),
         lit(row.getDouble(row.fieldIndex("lo"))), lit(row.getDouble(row.fieldIndex("hi"))), numBins))
     // concat propagates the NULL bin, so NULL labels stay NULL and are
@@ -653,15 +653,14 @@ object ManyToOne {
     val cA   = triples.groupMapReduce(_._2)(_._4)(_ + _)
     val cB   = triples.groupMapReduce(_._3)(_._4)(_ + _)
     val cAB  = fold(triples.map { case (_, a, b, n) => (a, b) -> n })
-    import graft.util.D.rDriver
     val out = for {
       ((l, a), na) <- nA.toSeq
       ((l2, b), nbv) <- nB.toSeq if l2 == l
     } yield {
       val nMatch = na + nbv - nAB.getOrElse((l, a, b), 0L)
       val nCond = cA(a) + cB(b) - cAB.getOrElse((a, b), 0L)
-      val cov = rDriver(nMatch.toDouble / nLab(l))
-      val sep = rDriver((nCond - nMatch).toDouble / nCond)
+      val cov = graft.util.Mirror.r(nMatch.toDouble / nLab(l))
+      val sep = graft.util.Mirror.r((nCond - nMatch).toDouble / nCond)
       (l, a, b, nMatch, cov, sep, if (cov >= covTh && sep <= sepTh) 1 else 0)
     }
     val spark = src.sparkSession

@@ -379,46 +379,12 @@ object MetaInsight {
     (catTable ++ trendTable).toSeq
   }
 
-  // ---- driver-side exact mirrors (masterRanked finish) ---------------
-  // Same convention as graft.explain.Correlation's suite finish: the
-  // bounded cube collects once and every downstream expression is
-  // replicated BIT-EXACTLY in driver Scala (same BigDecimal entry points
-  // Spark's Cast/Round/Sum use), pinned by MetaInsightSpec's
-  // masterRanked-vs-auto parity test.
-
-  /** Mirror of `x.cast(DecimalType(p, s))` on a double (Spark routes
-    * Decimal(d) through BigDecimal.valueOf — the shortest-decimal
-    * rendering — then HALF_UP to scale s). */
-  private def castDec(x: Double, scale: Int): java.math.BigDecimal =
-    java.math.BigDecimal.valueOf(x).setScale(scale, java.math.RoundingMode.HALF_UP)
-
-  /** Mirror of [[graft.util.D.r]] (see Correlation's rD). */
-  private def rDm(x: Double, s: Int): Double = {
-    val f = math.pow(10, s)
-    new java.math.BigDecimal(x * f)
-      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue() / f
-  }
-
-  /** Spark's UTF8String binary ordering for driver-side sorts (Scala's
-    * String ordering is UTF-16 code-unit order — differs above the BMP). */
-  private def utf8Lt(a: String, b: String): Boolean = {
-    if (a == null || b == null) return a == null && b != null
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-    var i = 0
-    while (i < x.length && i < y.length) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c < 0
-      i += 1
-    }
-    x.length < y.length
-  }
-
   /** [[masterTables]] + [[rank]] evaluated on the DRIVER from the one
     * collected master cube — the whole auto-search becomes one corpus
     * scan plus KB-scale arithmetic (the r6 judge measured auto's
     * residual cost as per-stage fixed overhead across its many tiny
     * pattern/mine/rank stages; this removes all of them). Exact
-    * expression mirrors throughout; results are bit-identical to the
+    * expression mirrors ([[graft.util.Mirror]]) throughout; results are bit-identical to the
     * in-plan chain (MetaInsightSpec parity pin + the unchanged SQL
     * oracle). Cube rows are Guard-capped (MaxGatheredCells). */
   def masterRanked(src: DataFrame, fs: Seq[String], bs: Seq[String],
@@ -428,6 +394,8 @@ object MetaInsight {
                    balanceFactor: Double = 1.0,
                    allowMultipleAggregations: Boolean = false,
                    allowMultipleGroupbys: Boolean = false): DataFrame = {
+    import graft.util.Mirror
+    import graft.util.Mirror.{castDec, utf8Lt}
     require(fs.nonEmpty && bs.nonEmpty && ms.nonEmpty,
       "masterRanked needs filter dims, breakdowns and measures")
     require(minCommonness > 0 && minCommonness <= 1,
@@ -438,14 +406,10 @@ object MetaInsight {
       trendCols.map(d => month(col(d)).as(s"__t_$d"))
     val aggs = count(lit(1)).as("cnt") +:
       ms.map(m => sum(col(m).cast(D.dec25)).as(s"sm_$m"))
-    val cap = graft.util.Guard.MaxGatheredCells
-    val cube = src.groupBy(dimCols: _*).agg(aggs.head, aggs.tail: _*)
-      .limit(cap.toInt + 1).collect()
-    if (cube.length > cap)
-      throw new IllegalArgumentException(
-        s"metainsight master cube exceeded $cap cells — a candidate dimension " +
-          "looks ID-like; pass explicit filterDims/breakdowns or raise " +
-          "graft.util.Guard.MaxGatheredCells.")
+    // an ID-like candidate dimension fails here; pass explicit
+    // filterDims/breakdowns to avoid it
+    val cube = graft.util.Guard.gatherCells(
+      src.groupBy(dimCols: _*).agg(aggs.head, aggs.tail: _*), "MetaInsight.masterRanked")
 
     // ---- cells of one scope (exact decimal re-aggregation) ----
     // key extractors: cat dims are the string-cast cube columns; trend
@@ -482,7 +446,7 @@ object MetaInsight {
         if (c.sm == null && c.cnt > 0) throw new IllegalStateException(
           s"masterRanked: cell (${c.sub}, ${c.b}) has only NULL '$m' values — " +
             "use the in-plan autoTables path for measures with NULLs")
-        val vMean = rDm(c.sm.doubleValue() / c.cnt, 6)
+        val vMean = Mirror.r(c.sm.doubleValue() / c.cnt, 6)
         Seq(MeltRow(c.sub, c.b, s"${m}_mean", vMean)) ++
           (if (withRowCount) Seq(MeltRow(c.sub, c.b, "row_count", c.cnt.toDouble)) else Nil)
       }
@@ -497,10 +461,9 @@ object MetaInsight {
           val k = cells.size.toLong
           if (k > cellCapL) throw new IllegalStateException(
             s"MetaInsight.masterRanked: a single group gathered $k cells (bound $cellCapL)")
-          val sv = cells.map(c => castDec(c.v, 6)).reduce(_.add(_)).doubleValue()
-          val svv = cells.map(c => castDec(c.v * c.v, 2)).reduce(_.add(_)).doubleValue()
+          val (svBoxed, sigma) = sumSigma(cells.map(_.v), k)
+          val sv = svBoxed.doubleValue
           val mu = sv / k
-          val sigma = math.sqrt(math.max(svv / k - (sv / k) * (sv / k), 0.0))
           def zOf(v: Double) = if (sigma > 1e-12) math.abs(v - mu) / sigma else 0.0
           def shOf(v: Double) = v / sv
           def topBy(metric: Double => Double): String =
@@ -526,9 +489,9 @@ object MetaInsight {
           val xs = cells.map(c => c.b.toLong)
           val sx = xs.sum
           val sxx = xs.map(x => x * x).sum
-          val sv = cells.map(c => castDec(c.v, 6)).reduce(_.add(_)).doubleValue()
-          val svv = cells.map(c => castDec(c.v * c.v, 2)).reduce(_.add(_)).doubleValue()
-          val sxv = cells.map(c => castDec(c.b.toLong * c.v, 6)).reduce(_.add(_)).doubleValue()
+          val sv = cells.map(c => castDec(c.v, 18, 6)).reduce(_.add(_)).doubleValue()
+          val svv = cells.map(c => castDec(c.v * c.v, 24, 2)).reduce(_.add(_)).doubleValue()
+          val sxv = cells.map(c => castDec(c.b.toLong * c.v, 18, 6)).reduce(_.add(_)).doubleValue()
           val num = k * sxv - sx * sv
           val den = math.sqrt((k * sxx - sx * sx).toDouble) *
             math.sqrt(math.max(k * svv - sv * sv, 0.0))
@@ -576,8 +539,8 @@ object MetaInsight {
         val exHl = g.filter(_.hasPat == 1)
           .map(p => if (p.highlight == null) p.sub else s"${p.sub}:${p.highlight}")
           .reduceOption((a, b) => if (utf8Lt(b, a)) b else a).orNull
-        val commonness = rDm(nMatch.toDouble / nSub, 6)
-        val score = rDm(
+        val commonness = Mirror.r(nMatch.toDouble / nSub, 6)
+        val score = Mirror.r(
           (nMatch.toDouble - balanceFactor * (nSub - nMatch)) / nSub -
             noExceptionPenaltyWeight * (if (nMatch == nSub) 1 else 0), 6)
         (f, b, m, pat, nSub, nMatch, commonness, score, exHl)

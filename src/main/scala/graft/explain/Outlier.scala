@@ -1,7 +1,9 @@
 package graft.explain
 
-import graft.util.D
-import org.apache.spark.sql.{Column, DataFrame}
+import java.math.{BigDecimal => JBigDecimal}
+
+import graft.util.{D, Guard, Mirror}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,17 +22,27 @@ import org.apache.spark.sql.types._
   *   influence(a,b) = (S − S'(a,b)) · (N − n_b) / N
   *
   * Scale: ONE scan builds the (attr, bin, group) → (cnt, sum) cube via an
-  * exploded attr array (map-side combined); leave-out aggregates are pure
-  * algebra on that cube joined with per-group totals. No per-candidate
-  * rescan, no driver loop.
+  * exploded attr array (map-side combined), and ONE bounded collect
+  * brings its ~|groups|·|attrs|·(nb+1) rows to the driver
+  * ([[graft.util.Guard.gatherCells]]). The leave-out algebra — per-group
+  * totals, the candidate × group grid, the moment sums and the scores —
+  * runs there through the exact expression mirrors of
+  * [[graft.util.Mirror]], and the result comes back as a LocalRelation:
+  * no per-candidate rescan, and consuming it launches no Spark job.
   */
 object Outlier {
 
-  import GroupByExplain.{dval, dbig, sigmaExpr, sigmaSql, dvalSql, dbigSql}
+  import GroupByExplain.{sigmaSql, dvalSql, dbigSql}
 
   /** @param dir +1 = explain a high outlier, -1 = low. */
   def explain(src: DataFrame, groupCol: String, aggCol: String, target: String,
-              dir: Int, attrs: Seq[String], nb: Int = 10): DataFrame = {
+              dir: Int, attrs: Seq[String], nb: Int = 10): DataFrame =
+    explainTable(src, groupCol, aggCol, target, dir, attrs, nb).toDF(src.sparkSession)
+
+  /** [[explain]]'s rows on the driver, for callers that re-rank them. */
+  private[graft] def explainTable(src: DataFrame, groupCol: String, aggCol: String,
+                                  target: String, dir: Int, attrs: Seq[String],
+                                  nb: Int = 10): Mirror.Table = {
     val stats = Fedex.statsDf(src, attrs.map(Fedex.Attr(_, numeric = true))).get
 
     // (grp, attribute, bin, cnt, sm) — ONE scan, hot path all-int/long:
@@ -63,82 +75,93 @@ object Outlier {
       .select(col("grp"), element_at(attrArr, col("ai") + 1).as("attribute"),
         col("bin").cast("string").as("bin"), col("cnt"),
         Correlation.value6(Correlation.recombineUnscaled("fy")).cast(D.dec25).as("sm"))
-    // collect + LocalRelation re-entry: the cube feeds three consumers
-    // (cands, tot, and the grid's join side) whose column pruning / join
-    // null-filters make the subtrees NON-identical, so runtime exchange
-    // reuse does NOT collapse them — the r6 plan executed the exploded
-    // corpus scan THREE times (the measured q_outlier_explain
-    // regression; an eager localCheckpoint measured slower still). The
-    // cube is |groups|·|attrs|·(nb+1) rows — ~100 at any corpus size
-    // (the qcut-boundary bounded-collect convention), so it re-enters as
-    // a LocalRelation the tiny downstream algebra references freely.
-    val cube = src.sparkSession.createDataFrame(
-      java.util.Arrays.asList(cubePlan.collect(): _*), cubePlan.schema)
-
-    // per-group totals (tiny) — read from the sentinel rows of the SAME
-    // collected cube (all rows contribute to "__total__" regardless of
-    // attribute nulls, so this equals the oracle's whole-table tot)
-    val tot = cube.filter(col("attribute") === "__total__")
-      .groupBy("grp")
-      .agg(sum(col("cnt")).as("cnt_g"), sum(col("sm")).as("sm_g"))
-
-    def vCol(sm: Column, cnt: Column): Column = sm.cast(D.dec25).cast(DoubleType) / cnt
-
-    // full outlier score S
-    val g0 = tot.select(col("grp"), vCol(col("sm_g"), col("cnt_g")).as("v"))
-    // σ can be EXACTLY 0 when every per-group mean quantizes to the
-    // same dbig cell (a tiny-magnitude aggCol: v ≈ 0.05 → v² rounds to
-    // 0.00 at DECIMAL(24,2), svv = 0, variance clamps to 0 — the
-    // Houses-notebook replay found it): the oracle's double (vt−μ)/0
-    // is NULL in DuckDB, so the score must be NULL here too, never an
-    // ANSI DIVIDE_BY_ZERO (the degenerate-pin divergence class).
-    def scoreExpr(vt: Column, sv: Column, svv: Column, k: Column): Column = {
-      val sig = sigmaExpr(sv, svv, k)
-      when(sig > 0, lit(dir) * (vt - sv / k) / sig)
-        .otherwise(lit(null).cast(DoubleType))
-    }
-    val s0 = g0.agg(count(lit(1)).as("k"),
-        sum(col("v").cast(dval)).cast(DoubleType).as("sv"),
-        sum((col("v") * col("v")).cast(dbig)).cast(DoubleType).as("svv"),
-        max(when(col("grp") === target, col("v"))).as("vt"))
-      .select(scoreExpr(col("vt"), col("sv"), col("svv"), col("k")).as("s_full"))
-
-    // candidate grid × groups (left join so groups missing a bin keep all rows)
-    val cands = cube.filter(col("attribute") =!= "__total__")
-      .select("attribute", "bin").distinct()
-    val grid = cands.crossJoin(tot)
-      .join(cube, Seq("attribute", "bin", "grp"), "left")
-      .na.fill(0L, Seq("cnt"))
-      .withColumn("sm", coalesce(col("sm"), lit(0).cast(D.dec25)))
-      .withColumn("cnt_kept", col("cnt_g") - col("cnt"))
-      // a bin holding ALL of a group's rows has no leave-out mean:
-      // NULL like the oracle's x/0, never an ANSI DIVIDE_BY_ZERO
-      // (degenerate-pin class); the NULL row drops out of the moment
-      // sums below exactly as it does in the SQL mirror
-      .withColumn("v",
-        when(col("cnt_kept") > 0,
-          (col("sm_g") - col("sm")).cast(D.dec25).cast(DoubleType) / col("cnt_kept"))
-          .otherwise(lit(null).cast(DoubleType)))
-
-    val per = grid.groupBy("attribute", "bin")
-      .agg(count(lit(1)).as("k"),
-        sum(col("v").cast(dval)).cast(DoubleType).as("sv"),
-        sum((col("v") * col("v")).cast(dbig)).cast(DoubleType).as("svv"),
-        max(when(col("grp") === target, col("v"))).as("vt"),
-        sum(col("cnt")).as("n_removed"),
-        sum(col("cnt_g")).as("n_total"),
-        min(col("cnt_kept")).as("min_kept"))
-
-    per.crossJoin(broadcast(s0))
-      .filter(col("min_kept") > 0) // drop candidates that empty out a group
-      .withColumn("s_excl",
-        scoreExpr(col("vt"), col("sv"), col("svv"), col("k")))
-      .select(col("attribute"), col("bin"), col("n_removed"),
-        graft.util.D.r(col("s_full"), 6).as("s_full"),
-        graft.util.D.r((col("s_full") - col("s_excl")) * (col("n_total") - col("n_removed")) / col("n_total"), 6)
-          .as("influence"))
-      .orderBy("attribute", "bin")
+    // The cube feeds every later step, and at ~100 rows per corpus
+    // (the qcut-boundary bounded-collect convention) the rest of the
+    // explanation is driver arithmetic: an in-plan finish runs about ten
+    // tiny jobs whose planning, not their data, dominates the latency.
+    // `is_t` evaluates the target match in-plan, so `grp = target` keeps
+    // Spark's type coercion for non-string group columns.
+    explainRows(Guard.gatherCells(
+      cubePlan.withColumn("is_t", col("grp") === target), "Outlier.explain"), dir)
   }
+
+  /** The explanation table from the collected cube rows
+    * (grp, attribute, bin, cnt, sm, is_t), mirroring the in-plan chain
+    * it replaced expression by expression:
+    *   tot  = Σ cnt, Σ sm of the "__total__" rows per group;
+    *   v    = sm.cast(DECIMAL(25,6)).cast(DOUBLE) / cnt;
+    *   S    = dir·(v_t − μ)/σ over the per-group v, NULL unless σ > 0
+    *          (μ, σ from DECIMAL(18,6)/(24,2) per-term sums);
+    *   grid = each (attribute, bin) candidate × each group, left-joined
+    *          to its cube cell (a NULL group never matches, like the
+    *          equi-join), v = (sm_g − sm)/(cnt_g − cnt), NULL when the
+    *          bin holds all of the group's rows;
+    *   influence = (S − S')·(n_total − n_removed)/n_total, candidates
+    *          with min_kept = 0 dropped, ordered by (attribute, bin). */
+  private def explainRows(cube: Array[Row], dir: Int): Mirror.Table = {
+    final case class Cell(grp: Any, attribute: String, bin: String, cnt: Long,
+                          sm: JBigDecimal, isT: Boolean)
+    val cells = cube.toSeq.map(r => Cell(Mirror.groupKey(r.get(0)), r.getString(1),
+      r.getString(2), r.getLong(3), r.getDecimal(4), !r.isNullAt(5) && r.getBoolean(5)))
+
+    // per-group totals from the sentinel rows
+    final case class Tot(grp: Any, cntG: Long, smG: JBigDecimal, isT: Boolean)
+    val tot = cells.filter(_.attribute == "__total__").groupBy(_.grp).toSeq.map {
+      case (g, cs) => Tot(g, cs.map(_.cnt).sum,
+        cs.map(_.sm).filter(_ != null).reduceOption(_ add _).orNull, cs.head.isT)
+    }
+
+    // dir·(v_t − μ)/σ over (v, is target) pairs, NULL unless σ > 0
+    def score(vs: Seq[(java.lang.Double, Boolean)]): java.lang.Double = {
+      val k = vs.size.toLong
+      val (sv, sig) =
+        GroupByExplain.sumSigma(vs.collect { case (v, _) if v != null => v.doubleValue }, k)
+      val vt = Mirror.maxD(vs.collect { case (v, true) => v })
+      if (Mirror.compareDoubles(sig, 0.0) > 0 && vt != null) dir.toDouble * (vt - sv / k) / sig
+      else null
+    }
+
+    val sFull = score(tot.map(t =>
+      (if (t.smG == null) null else java.lang.Double.valueOf(t.smG.doubleValue / t.cntG), t.isT)))
+    val sFullR: java.lang.Double = if (sFull == null) null else Mirror.r(sFull, 6)
+
+    val byCell = cells.groupBy(c => (c.attribute, c.bin, c.grp))
+    val cands = cells.filter(_.attribute != "__total__").map(c => (c.attribute, c.bin)).distinct
+    val out = cands.flatMap { case (a, b) =>
+      // (cnt, cnt_g, cnt_kept, v, is target) per grid row
+      val grid = tot.flatMap { t =>
+        val hits = if (t.grp == null) Nil else byCell.getOrElse((a, b, t.grp), Nil)
+        val matched =
+          if (hits.isEmpty) Seq((0L, JBigDecimal.ZERO))
+          else hits.map(c => (c.cnt, if (c.sm == null) JBigDecimal.ZERO else c.sm))
+        matched.map { case (cnt, sm) =>
+          val kept = t.cntG - cnt
+          val v: java.lang.Double =
+            if (kept > 0 && t.smG != null) t.smG.subtract(sm).doubleValue / kept
+            else null
+          (cnt, t.cntG, kept, v, t.isT)
+        }
+      }
+      if (grid.map(_._3).min <= 0) Nil
+      else {
+        val nRemoved = grid.map(_._1).sum
+        val nTotal = grid.map(_._2).sum
+        val sExcl = score(grid.map(g => (g._4, g._5)))
+        val infl: java.lang.Double =
+          if (sFull == null || sExcl == null) null
+          else Mirror.r((sFull - sExcl) * (nTotal - nRemoved) / nTotal, 6)
+        Seq(Row(a, b, nRemoved, sFullR, infl))
+      }
+    }
+    Mirror.Table(OutSchema, out).orderBy(Mirror.asc("attribute"), Mirror.asc("bin"))
+  }
+
+  private val OutSchema = StructType(Seq(
+    StructField("attribute", StringType, nullable = false),
+    StructField("bin", StringType, nullable = true),
+    StructField("n_removed", LongType, nullable = true),
+    StructField("s_full", DoubleType, nullable = true),
+    StructField("influence", DoubleType, nullable = true)))
 
   /** DuckDB mirror of [[explain]]. */
   def sql(table: String, groupCol: String, aggCol: String, target: String,

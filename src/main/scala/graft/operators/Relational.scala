@@ -782,7 +782,7 @@ object Relational extends QFamily {
       (for {
         i <- 0 until w; j <- (i + 1) until w
         sup = cells(tri(i, j)) if sup > 0L
-      } yield (brands(i), brands(j), sup, graft.util.D.rDriver(
+      } yield (brands(i), brands(j), sup, graft.util.Mirror.r(
         sup.toDouble * n / (cells(tri(i, i)) * cells(tri(j, j)))))
       ).sortBy(t0 => (t0._1, t0._2))
         .toDF("brand_a", "brand_b", "support", "lift")
@@ -893,7 +893,7 @@ object Relational extends QFamily {
         ("fk_lineitem_orders", "lineitem", "l_orderkey", v2, nl))
       import s.implicits._
       rows.map { case (c, tbl, cn, v, n) =>
-          (c, tbl, cn, v, graft.util.D.rDriver(v.toDouble / n), if (v == 0L) 1 else 0)
+          (c, tbl, cn, v, graft.util.Mirror.r(v.toDouble / n), if (v == 0L) 1 else 0)
         }.sortBy(_._1)
         .toDF("constraint_id", "table_name", "column_name", "violations", "frac", "passes")
     },
@@ -1105,11 +1105,8 @@ object Relational extends QFamily {
       // linear codegen'd passes with bounded driver data (see its
       // scaladoc); interpolation is quantile_cont's lo + frac·(hi−lo),
       // 4dp-rounded with the exact D.r mirror.
-      def rDriver(x: Double): Double =
-        new java.math.BigDecimal(x * 1e4)
-          .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue() / 1e4
       val ths = graft.util.ExactQuantile.quantiles(li, "l_extendedprice",
-        (1 to 9).map(_ / 10.0)).map(rDriver)
+        (1 to 9).map(_ / 10.0)).map(graft.util.Mirror.r(_, 4))
       val bucket = ths.map(t0 => (col("l_extendedprice") > lit(t0)).cast("int"))
         .reduce(_ + _) + lit(1)
       li.select(bucket.cast(LongType).as("bucket"), col("l_extendedprice"))

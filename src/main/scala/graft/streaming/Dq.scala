@@ -93,7 +93,7 @@ object Dq {
       ("fk_orders_customer", "orders", "o_custkey", c.fkOrphans, c.n))
       .map { case (id, tbl, cn, v, n) =>
         (id, tbl, cn, v,
-          if (n == 0L) 0.0 else graft.util.D.rDriver(v.toDouble / n),
+          if (n == 0L) 0.0 else graft.util.Mirror.r(v.toDouble / n),
           if (v == 0L) 1 else 0)
       }.sortBy(_._1)
       .toDF("constraint_id", "table_name", "column_name", "violations", "frac", "passes")

@@ -120,7 +120,7 @@ object Ewma {
       // when(den > 0) guard / the DuckDB mirror's x/0), never NaN
       val ewma =
         if (den.signum == 0) None
-        else Some(graft.util.D.rDriver(
+        else Some(graft.util.Mirror.r(
           num.setScale(6, java.math.RoundingMode.HALF_UP).doubleValue / den.doubleValue))
       out += EwmaOut(e.user_id, e.event_id, e.ts, ewma)
       recent = window.take(Lags - 1).map(_.getOrElse(NullSlot))

@@ -63,20 +63,10 @@ object D {
     * they disagree when x·10^s lands within an ulp of a .5 boundary.
     * Mirroring the multiply-then-round form here makes both engines
     * evaluate the same double product, round it half-away-from-zero, and
-    * divide — bit-identical everywhere. */
+    * divide — bit-identical everywhere. Driver-side mirror: [[Mirror.r]]. */
   def r(c: Column, s: Int = 6): Column = {
     val f = math.pow(10, s)
     round(c.cast(DoubleType) * f, 0) / f
-  }
-
-  /** DRIVER-side mirror of [[r]] for values finished in Scala (the
-    * bounded-collect operators): Spark's Round on a double rounds the
-    * exact binary expansion HALF_UP — pinned by the Correlation suite
-    * and masterRanked parity tests. */
-  def rDriver(x: Double, s: Int = 6): Double = {
-    val f = math.pow(10, s)
-    new java.math.BigDecimal(x * f)
-      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue() / f
   }
 
   /** Exact sum of squares as decimal, emitted as double (scale-0 rescale —

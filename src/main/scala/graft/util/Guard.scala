@@ -1,19 +1,23 @@
 package graft.util
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Fail-fast guards for documented cardinality contracts.
   *
-  * The single-pass explainer rewrites gather a whole group's cells into
-  * one row via collect_list (GroupByExplain.zdev, Fedex.attrCells,
-  * MetaInsight.catPatternsKeyed). That is sized for explanation-grade
-  * groupings — bins and low-cardinality dimensions — and the contract
-  * "don't feed ID-like grouping keys" used to be documentation only: a
-  * violating caller got an executor OOM on one task with no hint of the
-  * cause. [[cellCap]] turns the violation into an immediate, diagnosable
-  * error at negligible cost (one comparison per group row, evaluated
-  * executor-side next to the gathered array itself).
+  * The explainers gather explanation-grade cell sets — bins and
+  * low-cardinality dimensions — either on the driver through one bounded
+  * collect ([[gatherCells]]: Outlier.explain's cube, the Fedex count
+  * table, GroupByExplain.zdev's melt, MetaInsight.masterRanked's cube),
+  * or into one row per group via
+  * collect_list ([[cellCap]]: MetaInsight.catPatternsKeyed). The
+  * contract "don't feed ID-like grouping keys" used to be documentation
+  * only: a violating caller got a driver or executor OOM with no hint of
+  * the cause. Both guards turn the violation into an immediate,
+  * diagnosable error. The collect is limit()-bounded to one row past the
+  * bound, so no more than that reaches the driver; the in-plan cap is
+  * one comparison per group row, evaluated executor-side next to the
+  * gathered array itself.
   */
 object Guard {
 
@@ -63,6 +67,15 @@ object Guard {
       .otherwise(value)
   }
 
+  /** What every gathered-cell error says after its count: the key
+    * looks ID-like, and how to get past the bound. */
+  private def idLike(cap: Long): String =
+    s" cells (bound $cap). The grouping key looks ID-like — this " +
+      "operator is sized for explanation-grade groupings (bins / " +
+      "low-cardinality dimensions). Re-group on a coarser key, or " +
+      "raise graft.util.Guard.MaxGatheredCells if the group size is " +
+      "intentional."
+
   /** Returns `value`, but evaluating it raises a diagnosable error when
     * `n` (the group's gathered cell count) exceeds [[MaxGatheredCells]].
     * Wrap a column the plan is guaranteed to evaluate (the count itself,
@@ -71,12 +84,20 @@ object Guard {
   def cellCap(n: Column, value: Column, site: String): Column = {
     val cap = MaxGatheredCells
     when(n > cap, raise_error(concat(
-      lit(s"$site: a single group gathered "), n.cast("string"),
-      lit(s" cells (bound $cap). The grouping key looks ID-like — this " +
-        "operator is sized for explanation-grade groupings (bins / " +
-        "low-cardinality dimensions). Re-group on a coarser key, or " +
-        "raise graft.util.Guard.MaxGatheredCells if the group size is " +
-        "intentional."))))
+      lit(s"$site: a single group gathered "), n.cast("string"), lit(idLike(cap)))))
       .otherwise(value)
+  }
+
+  /** Collects `cells` to the driver for a driver-side finish. The collect
+    * is bounded at [[MaxGatheredCells]] + 1 rows, and holding more than
+    * the bound raises the [[cellCap]] error, so an ID-like key fails
+    * before more than one row past the bound reaches the driver. */
+  def gatherCells(cells: DataFrame, site: String): Array[Row] = {
+    val cap = MaxGatheredCells
+    val rows = cells.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
+    if (rows.length > cap)
+      throw new IllegalArgumentException(
+        s"$site: the collect gathered more than $cap" + idLike(cap))
+    rows
   }
 }

@@ -60,7 +60,7 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(got.keySet === wantSupport.keySet)
     got.foreach { case (pair, (sup, lift)) =>
       assert(sup === wantSupport(pair))
-      val wantLift = D.rDriver(sup.toDouble * n / (brandCnt(pair._1) * brandCnt(pair._2)))
+      val wantLift = graft.util.Mirror.r(sup.toDouble * n / (brandCnt(pair._1) * brandCnt(pair._2)))
       assert(math.abs(lift - wantLift) < 1e-9, s"$pair lift $lift want $wantLift")
     }
   }

@@ -534,7 +534,49 @@ class ExplainFrameSpec extends AnyFunSuite {
       // under the bound the same plan runs (guard is transparent)
       graft.util.Guard.MaxGatheredCells = 100L
       assert(graft.explain.GroupByExplain.zdev(m).count() === 20)
+
+      // FEDEx and outlier explanations gather their count table / cube
+      // on the driver: an ID-like key must fail with the same diagnosis,
+      // and the only collect that ran must be bounded at cap + 1 rows
+      graft.util.Guard.MaxGatheredCells = 10L
+      val lineitem = graft.util.D.t(spark, sf, "lineitem")
+      val fedex = collectLimits(intercept[Exception](graft.explain.Fedex.filterDeviation(
+        graft.explain.Fedex.binCountsFiltered(lineitem, col("l_quantity") >= 30,
+          Seq(graft.explain.Fedex.Attr("l_orderkey", numeric = false))))))
+      val outlier = collectLimits(intercept[Exception](graft.explain.Outlier.explain(
+        lineitem, "l_orderkey", "l_extendedprice", "1", 1, Seq("l_quantity"))))
+      for ((name, (err, limits)) <- Seq("fedex" -> fedex, "outlier" -> outlier)) {
+        assert(msgs(err).exists(_.contains("ID-like")), s"$name: wrong error: $err")
+        assert(limits === Seq(Some(11)), s"$name: collects were not bounded at cap + 1: $limits")
+      }
     } finally graft.util.Guard.MaxGatheredCells = before
+  }
+
+  /** Runs `f` and returns its result with the row limit of every Dataset
+    * action it ran (None for an action without a CollectLimit). */
+  private def collectLimits[T](f: => T): (T, Seq[Option[Int]]) = {
+    import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[Int]]()
+    val helper = new AdaptiveSparkPlanHelper {}
+    def limitOf(qe: QueryExecution) =
+      helper.collect(qe.executedPlan) { case c: CollectLimitExec => c.limit }.headOption
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(limitOf(qe))
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(limitOf(qe))
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = f
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 10000000000L
+      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      Thread.sleep(300)
+      (out, seen.toArray.toSeq.map(_.asInstanceOf[Option[Int]]))
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("dist pruning fails fast past the label-cardinality cap") {

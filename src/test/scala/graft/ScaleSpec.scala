@@ -7,9 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class ScaleSpec extends AnyFunSuite {
   import TestSession._
 
-  /** Plan-class checks for the centroid-assignment pins. The walks go
-    * through AQE query stages, so they see the final adaptive plan. */
-  private object Assign extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  /** Plan-class checks for the centroid-assignment and driver-finish
+    * pins. The walks go through AQE query stages, so they see the final
+    * adaptive plan. */
+  private object Shape extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
     import org.apache.spark.sql.execution.SparkPlan
 
     /** Nodes that evaluate a scan-local assignment expression. */
@@ -32,6 +33,13 @@ class ScaleSpec extends AnyFunSuite {
         collect(n) { case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => x }.isEmpty &&
           collect(n) { case x: org.apache.spark.sql.execution.FileSourceScanExec => x }.nonEmpty)
     }
+
+    /** A driver-finished result: a local table scan, with no file scan
+      * and no shuffle left to run. */
+    def finishesLocally(p: SparkPlan): Boolean =
+      collect(p) { case x: org.apache.spark.sql.execution.LocalTableScanExec => x }.nonEmpty &&
+        collect(p) { case x: org.apache.spark.sql.execution.FileSourceScanExec => x }.isEmpty &&
+        collect(p) { case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => x }.isEmpty
 
     /** The assignment was materialized once and nothing recomputes it:
       * every leaf of the final plan (bar reused exchanges) reads the
@@ -198,15 +206,15 @@ class ScaleSpec extends AnyFunSuite {
       val df = graft.SparkEntry.queries(name)(spark, sf)
       df.collect()
       val plan = df.queryExecution.executedPlan
-      assert(Assign.argmaxAggs(plan).isEmpty,
+      assert(Shape.argmaxAggs(plan).isEmpty,
         s"$name plans an N×K argmax_by aggregate:\n${plan.toString.take(1600)}")
       assert(plan.collect { case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a }
         .isEmpty, s"$name plans a SortAggregate:\n${plan.toString.take(1600)}")
       if (name == "q_dedup_embedding_ivf" || name == "q_semdedup")
-        assert(Assign.readsOneCheckpoint(plan),
+        assert(Shape.readsOneCheckpoint(plan),
           s"$name recomputes its assignment:\n${plan.toString.take(1600)}")
       else
-        assert(Assign.scanLocal(plan),
+        assert(Shape.scanLocal(plan),
           s"$name lost the scan-local assignment:\n${plan.toString.take(1600)}")
     }
   }
@@ -403,7 +411,7 @@ class ScaleSpec extends AnyFunSuite {
     val df = graft.SparkEntry.queries("q_semdedup")(spark, sf)
     df.collect()
     val plan = df.queryExecution.executedPlan
-    assert(Assign.readsOneCheckpoint(plan),
+    assert(Shape.readsOneCheckpoint(plan),
       s"q_semdedup does not read one materialized assignment:\n${plan.toString.take(1600)}")
   }
 
@@ -428,23 +436,27 @@ class ScaleSpec extends AnyFunSuite {
       val df = graft.SparkEntry.queries(name)(spark, sf)
       df.collect()
       val p = df.queryExecution.executedPlan
-      assert(Assign.readsOneCheckpoint(p),
+      assert(Shape.readsOneCheckpoint(p),
         s"$name: consumers do not share one materialized assignment:\n${p.toString.take(1200)}")
     }
     // q_outlier_explain left the ReusedExchange list in round 7: reuse
     // never actually collapsed its three differently-pruned cube
     // consumers (the r6 regression — the exploded corpus scan ran three
-    // times), so Outlier.explain now collects the ~100-row cube ONCE and
-    // re-enters it as a LocalRelation. The sharp pin for that design:
-    // the returned plan touches NO file source at all — every leaf is
-    // the local cube, so the corpus scan provably ran exactly once
-    // (inside the single bounded collect).
-    val outlier = graft.SparkEntry.queries("q_outlier_explain")(spark, sf)
-    outlier.collect()
-    val outlierPlan = outlier.queryExecution.executedPlan.toString
-    assert(!outlierPlan.contains("FileScan") && !outlierPlan.contains("Scan parquet"),
-      s"q_outlier_explain's finish plan re-reads the corpus — the one-scan " +
-        s"LocalRelation contract regressed:\n${outlierPlan.take(1200)}")
+    // times). Outlier.explain and the FEDEx count-table tails now
+    // collect their cube / count table ONCE and finish on the driver,
+    // returning a LocalRelation. The sharp pin for that design: the
+    // returned plan is a local table scan with no file source and no
+    // shuffle — the corpus scan provably ran exactly once (inside the
+    // single bounded collect), and consuming the result launches no job.
+    for (name <- Seq("q_outlier_explain", "q_fedex_filter", "q_fedex_filter_influence",
+                     "q_fedex_shapley", "q_fedex_groupby", "q_fedex_groupby_influence")) {
+      val df = graft.SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      assert(Shape.finishesLocally(p),
+        s"$name's finish plan is not one local table scan — the one-collect " +
+          s"LocalRelation contract regressed:\n${p.toString.take(1200)}")
+    }
 
     // q_many_to_one left the ReusedExchange list in round 11: its
     // n_label/n_cond totals are now key-partitioned WINDOW sums over
@@ -711,10 +723,10 @@ class ScaleSpec extends AnyFunSuite {
     val ti = tiPlan.toString
     assert(ti.contains("BroadcastHashJoin [list_id"),
       s"q_triplets_ivf probe join not list-keyed:\n${ti.take(1600)}")
-    val assignNames = Assign.nodes(tiPlan)
+    val assignNames = Shape.nodes(tiPlan)
       .flatMap(_.expressions.flatMap(_.collect { case e => e.prettyName })).toSet
     assert(assignNames("ivf_assign") && assignNames("ivf_probes") &&
-      Assign.argmaxAggs(tiPlan).isEmpty &&
+      Shape.argmaxAggs(tiPlan).isEmpty &&
       tiPlan.collect { case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a }.isEmpty,
       s"q_triplets_ivf lost the scan-local list assignment:\n${ti.take(1600)}")
     assert(!ti.contains("CartesianProduct"))
