@@ -4,9 +4,7 @@ import org.apache.spark.sql.functions._
 /** Sample program through the public library API (pd-explain-style flow). */
 object ApiDemo {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4").config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = util.LocalSession()
     val li = ExplainFrame(util.D.t(spark, "/root/testdata/sf0.001", "lineitem"), "lineitem")
     val filtered = li.filter(col("l_quantity") >= 30)
     println("== fedex explanation of the filter ==")

@@ -62,13 +62,7 @@ object GenScale {
     val out = if (args.length > 1) args(1) else "/root/repo/bench-sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
     val mode = if (args.length > 3) args(3) else ""
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
     run(spark, src, out, copies, mode)
     spark.stop()
   }

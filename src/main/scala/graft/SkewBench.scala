@@ -1,14 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool (not library surface): measures the VALUE of the two skew
   * remedies against their naive forms on a skewed-key fixture — the
-  * evidence `GenScale ... zipf` exists to produce. Four timed plans,
-  * same reps/GC cadence as Probe:
+  * evidence `GenScale ... zipf` exists to produce. Five timed plans,
+  * each measured by `Bench.measure` (fresh build per rep, the same
+  * clean-up between reps):
   *   - skew_join_hybrid: `Scale.skewJoin` (detection scan + broadcast
   *     hot slice ∪ shuffled cold remainder) + the q_skew_join agg
+  *   - skew_join_known: `Scale.skewJoinKnown` with the hot keys given
+  *     up front (no detection scan in the window) + the same agg
   *   - skew_join_plain: the plain shuffle join + same agg (AQE on,
   *     so this is Spark's own skew mitigation, not a strawman)
   *   - salted_nunique: `Scale.saltedNunique` two-stage distinct
@@ -29,22 +32,11 @@ object SkewBench {
         case a => sys.error(s"unknown arg $a (usage: [--reps N] [--sf DIR])")
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // wall-clock on local[32] hides what a 1000-executor cluster pays:
-    // there, every shuffled byte crosses the network. Track shuffle
+    val spark = graft.util.LocalSession()
+    // wall-clock on a local session hides what a 1000-executor cluster
+    // pays: there, every shuffled byte crosses the network. Track shuffle
     // write volume per form — the scale-honest second axis.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          shuffleBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
+    val meter = new Bench.Meter(spark)
     spark.range(1000000L).selectExpr("sum(id)").collect() // JIT warmup
     def t(n: String): DataFrame = spark.read.parquet(s"$sfDir/$n.parquet")
 
@@ -76,21 +68,11 @@ object SkewBench {
         .agg(countDistinct(col("user_id")).as("nunique"))))
 
     val results = forms.map { case (name, build) =>
-      var bytes = 0L
-      val times = (1 to reps).map { _ =>
-        shuffleBytes.set(0L)
-        val t0 = System.nanoTime()
-        build().count() // fresh build per rep (stale-AQE trap)
-        val t = (System.nanoTime() - t0) / 1e9
-        // listener events drain asynchronously (the bus is private);
-        // a short settle keeps the counter honest at these runtimes
-        Thread.sleep(300)
-        bytes = shuffleBytes.get()
-        spark.catalog.clearCache(); System.gc()
-        t
-      }
+      val (times, split) = Bench.measure(spark, meter, name, reps)(build())
+      require(times.forall(_ >= 0), s"$name failed")
       println(f"""{"form":"$name","sf":"$sfDir","secs":[${
-        times.map(x => f"$x%.3f").mkString(",")}],"shuffle_mb":${bytes / 1048576}}""")
+        times.map(x => f"$x%.3f").mkString(",")}],"shuffle_mb":${
+        split.map(_.shuffleBytes).getOrElse(0L) / 1048576}}""")
       name -> times.min
     }
     // row parity: the remedies must agree with the naive plans

@@ -1,57 +1,32 @@
 package graft
 
-import graft.util.Scale
+import graft.util.{PlanShape, Scale}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec,
+  CartesianProductExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class ScaleSpec extends AnyFunSuite {
   import TestSession._
 
-  /** Plan-class checks for the centroid-assignment and driver-finish
-    * pins. The walks go through AQE query stages, so they see the final
-    * adaptive plan. */
-  private object Shape extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
-    import org.apache.spark.sql.execution.SparkPlan
+  /** An N×K assignment aggregate: an argmax_by keyed on vec_id. */
+  private def argmaxAggs(p: SparkPlan) = PlanShape.aggregatesOf(p, "argmax_by", "vec_id")
 
-    /** Nodes that evaluate a scan-local assignment expression. */
-    def nodes(p: SparkPlan): Seq[SparkPlan] = collect(p) {
-      case n if n.expressions.exists(_.exists(e =>
-        e.prettyName == "ivf_assign" || e.prettyName == "ivf_probes")) => n
-    }
+  /** The scan-local assignment expressions. */
+  private val Assign = Seq("ivf_assign", "ivf_probes")
 
-    /** N×K assignment aggregates: an argmax_by keyed on vec_id. */
-    def argmaxAggs(p: SparkPlan): Seq[SparkPlan] = collect(p) {
-      case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-        if a.groupingExpressions.exists(_.references.exists(_.name == "vec_id")) &&
-          a.aggregateExpressions.exists(_.aggregateFunction.prettyName == "argmax_by") => a
-    }
+  /** The assignment was materialized once and nothing recomputes it:
+    * every leaf reads one checkpointed RDD and no assignment is left. */
+  private def readsOneAssignment(p: SparkPlan) = PlanShape.readsOneCheckpoint(p) &&
+    PlanShape.evaluating(p, Assign: _*).isEmpty && argmaxAggs(p).isEmpty
 
-    /** Every assignment node reads its scan with no shuffle in between. */
-    def scanLocal(p: SparkPlan): Boolean = {
-      val ns = nodes(p)
-      ns.nonEmpty && ns.forall(n =>
-        collect(n) { case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => x }.isEmpty &&
-          collect(n) { case x: org.apache.spark.sql.execution.FileSourceScanExec => x }.nonEmpty)
-    }
-
-    /** A driver-finished result: a local table scan, with no file scan
-      * and no shuffle left to run. */
-    def finishesLocally(p: SparkPlan): Boolean =
-      collect(p) { case x: org.apache.spark.sql.execution.LocalTableScanExec => x }.nonEmpty &&
-        collect(p) { case x: org.apache.spark.sql.execution.FileSourceScanExec => x }.isEmpty &&
-        collect(p) { case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => x }.isEmpty
-
-    /** The assignment was materialized once and nothing recomputes it:
-      * every leaf of the final plan (bar reused exchanges) reads the
-      * same checkpointed RDD. */
-    def readsOneCheckpoint(p: SparkPlan): Boolean = {
-      val leaves = collectLeaves(p).filterNot(
-        _.isInstanceOf[org.apache.spark.sql.execution.exchange.ReusedExchangeExec])
-      val rdds = leaves.collect { case r: org.apache.spark.sql.execution.RDDScanExec => r.rdd.id }
-      leaves.nonEmpty && rdds.size == leaves.size && rdds.distinct.size == 1 &&
-        nodes(p).isEmpty && argmaxAggs(p).isEmpty
-    }
-  }
+  /** A broadcast hash join whose first key is list_id: IVF candidates
+    * meet their probes hash-keyed by list. */
+  private def listKeyed(p: SparkPlan) = PlanShape.all[BroadcastHashJoinExec](p)
+    .exists(_.leftKeys.headOption.exists(_.references.exists(_.name == "list_id")))
 
   test("bucketed join runs without a shuffle exchange") {
     val li = graft.util.D.t(spark, sf, "lineitem")
@@ -206,15 +181,15 @@ class ScaleSpec extends AnyFunSuite {
       val df = graft.SparkEntry.queries(name)(spark, sf)
       df.collect()
       val plan = df.queryExecution.executedPlan
-      assert(Shape.argmaxAggs(plan).isEmpty,
+      assert(argmaxAggs(plan).isEmpty,
         s"$name plans an N×K argmax_by aggregate:\n${plan.toString.take(1600)}")
-      assert(plan.collect { case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a }
-        .isEmpty, s"$name plans a SortAggregate:\n${plan.toString.take(1600)}")
+      assert(PlanShape.all[SortAggregateExec](plan).isEmpty,
+        s"$name plans a SortAggregate:\n${plan.toString.take(1600)}")
       if (name == "q_dedup_embedding_ivf" || name == "q_semdedup")
-        assert(Shape.readsOneCheckpoint(plan),
+        assert(readsOneAssignment(plan),
           s"$name recomputes its assignment:\n${plan.toString.take(1600)}")
       else
-        assert(Shape.scanLocal(plan),
+        assert(PlanShape.scanLocal(plan, Assign: _*),
           s"$name lost the scan-local assignment:\n${plan.toString.take(1600)}")
     }
   }
@@ -271,9 +246,8 @@ class ScaleSpec extends AnyFunSuite {
     //    nested loop like the brute-force form; the only
     //    BroadcastNestedLoopJoin allowed is the N×K centroid scoring)
     val df = Ann.hardNegativesIvf(e, 40, 25, 7, 3, 3)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin [list_id"),
-      s"probe join not list-keyed:\n${plan.take(1600)}")
+    val plan = df.queryExecution.executedPlan
+    assert(listKeyed(plan), s"probe join not list-keyed:\n${plan.toString.take(1600)}")
     // 2. the physical 100 TB analog: with the corpus laid out
     //    partitionBy(list_id), an anchor's probed lists prune at the
     //    scan, so the corpus side READS only probed lists
@@ -364,9 +338,10 @@ class ScaleSpec extends AnyFunSuite {
     withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
                 "spark.sql.adaptive.enabled" -> "false") {
       val q = graft.dedup.Dedup.ngramJaccard(docs, "source", 0.02)
-      val plan = q.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin") && !plan.contains("BroadcastNestedLoopJoin"),
-        s"forced broadcast survives threshold=-1:\n${plan.take(1500)}")
+      val plan = q.queryExecution.executedPlan
+      assert(PlanShape.all[BroadcastHashJoinExec](plan).isEmpty &&
+        PlanShape.all[BroadcastNestedLoopJoinExec](plan).isEmpty,
+        s"forced broadcast survives threshold=-1:\n${plan.toString.take(1500)}")
     }
   }
 
@@ -397,9 +372,9 @@ class ScaleSpec extends AnyFunSuite {
     withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
                 "spark.sql.adaptive.enabled" -> "false") {
       val p2 = graft.text.Corpus.decontaminate(docs, col("doc_id") % 97 === 0)
-        .queryExecution.executedPlan.toString
-      assert(!p2.contains("BroadcastHashJoin"),
-        s"forced broadcast hint present:\n${p2.take(1500)}")
+        .queryExecution.executedPlan
+      assert(PlanShape.all[BroadcastHashJoinExec](p2).isEmpty,
+        s"forced broadcast hint present:\n${p2.toString.take(1500)}")
     }
   }
 
@@ -411,7 +386,7 @@ class ScaleSpec extends AnyFunSuite {
     val df = graft.SparkEntry.queries("q_semdedup")(spark, sf)
     df.collect()
     val plan = df.queryExecution.executedPlan
-    assert(Shape.readsOneCheckpoint(plan),
+    assert(readsOneAssignment(plan),
       s"q_semdedup does not read one materialized assignment:\n${plan.toString.take(1600)}")
   }
 
@@ -436,7 +411,7 @@ class ScaleSpec extends AnyFunSuite {
       val df = graft.SparkEntry.queries(name)(spark, sf)
       df.collect()
       val p = df.queryExecution.executedPlan
-      assert(Shape.readsOneCheckpoint(p),
+      assert(readsOneAssignment(p),
         s"$name: consumers do not share one materialized assignment:\n${p.toString.take(1200)}")
     }
     // q_outlier_explain left the ReusedExchange list in round 7: reuse
@@ -453,7 +428,7 @@ class ScaleSpec extends AnyFunSuite {
       val df = graft.SparkEntry.queries(name)(spark, sf)
       df.collect()
       val p = df.queryExecution.executedPlan
-      assert(Shape.finishesLocally(p),
+      assert(PlanShape.finishesLocally(p),
         s"$name's finish plan is not one local table scan — the one-collect " +
           s"LocalRelation contract regressed:\n${p.toString.take(1200)}")
     }
@@ -541,9 +516,10 @@ class ScaleSpec extends AnyFunSuite {
     val out = graft.dedup.Dedup.minhashPairsAgainst(
       docs.filter(pmod(col("doc_id"), lit(3)) === 0),
       graft.dedup.Dedup.minhashSig(docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)))
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("Cartesian"),
-      s"incremental dedup planned a nested loop:\n${plan.take(1200)}")
+    val plan = out.queryExecution.executedPlan
+    assert(PlanShape.all[BroadcastNestedLoopJoinExec](plan).isEmpty &&
+      PlanShape.all[CartesianProductExec](plan).isEmpty,
+      s"incremental dedup planned a nested loop:\n${plan.toString.take(1200)}")
     // a self-match is impossible across the disjoint batch/index split
     assert(out.filter(col("new_doc") === col("index_doc")).count() == 0)
   }
@@ -558,14 +534,15 @@ class ScaleSpec extends AnyFunSuite {
         (unix_micros(col("ts")) - 300000000L).as("lo_us"),
         (unix_micros(col("ts")) + 300000000L).as("hi_us"))
     val joined = RangeJoin.pointInInterval(pts, "pos_us", win, "lo_us", "hi_us", 600000000L)
-    val plan = joined.queryExecution.executedPlan.toString
+    val plan = joined.queryExecution.executedPlan
     // the whole point: a corpus×corpus range predicate must NOT plan as
     // BroadcastNestedLoopJoin/CartesianProduct — the band key makes it an
     // ordinary equi-join (broadcast-hash is fine when one side is small;
     // at scale AQE falls back to the shuffled form on the same key)
-    assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("Cartesian"),
-      s"range join planned a nested loop:\n${plan.take(1500)}")
-    assert(plan.contains("__band"), s"band key missing from join:\n${plan.take(1500)}")
+    assert(PlanShape.all[BroadcastNestedLoopJoinExec](plan).isEmpty &&
+      PlanShape.all[CartesianProductExec](plan).isEmpty,
+      s"range join planned a nested loop:\n${plan.toString.take(1500)}")
+    assert(plan.toString.contains("__band"), s"band key missing from join:\n${plan.toString.take(1500)}")
     // every banded match satisfies the exact predicate, and the banded
     // form finds exactly the rows the naive predicate join finds
     val naive = pts.join(win,
@@ -649,15 +626,14 @@ class ScaleSpec extends AnyFunSuite {
       "q_text_entropy", "q_tok_truncation", "q_minhash_curve", "q_group_topk",
       "q_anomaly_mad")
     keyedOnly.foreach { n =>
-      val plan = graft.SparkEntry.queries(n)(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct"), s"$n plans a cartesian product")
-      assert(!plan.contains("BroadcastNestedLoopJoin"), s"$n plans an unkeyed nested loop")
+      val plan = graft.SparkEntry.queries(n)(spark, sf).queryExecution.executedPlan
+      assert(PlanShape.all[CartesianProductExec](plan).isEmpty, s"$n plans a cartesian product")
+      assert(PlanShape.all[BroadcastNestedLoopJoinExec](plan).isEmpty,
+        s"$n plans an unkeyed nested loop")
     }
-    val recall = graft.SparkEntry.queries("q_ann_recall")(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(!recall.contains("CartesianProduct"))
-    assert(recall.contains("BroadcastNestedLoopJoin"),
+    val recall = graft.SparkEntry.queries("q_ann_recall")(spark, sf).queryExecution.executedPlan
+    assert(PlanShape.all[CartesianProductExec](recall).isEmpty)
+    assert(PlanShape.all[BroadcastNestedLoopJoinExec](recall).nonEmpty,
       "q_ann_recall lost its documented broadcast-queries scan shape")
   }
   test("session-6b operators: key-based joins only; broadcast scans where designed") {
@@ -673,18 +649,17 @@ class ScaleSpec extends AnyFunSuite {
       "q_repetition_ngram", "q_sample_weighted",
       "q_events_attribution", "q_dedup_cluster_keep", "q_quality_funnel")
     keyedOnly.foreach { n =>
-      val plan = graft.SparkEntry.queries(n)(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct"), s"$n plans a cartesian product")
-      assert(!plan.contains("BroadcastNestedLoopJoin"), s"$n plans an unkeyed nested loop")
+      val plan = graft.SparkEntry.queries(n)(spark, sf).queryExecution.executedPlan
+      assert(PlanShape.all[CartesianProductExec](plan).isEmpty, s"$n plans a cartesian product")
+      assert(PlanShape.all[BroadcastNestedLoopJoinExec](plan).isEmpty,
+        s"$n plans an unkeyed nested loop")
     }
     // q_join_size_est cross-joins three 1-ROW aggregate frames (the
     // sketch rows) — that BroadcastNestedLoopJoin moves k longs, not
     // corpus rows, so only the cartesian check applies
     Seq("q_triplets", "q_ann_ivfpq", "q_join_size_est").foreach { n =>
-      val plan = graft.SparkEntry.queries(n)(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct"), s"$n plans a cartesian product")
+      val plan = graft.SparkEntry.queries(n)(spark, sf).queryExecution.executedPlan
+      assert(PlanShape.all[CartesianProductExec](plan).isEmpty, s"$n plans a cartesian product")
     }
     // q_sample_weighted's per-group top-k must run as the bounded
     // window-group-limit heap, never a full per-group sort feed
@@ -721,15 +696,15 @@ class ScaleSpec extends AnyFunSuite {
     val tiPlan = graft.SparkEntry.queries("q_triplets_ivf")(spark, sf)
       .queryExecution.executedPlan
     val ti = tiPlan.toString
-    assert(ti.contains("BroadcastHashJoin [list_id"),
+    assert(listKeyed(tiPlan),
       s"q_triplets_ivf probe join not list-keyed:\n${ti.take(1600)}")
-    val assignNames = Shape.nodes(tiPlan)
+    val assignNames = PlanShape.evaluating(tiPlan, Assign: _*)
       .flatMap(_.expressions.flatMap(_.collect { case e => e.prettyName })).toSet
     assert(assignNames("ivf_assign") && assignNames("ivf_probes") &&
-      Shape.argmaxAggs(tiPlan).isEmpty &&
-      tiPlan.collect { case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a }.isEmpty,
+      argmaxAggs(tiPlan).isEmpty &&
+      PlanShape.all[SortAggregateExec](tiPlan).isEmpty,
       s"q_triplets_ivf lost the scan-local list assignment:\n${ti.take(1600)}")
-    assert(!ti.contains("CartesianProduct"))
+    assert(PlanShape.all[CartesianProductExec](tiPlan).isEmpty)
     // q_multimodal_phash_pairs: candidates come from the 4×15-bit band
     // self-join on (k, band) — never an unkeyed pair join over payloads;
     // the band join ships (doc_id, psig) only (no text/payload column
@@ -737,14 +712,11 @@ class ScaleSpec extends AnyFunSuite {
     val pp = graft.SparkEntry.queries("q_multimodal_phash_pairs")(spark, sf)
       .queryExecution.executedPlan
     val ppStr = pp.toString
-    assert(!ppStr.contains("CartesianProduct") && !ppStr.contains("BroadcastNestedLoopJoin"),
+    assert(PlanShape.all[CartesianProductExec](pp).isEmpty &&
+      PlanShape.all[BroadcastNestedLoopJoinExec](pp).isEmpty,
       s"phash pair join is not key-based:\n${ppStr.take(1600)}")
     assert(ppStr.contains("band"), s"band key missing:\n${ppStr.take(1200)}")
-    val shuffled = pp.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-        e.child.output.map(_.name)
-    }
-    shuffled.foreach { cols =>
+    PlanShape.all[ShuffleExchangeLike](pp).map(_.child.output.map(_.name)).foreach { cols =>
       assert(!cols.contains("text") && !cols.contains("payload"),
         s"payload column crosses an exchange: $cols")
     }
