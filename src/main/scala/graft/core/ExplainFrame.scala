@@ -556,7 +556,8 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
     * columns as measures, key/id/date/free-text-ish columns excluded —
     * capped like the reference's max_filter_columns /
     * max_aggregation_columns; prune near-duplicate measures by |Pearson r|
-    * ≥ `corrTH` (one aggregation pass); evaluate all scopes in one job. */
+    * ≥ `corrTH` (one aggregation pass); evaluate all scopes from one
+    * collected cells table (MetaInsight.autoSearch). */
   def explainMetaInsightAuto(topK: Int = 5,
                              filterDims: Seq[String] = Nil,
                              breakdowns: Seq[String] = Nil,
@@ -588,9 +589,10 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
     // per-target correlations combined by correlation_aggregation_method
     // 'avg'|'max'|'sum', strongest first) — the one-scan η matrix, with
     // the measure name as the deterministic tie-break. Explicit
-    // `measures` bypass the ranking, as in the reference.
+    // `measures` bypass the ranking, as in the reference, and a single
+    // candidate needs none.
     val ranked =
-      if (measures.nonEmpty || numCols.isEmpty || fs.isEmpty) numCols
+      if (measures.nonEmpty || numCols.size <= 1 || fs.isEmpty) numCols
       else {
         val etas = Correlation.etaMatrix(df, fs, numCols)
         numCols.map { m =>
@@ -619,7 +621,6 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
           else kept :+ m
         }.take(maxAggregationColumns)
       }
-    val scopes = for (f <- fs; b <- bs if f != b; m <- ms) yield (f, b, m)
     // ordered breakdowns: date/timestamp columns enter auto-search as
     // month-trend scopes (reference auto mode enumerates trend breakdowns
     // over its groupby_columns alongside the categorical ones)
@@ -627,32 +628,10 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
       .filter(f => f.dataType == DateType || f.dataType == TimestampType ||
         f.dataType == TimestampNTZType)
       .map(_.name).take(maxFilterColumns).toSeq
-    val trendScopes = for (f <- fs; d <- dateCols; m <- ms)
-      yield (f, org.apache.spark.sql.functions.month(col(d)), s"${d}_month", m)
-    // all cat scopes evaluate in ONE merged aggregation chain (and all
-    // trend scopes in another) — see MetaInsight.autoTables. The
-    // common single-filter-dim grid takes the SCAN-SHARING form: one
-    // (subspace, b1[, b2]) cube carries every measure's sums, so the
-    // whole grid costs ~2 corpus scans instead of one per scope
-    // (MetaInsight.gridTables; bit-identical decimal re-aggregation)
-    val usableBs = bs.filterNot(b => fs.size == 1 && b == fs.head)
-    val allDims = (fs ++ bs).distinct
-    // multi-filter-dim scan sharing + driver finish: one master cube
-    // over all candidate dims feeds every scope, and the whole
-    // pattern/mine/rank tail runs on the driver over the collected
-    // KB-scale cube (MetaInsight.masterRanked — bit-identical expression
-    // mirrors, pinned by MetaInsightSpec). Dim/trend bounds keep the
-    // cube small for real categorical dims; combo breakdowns keep the
-    // in-plan path.
-    if (!useAllGroupbyCombinations && fs.size >= 2 &&
-      allDims.size <= 3 && dateCols.size <= 2 && scopes.nonEmpty)
-      return MetaInsight.masterRanked(df, fs, bs, ms, dateCols, topK,
-        minCommonness, noExceptionPenaltyWeight, balanceFactor,
-        allowMultipleAggregations, allowMultipleGroupbys)
-    val autoTables =
-      if (fs.size == 1 && usableBs.nonEmpty && usableBs.size <= 2 && ms.nonEmpty)
-        MetaInsight.gridTables(df, fs.head, usableBs, ms, dateCols)
-      else MetaInsight.autoTables(df, scopes, trendScopes)
+    import MetaInsight.Breakdown
+    val catScopes = for (f <- fs; b <- bs if f != b) yield f -> Breakdown(b, col(b))
+    val trendScopes = for (f <- fs; d <- dateCols)
+      yield f -> Breakdown(s"${d}_month", month(col(d)), trend = true)
     // use_all_groupby_combinations (reference
     // metainsight_explainer.py:301-308): the FULL powerset of the
     // breakdown columns (sizes 2..n; size-1 subsets are the plain
@@ -662,21 +641,18 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
     // (smallest combinations first — larger tuples fragment groups
     // toward all-singleton breakdowns that can't carry a pattern);
     // exceeding the cap keeps the first bound-many deterministically.
-    val comboTables =
+    val comboScopes =
       if (!useAllGroupbyCombinations) Nil
       else for {
         combo <- (2 to bs.size).iterator.flatMap(k => bs.combinations(k))
           .take(maxGroupbyCombinations).toSeq
         f <- fs if !combo.contains(f)
-        m <- ms
-      } yield MetaInsight.catPatternsExpr(df, f,
+      } yield f -> Breakdown(combo.mkString("+"),
         // coalesce before concat: concat_ws silently DROPS null
         // components, which would collide ("x", NULL) with ("x", "")
         // — the reference's tuple-valued groupby keeps them distinct
-        concat_ws("|", combo.map(c => coalesce(col(c).cast("string"), lit("<null>"))): _*),
-        combo.mkString("+"), m, s"${m}_mean")
-        .withColumn("filter_dim", lit(f))
-    MetaInsight.rank(autoTables ++ comboTables, topK,
+        concat_ws("|", combo.map(c => coalesce(col(c).cast("string"), lit("<null>"))): _*))
+    MetaInsight.autoSearch(df, catScopes ++ trendScopes ++ comboScopes, ms, topK,
       minCommonness = minCommonness,
       noExceptionPenaltyWeight = noExceptionPenaltyWeight,
       balanceFactor = balanceFactor,

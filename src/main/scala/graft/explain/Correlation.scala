@@ -311,7 +311,9 @@ object Correlation {
     *     statistic is bit-identical to the two-scan form;
     *  2. the ≤ |cat|·|cat2| cell rows (Guard-capped, KB-scale — the
     *     qcut-boundary bounded-collect convention) finish on the driver
-    *     through the exact expression mirrors above.
+    *     through the exact expression mirrors above, into a
+    *     LocalRelation in (stat, col_x, col_y) order: consuming it
+    *     launches no Spark job.
     * Output matches pearson ∪ eta ∪ cramersV exactly (QuantizeSpec). */
   def suite(df: DataFrame, pairs: Seq[(String, String)],
             cat: String, num: String, cat2: String): DataFrame = {
@@ -419,7 +421,8 @@ object Correlation {
       StructField("col_x", StringType, nullable = false),
       StructField("col_y", StringType, nullable = false),
       StructField("value", DoubleType, nullable = true)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
+    Mirror.Table(schema, out)
+      .orderBy(Mirror.asc("stat"), Mirror.asc("col_x"), Mirror.asc("col_y")).toDF(spark)
   }
 
   /** η (correlation ratio) for EVERY (cat, num) pair in ONE

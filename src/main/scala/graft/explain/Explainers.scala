@@ -327,8 +327,9 @@ object Explainers extends QFamily {
       // two direct scans here: at bench scale the source is small enough
       // that a shared (subspace, status, month) cube costs MORE (extra
       // materialization job + shuffle level) than the scan it saves —
-      // measured 3.0 s vs 5.7 s. MetaInsight.cube2/cellsFrom remain the
-      // right shape when the source scan dominates (the 100 TB case).
+      // measured 3.0 s vs 5.7 s. Many scopes at once take one scan in
+      // the auto-search (MetaInsight.autoSearch: one grouping-sets
+      // aggregation over all scopes' cells).
       (s, dir) => {
         val o = t(s, dir, "orders")
         val cat = MetaInsight.catPatterns(o, "o_orderpriority", "o_orderstatus",
@@ -427,13 +428,13 @@ object Explainers extends QFamily {
         Correlation.etaSql("lineitem", "l_returnflag", "l_quantity"),
         Correlation.cramersVSql("lineitem", "l_returnflag", "l_linestatus")
       ).mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) ORDER BY stat, col_x, col_y")),
-      // two-scan suite: η reuses the Pearson moment row and the Cramér's
+      // one-scan suite: η reuses the Pearson moment row and the Cramér's
       // contingency cells (exact-decimal partials re-aggregate
-      // bit-identically), instead of one scan per statistic
+      // bit-identically), instead of one scan per statistic; its rows
+      // come back in (stat, col_x, col_y) order
       (s, dir) => Correlation.suite(t(s, dir, "lineitem"),
           Seq(("l_quantity", "l_extendedprice"), ("l_quantity", "l_discount"),
             ("l_extendedprice", "l_discount")),
-          "l_returnflag", "l_quantity", "l_linestatus")
-        .orderBy("stat", "col_x", "col_y"))
+          "l_returnflag", "l_quantity", "l_linestatus"))
   )
 }

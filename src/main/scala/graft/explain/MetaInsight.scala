@@ -23,9 +23,13 @@ import org.apache.spark.sql.types._
   *   score      = commonness − 0.1·[no exceptions]   (the reference's
   *                no_exception_penalty_weight=0.1 actionability penalty)
   *
-  * Scale: ONE scan aggregates (filterDim, breakdown) cells; the '*'
-  * subspace is re-aggregated from those cells (sums are additive), so no
-  * second scan. Pattern math runs on the tiny cell table.
+  * Scale: one scope ([[catPatterns]], [[trendPatterns]]) is one
+  * grouping-sets scan for its (filterDim, breakdown) cells and their '*'
+  * rollup, and its pattern math runs in-plan on that tiny cell table.
+  * The auto-search ([[autoSearch]]) builds the cells of ALL its scopes in
+  * one grouping-sets scan, collects them (bounded by
+  * Guard.MaxGatheredCells; the table holds the sum of the scopes' cells)
+  * and finishes patterns, mining and ranking on the driver.
   */
 object MetaInsight {
 
@@ -38,7 +42,7 @@ object MetaInsight {
     * the grouping flag distinguishes '*' rows from a genuine NULL
     * subspace value. Decimal sums make the two levels exactly equal to
     * the two-step form. */
-  private def cells(src: DataFrame, filterDim: String, breakdown: Column): DataFrame =
+  private[graft] def cells(src: DataFrame, filterDim: String, breakdown: Column): DataFrame =
     src.withColumn("__sub", col(filterDim).cast("string")).withColumn("__b", breakdown)
       .groupingSets(Seq(Seq(col("__sub"), col("__b")), Seq(col("__b"))), col("__sub"), col("__b"))
       .agg(count(lit(1)).as("cnt"), sum(col("v0").cast(D.dec25)).as("sm"),
@@ -49,7 +53,7 @@ object MetaInsight {
   /** Melt cells into (subspace, b, measure, v): mean + row count — both
     * rows exploded from the single cell (a two-branch union would
     * recompute the cells aggregation twice). */
-  private def melt(cells: DataFrame, meanName: String): DataFrame = {
+  private[graft] def melt(cells: DataFrame, meanName: String): DataFrame = {
     val vMean = graft.util.D.r(col("sm").cast(D.dec25).cast(DoubleType) / col("cnt"), 6)
     cells.select(col("subspace"), col("b").cast("string").as("b"),
         explode(array(
@@ -58,37 +62,6 @@ object MetaInsight {
       .select(col("subspace"), col("b"), col("mv.measure").as("measure"), col("mv.v").as("v"))
   }
 
-  /** One-scan base for evaluating TWO breakdowns of the same
-    * (filterDim, measure) scope: a (subspace, b1, b2) cube whose decimal
-    * sums re-aggregate exactly into either breakdown's cells — the
-    * second corpus scan the naive cat+trend pairing would do becomes a
-    * ~hundreds-of-rows re-aggregation. */
-  def cube2(src: DataFrame, filterDim: String, aggCol: String,
-            b1: Column, b2: Column): DataFrame =
-    src.groupBy(col(filterDim).cast("string").as("subspace"), b1.as("b1"), b2.as("b2"))
-      .agg(count(lit(1)).as("cnt"), sum(col(aggCol).cast(D.dec25)).as("sm"))
-
-  /** Cells of one breakdown re-aggregated from [[cube2]] (+ '*') — one
-    * grouping-sets pass, so the cube subtree (and the corpus scan under
-    * it) is referenced exactly once; see [[cells]]. */
-  def cellsFrom(cube: DataFrame, bCol: String): DataFrame =
-    cube.withColumn("__b", col(bCol))
-      .groupingSets(Seq(Seq(col("subspace"), col("__b")), Seq(col("__b"))),
-        col("subspace"), col("__b"))
-      .agg(sum(col("cnt")).as("cnt"), sum(col("sm")).as("sm"),
-        grouping(col("subspace")).as("__g"))
-      .select(when(col("__g") === 1, lit("*")).otherwise(col("subspace")).as("subspace"),
-        col("__b").as("b"), col("cnt"), col("sm"))
-
-  /** Categorical patterns from a prebuilt cells table. */
-  def catPatternsFromCells(cellsDf: DataFrame, breakdownName: String, meanName: String): DataFrame =
-    catPatternsImpl(melt(cellsDf, meanName), breakdownName)
-
-  /** Trend patterns from a prebuilt cells table (integer breakdown). */
-  def trendPatternsFromCells(cellsDf: DataFrame, breakdownName: String, meanName: String): DataFrame =
-    trendPatternsImpl(melt(cellsDf, meanName).withColumn("x", col("b").cast(IntegerType)),
-      breakdownName)
-
   /** Categorical-breakdown patterns: outlier + dominance per scope. */
   def catPatterns(src: DataFrame, filterDim: String, breakdown: String,
                   aggCol: String, meanName: String): DataFrame =
@@ -96,25 +69,15 @@ object MetaInsight {
       melt(cells(src.withColumn("v0", col(aggCol)), filterDim, col(breakdown)), meanName),
       breakdown)
 
-  /** Categorical patterns over an ARBITRARY breakdown expression — the
-    * entry point for multi-column breakdowns (reference
-    * use_all_groupby_combinations: groupby columns [A, B] enumerate
-    * breakdowns [A], [B], [A, B]; a combination's value is the tuple,
-    * expressed here as a '|'-joined composite). */
-  def catPatternsExpr(src: DataFrame, filterDim: String, breakdownCol: Column,
-                      breakdownName: String, aggCol: String, meanName: String): DataFrame =
-    catPatternsImpl(
-      melt(cells(src.withColumn("v0", col(aggCol)), filterDim, breakdownCol), meanName),
-      breakdownName)
-
   private def catPatternsImpl(m: DataFrame, breakdown: String): DataFrame =
     catPatternsKeyed(m, Seq("subspace", "measure")).withColumn("breakdown", lit(breakdown))
 
   /** Categorical-pattern evaluation over a melted cell table, grouped by
-    * `keys` (at least (subspace, measure); auto-search prepends its scope
-    * tags so MANY scopes evaluate in ONE aggregation chain instead of one
-    * chain per scope). Per-group math is identical regardless of the
-    * extra keys, so results are bit-identical to per-scope runs.
+    * `keys` (at least (subspace, measure); scope tags prepended to them
+    * evaluate many scopes in one aggregation chain — the form
+    * [[autoSearch]] mirrors on the driver). Per-group math is identical
+    * regardless of the extra keys, so results are bit-identical to
+    * per-scope runs.
     *
     * The whole evaluation is ONE aggregation: the group's cells are
     * gathered with collect_list and the z-score/share math runs as array
@@ -128,7 +91,7 @@ object MetaInsight {
     * functions of (b, v, sums), and the highlight is the head of an
     * array_sort by (−metric NULLS LAST, b) — none depend on
     * collect_list's arrival order. */
-  private def catPatternsKeyed(m: DataFrame, keys: Seq[String]): DataFrame = {
+  private[graft] def catPatternsKeyed(m: DataFrame, keys: Seq[String]): DataFrame = {
     val kc = keys.map(col)
     // NULL subspaces are excluded, as in the SQL mirrors (and the
     // earlier stats join, whose NULL keys never matched); without this
@@ -188,9 +151,8 @@ object MetaInsight {
   private def trendPatternsImpl(m: DataFrame, breakdownName: String): DataFrame =
     trendPatternsKeyed(m, Seq("subspace", "measure")).withColumn("breakdown", lit(breakdownName))
 
-  /** Trend-pattern analog of [[catPatternsKeyed]]: grouped by `keys` so
-    * auto-search evaluates all trend scopes in one aggregation. */
-  private def trendPatternsKeyed(m: DataFrame, keys: Seq[String]): DataFrame = {
+  /** Trend-pattern analog of [[catPatternsKeyed]], grouped by `keys`. */
+  private[graft] def trendPatternsKeyed(m: DataFrame, keys: Seq[String]): DataFrame = {
     val kc = keys.map(col)
     val s = m.groupBy(kc: _*)
       .agg(count(lit(1)).as("k"),
@@ -217,8 +179,9 @@ object MetaInsight {
 
   /** Group scope patterns into scored MetaInsights. `extraKeys` joins the
     * grouping when pattern tables from SEVERAL data scopes are unioned
-    * (auto-search adds `filter_dim` so commonness is computed within its
-    * own scope family, not across unrelated filter dimensions).
+    * (`filter_dim`, so commonness is computed within its own scope
+    * family, not across unrelated filter dimensions — the keying
+    * [[autoSearch]] mirrors on the driver).
     *
     * Reference-default parity (metainsight_explainer.py:45-46):
     *  - `minCommonness` (default 0.5): a pattern is kept only when
@@ -255,273 +218,185 @@ object MetaInsight {
       .orderBy(keys.map(col): _*)
   }
 
-  /** Auto-search: evaluate every (filterDim, breakdown, measure) scope's
-    * categorical patterns in ONE job (union of per-scope pattern tables —
-    * each is one aggregation over its scope's cells, so the whole search
-    * is a handful of scans, not a per-scope driver loop) and rank
-    * MetaInsights by score. Mirrors the reference's auto enumeration
-    * (metainsight_explainer.py `max_filter_columns`/
-    * `max_aggregation_columns`); scope candidates are chosen by the
-    * caller (see ExplainFrame.explainMetaInsightAuto). */
-  def auto(src: DataFrame, scopes: Seq[(String, String, String)], topK: Int,
-           trendScopes: Seq[(String, Column, String, String)] = Nil,
-           minCommonness: Double = 0.5,
-           noExceptionPenaltyWeight: Double = 0.1,
-           balanceFactor: Double = 1.0): DataFrame = {
-    require(scopes.nonEmpty || trendScopes.nonEmpty,
-      "metainsight auto-search needs at least one scope")
-    rank(autoTables(src, scopes, trendScopes), topK,
-      minCommonness, noExceptionPenaltyWeight, balanceFactor)
-  }
+  /** One breakdown of an auto-search scope: `name` tags its patterns,
+    * `value` computes it from a source row, and a `trend` breakdown is an
+    * integer index (a month) that carries trend patterns instead of
+    * categorical ones. */
+  final case class Breakdown(name: String, value: Column, trend: Boolean = false)
 
-  /** The merged pattern tables of an auto-search scope set (0-2 tables:
-    * one for all categorical scopes, one for all trend scopes) —
-    * [[auto]] minus the ranking, public so callers with extra scope
-    * tables (e.g. composite breakdowns) can union before [[rank]].
+  /** Auto-search: every (filterDim, breakdown) scope × measure, mined and
+    * ranked by score. The scope set is chosen by the caller (see
+    * ExplainFrame.explainMetaInsightAuto, which mirrors the reference's
+    * auto enumeration, metainsight_explainer.py `max_filter_columns`/
+    * `max_aggregation_columns`/`use_all_groupby_combinations`).
     *
-    * The TAGGED melted cell tables are unioned first and ONE pattern
-    * aggregation chain runs for all cat scopes (and one for all trend
-    * scopes), grouped by (filter_dim, breakdown, subspace, measure):
-    * per-scope cell aggregations still scan independently (different
-    * grouping columns) but the stats/join/highlight tail — 3 tiny
-    * exchanges per scope in the per-scope form — collapses to one,
-    * which is what dominates auto's wall clock (KB-sized data,
-    * per-stage fixed cost). */
-  def autoTables(src: DataFrame, scopes: Seq[(String, String, String)],
-                 trendScopes: Seq[(String, Column, String, String)] = Nil): Seq[DataFrame] = {
-    val tagKeys = Seq("filter_dim", "breakdown", "subspace", "measure")
-    // several measures over the same (filterDim, breakdown) share one
-    // row_count measure — emit it for the first such scope only, so the
-    // merged aggregation sees each cell exactly once (autoSql mirrors
-    // this rule)
-    val seenCat = scala.collection.mutable.Set.empty[(String, String)]
-    val catMelts = scopes.map { case (f, b, m) =>
-      val full = melt(cells(src.withColumn("v0", col(m)), f, col(b)), s"${m}_mean")
-      val scoped = if (seenCat.add((f, b))) full
-        else full.filter(col("measure") =!= "row_count")
-      scoped.withColumn("filter_dim", lit(f)).withColumn("breakdown", lit(b)) }
-    val catTable = catMelts.reduceOption(_ unionByName _)
-      .map(catPatternsKeyed(_, tagKeys))
-    // ordered/trend breakdowns ride the same enumeration (reference auto
-    // mode includes trend scopes over its groupby_columns): each tuple is
-    // (filterDim, breakdown index column, breakdown name, measure)
-    val seenTrend = scala.collection.mutable.Set.empty[(String, String)]
-    val trendMelts = trendScopes.map { case (f, bIdx, bName, m) =>
-      val full = melt(cells(src.withColumn("v0", col(m)), f, bIdx), s"${m}_mean")
-      val scoped = if (seenTrend.add((f, bName))) full
-        else full.filter(col("measure") =!= "row_count")
-      scoped.withColumn("x", col("b").cast(IntegerType))
-        .withColumn("filter_dim", lit(f)).withColumn("breakdown", lit(bName)) }
-    val trendTable = trendMelts.reduceOption(_ unionByName _)
-      .map(trendPatternsKeyed(_, tagKeys))
-    (catTable ++ trendTable).toSeq
-  }
-
-  /** Multi-filter-dim auto enumeration from ONE corpus scan — the
-    * [[gridTables]] scan-sharing idea generalized: one master cube
-    * grouped by EVERY candidate dimension (string-cast, the [[cells]]
-    * convention) plus each trend column's month index carries the count
-    * and every measure's decimal sum. Each scope's (subspace, b) cells
-    * then re-aggregate from the cube via the same grouping-sets shape
-    * [[cellsFrom]] uses, so the cube's exchange is planned once and
-    * reused across all scopes; decimal partial sums re-add exactly, so
-    * every pattern is bit-identical to [[autoTables]]' per-scope scans
-    * (pinned by MetaInsightSpec). Master-cube size is the product of
-    * dim cardinalities — callers bound the dim count (the auto path
-    * uses ≤ 3 dims + ≤ 2 trend columns, KB-scale for real categorical
-    * dims; ID-like dims are already skip-listed upstream). */
-  def masterTables(src: DataFrame, fs: Seq[String], bs: Seq[String],
-                   ms: Seq[String], trendCols: Seq[String] = Nil): Seq[DataFrame] = {
-    require(fs.nonEmpty && bs.nonEmpty && ms.nonEmpty,
-      "masterTables needs filter dims, breakdowns and measures")
-    val tagKeys = Seq("filter_dim", "breakdown", "subspace", "measure")
-    val dims = (fs ++ bs).distinct
-    val dimCols = dims.map(d => col(d).cast("string").as(s"__d_$d")) ++
-      trendCols.map(d => month(col(d)).as(s"__t_$d"))
-    val aggs = count(lit(1)).as("cnt") +:
-      ms.map(m => sum(col(m).cast(D.dec25)).as(s"sm_$m"))
-    // NOT localCheckpoint'd: an eager checkpoint was measured SLOWER at
-    // sf1 (+0.2-0.5 s materialization/persist overhead) than letting the
-    // physical planner dedup the repeated cube subtree via ReusedExchange
-    val cube = src.groupBy(dimCols: _*).agg(aggs.head, aggs.tail: _*)
-    // one scope's cells, re-aggregated from the cube ([[cellsFrom]] shape)
-    def cellsOf(f: String, bCube: String, m: String): DataFrame =
-      cube.select(col(s"__d_$f").as("__sub"), col(bCube).as("__b"),
-          col("cnt"), col(s"sm_$m").as("sm"))
-        .groupingSets(Seq(Seq(col("__sub"), col("__b")), Seq(col("__b"))),
-          col("__sub"), col("__b"))
-        .agg(sum(col("cnt")).as("cnt"), sum(col("sm")).as("sm"),
-          grouping(col("__sub")).as("__g"))
-        .select(when(col("__g") === 1, lit("*")).otherwise(col("__sub")).as("subspace"),
-          col("__b").as("b"), col("cnt"), col("sm"))
-    // tag + union + merged pattern chains, mirroring [[autoTables]]
-    // (including its shared-row_count rule across measures of one (f, b))
-    val seenCat = scala.collection.mutable.Set.empty[(String, String)]
-    val catMelts = for (f <- fs; b <- bs if f != b; m <- ms) yield {
-      val full = melt(cellsOf(f, s"__d_$b", m), s"${m}_mean")
-      val scoped = if (seenCat.add((f, b))) full
-        else full.filter(col("measure") =!= "row_count")
-      scoped.withColumn("filter_dim", lit(f)).withColumn("breakdown", lit(b))
-    }
-    val catTable = catMelts.reduceOption(_ unionByName _)
-      .map(catPatternsKeyed(_, tagKeys))
-    val seenTrend = scala.collection.mutable.Set.empty[(String, String)]
-    val trendMelts = for (f <- fs; d <- trendCols; m <- ms) yield {
-      val bName = s"${d}_month"
-      val full = melt(cellsOf(f, s"__t_$d", m), s"${m}_mean")
-      val scoped = if (seenTrend.add((f, bName))) full
-        else full.filter(col("measure") =!= "row_count")
-      scoped.withColumn("x", col("b").cast(IntegerType))
-        .withColumn("filter_dim", lit(f)).withColumn("breakdown", lit(bName))
-    }
-    val trendTable = trendMelts.reduceOption(_ unionByName _)
-      .map(trendPatternsKeyed(_, tagKeys))
-    (catTable ++ trendTable).toSeq
-  }
-
-  /** [[masterTables]] + [[rank]] evaluated on the DRIVER from the one
-    * collected master cube — the whole auto-search becomes one corpus
-    * scan plus KB-scale arithmetic (the r6 judge measured auto's
-    * residual cost as per-stage fixed overhead across its many tiny
-    * pattern/mine/rank stages; this removes all of them). Exact
-    * expression mirrors ([[graft.util.Mirror]]) throughout; results are bit-identical to the
-    * in-plan chain (MetaInsightSpec parity pin + the unchanged SQL
-    * oracle). Cube rows are Guard-capped (MaxGatheredCells). */
-  def masterRanked(src: DataFrame, fs: Seq[String], bs: Seq[String],
-                   ms: Seq[String], trendCols: Seq[String], topK: Int,
-                   minCommonness: Double = 0.5,
-                   noExceptionPenaltyWeight: Double = 0.1,
-                   balanceFactor: Double = 1.0,
-                   allowMultipleAggregations: Boolean = false,
-                   allowMultipleGroupbys: Boolean = false): DataFrame = {
+    * ONE grouping-sets aggregation builds the cells of every scope: one
+    * set per distinct (filterDim, breakdown) pair and one per breakdown
+    * alone (the '*' subspace), each carrying the count and one decimal sum
+    * per measure ([[cells]] for all scopes at once). The sets read a
+    * pre-aggregate keyed by all grouping columns, and the decimal casts
+    * are projected below both, so they run once per source row.
+    * The table is collected through [[graft.util.Guard.gatherCells]]: it
+    * holds the sum of the scopes' cells. Each scope then picks its cells
+    * by grouping id, and the melt, pattern, mine and rank steps run on the
+    * driver through exact mirrors ([[graft.util.Mirror]]) of [[melt]],
+    * [[catPatternsKeyed]] / [[trendPatternsKeyed]] over the scope tags,
+    * and [[mine]]. NULL subspaces are excluded from every family, as in
+    * [[autoSql]]; a cell whose measure values are all NULL has a NULL mean,
+    * which counts toward k, is skipped in the sums and sorts last for
+    * highlights. The result is a LocalRelation: consuming it launches no
+    * Spark job.
+    *
+    * `allowMultipleAggregations` / `allowMultipleGroupbys` (reference
+    * metainsight_explainer.py:52-53, extend_by_measure/extend_by_breakdown
+    * in its miner): a MetaInsight may extend its scope family along the
+    * measure (resp. breakdown) axis, re-expressed deterministically as
+    * additional candidate insights whose measure (resp. breakdown, resp.
+    * both) key collapses to '*', so commonness is computed across the
+    * extended scope set. */
+  def autoSearch(src: DataFrame, scopes: Seq[(String, Breakdown)], measures: Seq[String],
+                 topK: Int,
+                 minCommonness: Double = 0.5,
+                 noExceptionPenaltyWeight: Double = 0.1,
+                 balanceFactor: Double = 1.0,
+                 allowMultipleAggregations: Boolean = false,
+                 allowMultipleGroupbys: Boolean = false): DataFrame = {
     import graft.util.Mirror
-    import graft.util.Mirror.{castDec, utf8Lt}
-    require(fs.nonEmpty && bs.nonEmpty && ms.nonEmpty,
-      "masterRanked needs filter dims, breakdowns and measures")
+    import graft.util.Mirror.{asc, desc, utf8Lt}
+    require(scopes.nonEmpty && measures.nonEmpty,
+      "metainsight auto-search has no pattern table to mine: it needs at least one " +
+        "(filterDim, breakdown) scope and one measure")
     require(minCommonness > 0 && minCommonness <= 1,
       "min_commonness must be in the range (0, 1]")
-    val spark = src.sparkSession
-    val dims = (fs ++ bs).distinct
-    val dimCols = dims.map(d => col(d).cast("string").as(s"__d_$d")) ++
-      trendCols.map(d => month(col(d)).as(s"__t_$d"))
-    val aggs = count(lit(1)).as("cnt") +:
-      ms.map(m => sum(col(m).cast(D.dec25)).as(s"sm_$m"))
-    // an ID-like candidate dimension fails here; pass explicit
-    // filterDims/breakdowns to avoid it
-    val cube = graft.util.Guard.gatherCells(
-      src.groupBy(dimCols: _*).agg(aggs.head, aggs.tail: _*), "MetaInsight.masterRanked")
 
-    // ---- cells of one scope (exact decimal re-aggregation) ----
-    // key extractors: cat dims are the string-cast cube columns; trend
-    // "dims" are the month ints (melt stringifies them)
-    def fIdx(f: String) = cube.headOption.map(_.fieldIndex(s"__d_$f")).getOrElse(0)
-    final case class Cell(sub: String, b: String, cnt: Long, sm: java.math.BigDecimal)
-    def cellsOf(fi: Int, bKey: org.apache.spark.sql.Row => String, m: String): Seq[Cell] = {
-      val smIdx = cube.headOption.map(_.fieldIndex(s"sm_$m")).getOrElse(0)
-      val cntIdx = cube.headOption.map(_.fieldIndex("cnt")).getOrElse(0)
-      def agg(rows: Seq[org.apache.spark.sql.Row]): (Long, java.math.BigDecimal) = {
-        var c = 0L; var s: java.math.BigDecimal = null
-        rows.foreach { r =>
-          c += r.getLong(cntIdx)
-          if (!r.isNullAt(smIdx)) {
-            val d = r.getDecimal(smIdx)
-            s = if (s == null) d else s.add(d)
-          }
-        }
-        (c, s)
-      }
-      val byPair = cube.toSeq.groupBy(r => (r.getString(fi), bKey(r))).toSeq
-        .map { case ((sub, b), rows) => val (c, s) = agg(rows); Cell(sub, b, c, s) }
-      val star = cube.toSeq.groupBy(bKey).toSeq
-        .map { case (b, rows) => val (c, s) = agg(rows); Cell("*", b, c, s) }
-      byPair ++ star
-    }
+    // ---- the cells of every scope: one grouping-sets aggregation ----
+    def key(b: Breakdown) = (b.name, b.trend)
+    val fs = scopes.map(_._1).distinct
+    val bs = scopes.map(_._2).distinctBy(key)
+    val ms = measures.distinct
+    val fIdx = fs.zipWithIndex.toMap
+    val bIdx = bs.map(key).zipWithIndex.toMap
+    val groupCols = fs.indices.map(i => s"__f$i") ++ bs.indices.map(i => s"__b$i")
+    val projected = src.select(
+      fs.zipWithIndex.map { case (f, i) => col(f).cast("string").as(s"__f$i") } ++
+        bs.zipWithIndex.map { case (b, i) => b.value.as(s"__b$i") } ++
+        ms.zipWithIndex.map { case (m, i) => col(m).cast(D.dec25).as(s"__v$i") }: _*)
+    // the sets re-aggregate one pre-aggregate keyed by every grouping
+    // column (decimal sums re-add exactly), so their Expand multiplies
+    // its rows rather than the source's (about 2× faster than expanding
+    // the source rows, measured on sf0.1 lineitem with 4 cores)
+    val keyed = projected.groupBy(groupCols.map(col): _*)
+      .agg(count(lit(1)).as("cnt"), ms.indices.map(i => sum(col(s"__v$i")).as(s"sm$i")): _*)
+    val sets = scopes.map { case (f, b) => Seq(s"__f${fIdx(f)}", s"__b${bIdx(key(b))}") }.distinct ++
+      bs.indices.map(i => Seq(s"__b$i"))
+    val aggs = grouping_id().as("gid") +: sum(col("cnt")).as("cnt") +:
+      ms.indices.map(i => sum(col(s"sm$i")).as(s"sm$i"))
+    // melt's string breakdown, cast after grouping on the raw value
+    val cellsDf = keyed.groupingSets(sets.map(_.map(col)), groupCols.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .select(Seq(col("gid"), col("cnt")) ++ ms.indices.map(i => col(s"sm$i")) ++
+        fs.indices.map(i => col(s"__f$i")) ++
+        bs.zipWithIndex.map { case (b, i) =>
+          if (b.trend) col(s"__b$i") else col(s"__b$i").cast("string") }: _*)
+    val rows = graft.util.Guard.gatherCells(cellsDf, "MetaInsight.autoSearch")
 
-    // ---- melt: (measure name, v) rows per cell ----
-    final case class MeltRow(sub: String, b: String, measure: String, v: Double)
-    def meltOf(cells: Seq[Cell], m: String, withRowCount: Boolean): Seq[MeltRow] =
-      cells.flatMap { c =>
-        // all-NULL measure cells produce NULL means in the in-plan chain;
-        // the driver mirror fails loud instead of silently diverging
-        if (c.sm == null && c.cnt > 0) throw new IllegalStateException(
-          s"masterRanked: cell (${c.sub}, ${c.b}) has only NULL '$m' values — " +
-            "use the in-plan autoTables path for measures with NULLs")
-        val vMean = Mirror.r(c.sm.doubleValue() / c.cnt, 6)
-        Seq(MeltRow(c.sub, c.b, s"${m}_mean", vMean)) ++
-          (if (withRowCount) Seq(MeltRow(c.sub, c.b, "row_count", c.cnt.toDouble)) else Nil)
-      }
+    // a row's grouping id has bit (n − 1 − i) clear when grouping column
+    // i is in its set; the set names the filter dim (none for '*') and
+    // the breakdown
+    final case class Cell(sub: String, b: String, x: Integer, cnt: Long,
+                          sm: IndexedSeq[java.math.BigDecimal])
+    val (smAt, fAt) = (2, 2 + ms.size)
+    val bAt = fAt + fs.size
+    val cellsOf: Map[(Int, Int), Seq[Cell]] = rows.toSeq.map { r =>
+      val gid = r.getLong(0)
+      def inSet(i: Int) = ((gid >> (groupCols.size - 1 - i)) & 1L) == 0L
+      val fi = fs.indices.find(inSet).getOrElse(-1)
+      val bi = bs.indices.find(j => inSet(fs.size + j)).get
+      val (b, x) =
+        if (bs(bi).trend) (null, if (r.isNullAt(bAt + bi)) null else Integer.valueOf(r.getInt(bAt + bi)))
+        else (r.getString(bAt + bi), null)
+      (fi, bi) -> Cell(if (fi < 0) "*" else r.getString(fAt + fi), b, x, r.getLong(1),
+        ms.indices.map(i => r.getDecimal(smAt + i)))
+    }.groupMap(_._1)(_._2)
 
-    // ---- pattern rows ----
+    // ---- melt: (measure, v) rows per cell, tagged with the scope ----
+    // several measures over one (filterDim, breakdown) share one
+    // row_count measure, emitted by the first such scope only
+    final case class MeltRow(f: String, b: Breakdown, sub: String, bv: String, x: Integer,
+                             measure: String, v: java.lang.Double)
+    val seen = scala.collection.mutable.Set.empty[(String, (String, Boolean))]
+    val melted = for {
+      (f, b) <- scopes
+      m <- measures
+      withRowCount = seen.add((f, key(b)))
+      c <- cellsOf.getOrElse((fIdx(f), bIdx(key(b))), Nil) ++
+        cellsOf.getOrElse((-1, bIdx(key(b))), Nil)
+      sm = c.sm(ms.indexOf(m))
+      mean = if (sm == null) null else java.lang.Double.valueOf(Mirror.r(sm.doubleValue / c.cnt, 6))
+      row <- MeltRow(f, b, c.sub, c.b, c.x, s"${m}_mean", mean) +:
+        (if (withRowCount)
+          Seq(MeltRow(f, b, c.sub, c.b, c.x, "row_count", c.cnt.toDouble)) else Nil)
+    } yield row
+
+    // ---- pattern rows per (scope, subspace, measure) group ----
     final case class Pat(filterDim: String, breakdown: String, sub: String,
                          measure: String, hasPat: Int, highlight: String, pattern: String)
-    val cellCapL = graft.util.Guard.MaxGatheredCells
-    def catPats(f: String, bName: String, melts: Seq[MeltRow]): Seq[Pat] =
-      melts.filter(_.sub != null).groupBy(r => (r.sub, r.measure)).toSeq.flatMap {
-        case ((sub, measure), cells) =>
-          val k = cells.size.toLong
-          if (k > cellCapL) throw new IllegalStateException(
-            s"MetaInsight.masterRanked: a single group gathered $k cells (bound $cellCapL)")
-          val (svBoxed, sigma) = sumSigma(cells.map(_.v), k)
-          val sv = svBoxed.doubleValue
-          val mu = sv / k
-          def zOf(v: Double) = if (sigma > 1e-12) math.abs(v - mu) / sigma else 0.0
-          def shOf(v: Double) = v / sv
-          def topBy(metric: Double => Double): String =
-            cells.map(c => (metric(c.v), c.b))
-              .reduceLeft { (a, c) =>
-                // head of ascending sort by (coalesce(−metric, MAX), b)
-                val ao = if (a._1.isNaN) Double.MaxValue else -a._1
-                val co = if (c._1.isNaN) Double.MaxValue else -c._1
-                if (co < ao || (co == ao && utf8Lt(c._2, a._2))) c else a
-              }._2
-          val zMax = cells.map(c => zOf(c.v)).max
-          val sMax = cells.map(c => shOf(c.v)).max
-          Seq(
-            Pat(f, bName, sub, measure, if (zMax > 1.5) 1 else 0,
-              if (zMax > 1.5) topBy(zOf) else null, "outlier"),
-            Pat(f, bName, sub, measure, if (sMax >= 0.5) 1 else 0,
-              if (sMax >= 0.5) topBy(shOf) else null, "dominance"))
+    def catPats(f: String, b: String, sub: String, measure: String, cells: Seq[MeltRow]): Seq[Pat] = {
+      val k = cells.size.toLong
+      val (sv, sigma) = sumSigma(cells.flatMap(c => Option(c.v)).map(_.doubleValue), k)
+      def zOf(v: java.lang.Double): java.lang.Double =
+        if (sigma <= 1e-12) 0.0
+        else if (v == null) null
+        else math.abs(v - sv / k) / sigma
+      def shOf(v: java.lang.Double): java.lang.Double =
+        if (sv == null || sv == 0.0 || v == null) null else v / sv
+      // head of the ascending sort by (coalesce(−metric, MaxValue), b)
+      def topBy(metric: java.lang.Double => java.lang.Double): String =
+        cells.map(c => (Option(metric(c.v)).fold(Double.MaxValue)(m => -m.doubleValue), c.bv))
+          .reduceLeft { (a, c) =>
+            val o = Mirror.compareDoubles(c._1, a._1)
+            if (o < 0 || (o == 0 && utf8Lt(c._2, a._2))) c else a
+          }._2
+      def pat(metric: java.lang.Double => java.lang.Double, holds: Double => Boolean,
+              name: String) = {
+        val has = cells.exists(c => Option(metric(c.v)).exists(holds(_)))
+        Pat(f, b, sub, measure, if (has) 1 else 0, if (has) topBy(metric) else null, name)
       }
-    def trendPats(f: String, bName: String, melts: Seq[MeltRow]): Seq[Pat] =
-      melts.filter(_.sub != null).groupBy(r => (r.sub, r.measure)).toSeq.flatMap {
-        case ((sub, measure), cells) =>
-          val k = cells.size.toLong
-          val xs = cells.map(c => c.b.toLong)
-          val sx = xs.sum
-          val sxx = xs.map(x => x * x).sum
-          val sv = cells.map(c => castDec(c.v, 18, 6)).reduce(_.add(_)).doubleValue()
-          val svv = cells.map(c => castDec(c.v * c.v, 24, 2)).reduce(_.add(_)).doubleValue()
-          val sxv = cells.map(c => castDec(c.b.toLong * c.v, 18, 6)).reduce(_.add(_)).doubleValue()
-          val num = k * sxv - sx * sv
-          val den = math.sqrt((k * sxx - sx * sx).toDouble) *
-            math.sqrt(math.max(k * svv - sv * sv, 0.0))
-          val r = if (den > 1e-9) num / den else 0.0
-          Seq(
-            Pat(f, bName, sub, measure, if (r >= 0.5) 1 else 0,
-              if (r >= 0.5) "up" else null, "trend_up"),
-            Pat(f, bName, sub, measure, if (r <= -0.5) 1 else 0,
-              if (r <= -0.5) "down" else null, "trend_down"))
-      }
-
-    // ---- enumerate scopes (masterTables' tagging + row_count rules) ----
-    val seenCat = scala.collection.mutable.Set.empty[(String, String)]
-    val catPatRows = for {
-      f <- fs; b <- bs if f != b; m <- ms
-      bi = cube.headOption.map(_.fieldIndex(s"__d_$b")).getOrElse(0)
-      withRc = seenCat.add((f, b))
-      pat <- catPats(f, b, meltOf(cellsOf(fIdx(f), r => r.getString(bi), m), m, withRc))
-    } yield pat
-    val seenTrend = scala.collection.mutable.Set.empty[(String, String)]
-    val trendPatRows = for {
-      f <- fs; d <- trendCols; m <- ms
-      bName = s"${d}_month"
-      ti = cube.headOption.map(_.fieldIndex(s"__t_$d")).getOrElse(0)
-      withRc = seenTrend.add((f, bName))
-      pat <- trendPats(f, bName, meltOf(
-        cellsOf(fIdx(f), r => if (r.isNullAt(ti)) null else String.valueOf(r.getInt(ti)), m),
-        m, withRc))
-    } yield pat
-    val pats = catPatRows ++ trendPatRows
+      Seq(pat(zOf, _ > 1.5, "outlier"), pat(shOf, _ >= 0.5, "dominance"))
+    }
+    def trendPats(f: String, b: String, sub: String, measure: String, cells: Seq[MeltRow]): Seq[Pat] = {
+      val k = cells.size.toLong
+      val xs = cells.flatMap(c => Option(c.x)).map(_.intValue)
+      val vs = cells.flatMap(c => Option(c.v)).map(_.doubleValue)
+      val sv = Mirror.decSum(vs, 18, 6)
+      val svv = Mirror.decSum(vs.map(v => v * v), 24, 2)
+      val sxv = Mirror.decSum(
+        cells.filter(c => c.x != null && c.v != null).map(c => c.x.intValue * c.v.doubleValue), 18, 6)
+      // when(den > 1e-9, num / den).otherwise(0.0): a NULL den falls to
+      // the otherwise, a NULL num gives a NULL r, and greatest() skips a
+      // NULL moment
+      val r: java.lang.Double =
+        if (xs.isEmpty) 0.0
+        else {
+          val sx = xs.map(_.toLong).sum
+          val sxx = xs.map(x => (x * x).toLong).sum
+          val vMoment = if (sv == null) 0.0 else Mirror.greatest(k * svv - sv * sv, 0.0)
+          val den = math.sqrt((k * sxx - sx * sx).toDouble) * math.sqrt(vMoment)
+          if (!(den > 1e-9)) 0.0
+          else if (sxv == null) null
+          else (k * sxv - sx * sv) / den
+        }
+      def holds(p: Double => Boolean) = r != null && p(r)
+      Seq(
+        Pat(f, b, sub, measure, if (holds(_ >= 0.5)) 1 else 0,
+          if (holds(_ >= 0.5)) "up" else null, "trend_up"),
+        Pat(f, b, sub, measure, if (holds(_ <= -0.5)) 1 else 0,
+          if (holds(_ <= -0.5)) "down" else null, "trend_down"))
+    }
+    val pats = melted.filter(_.sub != null)
+      .groupBy(r => (r.f, key(r.b), r.sub, r.measure)).toSeq
+      .flatMap { case ((f, (b, trend), sub, measure), cells) =>
+        if (trend) trendPats(f, b, sub, measure, cells) else catPats(f, b, sub, measure, cells) }
 
     // ---- rank: variant explode + mine + order + topK ----
     val variants: Seq[Pat => Pat] =
@@ -530,10 +405,9 @@ object MetaInsight {
         (if (allowMultipleGroupbys) Seq((p: Pat) => p.copy(breakdown = "*")) else Nil) ++
         (if (allowMultipleAggregations && allowMultipleGroupbys)
           Seq((p: Pat) => p.copy(measure = "*", breakdown = "*")) else Nil)
-    val extended = pats.flatMap(p => variants.map(v => v(p)))
-    val mined = extended
+    val mined = pats.flatMap(p => variants.map(_(p)))
       .groupBy(p => (p.filterDim, p.breakdown, p.measure, p.pattern)).toSeq
-      .map { case ((f, b, m, pat), g) =>
+      .flatMap { case ((f, b, m, pat), g) =>
         val nSub = g.size.toLong
         val nMatch = g.map(_.hasPat.toLong).sum
         val exHl = g.filter(_.hasPat == 1)
@@ -543,20 +417,10 @@ object MetaInsight {
         val score = Mirror.r(
           (nMatch.toDouble - balanceFactor * (nSub - nMatch)) / nSub -
             noExceptionPenaltyWeight * (if (nMatch == nSub) 1 else 0), 6)
-        (f, b, m, pat, nSub, nMatch, commonness, score, exHl)
+        if (nMatch > 0 && commonness >= minCommonness)
+          Seq(org.apache.spark.sql.Row(f, b, m, pat, nSub, nMatch, commonness, score, exHl))
+        else Nil
       }
-      .filter { case (_, _, _, _, _, nMatch, commonness, _, _) =>
-        nMatch > 0 && commonness >= minCommonness }
-      .sortWith { case ((f1, b1, m1, p1, _, _, _, s1, _), (f2, b2, m2, p2, _, _, _, s2, _)) =>
-        if (s1 != s2) s1 > s2
-        else if (f1 != f2) utf8Lt(f1, f2)
-        else if (b1 != b2) utf8Lt(b1, b2)
-        else if (m1 != m2) utf8Lt(m1, m2)
-        else utf8Lt(p1, p2)
-      }
-      .take(topK)
-    val out = mined.map { case (f, b, m, pat, nSub, nMatch, commonness, score, exHl) =>
-      org.apache.spark.sql.Row(f, b, m, pat, nSub, nMatch, commonness, score, exHl) }
     val schema = StructType(Seq(
       StructField("filter_dim", StringType, nullable = false),
       StructField("breakdown", StringType, nullable = false),
@@ -567,128 +431,9 @@ object MetaInsight {
       StructField("commonness", DoubleType, nullable = true),
       StructField("score", DoubleType, nullable = true),
       StructField("example_highlight", StringType, nullable = true)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
-  }
-
-  /** Single-filter-dim auto GRID (breakdowns × measures) evaluated from
-    * SHARED corpus aggregations — the scan-sharing form of
-    * [[autoTables]] for the common "one filter dimension, several
-    * breakdowns and measures" enumeration: with two breakdowns, ONE
-    * (subspace, b1, b2) cube carries the count and EVERY measure's
-    * decimal sum, and each breakdown's cells re-aggregate from it
-    * ([[cube2]]/[[cellsFrom]] generalized to a multi-measure melt);
-    * each trend column gets one (subspace, month) pass for ALL
-    * measures. The whole grid costs 1 + |trendCols| corpus scans
-    * instead of one per scope (measured 3.5 s → 1.4 s on the
-    * registered 4-cat + 2-trend lineitem grid at sf0.1). Decimal sums
-    * re-aggregate exactly, so results are bit-identical to
-    * [[autoTables]]' per-scope form and the same SQL oracle covers
-    * both. */
-  def gridTables(src: DataFrame, filterDim: String, breakdowns: Seq[String],
-                 measures: Seq[String], trendCols: Seq[String] = Nil): Seq[DataFrame] = {
-    require(breakdowns.nonEmpty && breakdowns.size <= 2,
-      "gridTables supports 1 or 2 breakdowns (the cube is subspace × Π|b_i| cells)")
-    require(measures.nonEmpty, "gridTables needs at least one measure")
-    val tagKeys = Seq("filter_dim", "breakdown", "subspace", "measure")
-    val sumAggs = measures.map(m => sum(col(m).cast(D.dec25)).as(s"sm_$m"))
-    def meltMulti(cellsDf: DataFrame, bName: String): DataFrame = {
-      val rows = measures.map(m => struct(lit(s"${m}_mean").as("measure"),
-        graft.util.D.r(col(s"sm_$m").cast(D.dec25).cast(DoubleType) / col("cnt"), 6).as("v"))) :+
-        struct(lit("row_count").as("measure"), col("cnt").cast(DoubleType).as("v"))
-      cellsDf.select(col("subspace"), col("b").cast("string").as("b"),
-          explode(array(rows: _*)).as("mv"))
-        .select(col("subspace"), col("b"), col("mv.measure").as("measure"), col("mv.v").as("v"))
-        .withColumn("filter_dim", lit(filterDim)).withColumn("breakdown", lit(bName))
-    }
-    // re-aggregate one breakdown's cells (+ the '*' rollup) from a
-    // pre-aggregated table in one grouping-sets pass — the [[cells]]
-    // shape with carried measure sums
-    def cellsOver(pre: DataFrame, b: Column): DataFrame = {
-      val aggList = (sum(col("cnt")).as("cnt") +:
-        measures.map(m => sum(col(s"sm_$m")).as(s"sm_$m"))) :+
-        grouping(col("__sub")).as("__g")
-      pre.withColumn("__b", b)
-        .groupingSets(Seq(Seq(col("__sub"), col("__b")), Seq(col("__b"))),
-          col("__sub"), col("__b"))
-        .agg(aggList.head, aggList.tail: _*)
-        .select(when(col("__g") === 1, lit("*")).otherwise(col("__sub")).as("subspace") +:
-          col("__b").as("b") +: col("cnt") +: measures.map(m => col(s"sm_$m")): _*)
-    }
-    val catMelts: Seq[DataFrame] =
-      if (breakdowns.size == 1)
-        Seq(meltMulti(
-          cellsOver(
-            src.groupBy(col(filterDim).cast("string").as("__sub"),
-                col(breakdowns.head).as("__b1"))
-              .agg(count(lit(1)).as("cnt"), sumAggs: _*),
-            col("__b1")),
-          breakdowns.head))
-      else {
-        val cube = src.groupBy(col(filterDim).cast("string").as("__sub"),
-            col(breakdowns(0)).as("__b1"), col(breakdowns(1)).as("__b2"))
-          .agg(count(lit(1)).as("cnt"), sumAggs: _*)
-        breakdowns.zipWithIndex.map { case (bName, i) =>
-          meltMulti(cellsOver(cube, col(s"__b${i + 1}")), bName) }
-      }
-    val catTable = catMelts.reduceOption(_ unionByName _).map(catPatternsKeyed(_, tagKeys))
-    val trendMelts = trendCols.map { tc =>
-      val cells = cellsOver(
-        src.groupBy(col(filterDim).cast("string").as("__sub"),
-            month(col(tc)).as("__b1"))
-          .agg(count(lit(1)).as("cnt"), sumAggs: _*),
-        col("__b1"))
-      meltMulti(cells, s"${tc}_month").withColumn("x", col("b").cast(IntegerType))
-    }
-    val trendTable = trendMelts.reduceOption(_ unionByName _).map(trendPatternsKeyed(_, tagKeys))
-    (catTable ++ trendTable).toSeq
-  }
-
-  /** Mine + score-rank prebuilt per-scope pattern tables (each tagged
-    * with a `filter_dim` column) — the shared tail of [[auto]], public so
-    * callers can append scopes auto() cannot express (e.g. composite
-    * breakdowns from [[catPatternsExpr]]). */
-  def rank(tables: Seq[DataFrame], topK: Int,
-           minCommonness: Double = 0.5,
-           noExceptionPenaltyWeight: Double = 0.1,
-           balanceFactor: Double = 1.0,
-           allowMultipleAggregations: Boolean = false,
-           allowMultipleGroupbys: Boolean = false): DataFrame = {
-    require(tables.nonEmpty, "metainsight rank needs at least one pattern table")
-    val pats = tables.reduce(_ unionByName _)
-    // allow_multiple_aggregations / allow_multiple_groupbys (reference
-    // metainsight_explainer.py:52-53, extend_by_measure/extend_by_breakdown
-    // in its miner): a MetaInsight may EXTEND its scope family along the
-    // measure (resp. breakdown) axis. Re-expressed deterministically:
-    // additional candidate insights whose measure (resp. breakdown, resp.
-    // both) key collapses to '*', so commonness is computed across the
-    // extended scope set (every (subspace, measure) — or (subspace,
-    // breakdown) — pair is one scope). The variants EXPLODE from each
-    // pattern row (the family's melt convention) so the pattern subtree
-    // is referenced exactly once — a union of '*'-rewritten copies
-    // re-planned every per-scope corpus aggregation per copy (measured
-    // 12 s vs 1.4 s on the registered multi query at sf0.1: 4 copies x
-    // 6 scope scans of lineitem).
-    val variants =
-      Seq(struct(col("measure"), col("breakdown"))) ++
-        (if (allowMultipleAggregations)
-          Seq(struct(lit("*").as("measure"), col("breakdown"))) else Nil) ++
-        (if (allowMultipleGroupbys)
-          Seq(struct(col("measure"), lit("*").as("breakdown"))) else Nil) ++
-        (if (allowMultipleAggregations && allowMultipleGroupbys)
-          Seq(struct(lit("*").as("measure"), lit("*").as("breakdown"))) else Nil)
-    val extended =
-      if (variants.size == 1) pats
-      else pats
-        .select(col("filter_dim"), col("subspace"), col("pattern"),
-          col("has_pat"), col("highlight"), explode(array(variants: _*)).as("mb"))
-        .select(col("filter_dim"), col("mb.breakdown").as("breakdown"),
-          col("subspace"), col("mb.measure").as("measure"),
-          col("pattern"), col("has_pat"), col("highlight"))
-    mine(extended, Seq("filter_dim"),
-        minCommonness, noExceptionPenaltyWeight, balanceFactor)
-      .orderBy(col("score").desc, col("filter_dim"), col("breakdown"),
-        col("measure"), col("pattern"))
-      .limit(topK)
+    Mirror.Table(schema, mined)
+      .orderBy(desc("score"), asc("filter_dim"), asc("breakdown"), asc("measure"), asc("pattern"))
+      .limit(topK).toDF(src.sparkSession)
   }
 
   // ---------------------------------------------------------------- SQL --
@@ -704,7 +449,7 @@ object MetaInsight {
               balanceFactor: Double = 1.0,
               allowMultipleAggregations: Boolean = false,
               allowMultipleGroupbys: Boolean = false): String = {
-    // mirror autoTables' rule: several measures over the same
+    // mirror autoSearch's rule: several measures over the same
     // (filterDim, breakdown) share one row_count measure — emitted for
     // the first such scope only
     val seenCat = scala.collection.mutable.Set.empty[(String, String)]
@@ -785,7 +530,7 @@ object MetaInsight {
     }
     val pats = (scopes.indices.map(i => s"SELECT * FROM p$i") ++
       trendScopes.indices.map(i => s"SELECT * FROM tp$i")).mkString("\nUNION ALL\n")
-    // mirror rank()'s scope-family extension: measure/breakdown (or both)
+    // mirror autoSearch's scope-family extension: measure/breakdown (or both)
     // collapsed to '*' as additional candidate insights
     val extendedBranches =
       (if (allowMultipleAggregations)

@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * The explainers gather explanation-grade cell sets — bins and
   * low-cardinality dimensions — either on the driver through one bounded
   * collect ([[gatherCells]]: Outlier.explain's cube, the Fedex count
-  * table, GroupByExplain.zdev's melt, MetaInsight.masterRanked's cube),
-  * or into one row per group via
-  * collect_list ([[cellCap]]: MetaInsight.catPatternsKeyed). The
+  * table, GroupByExplain.zdev's melt, the cells table of every
+  * MetaInsight auto-search scope in MetaInsight.autoSearch), or into one
+  * row per group via collect_list ([[cellCap]]: the single-scope
+  * MetaInsight.catPatternsKeyed). The
   * contract "don't feed ID-like grouping keys" used to be documentation
   * only: a violating caller got a driver or executor OOM with no hint of
   * the cause. Both guards turn the violation into an immediate,

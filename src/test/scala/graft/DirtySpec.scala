@@ -105,9 +105,6 @@ class DirtySpec extends AnyFunSuite {
     // "must be positive" fragments also appear in genuine Spark runtime
     // errors, so an unqualified match could silently excuse a real crash
     // (the luck class this message-fragment design exists to remove)
-    // metainsight auto's documented all-NULL-measure-cell guard (fail
-    // loud WITH remediation: 'use the in-plan autoTables path')
-    "use the in-plan autoTables path"
   )
 
   private def runAll(dir: String): (Int, Seq[(String, String)]) = {

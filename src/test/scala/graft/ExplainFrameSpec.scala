@@ -445,22 +445,177 @@ class ExplainFrameSpec extends AnyFunSuite {
     assert(dev.map(_.getString(0)).toSet === Set("solo", "multi"))
   }
 
-  test("masterRanked equals the in-plan autoTables + rank chain bit-for-bit") {
+  /** The in-plan auto-search chain the driver finish replaced: tagged
+    * per-scope melts unioned into one categorical and one trend pattern
+    * chain, then the variant explode, mine and rank. Two rules differ
+    * from the chain as it last ran in-plan, and the finish follows the
+    * SQL mirror (`MetaInsight.autoSql`) in both: combination breakdowns
+    * share the one row_count per (filterDim, breakdown) that plain
+    * breakdowns share, and trend families drop a NULL subspace as the
+    * categorical ones do. */
+  private object AutoRef {
     import graft.explain.MetaInsight
+    import graft.explain.MetaInsight.Breakdown
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.IntegerType
+
+    def tables(src: DataFrame, scopes: Seq[(String, Breakdown)], ms: Seq[String]): Seq[DataFrame] = {
+      val tagKeys = Seq("filter_dim", "breakdown", "subspace", "measure")
+      val seen = scala.collection.mutable.Set.empty[(String, String, Boolean)]
+      def melts(trend: Boolean) = for ((f, b) <- scopes if b.trend == trend; m <- ms) yield {
+        val full = MetaInsight.melt(
+          MetaInsight.cells(src.withColumn("v0", col(m)), f, b.value), s"${m}_mean")
+        val scoped = if (seen.add((f, b.name, trend))) full
+          else full.filter(col("measure") =!= "row_count")
+        val tagged = scoped.withColumn("filter_dim", lit(f)).withColumn("breakdown", lit(b.name))
+        if (!trend) tagged
+        else tagged.filter(col("subspace").isNotNull).withColumn("x", col("b").cast(IntegerType))
+      }
+      (melts(trend = false).reduceOption(_ unionByName _).map(MetaInsight.catPatternsKeyed(_, tagKeys)) ++
+        melts(trend = true).reduceOption(_ unionByName _).map(MetaInsight.trendPatternsKeyed(_, tagKeys)))
+        .toSeq
+    }
+
+    def rank(tables: Seq[DataFrame], topK: Int, minCommonness: Double,
+             allowMultipleAggregations: Boolean, allowMultipleGroupbys: Boolean): DataFrame = {
+      val pats = tables.reduce(_ unionByName _)
+      val variants =
+        Seq(struct(col("measure"), col("breakdown"))) ++
+          (if (allowMultipleAggregations)
+            Seq(struct(lit("*").as("measure"), col("breakdown"))) else Nil) ++
+          (if (allowMultipleGroupbys)
+            Seq(struct(col("measure"), lit("*").as("breakdown"))) else Nil) ++
+          (if (allowMultipleAggregations && allowMultipleGroupbys)
+            Seq(struct(lit("*").as("measure"), lit("*").as("breakdown"))) else Nil)
+      val extended =
+        if (variants.size == 1) pats
+        else pats
+          .select(col("filter_dim"), col("subspace"), col("pattern"),
+            col("has_pat"), col("highlight"), explode(array(variants: _*)).as("mb"))
+          .select(col("filter_dim"), col("mb.breakdown").as("breakdown"),
+            col("subspace"), col("mb.measure").as("measure"),
+            col("pattern"), col("has_pat"), col("highlight"))
+      MetaInsight.mine(extended, Seq("filter_dim"), minCommonness)
+        .orderBy(col("score").desc, col("filter_dim"), col("breakdown"),
+          col("measure"), col("pattern"))
+        .limit(topK)
+    }
+
+    /** explainMetaInsightAuto's scope enumeration for explicit lists. */
+    def scopes(src: DataFrame, fs: Seq[String], bs: Seq[String],
+               combos: Boolean): Seq[(String, Breakdown)] = {
+      val dates = src.schema.fields.filter(_.dataType.typeName.startsWith("timestamp"))
+        .map(_.name).take(3).toSeq
+      (for (f <- fs; b <- bs if f != b) yield f -> Breakdown(b, col(b))) ++
+        (for (f <- fs; d <- dates) yield f -> Breakdown(s"${d}_month", month(col(d)), trend = true)) ++
+        (if (!combos) Nil else for {
+          combo <- (2 to bs.size).flatMap(k => bs.combinations(k))
+          f <- fs if !combo.contains(f)
+        } yield f -> Breakdown(combo.mkString("+"),
+          concat_ws("|", combo.map(c => coalesce(col(c).cast("string"), lit("<null>"))): _*)))
+    }
+  }
+
+  /** A seeded frame with NULL filter-dim values, NULL breakdown values,
+    * NULL dates, and measure cells whose values are all NULL: every row
+    * with (f1, g) = (c, r) and every row with (f1, month) = (c, 3). Two
+    * fixed subspaces make the trend NULL rules decide a pattern: in
+    * f1 = t the all-NULL month-4 cell counts toward k and its x enters
+    * sx/sxx (r = −0.2, no trend; r = 1 without it), and in f1 = u the
+    * NULL-month cell's mean enters the moments (r ≈ −0.63, trend_down;
+    * r = 1 without it). */
+  private def nullFrame(n: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(7)
+    def pick[T](xs: T*): T = xs(rnd.nextInt(xs.size))
+    val rows = (0 until n).map { _ =>
+      val f1 = pick("a", "b", "c", null)
+      val g = pick("p", "q", "r", null)
+      val month = 1 + rnd.nextInt(6)
+      val ts = if (rnd.nextInt(15) == 0) null
+        else java.sql.Timestamp.valueOf(f"2024-$month%02d-${1 + rnd.nextInt(28)}%02d 00:00:00")
+      val allNull = f1 == "c" && (g == "r" || (ts != null && month == 3))
+      def v(scale: Double) = if (allNull || rnd.nextInt(9) == 0) null
+        else java.lang.Double.valueOf(rnd.nextInt(10000) * scale / 100.0)
+      Row(f1, pick("x", "y"), g, ts, v(1.0), v(3.0))
+    }
+    def at(month: Int) = java.sql.Timestamp.valueOf(f"2024-$month%02d-10 00:00:00")
+    def probe(f1: String, v: Option[Double], ts: java.sql.Timestamp) =
+      Row(f1, "x", "p", ts, v.map(java.lang.Double.valueOf).orNull,
+        v.map(x => java.lang.Double.valueOf(3 * x)).orNull)
+    val probes = (1 to 3).flatMap(m => Seq(probe("t", Some(m), at(m)), probe("u", Some(m), at(m)))) ++
+      Seq(probe("t", None, at(4)), probe("u", Some(10.0), null))
+    val schema = StructType(Seq(
+      StructField("f1", StringType), StructField("f2", StringType),
+      StructField("g", StringType), StructField("ts", TimestampType),
+      StructField("v1", DoubleType), StructField("v2", DoubleType)))
+    spark.createDataFrame(java.util.Arrays.asList(rows ++ probes: _*), schema)
+  }
+
+  test("the auto-search driver finish equals the in-plan chain on every scope shape") {
     val o = graft.util.D.t(spark, sf, "orders")
-    val fs = Seq("o_orderpriority", "o_orderstatus")
-    val bs = Seq("o_orderstatus", "o_orderpriority")
-    val ms = Seq("o_totalprice")
-    val scopes = for (f <- fs; b <- bs if f != b; m <- ms) yield (f, b, m)
-    val trendScopes = for (f <- fs; m <- ms)
-      yield (f, org.apache.spark.sql.functions.month(col("o_orderdate")), "o_orderdate_month", m)
-    def key(r: org.apache.spark.sql.Row) = (0 until r.length).map(r.get).toList
-    val inPlan = MetaInsight.rank(
-      MetaInsight.autoTables(o, scopes, trendScopes), 50).collect().map(key)
-    val driver = MetaInsight.masterRanked(o, fs, bs, ms, Seq("o_orderdate"), 50)
-      .collect().map(key)
-    assert(driver.toSeq === inPlan.toSeq,
-      "driver-side masterRanked diverged from the in-plan chain")
+    val oWide = o.withColumn("o_year", year(col("o_orderdate")).cast("string"))
+      .withColumn("o_bucket", pmod(col("o_custkey"), lit(3)).cast("string"))
+      .withColumn("o_half", (col("o_totalprice") * 0.5).cast("double"))
+    val o3 = o.withColumn("o_shipped", col("o_orderdate") + expr("INTERVAL 40 DAYS"))
+      .withColumn("o_billed", col("o_orderdate") - expr("INTERVAL 75 DAYS"))
+    val li = graft.util.D.t(spark, sf, "lineitem")
+    val nulls = nullFrame(400)
+    val prio = "o_orderpriority"; val status = "o_orderstatus"
+    // (name, source, filter dims, breakdowns, measures, combinations,
+    //  min_commonness, allow multiple aggregations and groupbys)
+    val shapes = Seq(
+      ("two dims, one date", o, Seq(prio, status), Seq(status, prio), Seq("o_totalprice"),
+        false, 0.5, false),
+      ("one filter dim, 2 breakdowns, 2 measures, extensions", li, Seq("l_returnflag"),
+        Seq("l_linestatus", "l_linenumber"), Seq("l_quantity", "l_extendedprice"), false, 0.15, true),
+      ("more than 3 dimensions", oWide, Seq(prio, status, "o_year"),
+        Seq("o_bucket", status, prio), Seq("o_totalprice"), false, 0.3, false),
+      ("3 date columns", o3, Seq(prio, status), Seq(status, prio), Seq("o_totalprice"),
+        false, 0.3, true),
+      ("combinations, 2 measures", oWide, Seq(status), Seq(prio, "o_year", "o_bucket"),
+        Seq("o_totalprice", "o_half"), true, 0.01, true),
+      ("NULL subspaces, values and all-NULL cells", nulls, Seq("f1", "f2"), Seq("g", "f1"),
+        Seq("v1", "v2"), true, 0.01, true),
+      ("empty input", o.filter(lit(false)), Seq(prio, status), Seq(status, prio),
+        Seq("o_totalprice"), true, 0.5, true))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq.toList).toList
+    for ((name, src, fs, bs, ms, combos, minC, multi) <- shapes) {
+      val scopes = AutoRef.scopes(src, fs, bs, combos)
+      val full = AutoRef.rank(AutoRef.tables(src, scopes, ms), 100000, minC, multi, multi)
+      val all = rows(full)
+      if (name != "empty input") assert(all.nonEmpty, s"$name: no insight to compare")
+      // every row, and a cut inside the ranking
+      for (topK <- Seq(100000, 3)) {
+        val got = ExplainFrame(src, "t").explainMetaInsightAuto(topK = topK,
+          filterDims = fs, breakdowns = bs, measures = ms, useAllGroupbyCombinations = combos,
+          minCommonness = minC, allowMultipleAggregations = multi, allowMultipleGroupbys = multi)
+        assert(got.schema.map(f => (f.name, f.dataType)) === full.schema.map(f => (f.name, f.dataType)),
+          s"$name: schema")
+        // exact equality: the driver arithmetic is bit-exact
+        assert(rows(got) === all.take(topK), s"$name (topK $topK): driver finish diverged")
+      }
+    }
+  }
+
+  test("combination breakdowns emit one row_count per (filter dim, breakdown)") {
+    val o = ExplainFrame(graft.util.D.t(spark, sf, "orders")
+      .withColumn("o_year", year(col("o_orderdate")).cast("string"))
+      .withColumn("o_half", (col("o_totalprice") * 0.5).cast("double")), "orders")
+    val out = o.explainMetaInsightAuto(topK = 1000,
+      filterDims = Seq("o_orderstatus"), breakdowns = Seq("o_orderpriority", "o_year"),
+      measures = Seq("o_totalprice", "o_half"), useAllGroupbyCombinations = true,
+      minCommonness = 0.01).collect()
+    // every family of this filter dim has one scope per non-NULL status
+    // value plus '*', whatever its breakdown or measure
+    val subspaces = graft.util.D.t(spark, sf, "orders")
+      .filter(col("o_orderstatus").isNotNull).select("o_orderstatus").distinct().count() + 1
+    val byFamily = out.map(r => (r.getString(1), r.getString(2)) -> r.getLong(4))
+    assert(byFamily.exists(_._1 == ("o_orderpriority+o_year", "row_count")),
+      s"no combination row_count family: ${byFamily.mkString(", ")}")
+    for (((b, m), n) <- byFamily)
+      assert(n === subspaces, s"($b, $m) holds $n subspaces, expected $subspaces")
   }
 
   test("metainsight excludes NULL filter-dim subspaces") {
@@ -545,28 +700,28 @@ class ExplainFrameSpec extends AnyFunSuite {
           Seq(graft.explain.Fedex.Attr("l_orderkey", numeric = false))))))
       val outlier = collectLimits(intercept[Exception](graft.explain.Outlier.explain(
         lineitem, "l_orderkey", "l_extendedprice", "1", 1, Seq("l_quantity"))))
-      for ((name, (err, limits)) <- Seq("fedex" -> fedex, "outlier" -> outlier)) {
+      val metainsight = collectLimits(intercept[Exception](
+        ExplainFrame(lineitem, "lineitem").explainMetaInsightAuto(filterDims = Seq("l_returnflag"),
+          breakdowns = Seq("l_orderkey"), measures = Seq("l_quantity"))))
+      for ((name, (err, limits)) <- Seq("fedex" -> fedex, "outlier" -> outlier,
+          "metainsight" -> metainsight)) {
         assert(msgs(err).exists(_.contains("ID-like")), s"$name: wrong error: $err")
         assert(limits === Seq(Some(11)), s"$name: collects were not bounded at cap + 1: $limits")
       }
     } finally graft.util.Guard.MaxGatheredCells = before
   }
 
-  /** Runs `f` and returns its result with the row limit of every Dataset
-    * action it ran (None for an action without a CollectLimit). */
-  private def collectLimits[T](f: => T): (T, Seq[Option[Int]]) = {
-    import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+  /** Runs `f` and returns its result with the executed plan of every
+    * Dataset action it ran. */
+  private def actions[T](f: => T): (T, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.util.QueryExecutionListener
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[Int]]()
-    val helper = new AdaptiveSparkPlanHelper {}
-    def limitOf(qe: QueryExecution) =
-      helper.collect(qe.executedPlan) { case c: CollectLimitExec => c.limit }.headOption
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        seen.add(limitOf(qe))
+        seen.add(qe.executedPlan)
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        seen.add(limitOf(qe))
+        seen.add(qe.executedPlan)
     }
     spark.listenerManager.register(listener)
     try {
@@ -575,8 +730,59 @@ class ExplainFrameSpec extends AnyFunSuite {
       val deadline = System.nanoTime() + 10000000000L
       while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
       Thread.sleep(300)
-      (out, seen.toArray.toSeq.map(_.asInstanceOf[Option[Int]]))
+      (out, seen.toArray.toSeq.map(_.asInstanceOf[SparkPlan]))
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Runs `f` and returns its result with the row limit of every Dataset
+    * action it ran (None for an action without a CollectLimit). */
+  private def collectLimits[T](f: => T): (T, Seq[Option[Int]]) = {
+    import org.apache.spark.sql.execution.CollectLimitExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val helper = new AdaptiveSparkPlanHelper {}
+    val (out, plans) = actions(f)
+    (out, plans.map(p => helper.collect(p) { case c: CollectLimitExec => c.limit }.headOption))
+  }
+
+  test("driver-finished explanations consume without a Spark job") {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.execution.ExpandExec
+    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    val o = graft.util.D.t(spark, sf, "orders")
+    val lineitem = graft.util.D.t(spark, sf, "lineitem")
+    // the auto-search's only action is its bounded cells collect, whose
+    // double→decimal casts sit below the grouping sets' Expand: they run
+    // once per source row, not once per grouping set
+    val (auto, plans) = actions(ExplainFrame(o, "orders").explainMetaInsightAuto(topK = 5,
+      measures = Seq("o_totalprice")))
+    import graft.util.PlanShape.all
+    import org.apache.spark.sql.execution.SparkPlan
+    assert(plans.size === 1, s"auto-search ran ${plans.size} actions")
+    val nodes = all[SparkPlan](plans.head)
+    val expand = all[ExpandExec](plans.head)
+    assert(expand.size === 1, s"expected one Expand: ${plans.head}")
+    val below = all[SparkPlan](expand.head.child).toSet
+    def decimalCasts(p: SparkPlan) = p.expressions.flatMap(_.collect {
+      case c: Cast if c.child.dataType == DoubleType && c.dataType.isInstanceOf[DecimalType] => c })
+    assert(nodes.filterNot(below).flatMap(decimalCasts).isEmpty, "a decimal cast runs above the Expand")
+    assert(below.toSeq.flatMap(decimalCasts).nonEmpty, "no decimal cast below the Expand")
+    val meter = new Bench.Meter(spark)
+    try {
+      val built = Seq(
+        "metainsight auto" -> auto,
+        "correlation suite" -> graft.explain.Correlation.suite(lineitem,
+          Seq(("l_quantity", "l_extendedprice")), "l_returnflag", "l_quantity", "l_linestatus"),
+        "outlier" -> graft.explain.Outlier.explain(lineitem, "l_returnflag",
+          "l_extendedprice", "R", 1, Seq("l_quantity")),
+        "fedex" -> graft.explain.Fedex.filterDeviation(graft.explain.Fedex.binCountsFiltered(
+          lineitem, col("l_quantity") >= 30, Seq(graft.explain.Fedex.Attr("l_returnflag", numeric = false)))))
+      for ((name, df) <- built) {
+        meter.drain(); meter.reset()
+        assert(df.collect().nonEmpty, s"$name: empty result")
+        meter.drain()
+        assert(meter.jobs.get === 0L, s"$name: consuming the result launched ${meter.jobs.get} jobs")
+      }
+    } finally meter.close()
   }
 
   test("dist pruning fails fast past the label-cardinality cap") {

@@ -12,11 +12,20 @@ import sys, json, re
 
 
 def load(path):
+    """The bench record in `path`: its one-line JSON record (the last line
+    of a bench stdout capture), or else the whole file as one indented
+    JSON document."""
     for line in open(path):
         line = line.strip()
         if line.startswith('{"') and '"queries"' in line:
             return json.loads(line)
-    raise SystemExit(f"no bench JSON line in {path}")
+    try:
+        d = json.load(open(path))
+    except json.JSONDecodeError:
+        d = None
+    if not isinstance(d, dict) or "queries" not in d:
+        raise SystemExit(f"no bench JSON record in {path}")
+    return d
 
 
 def main():
