@@ -278,10 +278,10 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
         val mod = if (useSampling) sampleMod(approxRows(src), sampleSize) else 1L
         val s2 = hashSample(src, src.columns.toSeq, mod)
         val counts = condCol match {
-          case Some(c) => Fedex.binCountsFiltered(s2, c, attrs)
-          case None => Fedex.binCounts(s2, hashSample(res, src.columns.toSeq, mod), attrs)
+          case Some(c) => Fedex.countTable(s2, c, attrs)
+          case None => Fedex.countTable(s2, hashSample(res, src.columns.toSeq, mod), attrs, 10)
         }
-        Fedex.binShapley(counts)
+        Fedex.binShapley(counts).toDF(df.sparkSession)
       case Some(JoinOp(left, right, res, on, _)) =>
         // join shapley (the Spotify fedex notebook's
         // explain(explainer='shapley', value=…, attr=…, consider=…)
@@ -311,10 +311,10 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
           if (attr != null) resolveAttrs(side, Seq(attr), ignore.toSet)
           else resolveAttrs(side, attributes.filterNot(ignore.contains), on.toSet ++ ignore)
         val mod = if (useSampling) sampleMod(approxRows(side), sampleSize) else 1L
-        val counts = Fedex.binCounts(
+        val counts = Fedex.countTable(
           hashSample(side, sideCols, mod),
-          hashSample(res.select(sideCols.map(col): _*), sideCols, mod), attrs)
-        Fedex.binShapley(counts)
+          hashSample(res.select(sideCols.map(col): _*), sideCols, mod), attrs, 10)
+        Fedex.binShapley(counts).toDF(df.sparkSession)
       case _ => throw new IllegalArgumentException(
         "shapley explainer requires a filter or join operation")
     }
@@ -464,8 +464,8 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
       val mod = if (useSampling) sampleMod(approxRows(src), sampleSize) else 1L
       val s2 = hashSample(src, src.columns.toSeq, mod)
       val counts = condCol match {
-        case Some(c) => Fedex.binCountsFiltered(s2, c, attrs)
-        case None => Fedex.binCounts(s2, hashSample(res, src.columns.toSeq, mod), attrs)
+        case Some(c) => Fedex.countTable(s2, c, attrs)
+        case None => Fedex.countTable(s2, hashSample(res, src.columns.toSeq, mod), attrs, 10)
       }
       deviationTopK(counts, topK)
     case Some(JoinOp(left, right, res, on, _)) =>
@@ -476,9 +476,9 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
       val attrs = resolveAttrs(side, attributes.filterNot(ignore.contains),
         on.toSet ++ ignore)
       val mod = if (useSampling) sampleMod(approxRows(side), sampleSize) else 1L
-      val counts = Fedex.binCounts(
+      val counts = Fedex.countTable(
         hashSample(side, sideCols, mod),
-        hashSample(res.select(sideCols.map(col): _*), sideCols, mod), attrs)
+        hashSample(res.select(sideCols.map(col): _*), sideCols, mod), attrs, 10)
       deviationTopK(counts, topK)
     case Some(g: GroupByOp) =>
       GroupByExplain.zdevTable(meltGroupBy(g))
@@ -495,26 +495,17 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
       attributes.map(a => Fedex.Attr(a, byName(a).dataType.isInstanceOf[NumericType]))
     } else defaultAttrs(src, excludeExtra)
 
-  private def deviationTopK(counts: DataFrame, topK: Int): DataFrame =
-    // deviation + influence from Fedex's one collected count table,
-    // ranked on the driver: the explanation is a LocalRelation
+  private def deviationTopK(counts: Mirror.Table, topK: Int): DataFrame =
+    // deviation + influence from Fedex's gathered count table, ranked on
+    // the driver: the explanation is a LocalRelation
     Fedex.influenceTable(counts)
       .orderBy(Mirror.desc("kl_score"), Mirror.desc("influence"),
         Mirror.asc("attribute"), Mirror.asc("bin"))
-      .limit(topK).toDF(counts.sparkSession)
+      .limit(topK).toDF(df.sparkSession)
 
-  private def meltGroupBy(g: GroupByOp): DataFrame =
-    // both measures exploded from the single aggregated row — a
-    // two-branch union would re-reference (re-plan) the source scan
-    g.source.groupBy(g.groupCols.map(col): _*)
-      .agg(count(lit(1)).as("cnt"), D.dsum(col(g.aggCol)).as("sm"))
-      .select(concat_ws("|", g.groupCols.map(col): _*).as("grp"),
-        explode(array(
-          struct(lit(s"${g.aggCol}_${g.aggFn}").as("measure"),
-            D.r(D.emit6(col("sm")) / col("cnt")).as("v")),
-          struct(lit("row_count").as("measure"),
-            col("cnt").cast(DoubleType).as("v")))).as("mv"))
-      .select(col("grp"), col("mv.measure").as("measure"), col("mv.v").as("v"))
+  private def meltGroupBy(g: GroupByOp): Mirror.Table =
+    GroupByExplain.melt(g.source, g.groupCols, concat_ws("|", _: _*), g.aggCol,
+      s"${g.aggCol}_${g.aggFn}")
 
   /** Scorpion-style outlier explanation for a groupBy result. */
   def explainOutlier(target: String, dir: String, attributes: Seq[String] = Nil,

@@ -146,9 +146,9 @@ object Correlation {
     // bit-identical (oracle hash-verified).
     graft.functions.QuantLong(c.cast(DoubleType))
 
-  // narrow private[graft] surface so other one-scan aggregators (the
-  // Scorpion cube in explain.Outlier) reuse the exact-sum machinery
-  // without re-deriving its envelope notes
+  // narrow private[graft] surface so in-plan references (the outlier
+  // cube's, in the driver-finish parity spec) reuse the exact-sum
+  // machinery without re-deriving its envelope notes
   private[graft] def quant6Col(c: Column): Column = momentQuant(c)
   private[graft] def chunkSumAggs(name: String): Seq[Column] = chunkAggs(name)
   private[graft] def recombineUnscaled(name: String): Column = recombine(name)
@@ -301,19 +301,15 @@ object Correlation {
       .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** The full correlation suite — Pearson over `pairs`, η(cat → num),
-    * Cramér's V(cat, cat2) — in ONE corpus scan (was two; the r6 judge
-    * measured the remaining cost as plan-compile across the many small
-    * branch stages, so the finish now runs driver-side):
-    *  1. one (cat, cat2)-grouped aggregation carries the contingency
-    *     count AND every Pearson/η moment as chunked-long sums —
-    *     recombined per cell to exact unscaled decimals, the global and
-    *     per-ca totals re-add EXACTLY (integer arithmetic), so every
-    *     statistic is bit-identical to the two-scan form;
-    *  2. the ≤ |cat|·|cat2| cell rows (Guard-capped, KB-scale — the
-    *     qcut-boundary bounded-collect convention) finish on the driver
-    *     through the exact expression mirrors above, into a
-    *     LocalRelation in (stat, col_x, col_y) order: consuming it
-    *     launches no Spark job.
+    * Cramér's V(cat, cat2) — in ONE corpus scan, finished on the driver:
+    *  1. one exchange-free pass ([[graft.util.Guard.gatherCells]]) gathers
+    *     the (cat, cat2) cells, each carrying its contingency count AND
+    *     every Pearson/η moment as an exact decimal sum; the global and
+    *     per-ca totals re-add them EXACTLY, so every statistic is
+    *     bit-identical to the per-statistic forms;
+    *  2. the ≤ |cat|·|cat2| cells finish on the driver through the exact
+    *     expression mirrors above, into a LocalRelation in
+    *     (stat, col_x, col_y) order: consuming it launches no Spark job.
     * Output matches pearson ∪ eta ∪ cramersV exactly (QuantizeSpec). */
   def suite(df: DataFrame, pairs: Seq[(String, String)],
             cat: String, num: String, cat2: String): DataFrame = {
@@ -325,36 +321,19 @@ object Correlation {
       cols.map(c => s"fs_$c" -> col(c)) ++
         cols.map(c => s"fss_$c" -> (col(c) * col(c))) ++
         pairs.map(p => s"fsp_${p._1}__${p._2}" -> (col(p._1) * col(p._2)))
-    val proj = df.select(col(cat).as("ca") +: col(cat2).as("cb") +:
-      moments.map { case (n, e) => momentQuant(e).as(n) }: _*)
-    val aggs = moments.map(_._1).flatMap(chunkAggs) :+ count(lit(1)).as("o")
-    val cap = graft.util.Guard.MaxRankedLabels
-    val rows = proj.groupBy("ca", "cb").agg(aggs.head, aggs.tail: _*)
-      .limit(cap + 1).collect()
-    if (rows.length > cap)
-      throw new IllegalArgumentException(
-        s"correlation suite found more than $cap ($cat, $cat2) cells — a " +
-          "category looks ID-like; raise graft.util.Guard.MaxRankedLabels " +
-          "or pass lower-cardinality categories.")
+    // each moment is summed as its double value cast to DECIMAL(25,6)
+    val (_, gathered) = graft.util.Guard.gatherCells(
+      graft.util.Guard.groupingForm(df.select(col(cat).as("ca") +: col(cat2).as("cb") +:
+        moments.map { case (n, e) => e.cast(DoubleType).as(n) }: _*), Seq("ca", "cb")),
+      Seq(struct(col("ca"), col("cb"))), "Correlation.suite", sums = moments.map(m => col(m._1)))
+    final case class Cell(ca: Any, cb: Any, o: Long, sums: Map[String, java.math.BigInteger])
+    val cells = gathered.map(c => Cell(Mirror.groupKey(c.key.get(0)), Mirror.groupKey(c.key.get(1)),
+      c.n, moments.map(_._1).zip(c.sums).collect { case (n, v) if v != null => n -> v.unscaledValue }.toMap))
 
-    // per-cell exact unscaled moment (chunk recombination, two's complement)
-    def unscaled(r: org.apache.spark.sql.Row, name: String): Option[java.math.BigInteger] = {
-      val (hi, mi, lo) = (r.fieldIndex(s"${name}__h"), r.fieldIndex(s"${name}__m"),
-        r.fieldIndex(s"${name}__l"))
-      if (r.isNullAt(hi)) None
-      else Some(java.math.BigInteger.valueOf(r.getLong(hi)).shiftLeft(2 * ChunkBits)
-        .add(java.math.BigInteger.valueOf(r.getLong(mi)).shiftLeft(ChunkBits))
-        .add(java.math.BigInteger.valueOf(r.getLong(lo))))
-    }
-    def addOpt(a: Option[java.math.BigInteger], b: Option[java.math.BigInteger]) =
-      (a, b) match {
-        case (Some(x), Some(y)) => Some(x.add(y))
-        case _ => a.orElse(b)
-      }
-    def totalOf(name: String): Option[java.math.BigInteger] =
-      rows.map(unscaled(_, name)).foldLeft(Option.empty[java.math.BigInteger])(addOpt)
+    def totalOf(name: String, of: Seq[Cell] = cells): Option[java.math.BigInteger] =
+      of.flatMap(_.sums.get(name)).reduceOption(_ add _)
 
-    val n = rows.map(r => r.getLong(r.fieldIndex("o"))).sum
+    val n = cells.map(_.o).sum
     // Pearson rows (always emitted — the global aggregate row always exists)
     def sOf(c: String) = totalOf(s"fs_$c").map(emit6D)
     def ssOf(c: String) = totalOf(s"fss_$c").map(emit0D)
@@ -375,16 +354,14 @@ object Correlation {
 
     // η: per-ca groups re-added from cells (exact); null-ca group included
     // (the grouped form kept it — no join on ca ever dropped it)
-    val etaRows = if (rows.isEmpty) Nil else {
-      val byCa = rows.groupBy(r => r.get(r.fieldIndex("ca"))).values.toSeq
+    val etaRows = if (cells.isEmpty) Nil else {
+      val byCa = cells.groupBy(_.ca).values.toSeq
       val v = for { s <- sOf(num); ss <- ssOf(num) } yield {
         val nD = n.toDouble
         val mean = s / nD
         val ssb = byCa.map { g =>
-          val ng = g.map(r => r.getLong(r.fieldIndex("o"))).sum
-          val sg = g.map(unscaled(_, s"fs_$num"))
-            .foldLeft(Option.empty[java.math.BigInteger])(addOpt)
-            .map(emit6D).getOrElse(0.0)
+          val ng = g.map(_.o).sum
+          val sg = totalOf(s"fs_$num", g).map(emit6D).getOrElse(0.0)
           val d = sg / ng - mean
           Mirror.castDec(ng * d * d, 18, 6)
         }.reduce(_.add(_)).doubleValue()
@@ -395,19 +372,15 @@ object Correlation {
 
     // Cramér's V: equi-join null semantics — null-keyed cells contribute
     // to n/rn/cn but never to the χ² sum; countDistinct skips nulls
-    val rnByCa = rows.groupBy(r => r.get(r.fieldIndex("ca")))
-      .map { case (k, g) => k -> g.map(r => r.getLong(r.fieldIndex("o"))).sum }
-    val cnByCb = rows.groupBy(r => r.get(r.fieldIndex("cb")))
-      .map { case (k, g) => k -> g.map(r => r.getLong(r.fieldIndex("o"))).sum }
+    val rnByCa = cells.groupBy(_.ca).map { case (k, g) => k -> g.map(_.o).sum }
+    val cnByCb = cells.groupBy(_.cb).map { case (k, g) => k -> g.map(_.o).sum }
     val rCnt = rnByCa.keys.count(_ != null).toLong
     val kCnt = cnByCb.keys.count(_ != null).toLong
-    val nonNullCells = rows.filter(r =>
-      r.get(r.fieldIndex("ca")) != null && r.get(r.fieldIndex("cb")) != null)
+    val nonNullCells = cells.filter(c => c.ca != null && c.cb != null)
     val cramersRows = if (nonNullCells.isEmpty) Nil else {
-      val chi2 = nonNullCells.map { r =>
-        val o = r.getLong(r.fieldIndex("o"))
-        val e = (rnByCa(r.get(r.fieldIndex("ca"))) * cnByCb(r.get(r.fieldIndex("cb")))).toDouble / n.toDouble
-        Mirror.castDec((o - e) * (o - e) / e, 18, 6)
+      val chi2 = nonNullCells.map { c =>
+        val e = (rnByCa(c.ca) * cnByCb(c.cb)).toDouble / n.toDouble
+        Mirror.castDec((c.o - e) * (c.o - e) / e, 18, 6)
       }.reduce(_.add(_)).doubleValue()
       val v = Mirror.r(math.sqrt(chi2 / (n * math.max(math.min(rCnt, kCnt) - 1L, 1L)).toDouble), 6)
       Seq(("cramers_v", cat, cat2, java.lang.Double.valueOf(v)))

@@ -19,43 +19,27 @@ object Explainers extends QFamily {
   private val filterAttrs =
     filterAttrsNum.map(Fedex.Attr(_, numeric = true)) ++ filterAttrsCat.map(Fedex.Attr(_, numeric = false))
 
-  private def filterCounts(s: SparkSession, dir: String) = {
-    val li = t(s, dir, "lineitem")
-    // KB-sized count table reused by deviation + influence; its
-    // aggregation exchange is reused by every consumer (no persist —
-    // the filtered fast path still counts both sides in ONE scan)
-    Fedex.binCountsFiltered(li, col("l_quantity") >= 30, filterAttrs)
-  }
+  private def filterCounts(s: SparkSession, dir: String) =
+    // the count table deviation, influence and Shapley score on the driver
+    Fedex.countTable(t(s, dir, "lineitem"), col("l_quantity") >= 30, filterAttrs)
 
   private def filterCountsSqlPrefix =
     Fedex.countsSql("lineitem", "1=1", "l_quantity >= 30", filterAttrsNum, filterAttrsCat)
 
   // GroupBy operation explained: orders.groupby(o_orderpriority)
   //   .agg({'o_totalprice': 'mean'}) (+ group sizes)
-  private def gbMelt(s: SparkSession, dir: String): DataFrame =
-    // both measures exploded from the single aggregated row (a union of
-    // two selects would re-plan the orders scan twice)
-    t(s, dir, "orders").groupBy(col("o_orderpriority").as("grp"))
-      .agg(count(lit(1)).as("cnt"), dsum(col("o_totalprice")).as("sm"))
-      .select(col("grp"), explode(array(
-        struct(lit("totalprice_mean").as("measure"),
-          graft.util.D.r(emit6(col("sm")) / col("cnt"), 6).as("v")),
-        struct(lit("row_count").as("measure"),
-          col("cnt").cast(DoubleType).as("v")))).as("mv"))
-      .select(col("grp"), col("mv.measure").as("measure"), col("mv.v").as("v"))
+  private def gbMelt(s: SparkSession, dir: String) =
+    GroupByExplain.melt(t(s, dir, "orders"), Seq("o_orderpriority"), _.head,
+      "o_totalprice", "totalprice_mean")
 
   private val gbMeltSql =
-    """SELECT grp, 'totalprice_mean' AS measure, v_mean AS v FROM (
-      |  SELECT o_orderpriority AS grp,
+    """WITH g AS (SELECT o_orderpriority AS grp,
       |    ROUND(CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(25,6))), 6) AS DOUBLE) / COUNT(*), 6) AS v_mean,
       |    CAST(COUNT(*) AS DOUBLE) AS v_cnt
       |  FROM orders GROUP BY 1)
+      |SELECT grp, 'totalprice_mean' AS measure, v_mean AS v FROM g
       |UNION ALL
-      |SELECT grp, 'row_count', v_cnt FROM (
-      |  SELECT o_orderpriority AS grp,
-      |    ROUND(CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(25,6))), 6) AS DOUBLE) / COUNT(*), 6) AS v_mean,
-      |    CAST(COUNT(*) AS DOUBLE) AS v_cnt
-      |  FROM orders GROUP BY 1)""".stripMargin
+      |SELECT grp, 'row_count', v_cnt FROM g""".stripMargin
 
   // The Fedex, zdev and outlier explainers return LocalRelations already
   // in the order their oracles sort by; a global sort on top would plan
@@ -63,26 +47,26 @@ object Explainers extends QFamily {
   val defs: Seq[QDef] = Seq(
     QDef("q_fedex_filter",
       Some(s"$filterCountsSqlPrefix\n${Fedex.deviationSelectSql}"),
-      (s, dir) => Fedex.filterDeviation(filterCounts(s, dir))),
+      (s, dir) => Fedex.filterDeviation(filterCounts(s, dir)).toDF(s)),
 
     QDef("q_fedex_filter_influence",
       Some(s"$filterCountsSqlPrefix\n${Fedex.influenceSelectSql}"),
-      (s, dir) => Fedex.binInfluence(filterCounts(s, dir))),
+      (s, dir) => Fedex.binInfluence(filterCounts(s, dir)).toDF(s)),
 
     QDef("q_fedex_shapley",
       Some(s"$filterCountsSqlPrefix\n${Fedex.shapleySelectSql}"),
-      (s, dir) => Fedex.binShapley(filterCounts(s, dir))),
+      (s, dir) => Fedex.binShapley(filterCounts(s, dir)).toDF(s)),
 
     QDef("q_fedex_groupby",
       Some(s"""${GroupByExplain.zdevSql(gbMeltSql)}
               |SELECT measure, MAX(n_groups) AS n_groups, MAX(zdev) AS exceptionality
               |FROM z GROUP BY measure ORDER BY measure""".stripMargin),
-      (s, dir) => GroupByExplain.exceptionality(gbMelt(s, dir))),
+      (s, dir) => GroupByExplain.exceptionality(gbMelt(s, dir)).toDF(s)),
 
     QDef("q_fedex_groupby_influence",
       Some(s"""${GroupByExplain.zdevSql(gbMeltSql)}
               |SELECT measure, grp, value, zdev FROM z ORDER BY measure, grp""".stripMargin),
-      (s, dir) => GroupByExplain.zdev(gbMelt(s, dir))
+      (s, dir) => GroupByExplain.zdevTable(gbMelt(s, dir)).toDF(s)
         .select("measure", "grp", "value", "zdev")),
 
     // datetime bins (reference custom_bins/date_time_bin.py: Months +
@@ -104,7 +88,7 @@ object Explainers extends QFamily {
         .withColumn("ship_season", season)
       val attrs = Seq(Fedex.Attr("ship_month", numeric = false), Fedex.Attr("ship_season", numeric = false))
       Fedex.filterDeviation(
-        Fedex.binCountsFiltered(withBins, col("l_quantity") >= 30, attrs))
+        Fedex.countTable(withBins, col("l_quantity") >= 30, attrs)).toDF(s)
     }),
 
     QDef("q_outlier_explain",
@@ -328,8 +312,8 @@ object Explainers extends QFamily {
       // that a shared (subspace, status, month) cube costs MORE (extra
       // materialization job + shuffle level) than the scan it saves —
       // measured 3.0 s vs 5.7 s. Many scopes at once take one scan in
-      // the auto-search (MetaInsight.autoSearch: one grouping-sets
-      // aggregation over all scopes' cells).
+      // the auto-search (MetaInsight.autoSearch: one gather of all
+      // scopes' cells).
       (s, dir) => {
         val o = t(s, dir, "orders")
         val cat = MetaInsight.catPatterns(o, "o_orderpriority", "o_orderstatus",

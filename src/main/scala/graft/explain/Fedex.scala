@@ -1,6 +1,6 @@
 package graft.explain
 
-import graft.util.Mirror
+import graft.util.{Guard, Mirror}
 import graft.util.Mirror.asc
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -25,15 +25,15 @@ import org.apache.spark.sql.types._
   *   per-group aggregated values; per-group influence = that standardized
   *   deviation.
   *
-  * Scale: ONE scan of source + ONE of result produce the (attribute, bin)
-  * count table (exploded attr→bin pairs, map-side combined), and ONE
-  * bounded collect brings its bins to the driver. Every measure —
-  * deviation, Shapley, leave-one-out influence — is driver arithmetic
-  * over an attribute's cells, returned as a LocalRelation (no
-  * self-join, no second reference to the scan, and consuming the result
-  * launches no Spark job). Cross-engine float determinism: ln terms are
-  * rounded to DECIMAL(18,9) and summed as exact long nano-units — see
-  * termNanos.
+  * Scale: two exchange-free passes ([[graft.util.Guard.gatherCells]])
+  * build the (attribute, bin) count table on the driver: the source
+  * min/max, then the bins of every attribute counted in one pass over
+  * the source (and the result, when it is not a filter of it). Every
+  * measure — deviation, Shapley, leave-one-out influence — is driver
+  * arithmetic over an attribute's cells, returned as a LocalRelation
+  * (no shuffle, no self-join, and consuming the result launches no Spark
+  * job). Cross-engine float determinism: ln terms are rounded to
+  * DECIMAL(18,9) and summed as exact long nano-units — see termNanos.
   */
 object Fedex {
 
@@ -63,50 +63,51 @@ object Fedex {
     }
   }
 
-  /** One scan → (attribute, bin) pairs for every row × attribute. */
-  def attrBins(df: DataFrame, stats: Option[DataFrame], attrs: Seq[Attr], nb: Int = 10): DataFrame = {
-    val base = stats.map(st => df.crossJoin(broadcast(st))).getOrElse(df)
-    val structs = attrs.map { a =>
-      val bin =
-        if (a.numeric) binExpr(col(a.name), col(s"lo_${a.name}"), col(s"hi_${a.name}"), nb).cast("string")
-        else col(a.name).cast("string")
-      struct(lit(a.name).as("attribute"), bin.as("bin"))
-    }
-    base.select(explode(array(structs: _*)).as("ab"))
-      .select(col("ab.attribute").as("attribute"), col("ab.bin").as("bin"))
-      .filter(col("bin").isNotNull)
+  /** The (attribute, bin, ns, nr) count table of `src` against the rows
+    * of it that `cond` keeps (the filter-explanation case): ns counts a
+    * bin's source rows and nr those where `cond` is true (a NULL
+    * condition means "not in the result"). */
+  def countTable(src: DataFrame, cond: Column, attrs: Seq[Attr], nb: Int = 10): Mirror.Table =
+    counted(src, src, lit(true), cond, attrs, nb, nrNullable = true)
+
+  /** [[countTable]] of a result frame `res` whose rows come from `src`
+    * (the join-explanation case): one pass over the union of both, a
+    * flag telling the sides apart. */
+  def countTable(src: DataFrame, res: DataFrame, attrs: Seq[Attr], nb: Int): Mirror.Table = {
+    val cols = attrs.map(a => col(a.name))
+    val both = src.select(cols :+ lit(true).as("__src"): _*)
+      .unionByName(res.select(cols :+ lit(false).as("__src"): _*))
+    counted(src, both, col("__src"), !col("__src"), attrs, nb, nrNullable = false)
   }
 
-  /** (attribute, bin, ns, nr) counts; bins are those present in source. */
-  def binCounts(src: DataFrame, res: DataFrame, attrs: Seq[Attr], nb: Int = 10): DataFrame = {
-    val stats = statsDf(src, attrs)
-    val s = attrBins(src, stats, attrs, nb).groupBy("attribute", "bin").agg(count(lit(1)).as("ns"))
-    val r = attrBins(res, stats, attrs, nb).groupBy("attribute", "bin").agg(count(lit(1)).as("nr"))
-    s.join(r, Seq("attribute", "bin"), "left").na.fill(0L, Seq("nr"))
-  }
+  /** [[countTable]] as a LocalRelation. */
+  def binCountsFiltered(src: DataFrame, cond: Column, attrs: Seq[Attr], nb: Int = 10): DataFrame =
+    countTable(src, cond, attrs, nb).toDF(src.sparkSession)
 
-  /** Fast path of [[binCounts]] when the result is `src.filter(cond)`
-    * (the filter-explanation case): ONE scan + ONE aggregation with a
-    * conditional count, instead of scanning/exploding source and result
-    * separately and joining. Identical output — bins come from the same
-    * source stats, and every result row is a source row. */
-  def binCountsFiltered(src: DataFrame, cond: Column, attrs: Seq[Attr], nb: Int = 10): DataFrame = {
-    val stats = statsDf(src, attrs)
-    val base = stats.map(st => src.crossJoin(broadcast(st))).getOrElse(src)
-    val structs = attrs.map { a =>
+  /** Two exchange-free passes ([[graft.util.Guard]]): the source min/max
+    * of the numeric attributes, then one cell set per attribute keyed by
+    * its bin — [[binExpr]] over the min/max as typed literals (an int,
+    * cast to its string label here) or the categorical value as a
+    * string — counting the rows where `ns` and `nr` hold. Bins are those
+    * present in the source. */
+  private def counted(src: DataFrame, rows: DataFrame, ns: Column, nr: Column, attrs: Seq[Attr],
+                      nb: Int, nrNullable: Boolean): Mirror.Table = {
+    val nums = attrs.filter(_.numeric).map(_.name)
+    val bounds = (if (nums.isEmpty) Nil else Guard.extrema(src, nums, "Fedex.bounds")).iterator
+    val bins = attrs.map { a =>
       val bin =
-        if (a.numeric) binExpr(col(a.name), col(s"lo_${a.name}"), col(s"hi_${a.name}"), nb).cast("string")
+        if (a.numeric) { val (lo, hi) = bounds.next(); binExpr(col(a.name), lo, hi, nb) }
         else col(a.name).cast("string")
-      struct(lit(a.name).as("attribute"), bin.as("bin"))
+      when(bin.isNotNull, struct(bin))
     }
-    // when().otherwise(0): a NULL condition means "not in the filter
-    // result" (0), and keeps all-excluded groups at nr=0 rather than NULL
-    base.select(explode(array(structs: _*)).as("ab"),
-        when(cond, 1L).otherwise(0L).as("inres"))
-      .select(col("ab.attribute").as("attribute"), col("ab.bin").as("bin"), col("inres"))
-      .filter(col("bin").isNotNull)
-      .groupBy("attribute", "bin")
-      .agg(count(lit(1)).as("ns"), sum(col("inres")).as("nr"))
+    val (_, cells) = Guard.gatherCells(rows, bins, "Fedex.counts", Seq(ns, nr))
+    Mirror.Table(StructType(Seq(
+        StructField("attribute", StringType, nullable = false),
+        StructField("bin", StringType, nullable = false),
+        StructField("ns", LongType, nullable = false),
+        StructField("nr", LongType, nullable = nrNullable))),
+      cells.collect { case c if c.flags(0) > 0 =>
+        Row(attrs(c.set).name, String.valueOf(c.key.get(0)), c.flags(0), c.flags(1)) })
   }
 
   /** One attribute's count-table cells (bins with ns > 0) and totals. */
@@ -116,29 +117,25 @@ object Fedex {
     def k: Long = cells.size.toLong
   }
 
-  /** ONE bounded collect of the count table's ns > 0 rows, grouped per
-    * attribute on the driver; every measure (deviation, Shapley,
-    * leave-one-out influence) is then driver arithmetic over an
-    * attribute's cells, mirroring the in-plan array math it replaced
-    * ([[graft.util.Mirror]]). In-plan, that tail runs as several tiny
-    * jobs whose planning, not their data, dominates an explain cell's
-    * latency.
+  /** The count table's ns > 0 rows grouped per attribute on the
+    * driver; every measure (deviation, Shapley, leave-one-out influence)
+    * is then driver arithmetic over an attribute's cells, mirroring the
+    * in-plan array math it replaced ([[graft.util.Mirror]]). In-plan,
+    * that tail runs as several tiny jobs whose planning, not their data,
+    * dominates an explain cell's latency.
     *
-    * Cardinality contract: the collect holds every attribute's bins,
-    * and the leave-one-out is O(k²) within an attribute — sized for
+    * Cardinality contract: the table holds every attribute's bins, and
+    * the leave-one-out is O(k²) within an attribute — sized for
     * explanation bins (numeric attrs have `nb` bins; categorical attrs
     * are expected to be low-cardinality dimensions, as in the reference,
     * whose per-value binning has the same contract). Do not feed
-    * ID-like categorical attributes — enforced fail-fast by
-    * [[graft.util.Guard.gatherCells]]. */
-  private def attrCells(counts: DataFrame): Seq[AttrCells] = {
-    require(counts.schema("attribute").dataType == StringType &&
-      counts.schema("bin").dataType == StringType &&
-      counts.schema("ns").dataType == LongType && counts.schema("nr").dataType == LongType,
-      s"a count table has string attribute/bin and long ns/nr, got ${counts.schema.simpleString}")
-    val rows = graft.util.Guard.gatherCells(
-      counts.filter(col("ns") > 0).select("attribute", "bin", "ns", "nr"), "Fedex.attrCells")
-    rows.toSeq.groupBy(_.getString(0)).toSeq.map { case (a, rs) =>
+    * ID-like categorical attributes — enforced fail-fast by the gather
+    * ([[graft.util.Guard.gatherCells]]). */
+  private def attrCells(counts: Mirror.Table): Seq[AttrCells] = {
+    require(counts.schema.map(f => f.name -> f.dataType) == Seq("attribute" -> StringType,
+        "bin" -> StringType, "ns" -> LongType, "nr" -> LongType),
+      s"a count table is (attribute, bin: string, ns, nr: long), got ${counts.schema.simpleString}")
+    counts.rows.filter(_.getLong(2) > 0).groupBy(_.getString(0)).toSeq.map { case (a, rs) =>
       val cells = rs.map(r => Cell(r.getString(1), r.getLong(2),
         if (r.isNullAt(3)) null else r.getLong(3)))
       val nrs = cells.flatMap(c => Option(c.nr)).map(_.longValue)
@@ -146,6 +143,10 @@ object Fedex {
         if (nrs.isEmpty) null else java.lang.Long.valueOf(nrs.sum))
     }
   }
+
+  /** A count table given as a DataFrame, on the driver. */
+  private def gathered(counts: DataFrame): Mirror.Table =
+    Guard.gatherRows(counts.select("attribute", "bin", "ns", "nr"), "Fedex.attrCells")
 
   /** One bin's KL term in nano-units:
     *   q = (nr + 0.5)/(nRes + 0.5k), p = (ns + 0.5)/(nSrc + 0.5k),
@@ -177,21 +178,27 @@ object Fedex {
     Mirror.nanosToDouble(acc)
   }
 
-  private def field(counts: DataFrame, name: String): StructField = counts.schema(name)
+  private def field(counts: Mirror.Table, name: String): StructField = counts.schema(name)
   private def derived(name: String, t: DataType) = StructField(name, t, nullable = true)
 
   /** Per-attribute KL deviation: (attribute, n_bins, kl_score). */
   def filterDeviation(counts: DataFrame): DataFrame =
+    filterDeviation(gathered(counts)).toDF(counts.sparkSession)
+
+  def filterDeviation(counts: Mirror.Table): Mirror.Table =
     Mirror.Table(
       StructType(Seq(field(counts, "attribute"), derived("n_bins", LongType),
         derived("kl_score", DoubleType))),
       attrCells(counts).map(a => Row(a.attribute, a.k, klSum(a.cells, a.nRes, a.nSrc, a.k))))
-      .orderBy(asc("attribute")).toDF(counts.sparkSession)
+      .orderBy(asc("attribute"))
 
   /** Shapley attribution per bin: the deviation measure is additive over
     * bins (score = Σ_b term_b), so the exact Shapley value of bin b IS its
     * own term — no sampling needed (reference explainer='shapley'). */
   def binShapley(counts: DataFrame): DataFrame =
+    binShapley(gathered(counts)).toDF(counts.sparkSession)
+
+  def binShapley(counts: Mirror.Table): Mirror.Table =
     Mirror.Table(
       StructType(Seq("attribute", "bin", "ns", "nr").map(field(counts, _)) :+
         derived("shapley", DoubleType)),
@@ -200,7 +207,7 @@ object Fedex {
         Row(a.attribute, c.bin, c.ns, c.nr,
           if (t == null) null else java.lang.Double.valueOf(Mirror.nanosToDouble(t)))
       }))
-      .orderBy(asc("attribute"), asc("bin")).toDF(counts.sparkSession)
+      .orderBy(asc("attribute"), asc("bin"))
 
   def shapleySelectSql: String =
     s"""SELECT attribute, bin, ns, nr,
@@ -213,6 +220,9 @@ object Fedex {
     * bin e sums the other bins' terms with e's counts removed from the
     * totals over k − 1 bins — O(k²) on bin-cardinality lists. */
   private[graft] def influenceTable(counts: DataFrame): Mirror.Table =
+    influenceTable(gathered(counts))
+
+  private[graft] def influenceTable(counts: Mirror.Table): Mirror.Table =
     Mirror.Table(
       StructType(Seq(field(counts, "attribute"), derived("kl_score", DoubleType)) ++
         Seq("bin", "ns", "nr").map(field(counts, _)) :+ derived("influence", DoubleType)),
@@ -234,12 +244,14 @@ object Fedex {
       .orderBy(asc("attribute"), asc("bin"))
 
   /** Leave-one-bin-out influence: (attribute, bin, ns, nr, influence). */
-  def binInfluence(counts: DataFrame): DataFrame = {
+  def binInfluence(counts: DataFrame): DataFrame =
+    binInfluence(gathered(counts)).toDF(counts.sparkSession)
+
+  def binInfluence(counts: Mirror.Table): Mirror.Table = {
     val t = influenceTable(counts)
     val keep = Seq("attribute", "bin", "ns", "nr", "influence").map(t.schema.fieldIndex)
     Mirror.Table(StructType(keep.map(t.schema.fields(_))),
       t.rows.map(r => Row.fromSeq(keep.map(r.get))))
-      .toDF(counts.sparkSession)
   }
 
   // ---------------------------------------------------------------- SQL --
@@ -249,70 +261,37 @@ object Fedex {
     * reference's Seasons/Months datetime bins
     * (/root/reference/src/pd_explain/custom_bins/date_time_bin.py). */
   def countsSqlExpr(table: String, srcWhere: String, resWhere: String,
-                    num: Seq[String], catExpr: Seq[(String, String)], nb: Int = 10): String = {
-    val statCols = num.map(a => s"MIN($a) AS lo_$a, MAX($a) AS hi_$a").mkString(", ")
-    def branch(side: String, where: String): Seq[String] = {
-      val nbx = num.map(a =>
-        s"SELECT '$a' AS attribute, CAST(${binSql(a, s"lo_$a", s"hi_$a", nb)} AS VARCHAR) AS bin, '$side' AS side FROM $table, st WHERE ($where) AND $a IS NOT NULL")
-      val cbx = catExpr.map { case (alias, e) =>
-        s"SELECT '$alias' AS attribute, CAST($e AS VARCHAR) AS bin, '$side' AS side FROM $table WHERE ($where) AND ($e) IS NOT NULL" }
-      nbx ++ cbx
-    }
-    val st = if (num.nonEmpty) s"st AS (SELECT $statCols FROM $table WHERE ($srcWhere)),\n" else ""
-    s"""WITH $st
-       |u AS (${(branch("src", srcWhere) ++ branch("res", resWhere)).mkString("\nUNION ALL\n")}),
-       |cnt AS (SELECT attribute, bin,
-       |  COUNT(*) FILTER (WHERE side = 'src') AS ns,
-       |  COUNT(*) FILTER (WHERE side = 'res') AS nr
-       |  FROM u GROUP BY attribute, bin),
-       |en AS (SELECT attribute, bin, ns, nr,
-       |  SUM(ns) OVER (PARTITION BY attribute) AS n_src,
-       |  SUM(nr) OVER (PARTITION BY attribute) AS n_res,
-       |  COUNT(*) OVER (PARTITION BY attribute) AS k
-       |  FROM cnt WHERE ns > 0)""".stripMargin
-  }
+                    num: Seq[String], catExpr: Seq[(String, String)], nb: Int = 10): String =
+    countsCte(s"$table WHERE ($srcWhere)", Seq("src" -> (table, srcWhere), "res" -> (table, resWhere)),
+      num, catExpr, nb)
 
   /** DuckDB CTE prefix producing the bin counts + per-attribute totals
     * (`en`) that [[attrCells]] gathers on the driver. */
   def countsSql(table: String, srcWhere: String, resWhere: String,
-                num: Seq[String], cat: Seq[String], nb: Int = 10): String = {
-    val statCols = num.map(a => s"MIN($a) AS lo_$a, MAX($a) AS hi_$a").mkString(", ")
-    def branch(side: String, where: String): Seq[String] = {
-      val nbx = num.map(a =>
-        s"SELECT '$a' AS attribute, CAST(${binSql(a, s"lo_$a", s"hi_$a", nb)} AS VARCHAR) AS bin, '$side' AS side FROM $table, st WHERE ($where) AND $a IS NOT NULL")
-      val cbx = cat.map(a =>
-        s"SELECT '$a' AS attribute, CAST($a AS VARCHAR) AS bin, '$side' AS side FROM $table WHERE ($where) AND $a IS NOT NULL")
-      nbx ++ cbx
-    }
-    val st = if (num.nonEmpty) s"st AS (SELECT $statCols FROM $table WHERE ($srcWhere)),\n" else ""
-    s"""WITH $st
-       |u AS (${(branch("src", srcWhere) ++ branch("res", resWhere)).mkString("\nUNION ALL\n")}),
-       |cnt AS (SELECT attribute, bin,
-       |  COUNT(*) FILTER (WHERE side = 'src') AS ns,
-       |  COUNT(*) FILTER (WHERE side = 'res') AS nr
-       |  FROM u GROUP BY attribute, bin),
-       |en AS (SELECT attribute, bin, ns, nr,
-       |  SUM(ns) OVER (PARTITION BY attribute) AS n_src,
-       |  SUM(nr) OVER (PARTITION BY attribute) AS n_res,
-       |  COUNT(*) OVER (PARTITION BY attribute) AS k
-       |  FROM cnt WHERE ns > 0)""".stripMargin
-  }
+                num: Seq[String], cat: Seq[String], nb: Int = 10): String =
+    countsSqlExpr(table, srcWhere, resWhere, num, cat.map(a => a -> a), nb)
 
   /** [[countsSql]] over explicit src/res RELATIONS (the result side of a
     * join explanation is itself a join, not a WHERE on the source). */
   def countsSqlRel(srcRel: String, resRel: String,
-                   num: Seq[String], cat: Seq[String], nb: Int = 10): String = {
+                   num: Seq[String], cat: Seq[String], nb: Int = 10): String =
+    countsCte(s"$srcRel AS ss", Seq("src" -> (s"$srcRel AS tt", "1=1"), "res" -> (s"$resRel AS tt", "1=1")),
+      num, cat.map(a => a -> a), nb)
+
+  /** The count CTEs: source min/max over `stFrom`, then each side's
+    * (from, where) binned per attribute and counted. */
+  private def countsCte(stFrom: String, sides: Seq[(String, (String, String))],
+                        num: Seq[String], cat: Seq[(String, String)], nb: Int): String = {
     val statCols = num.map(a => s"MIN($a) AS lo_$a, MAX($a) AS hi_$a").mkString(", ")
-    def branch(side: String, rel: String): Seq[String] = {
-      val nbx = num.map(a =>
-        s"SELECT '$a' AS attribute, CAST(${binSql(a, s"lo_$a", s"hi_$a", nb)} AS VARCHAR) AS bin, '$side' AS side FROM $rel AS tt, st WHERE $a IS NOT NULL")
-      val cbx = cat.map(a =>
-        s"SELECT '$a' AS attribute, CAST($a AS VARCHAR) AS bin, '$side' AS side FROM $rel AS tt WHERE $a IS NOT NULL")
-      nbx ++ cbx
+    val branches = sides.flatMap { case (side, (from, where)) =>
+      num.map(a =>
+        s"SELECT '$a' AS attribute, CAST(${binSql(a, s"lo_$a", s"hi_$a", nb)} AS VARCHAR) AS bin, '$side' AS side FROM $from, st WHERE ($where) AND $a IS NOT NULL") ++
+        cat.map { case (alias, e) =>
+          s"SELECT '$alias' AS attribute, CAST($e AS VARCHAR) AS bin, '$side' AS side FROM $from WHERE ($where) AND ($e) IS NOT NULL" }
     }
-    val st = if (num.nonEmpty) s"st AS (SELECT $statCols FROM $srcRel AS ss),\n" else ""
+    val st = if (num.nonEmpty) s"st AS (SELECT $statCols FROM $stFrom),\n" else ""
     s"""WITH $st
-       |u AS (${(branch("src", srcRel) ++ branch("res", resRel)).mkString("\nUNION ALL\n")}),
+       |u AS (${branches.mkString("\nUNION ALL\n")}),
        |cnt AS (SELECT attribute, bin,
        |  COUNT(*) FILTER (WHERE side = 'src') AS ns,
        |  COUNT(*) FILTER (WHERE side = 'res') AS nr
@@ -324,9 +303,9 @@ object Fedex {
        |  FROM cnt WHERE ns > 0)""".stripMargin
   }
 
-  /** Combined deviation + per-bin influence select, ranked and capped —
-    * the SQL mirror of ExplainFrame.deviationTopK. */
-  def deviationTopKSql(topK: Int): String =
+  /** The leave-one-bin-out (`ex`) and per-attribute (`fl`) scores over
+    * `en`, shared by the deviation and influence selects. */
+  private def exFlSql: String =
     s""", ex AS (
        |  SELECT x.attribute AS attribute, e.bin AS bin, e.ns AS ns, e.nr AS nr,
        |    CAST(SUM(${klTermSql("x.nr", "x.ns", "(x.n_res - e.nr)", "(x.n_src - e.ns)", "(x.k - 1)")}) AS DOUBLE) AS score_excl
@@ -334,7 +313,12 @@ object Fedex {
        |  GROUP BY x.attribute, e.bin, e.ns, e.nr),
        |fl AS (SELECT attribute,
        |  CAST(SUM(${klTermSql("nr", "ns", "n_res", "n_src", "k")}) AS DOUBLE) AS kl_score
-       |  FROM en GROUP BY attribute)
+       |  FROM en GROUP BY attribute)""".stripMargin
+
+  /** Combined deviation + per-bin influence select, ranked and capped —
+    * the SQL mirror of ExplainFrame.deviationTopK. */
+  def deviationTopKSql(topK: Int): String =
+    exFlSql + s"""
        |SELECT fl.attribute, fl.kl_score, ex.bin, ex.ns, ex.nr,
        |  (fl.kl_score - ex.score_excl) AS influence
        |FROM ex JOIN fl ON ex.attribute = fl.attribute
@@ -353,14 +337,7 @@ object Fedex {
        |FROM en GROUP BY attribute ORDER BY attribute""".stripMargin
 
   def influenceSelectSql: String =
-    s""", ex AS (
-       |  SELECT x.attribute AS attribute, e.bin AS bin, e.ns AS ns, e.nr AS nr,
-       |    CAST(SUM(${klTermSql("x.nr", "x.ns", "(x.n_res - e.nr)", "(x.n_src - e.ns)", "(x.k - 1)")}) AS DOUBLE) AS score_excl
-       |  FROM en x JOIN en e ON x.attribute = e.attribute AND x.bin <> e.bin
-       |  GROUP BY x.attribute, e.bin, e.ns, e.nr),
-       |fl AS (SELECT attribute,
-       |  CAST(SUM(${klTermSql("nr", "ns", "n_res", "n_src", "k")}) AS DOUBLE) AS kl_score
-       |  FROM en GROUP BY attribute)
+    exFlSql + s"""
        |SELECT ex.attribute, ex.bin, ex.ns, ex.nr,
        |  (fl.kl_score - ex.score_excl) AS influence
        |FROM ex JOIN fl ON ex.attribute = fl.attribute

@@ -43,28 +43,47 @@ object GroupByExplain {
   def sigmaSql(sv: String, svv: String, k: String): String =
     s"SQRT(GREATEST($svv / $k - ($sv / $k) * ($sv / $k), 0))"
 
+  /** Scale: the melt (measure, grp, v) of `src.groupBy(keys)` over
+    * `aggCol` is one exchange-free pass ([[graft.util.Guard.gatherCells]])
+    * keyed by the key columns and `grp`, their label: per group,
+    * `meanName` with v = round(Σ cast(aggCol AS DECIMAL(25,6)) as double /
+    * count, 6), and `row_count` with v = the count. */
+  private[graft] def melt(src: DataFrame, keys: Seq[String], grp: Seq[Column] => Column,
+                          aggCol: String, meanName: String): Mirror.Table = {
+    val (schemas, cells) = Guard.gatherCells(Guard.groupingForm(src, keys),
+      Seq(struct(keys.map(col) :+ grp(keys.map(col)).as("grp"): _*)), "GroupByExplain.melt",
+      sums = Seq(col(aggCol)))
+    Mirror.Table(
+      StructType(Seq(StructField("measure", StringType, nullable = false), schemas(0).last,
+        StructField("v", DoubleType, nullable = true))),
+      cells.flatMap { c =>
+        val (g, sm) = (c.key.get(keys.size), c.sums(0))
+        Seq(Row(meanName, g,
+            if (sm == null) null else java.lang.Double.valueOf(Mirror.r(sm.doubleValue / c.n, 6))),
+          Row("row_count", g, c.n.toDouble))
+      })
+  }
+
   /** Standardized deviation per (measure, grp): z = |v − μ| / σ (0 when
-    * σ≈0). ONE bounded collect brings the melt (measure, grp, v) to the
-    * driver, and the per-measure stats and z run there through the exact
-    * expression mirrors of [[graft.util.Mirror]]: decimal sums keep the
-    * stats order-independent, and the result is a LocalRelation in
-    * (measure, grp) order, so consuming it launches no Spark job.
-    * Cardinality contract: the collect holds every group of every
-    * measure — sized for explanation-grade groupbys (the exceptionality
-    * measure itself is meaningless over ID-like grouping keys); enforced
-    * fail-fast by [[graft.util.Guard.gatherCells]]. */
+    * σ≈0), on the driver over the melt (measure, grp, v), through the
+    * exact expression mirrors of [[graft.util.Mirror]]: decimal sums keep
+    * the stats order-independent, and the result is a LocalRelation in
+    * (measure, grp) order, so consuming it launches no Spark job. The
+    * melt holds every group of every measure — sized for
+    * explanation-grade groupbys; an ID-like key fails the gather. */
   def zdev(m: DataFrame): DataFrame = zdevTable(m).toDF(m.sparkSession)
 
   /** [[zdev]]'s rows on the driver, for callers that re-rank them. */
-  private[graft] def zdevTable(m: DataFrame): Mirror.Table = {
-    require(m.schema("v").dataType == DoubleType,
-      s"a melt has a double column v, got ${m.schema("v").dataType.simpleString}")
-    val rows = Guard.gatherCells(m.select("measure", "grp", "v"), "GroupByExplain.zdev")
+  private[graft] def zdevTable(m: DataFrame): Mirror.Table = zdevTable(gathered(m))
+
+  private[graft] def zdevTable(m: Mirror.Table): Mirror.Table = {
+    require(m.schema.map(_.name) == Seq("measure", "grp", "v") && m.schema("v").dataType == DoubleType,
+      s"a melt is (measure, grp, v: double), got ${m.schema.simpleString}")
     val schema = StructType(Seq(m.schema("measure"), m.schema("grp"),
       m.schema("v").copy(name = "value"),
       StructField("n_groups", LongType, nullable = true),
       StructField("zdev", DoubleType, nullable = true)))
-    val out = rows.toSeq.groupBy(r => Mirror.groupKey(r.get(0))).values.toSeq.flatMap { cells =>
+    val out = m.rows.groupBy(r => Mirror.groupKey(r.get(0))).values.toSeq.flatMap { cells =>
       val n = cells.size.toLong
       val (sv, sigma) = sumSigma(
         cells.flatMap(r => if (r.isNullAt(2)) None else Some(r.getDouble(2))), n)
@@ -79,8 +98,14 @@ object GroupByExplain {
     Mirror.Table(schema, out).orderBy(Mirror.asc("measure"), Mirror.asc("grp"))
   }
 
+  /** A melt given as a DataFrame, on the driver. */
+  private def gathered(m: DataFrame): Mirror.Table =
+    Guard.gatherRows(m.select("measure", "grp", "v"), "GroupByExplain.zdev")
+
   /** Exceptionality per measure = max standardized deviation. */
-  def exceptionality(m: DataFrame): DataFrame = {
+  def exceptionality(m: DataFrame): DataFrame = exceptionality(gathered(m)).toDF(m.sparkSession)
+
+  def exceptionality(m: Mirror.Table): Mirror.Table = {
     val z = zdevTable(m)
     val schema = StructType(Seq(z.schema("measure"),
       StructField("n_groups", LongType, nullable = true),
@@ -88,7 +113,7 @@ object GroupByExplain {
     val out = z.rows.groupBy(r => Mirror.groupKey(r.get(0))).values.toSeq.map(g =>
       Row(g.head.get(0), g.head.getLong(3),
         Mirror.maxD(g.map(r => if (r.isNullAt(4)) null else java.lang.Double.valueOf(r.getDouble(4))))))
-    Mirror.Table(schema, out).orderBy(Mirror.asc("measure")).toDF(m.sparkSession)
+    Mirror.Table(schema, out).orderBy(Mirror.asc("measure"))
   }
 
   /** DuckDB CTE: melted orders measures → z table. `meltSql` must yield

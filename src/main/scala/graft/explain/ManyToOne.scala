@@ -618,32 +618,24 @@ object ManyToOne {
     *   |disj ∧ label| = nA + nB − nAB  (and likewise unconditioned),
     * so no second scan of the source.
     *
-    * Finish is DRIVER-SIDE over the bounded cell table (the
-    * q_outlier_explain LocalRelation convention): the joint table is
-    * |labels|·|A-bins|·|B-bins| rows — explanation-grade cardinalities,
-    * capped fail-fast at [[graft.util.Guard.MaxGatheredCells]] — and its
-    * previous all-DataFrame assembly planned SEVEN derived aggregations
-    * plus a six-join candidate build over tables of a few hundred rows.
-    * The data work is one corpus aggregation either way; the join web
-    * was pure plan-compile/stage overhead (measured ~1 s of the 1.7 s
-    * sf1 floor). Marginals are now folded in Scala from the collected
-    * cells and the result re-enters as a LocalRelation. */
+    * Finish is DRIVER-SIDE over the joint table of |labels|·|A-bins|·
+    * |B-bins| cells, gathered in one exchange-free pass
+    * ([[graft.util.Guard.gatherCells]]): an all-DataFrame assembly plans
+    * seven derived aggregations plus a six-join candidate build over
+    * tables of a few hundred rows, pure plan-compile/stage overhead
+    * (measured ~1 s of the 1.7 s sf1 floor). The marginals fold in Scala
+    * from the cells, and the result re-enters as a LocalRelation. */
   def explainDisj(src: DataFrame, labelCol: String, attrA: String, attrB: String,
                   covTh: Double = 0.7, sepTh: Double = 0.3, nb: Int = 10,
                   binningMethod: String = "equal_width"): DataFrame = {
     val attrs = Seq(Fedex.Attr(attrA, numeric = false), Fedex.Attr(attrB, numeric = true))
     val base = conjBase(src, labelCol, attrs, nb, binningMethod, Seq("val_a", "val_b"))
-    // joint counts once (the single corpus-sized aggregation); every
-    // marginal below derives from them driver-side
-    val joint = base.groupBy("label", "val_a", "val_b").agg(count(lit(1)).as("n"))
-    val cap = graft.util.Guard.MaxGatheredCells
-    val cells = joint.limit(cap.toInt + 1).collect()
-    require(cells.length <= cap,
-      s"explainDisj: joint cell table exceeds $cap rows — the label or " +
-        "attribute columns look ID-like; this operator is sized for " +
-        "explanation-grade cardinalities (raise Guard.MaxGatheredCells " +
-        "if intentional)")
-    val triples = cells.map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
+    // joint counts once (the single corpus pass); every marginal below
+    // derives from them driver-side
+    val (_, cells) = graft.util.Guard.gatherCells(base,
+      Seq(struct(col("label"), col("val_a"), col("val_b"))), "ManyToOne.explainDisj")
+    val triples = cells.map(c =>
+      (c.key.getString(0), c.key.getString(1), c.key.getString(2), c.n))
     val nAB  = triples.map { case (l, a, b, n) => (l, a, b) -> n }.toMap
     def fold(keys: Seq[((String, String), Long)]): Map[(String, String), Long] =
       keys.groupMapReduce(_._1)(_._2)(_ + _)

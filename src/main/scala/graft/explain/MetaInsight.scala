@@ -26,10 +26,10 @@ import org.apache.spark.sql.types._
   * Scale: one scope ([[catPatterns]], [[trendPatterns]]) is one
   * grouping-sets scan for its (filterDim, breakdown) cells and their '*'
   * rollup, and its pattern math runs in-plan on that tiny cell table.
-  * The auto-search ([[autoSearch]]) builds the cells of ALL its scopes in
-  * one grouping-sets scan, collects them (bounded by
-  * Guard.MaxGatheredCells; the table holds the sum of the scopes' cells)
-  * and finishes patterns, mining and ranking on the driver.
+  * The auto-search ([[autoSearch]]) gathers the cells of ALL its scopes
+  * in one exchange-free pass ([[graft.util.Guard.gatherCells]], bounded
+  * by Guard.MaxGatheredCells; the table holds the sum of the scopes'
+  * cells) and finishes patterns, mining and ranking on the driver.
   */
 object MetaInsight {
 
@@ -151,10 +151,12 @@ object MetaInsight {
   private def trendPatternsImpl(m: DataFrame, breakdownName: String): DataFrame =
     trendPatternsKeyed(m, Seq("subspace", "measure")).withColumn("breakdown", lit(breakdownName))
 
-  /** Trend-pattern analog of [[catPatternsKeyed]], grouped by `keys`. */
+  /** Trend-pattern analog of [[catPatternsKeyed]], grouped by `keys`;
+    * NULL subspaces are excluded here too, so both families of one
+    * scope count the same subspaces. */
   private[graft] def trendPatternsKeyed(m: DataFrame, keys: Seq[String]): DataFrame = {
     val kc = keys.map(col)
-    val s = m.groupBy(kc: _*)
+    val s = m.filter(col("subspace").isNotNull).groupBy(kc: _*)
       .agg(count(lit(1)).as("k"),
         sum(col("x")).as("sx"),
         sum((col("x") * col("x")).cast(LongType)).as("sxx"),
@@ -230,15 +232,13 @@ object MetaInsight {
     * auto enumeration, metainsight_explainer.py `max_filter_columns`/
     * `max_aggregation_columns`/`use_all_groupby_combinations`).
     *
-    * ONE grouping-sets aggregation builds the cells of every scope: one
-    * set per distinct (filterDim, breakdown) pair and one per breakdown
-    * alone (the '*' subspace), each carrying the count and one decimal sum
-    * per measure ([[cells]] for all scopes at once). The sets read a
-    * pre-aggregate keyed by all grouping columns, and the decimal casts
-    * are projected below both, so they run once per source row.
-    * The table is collected through [[graft.util.Guard.gatherCells]]: it
-    * holds the sum of the scopes' cells. Each scope then picks its cells
-    * by grouping id, and the melt, pattern, mine and rank steps run on the
+    * ONE exchange-free pass ([[graft.util.Guard.gatherCells]]) gathers
+    * the cells of every scope: one cell set per distinct (filterDim,
+    * breakdown) pair and one per breakdown alone (the '*' subspace), each
+    * cell carrying the count and one decimal sum per measure ([[cells]]
+    * for all scopes at once), with each decimal cast evaluated once per
+    * source row. Each scope then picks its cells by set, and the melt,
+    * pattern, mine and rank steps run on the
     * driver through exact mirrors ([[graft.util.Mirror]]) of [[melt]],
     * [[catPatternsKeyed]] / [[trendPatternsKeyed]] over the scope tags,
     * and [[mine]]. NULL subspaces are excluded from every family, as in
@@ -269,54 +269,41 @@ object MetaInsight {
     require(minCommonness > 0 && minCommonness <= 1,
       "min_commonness must be in the range (0, 1]")
 
-    // ---- the cells of every scope: one grouping-sets aggregation ----
+    // ---- the cells of every scope: one gather ----
     def key(b: Breakdown) = (b.name, b.trend)
     val fs = scopes.map(_._1).distinct
     val bs = scopes.map(_._2).distinctBy(key)
     val ms = measures.distinct
     val fIdx = fs.zipWithIndex.toMap
     val bIdx = bs.map(key).zipWithIndex.toMap
-    val groupCols = fs.indices.map(i => s"__f$i") ++ bs.indices.map(i => s"__b$i")
-    val projected = src.select(
+    val projected = graft.util.Guard.groupingForm(src.select(
       fs.zipWithIndex.map { case (f, i) => col(f).cast("string").as(s"__f$i") } ++
         bs.zipWithIndex.map { case (b, i) => b.value.as(s"__b$i") } ++
-        ms.zipWithIndex.map { case (m, i) => col(m).cast(D.dec25).as(s"__v$i") }: _*)
-    // the sets re-aggregate one pre-aggregate keyed by every grouping
-    // column (decimal sums re-add exactly), so their Expand multiplies
-    // its rows rather than the source's (about 2× faster than expanding
-    // the source rows, measured on sf0.1 lineitem with 4 cores)
-    val keyed = projected.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("cnt"), ms.indices.map(i => sum(col(s"__v$i")).as(s"sm$i")): _*)
-    val sets = scopes.map { case (f, b) => Seq(s"__f${fIdx(f)}", s"__b${bIdx(key(b))}") }.distinct ++
-      bs.indices.map(i => Seq(s"__b$i"))
-    val aggs = grouping_id().as("gid") +: sum(col("cnt")).as("cnt") +:
-      ms.indices.map(i => sum(col(s"sm$i")).as(s"sm$i"))
-    // melt's string breakdown, cast after grouping on the raw value
-    val cellsDf = keyed.groupingSets(sets.map(_.map(col)), groupCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .select(Seq(col("gid"), col("cnt")) ++ ms.indices.map(i => col(s"sm$i")) ++
-        fs.indices.map(i => col(s"__f$i")) ++
-        bs.zipWithIndex.map { case (b, i) =>
-          if (b.trend) col(s"__b$i") else col(s"__b$i").cast("string") }: _*)
-    val rows = graft.util.Guard.gatherCells(cellsDf, "MetaInsight.autoSearch")
-
-    // a row's grouping id has bit (n − 1 − i) clear when grouping column
-    // i is in its set; the set names the filter dim (none for '*') and
-    // the breakdown
+        ms.zipWithIndex.map { case (m, i) => col(m).as(s"__v$i") }: _*),
+      bs.indices.map(i => s"__b$i"))
+    // a breakdown keys its cells by its value, and a categorical one of
+    // another type also by melt's string label of that value, last
+    def bKey(i: Int): Seq[Column] = {
+      val b = col(s"__b$i")
+      if (bs(i).trend || projected.schema(s"__b$i").dataType == StringType) Seq(b)
+      else Seq(b, b.cast("string"))
+    }
+    // one set per distinct (filterDim, breakdown) pair, then one per
+    // breakdown alone (the '*' subspace)
+    val pairs = scopes.map { case (f, b) => (fIdx(f), bIdx(key(b))) }.distinct
+    val sets = pairs.map { case (fi, bi) => struct(col(s"__f$fi") +: bKey(bi): _*) } ++
+      bs.indices.map(bi => struct(bKey(bi): _*))
+    val (_, gathered) = graft.util.Guard.gatherCells(projected, sets, "MetaInsight.autoSearch",
+      sums = ms.indices.map(i => col(s"__v$i")))
     final case class Cell(sub: String, b: String, x: Integer, cnt: Long,
                           sm: IndexedSeq[java.math.BigDecimal])
-    val (smAt, fAt) = (2, 2 + ms.size)
-    val bAt = fAt + fs.size
-    val cellsOf: Map[(Int, Int), Seq[Cell]] = rows.toSeq.map { r =>
-      val gid = r.getLong(0)
-      def inSet(i: Int) = ((gid >> (groupCols.size - 1 - i)) & 1L) == 0L
-      val fi = fs.indices.find(inSet).getOrElse(-1)
-      val bi = bs.indices.find(j => inSet(fs.size + j)).get
+    val cellsOf: Map[(Int, Int), Seq[Cell]] = gathered.map { c =>
+      val (fi, bi) = if (c.set < pairs.size) pairs(c.set) else (-1, c.set - pairs.size)
+      val (k, last) = (c.key, c.key.length - 1)
       val (b, x) =
-        if (bs(bi).trend) (null, if (r.isNullAt(bAt + bi)) null else Integer.valueOf(r.getInt(bAt + bi)))
-        else (r.getString(bAt + bi), null)
-      (fi, bi) -> Cell(if (fi < 0) "*" else r.getString(fAt + fi), b, x, r.getLong(1),
-        ms.indices.map(i => r.getDecimal(smAt + i)))
+        if (!bs(bi).trend) (k.getString(last), null)
+        else (null, if (k.isNullAt(last)) null else Integer.valueOf(k.getInt(last)))
+      (fi, bi) -> Cell(if (fi < 0) "*" else k.getString(0), b, x, c.n, c.sums)
     }.groupMap(_._1)(_._2)
 
     // ---- melt: (measure, v) rows per cell, tagged with the scope ----
@@ -454,79 +441,15 @@ object MetaInsight {
     // the first such scope only
     val seenCat = scala.collection.mutable.Set.empty[(String, String)]
     val parts = scopes.zipWithIndex.map { case ((f, b, m), i) =>
-      val rcBranch = if (seenCat.add((f, b)))
-        s"""
-           |  UNION ALL
-           |  SELECT subspace, CAST(b AS VARCHAR), 'row_count', CAST(cnt AS DOUBLE) FROM ca$i""".stripMargin
-      else ""
-      s"""c$i AS (SELECT CAST($f AS VARCHAR) AS subspace, $b AS b,
-         |    COUNT(*) AS cnt, SUM(CAST($m AS DECIMAL(25,6))) AS sm
-         |  FROM $table GROUP BY 1, 2),
-         |ca$i AS (SELECT * FROM c$i
-         |  UNION ALL SELECT '*' AS subspace, b, SUM(cnt) AS cnt, SUM(sm) AS sm FROM c$i GROUP BY b),
-         |m$i AS (SELECT subspace, CAST(b AS VARCHAR) AS b, '${m}_mean' AS measure,
-         |    ROUND(CAST(CAST(sm AS DECIMAL(25,6)) AS DOUBLE) / cnt, 6) AS v FROM ca$i$rcBranch),
-         |s$i AS (SELECT subspace, measure, COUNT(*) AS k,
-         |    ${dvalSql("v")} AS sv, ${dbigSql("v * v")} AS svv
-         |  FROM m$i GROUP BY 1, 2),
-         |z$i AS (SELECT m.subspace, m.measure, m.b, m.v,
-         |    CASE WHEN ${sigmaSql("s.sv", "s.svv", "s.k")} > 1e-12
-         |         THEN ABS(m.v - s.sv / s.k) / ${sigmaSql("s.sv", "s.svv", "s.k")} ELSE 0.0 END AS zscore,
-         |    m.v / s.sv AS share
-         |  FROM m$i m JOIN s$i s ON m.subspace = s.subspace AND m.measure = s.measure),
-         |zz$i AS (SELECT *,
-         |    ROW_NUMBER() OVER (PARTITION BY subspace, measure ORDER BY zscore DESC, b) AS rn_z,
-         |    ROW_NUMBER() OVER (PARTITION BY subspace, measure ORDER BY share DESC, b) AS rn_s
-         |  FROM z$i),
-         |p$i AS (
-         |  SELECT subspace, measure, MAX(CASE WHEN zscore > 1.5 THEN 1 ELSE 0 END) AS has_pat,
-         |    MAX(CASE WHEN rn_z = 1 AND zscore > 1.5 THEN b END) AS highlight,
-         |    'outlier' AS pattern, '$b' AS breakdown, '$f' AS filter_dim
-         |  FROM zz$i GROUP BY 1, 2
-         |  UNION ALL
-         |  SELECT subspace, measure, MAX(CASE WHEN share >= 0.5 THEN 1 ELSE 0 END),
-         |    MAX(CASE WHEN rn_s = 1 AND share >= 0.5 THEN b END), 'dominance', '$b', '$f'
-         |  FROM zz$i GROUP BY 1, 2)""".stripMargin
+      catChainSql(s"$i", table, f, b, m, s"${m}_mean", seenCat.add((f, b)))
     }
-    // trend scopes: (filterDim, monthCol, measure) with breakdown name
-    // 'month' — mirrors trendPatterns over month(monthCol)
-    // breakdown tag is date-column-specific ("<col>_month"): two trend
-    // scopes over the same filter dim but DIFFERENT date columns are
-    // different breakdowns and must not share a mine() group
+    // trend scopes: (filterDim, monthCol, measure); the breakdown tag is
+    // date-column-specific ("<col>_month"): two trend scopes over the
+    // same filter dim but DIFFERENT date columns are different
+    // breakdowns and must not share a mine() group
     val seenTrend = scala.collection.mutable.Set.empty[(String, String)]
     val trendParts = trendScopes.zipWithIndex.map { case ((f, mc, m), i) =>
-      val rcBranch = if (seenTrend.add((f, mc)))
-        s"""
-           |  UNION ALL
-           |  SELECT subspace, CAST(b AS VARCHAR), 'row_count', CAST(cnt AS DOUBLE) FROM tca$i""".stripMargin
-      else ""
-      s"""tc$i AS (SELECT CAST($f AS VARCHAR) AS subspace, month($mc) AS b,
-         |    COUNT(*) AS cnt, SUM(CAST($m AS DECIMAL(25,6))) AS sm
-         |  FROM $table GROUP BY 1, 2),
-         |tca$i AS (SELECT * FROM tc$i
-         |  UNION ALL SELECT '*' AS subspace, b, SUM(cnt) AS cnt, SUM(sm) AS sm FROM tc$i GROUP BY b),
-         |tm$i AS (SELECT *, CAST(b AS INT) AS x FROM (
-         |  SELECT subspace, CAST(b AS VARCHAR) AS b, '${m}_mean' AS measure,
-         |    ROUND(CAST(CAST(sm AS DECIMAL(25,6)) AS DOUBLE) / cnt, 6) AS v FROM tca$i$rcBranch)),
-         |ts$i AS (SELECT subspace, measure, COUNT(*) AS k, SUM(x) AS sx,
-         |    SUM(CAST(x * x AS BIGINT)) AS sxx,
-         |    ${dvalSql("v")} AS sv, ${dbigSql("v * v")} AS svv, ${dvalSql("x * v")} AS sxv
-         |  FROM tm$i WHERE subspace IS NOT NULL GROUP BY 1, 2),
-         |tr$i AS (SELECT subspace, measure,
-         |    CASE WHEN SQRT(CAST(k * sxx - sx * sx AS DOUBLE)) * SQRT(GREATEST(k * svv - sv * sv, 0)) > 1e-9
-         |         THEN (k * sxv - sx * sv) /
-         |              (SQRT(CAST(k * sxx - sx * sx AS DOUBLE)) * SQRT(GREATEST(k * svv - sv * sv, 0)))
-         |         ELSE 0.0 END AS r_xy
-         |  FROM ts$i),
-         |tp$i AS (
-         |  SELECT subspace, measure, CASE WHEN r_xy >= 0.5 THEN 1 ELSE 0 END AS has_pat,
-         |    CASE WHEN r_xy >= 0.5 THEN 'up' END AS highlight,
-         |    'trend_up' AS pattern, '${mc}_month' AS breakdown, '$f' AS filter_dim
-         |  FROM tr$i
-         |  UNION ALL
-         |  SELECT subspace, measure, CASE WHEN r_xy <= -0.5 THEN 1 ELSE 0 END,
-         |    CASE WHEN r_xy <= -0.5 THEN 'down' END, 'trend_down', '${mc}_month', '$f'
-         |  FROM tr$i)""".stripMargin
+      trendChainSql(s"$i", table, f, mc, s"${mc}_month", m, s"${m}_mean", seenTrend.add((f, mc)))
     }
     val pats = (scopes.indices.map(i => s"SELECT * FROM p$i") ++
       trendScopes.indices.map(i => s"SELECT * FROM tp$i")).mkString("\nUNION ALL\n")
@@ -544,21 +467,101 @@ object MetaInsight {
       else s"pats0 AS ($pats),\npats AS (SELECT * FROM pats0\nUNION ALL\n${extendedBranches.mkString("\nUNION ALL\n")})"
     s"""WITH ${(parts ++ trendParts).mkString(",\n")},
        |$patsFinal
-       |SELECT filter_dim, breakdown, measure, pattern, n_subspaces, n_matching,
+       |${mineSql(Seq("filter_dim", "breakdown", "measure", "pattern"), minCommonness,
+            noExceptionPenaltyWeight, balanceFactor)}
+       |ORDER BY score DESC, filter_dim, breakdown, measure, pattern
+       |LIMIT $topK""".stripMargin
+  }
+
+  /** One categorical scope's pattern CTEs, suffixed `sfx`: cells and
+    * their '*' rollup, the melt (with the row_count measure when
+    * `rowCount`), the per-(subspace, measure) stats, and the outlier and
+    * dominance patterns in `p<sfx>`. */
+  private def catChainSql(sfx: String, table: String, f: String, b: String, m: String,
+                          meanName: String, rowCount: Boolean): String =
+    s"""c$sfx AS (SELECT CAST($f AS VARCHAR) AS subspace, $b AS b,
+       |    COUNT(*) AS cnt, SUM(CAST($m AS DECIMAL(25,6))) AS sm
+       |  FROM $table GROUP BY 1, 2),
+       |ca$sfx AS (SELECT * FROM c$sfx
+       |  UNION ALL SELECT '*' AS subspace, b, SUM(cnt) AS cnt, SUM(sm) AS sm FROM c$sfx GROUP BY b),
+       |m$sfx AS (${meltSql(s"ca$sfx", meanName, rowCount)}),
+       |s$sfx AS (SELECT subspace, measure, COUNT(*) AS k,
+       |    ${dvalSql("v")} AS sv, ${dbigSql("v * v")} AS svv
+       |  FROM m$sfx GROUP BY 1, 2),
+       |z$sfx AS (SELECT m.subspace, m.measure, m.b, m.v,
+       |    CASE WHEN ${sigmaSql("s.sv", "s.svv", "s.k")} > 1e-12
+       |         THEN ABS(m.v - s.sv / s.k) / ${sigmaSql("s.sv", "s.svv", "s.k")} ELSE 0.0 END AS zscore,
+       |    m.v / s.sv AS share
+       |  FROM m$sfx m JOIN s$sfx s ON m.subspace = s.subspace AND m.measure = s.measure),
+       |zz$sfx AS (SELECT *,
+       |    ROW_NUMBER() OVER (PARTITION BY subspace, measure ORDER BY zscore DESC, b) AS rn_z,
+       |    ROW_NUMBER() OVER (PARTITION BY subspace, measure ORDER BY share DESC, b) AS rn_s
+       |  FROM z$sfx),
+       |p$sfx AS (
+       |  SELECT subspace, measure, MAX(CASE WHEN zscore > 1.5 THEN 1 ELSE 0 END) AS has_pat,
+       |    MAX(CASE WHEN rn_z = 1 AND zscore > 1.5 THEN b END) AS highlight,
+       |    'outlier' AS pattern, '$b' AS breakdown, '$f' AS filter_dim
+       |  FROM zz$sfx GROUP BY 1, 2
+       |  UNION ALL
+       |  SELECT subspace, measure, MAX(CASE WHEN share >= 0.5 THEN 1 ELSE 0 END),
+       |    MAX(CASE WHEN rn_s = 1 AND share >= 0.5 THEN b END), 'dominance', '$b', '$f'
+       |  FROM zz$sfx GROUP BY 1, 2)""".stripMargin
+
+  /** One month-trend scope's pattern CTEs, suffixed `sfx`, as
+    * [[catChainSql]]: trend_up / trend_down patterns in `tp<sfx>`. */
+  private def trendChainSql(sfx: String, table: String, f: String, monthCol: String,
+                            breakdown: String, m: String, meanName: String,
+                            rowCount: Boolean): String =
+    s"""tc$sfx AS (SELECT CAST($f AS VARCHAR) AS subspace, month($monthCol) AS b,
+       |    COUNT(*) AS cnt, SUM(CAST($m AS DECIMAL(25,6))) AS sm
+       |  FROM $table GROUP BY 1, 2),
+       |tca$sfx AS (SELECT * FROM tc$sfx
+       |  UNION ALL SELECT '*' AS subspace, b, SUM(cnt) AS cnt, SUM(sm) AS sm FROM tc$sfx GROUP BY b),
+       |tm$sfx AS (SELECT *, CAST(b AS INT) AS x FROM (${meltSql(s"tca$sfx", meanName, rowCount)})),
+       |ts$sfx AS (SELECT subspace, measure, COUNT(*) AS k, SUM(x) AS sx,
+       |    SUM(CAST(x * x AS BIGINT)) AS sxx,
+       |    ${dvalSql("v")} AS sv, ${dbigSql("v * v")} AS svv, ${dvalSql("x * v")} AS sxv
+       |  FROM tm$sfx WHERE subspace IS NOT NULL GROUP BY 1, 2),
+       |tr$sfx AS (SELECT subspace, measure,
+       |    CASE WHEN SQRT(CAST(k * sxx - sx * sx AS DOUBLE)) * SQRT(GREATEST(k * svv - sv * sv, 0)) > 1e-9
+       |         THEN (k * sxv - sx * sv) /
+       |              (SQRT(CAST(k * sxx - sx * sx AS DOUBLE)) * SQRT(GREATEST(k * svv - sv * sv, 0)))
+       |         ELSE 0.0 END AS r_xy
+       |  FROM ts$sfx),
+       |tp$sfx AS (
+       |  SELECT subspace, measure, CASE WHEN r_xy >= 0.5 THEN 1 ELSE 0 END AS has_pat,
+       |    CASE WHEN r_xy >= 0.5 THEN 'up' END AS highlight,
+       |    'trend_up' AS pattern, '$breakdown' AS breakdown, '$f' AS filter_dim
+       |  FROM tr$sfx
+       |  UNION ALL
+       |  SELECT subspace, measure, CASE WHEN r_xy <= -0.5 THEN 1 ELSE 0 END,
+       |    CASE WHEN r_xy <= -0.5 THEN 'down' END, 'trend_down', '$breakdown', '$f'
+       |  FROM tr$sfx)""".stripMargin
+
+  /** The melt of a cells CTE: the mean measure, plus row_count when
+    * `rowCount`. */
+  private def meltSql(cells: String, meanName: String, rowCount: Boolean): String =
+    s"""SELECT subspace, CAST(b AS VARCHAR) AS b, '$meanName' AS measure,
+       |    ROUND(CAST(CAST(sm AS DECIMAL(25,6)) AS DOUBLE) / cnt, 6) AS v FROM $cells""".stripMargin +
+      (if (!rowCount) "" else s"""
+       |  UNION ALL
+       |  SELECT subspace, CAST(b AS VARCHAR), 'row_count', CAST(cnt AS DOUBLE) FROM $cells""".stripMargin)
+
+  /** [[mine]] over the `pats` CTE, grouped by `keys`. */
+  private def mineSql(keys: Seq[String], minCommonness: Double, noExceptionPenaltyWeight: Double,
+                      balanceFactor: Double): String =
+    s"""SELECT ${keys.mkString(", ")}, n_subspaces, n_matching,
        |  commonness, score, example_highlight
        |FROM (
-       |  SELECT filter_dim, breakdown, measure, pattern, COUNT(*) AS n_subspaces,
+       |  SELECT ${keys.mkString(", ")}, COUNT(*) AS n_subspaces,
        |    CAST(SUM(has_pat) AS BIGINT) AS n_matching,
        |    ROUND(CAST(SUM(has_pat) AS DOUBLE) / COUNT(*), 6) AS commonness,
        |    ROUND((CAST(SUM(has_pat) AS DOUBLE) - $balanceFactor * (COUNT(*) - SUM(has_pat))) / COUNT(*) -
        |      $noExceptionPenaltyWeight * CASE WHEN SUM(has_pat) = COUNT(*) THEN 1 ELSE 0 END, 6) AS score,
        |    MIN(CASE WHEN has_pat = 1 THEN concat_ws(':', subspace, highlight) END) AS example_highlight
-       |  FROM pats GROUP BY 1, 2, 3, 4
+       |  FROM pats GROUP BY ${keys.indices.map(_ + 1).mkString(", ")}
        |  HAVING SUM(has_pat) > 0)
-       |WHERE commonness >= $minCommonness
-       |ORDER BY score DESC, filter_dim, breakdown, measure, pattern
-       |LIMIT $topK""".stripMargin
-  }
+       |WHERE commonness >= $minCommonness""".stripMargin
 
   /** Full DuckDB mirror for orders-style input: filterDim × (cat breakdown,
     * ordered month breakdown), measures mean(aggCol) + row count. */
@@ -566,76 +569,11 @@ object MetaInsight {
           monthCol: String, aggCol: String, meanName: String,
           minCommonness: Double = 0.5,
           noExceptionPenaltyWeight: Double = 0.1,
-          balanceFactor: Double = 1.0): String = {
-    def cellsSql(bexpr: String): String =
-      s"""SELECT CAST($filterDim AS VARCHAR) AS subspace, $bexpr AS b,
-         |  COUNT(*) AS cnt, SUM(CAST($aggCol AS DECIMAL(25,6))) AS sm
-         |FROM $table GROUP BY 1, 2""".stripMargin
-    def star(c: String): String =
-      s"SELECT '*' AS subspace, b, SUM(cnt) AS cnt, SUM(sm) AS sm FROM $c GROUP BY b"
-    def meltSql(c: String): String =
-      s"""SELECT subspace, CAST(b AS VARCHAR) AS b, '$meanName' AS measure,
-         |  ROUND(CAST(CAST(sm AS DECIMAL(25,6)) AS DOUBLE) / cnt, 6) AS v FROM $c
-         |UNION ALL
-         |SELECT subspace, CAST(b AS VARCHAR), 'row_count', CAST(cnt AS DOUBLE) FROM $c""".stripMargin
-    s"""WITH c0 AS (${cellsSql(catBreakdown)}),
-       |call AS (SELECT * FROM c0 UNION ALL ${star("c0")}),
-       |m AS (${meltSql("call")}),
-       |s AS (SELECT subspace, measure, COUNT(*) AS k,
-       |    ${dvalSql("v")} AS sv, ${dbigSql("v * v")} AS svv
-       |  FROM m GROUP BY 1, 2),
-       |z AS (SELECT m.subspace, m.measure, m.b, m.v,
-       |    CASE WHEN ${sigmaSql("s.sv", "s.svv", "s.k")} > 1e-12
-       |         THEN ABS(m.v - s.sv / s.k) / ${sigmaSql("s.sv", "s.svv", "s.k")} ELSE 0.0 END AS zscore,
-       |    m.v / s.sv AS share
-       |  FROM m JOIN s ON m.subspace = s.subspace AND m.measure = s.measure),
-       |z2 AS (SELECT *,
-       |    ROW_NUMBER() OVER (PARTITION BY subspace, measure ORDER BY zscore DESC, b) AS rn_z,
-       |    ROW_NUMBER() OVER (PARTITION BY subspace, measure ORDER BY share DESC, b) AS rn_s
-       |  FROM z),
-       |pat_cat AS (
-       |  SELECT subspace, measure, MAX(CASE WHEN zscore > 1.5 THEN 1 ELSE 0 END) AS has_pat,
-       |    MAX(CASE WHEN rn_z = 1 AND zscore > 1.5 THEN b END) AS highlight,
-       |    'outlier' AS pattern, '$catBreakdown' AS breakdown
-       |  FROM z2 GROUP BY 1, 2
-       |  UNION ALL
-       |  SELECT subspace, measure, MAX(CASE WHEN share >= 0.5 THEN 1 ELSE 0 END),
-       |    MAX(CASE WHEN rn_s = 1 AND share >= 0.5 THEN b END), 'dominance', '$catBreakdown'
-       |  FROM z2 GROUP BY 1, 2),
-       |cm0 AS (${cellsSql(s"month($monthCol)")}),
-       |cmall AS (SELECT * FROM cm0 UNION ALL ${star("cm0")}),
-       |mm AS (SELECT *, CAST(b AS INT) AS x FROM (${meltSql("cmall")})),
-       |sm2 AS (SELECT subspace, measure, COUNT(*) AS k, SUM(x) AS sx,
-       |    SUM(CAST(x * x AS BIGINT)) AS sxx,
-       |    ${dvalSql("v")} AS sv, ${dbigSql("v * v")} AS svv, ${dvalSql("x * v")} AS sxv
-       |  FROM mm GROUP BY 1, 2),
-       |rr AS (SELECT subspace, measure,
-       |    CASE WHEN SQRT(CAST(k * sxx - sx * sx AS DOUBLE)) * SQRT(GREATEST(k * svv - sv * sv, 0)) > 1e-9
-       |         THEN (k * sxv - sx * sv) /
-       |              (SQRT(CAST(k * sxx - sx * sx AS DOUBLE)) * SQRT(GREATEST(k * svv - sv * sv, 0)))
-       |         ELSE 0.0 END AS r_xy
-       |  FROM sm2),
-       |pat_tr AS (
-       |  SELECT subspace, measure, CASE WHEN r_xy >= 0.5 THEN 1 ELSE 0 END AS has_pat,
-       |    CASE WHEN r_xy >= 0.5 THEN 'up' END AS highlight, 'trend_up' AS pattern, 'month' AS breakdown
-       |  FROM rr
-       |  UNION ALL
-       |  SELECT subspace, measure, CASE WHEN r_xy <= -0.5 THEN 1 ELSE 0 END,
-       |    CASE WHEN r_xy <= -0.5 THEN 'down' END, 'trend_down', 'month'
-       |  FROM rr),
-       |pats AS (SELECT * FROM pat_cat UNION ALL SELECT * FROM pat_tr)
-       |SELECT breakdown, measure, pattern, n_subspaces, n_matching,
-       |  commonness, score, example_highlight
-       |FROM (
-       |  SELECT breakdown, measure, pattern, COUNT(*) AS n_subspaces,
-       |    CAST(SUM(has_pat) AS BIGINT) AS n_matching,
-       |    ROUND(CAST(SUM(has_pat) AS DOUBLE) / COUNT(*), 6) AS commonness,
-       |    ROUND((CAST(SUM(has_pat) AS DOUBLE) - $balanceFactor * (COUNT(*) - SUM(has_pat))) / COUNT(*) -
-       |      $noExceptionPenaltyWeight * CASE WHEN SUM(has_pat) = COUNT(*) THEN 1 ELSE 0 END, 6) AS score,
-       |    MIN(CASE WHEN has_pat = 1 THEN concat_ws(':', subspace, highlight) END) AS example_highlight
-       |  FROM pats GROUP BY 1, 2, 3
-       |  HAVING SUM(has_pat) > 0)
-       |WHERE commonness >= $minCommonness
+          balanceFactor: Double = 1.0): String =
+    s"""WITH ${catChainSql("0", table, filterDim, catBreakdown, aggCol, meanName, rowCount = true)},
+       |${trendChainSql("0", table, filterDim, monthCol, "month", aggCol, meanName, rowCount = true)},
+       |pats AS (SELECT * FROM p0 UNION ALL SELECT * FROM tp0)
+       |${mineSql(Seq("breakdown", "measure", "pattern"), minCommonness, noExceptionPenaltyWeight,
+            balanceFactor)}
        |ORDER BY breakdown, measure, pattern""".stripMargin
-  }
 }

@@ -2,7 +2,7 @@ package graft.explain
 
 import java.math.{BigDecimal => JBigDecimal}
 
-import graft.util.{D, Guard, Mirror}
+import graft.util.{Guard, Mirror}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,14 +21,14 @@ import org.apache.spark.sql.types._
   *   S'(a,b)  = same after dropping rows with bin(a)=b
   *   influence(a,b) = (S − S'(a,b)) · (N − n_b) / N
   *
-  * Scale: ONE scan builds the (attr, bin, group) → (cnt, sum) cube via an
-  * exploded attr array (map-side combined), and ONE bounded collect
-  * brings its ~|groups|·|attrs|·(nb+1) rows to the driver
-  * ([[graft.util.Guard.gatherCells]]). The leave-out algebra — per-group
-  * totals, the candidate × group grid, the moment sums and the scores —
-  * runs there through the exact expression mirrors of
-  * [[graft.util.Mirror]], and the result comes back as a LocalRelation:
-  * no per-candidate rescan, and consuming it launches no Spark job.
+  * Scale: two exchange-free passes ([[graft.util.Guard.gatherCells]])
+  * — the attributes' min/max, then the (attr, bin, group) → (cnt, sum)
+  * cube of ~|groups|·|attrs|·(nb+1) cells — build the cube on the
+  * driver. The leave-out algebra — per-group totals, the candidate ×
+  * group grid, the moment sums and the scores — runs there through the
+  * exact expression mirrors of [[graft.util.Mirror]], and the result
+  * comes back as a LocalRelation: no per-candidate rescan, and consuming
+  * it launches no Spark job.
   */
 object Outlier {
 
@@ -43,51 +43,30 @@ object Outlier {
   private[graft] def explainTable(src: DataFrame, groupCol: String, aggCol: String,
                                   target: String, dir: Int, attrs: Seq[String],
                                   nb: Int = 10): Mirror.Table = {
-    val stats = Fedex.statsDf(src, attrs.map(Fedex.Attr(_, numeric = true))).get
-
-    // (grp, attribute, bin, cnt, sm) — ONE scan, hot path all-int/long:
-    //  - posexplode of the INT bin array (the r6 form exploded
-    //    struct(attribute STRING, bin STRING) and aggregated on string
-    //    keys — string construction + hashing per exploded row was the
-    //    measured bulk of a 1.6 s cube job at sf0.1);
-    //  - the measure sums use the Correlation chunked-long machinery
-    //    (exact Σ of the scale-6 quantization == the former
-    //    sum(cast(y AS DECIMAL(25,6))) bit-for-bit; grouped decimal
-    //    buffers are the documented 4× slowdown). Envelope: per-value
-    //    |y| < 9.2e12 and |Σy| < 10^19, fail-loud beyond (the
-    //    Correlation moment contract).
-    // Attribute names and string bins re-enter in the tiny post-select.
-    val binCols = attrs.map(a => Fedex.binExpr(col(a), col(s"lo_$a"), col(s"hi_$a"), nb))
-    // sentinel "__total__" pseudo-attribute with a constant bin: every
-    // row contributes to it, so the per-group TOTALS (the oracle's
-    // whole-table tot) ride the same single scan even though null
-    // attribute values are excluded from the real attributes' bins
-    val attrArr = array((attrs :+ "__total__").map(lit): _*)
-    val cubePlan = src.crossJoin(broadcast(stats))
-      .select(col(groupCol).as("grp"), Correlation.quant6Col(col(aggCol)).as("fy"),
-        posexplode(array(binCols :+ lit(0): _*)))
-      .withColumnRenamed("pos", "ai").withColumnRenamed("col", "bin")
-      // a NULL attribute value has no bin (binExpr is null-preserving);
-      // the SQL mirror's per-attribute IS NOT NULL filter is this line
-      .filter(col("bin").isNotNull)
-      .groupBy("grp", "ai", "bin")
-      .agg(count(lit(1)).as("cnt"), Correlation.chunkSumAggs("fy"): _*)
-      .select(col("grp"), element_at(attrArr, col("ai") + 1).as("attribute"),
-        col("bin").cast("string").as("bin"), col("cnt"),
-        Correlation.value6(Correlation.recombineUnscaled("fy")).cast(D.dec25).as("sm"))
-    // The cube feeds every later step, and at ~100 rows per corpus
-    // (the qcut-boundary bounded-collect convention) the rest of the
-    // explanation is driver arithmetic: an in-plan finish runs about ten
-    // tiny jobs whose planning, not their data, dominates the latency.
-    // `is_t` evaluates the target match in-plan, so `grp = target` keeps
-    // Spark's type coercion for non-string group columns.
-    explainRows(Guard.gatherCells(
-      cubePlan.withColumn("is_t", col("grp") === target), "Outlier.explain"), dir)
+    // one cell set per attribute keyed by (grp, bin, is target) — a NULL
+    // value has no bin, the SQL mirror's IS NOT NULL filter — and a
+    // "__total__" set keyed by the group alone: the per-group totals (the
+    // oracle's tot). `is_t` matches the target in-plan, with Spark's type
+    // coercion; it depends on the group alone, so it splits no cell.
+    val bounds = Guard.extrema(src, attrs, "Outlier.bounds")
+    val keyed = Guard.groupingForm(src, Seq(groupCol))
+    val isT = col(groupCol) === target
+    val sets = attrs.zip(bounds).map { case (a, (lo, hi)) =>
+      val bin = Fedex.binExpr(col(a), lo, hi, nb)
+      when(bin.isNotNull, struct(col(groupCol), bin, isT))
+    } :+ struct(col(groupCol), lit(0), isT)
+    // the measure is summed as its double value cast to DECIMAL(25,6)
+    val (_, cube) = Guard.gatherCells(keyed, sets, "Outlier.explain",
+      sums = Seq(col(aggCol).cast(DoubleType)))
+    explainRows(cube.map(c => Cell(Mirror.groupKey(c.key.get(0)), (attrs :+ "__total__")(c.set),
+      String.valueOf(c.key.get(1)), c.n, c.sums(0), c.key.get(2) == true)), dir)
   }
 
-  /** The explanation table from the collected cube rows
-    * (grp, attribute, bin, cnt, sm, is_t), mirroring the in-plan chain
-    * it replaced expression by expression:
+  private final case class Cell(grp: Any, attribute: String, bin: String, cnt: Long,
+                                sm: JBigDecimal, isT: Boolean)
+
+  /** The explanation table from the cube's cells, mirroring the in-plan
+    * chain it replaced expression by expression:
     *   tot  = Σ cnt, Σ sm of the "__total__" rows per group;
     *   v    = sm.cast(DECIMAL(25,6)).cast(DOUBLE) / cnt;
     *   S    = dir·(v_t − μ)/σ over the per-group v, NULL unless σ > 0
@@ -98,12 +77,7 @@ object Outlier {
     *          bin holds all of the group's rows;
     *   influence = (S − S')·(n_total − n_removed)/n_total, candidates
     *          with min_kept = 0 dropped, ordered by (attribute, bin). */
-  private def explainRows(cube: Array[Row], dir: Int): Mirror.Table = {
-    final case class Cell(grp: Any, attribute: String, bin: String, cnt: Long,
-                          sm: JBigDecimal, isT: Boolean)
-    val cells = cube.toSeq.map(r => Cell(Mirror.groupKey(r.get(0)), r.getString(1),
-      r.getString(2), r.getLong(3), r.getDecimal(4), !r.isNullAt(5) && r.getBoolean(5)))
-
+  private def explainRows(cells: Seq[Cell], dir: Int): Mirror.Table = {
     // per-group totals from the sentinel rows
     final case class Tot(grp: Any, cntG: Long, smG: JBigDecimal, isT: Boolean)
     val tot = cells.filter(_.attribute == "__total__").groupBy(_.grp).toSeq.map {

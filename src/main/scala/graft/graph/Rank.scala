@@ -60,21 +60,23 @@ object Rank {
       damping: Double = 0.85): DataFrame =
     stepPrepared(nodes, withOutdeg(edges), mass, damping)
 
-  /** `iters` chained steps from ONE materialized edge table. The
-    * (edges ⋈ outdeg) preparation is checkpointed once (the
-    * dup_clusters/connectedComponents pattern, guide §2.4/§6): the
+  /** `iters` chained steps from ONE materialized edge table. With two
+    * or more steps the (edges ⋈ outdeg) preparation is checkpointed once
+    * (the dup_clusters/connectedComponents pattern, guide §2.4/§6): the
     * chained-lazy form re-planned the whole edge-derivation subtree —
     * and re-aggregated the loop-invariant out-degrees — once per
     * iteration per reference, growing the scan tree linearly in
     * `iters` (11 corpus scans at iters=2 for the registered query).
-    * Checkpoint blocks live in executor storage and are reclaimed by
-    * the ContextCleaner once the returned frame is unreachable. Masses
-    * are bit-identical to the unfused form (same joins, same
-    * expressions — [[stepPrepared]]). */
+    * One step reads the preparation once, so it stays lazy: an eager
+    * checkpoint there only added its own jobs (q_pagerank_step: 6 → 2
+    * build jobs without it). Checkpoint blocks live in executor storage
+    * and are reclaimed by the ContextCleaner once the returned frame is
+    * unreachable. Masses are bit-identical to the unfused form (same
+    * joins, same expressions — [[stepPrepared]]). */
   def pagerankIterations(nodes: DataFrame, edges: DataFrame, iters: Int,
       damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val wedges = withOutdeg(edges).localCheckpoint(true)
+    val wedges = if (iters > 1) withOutdeg(edges).localCheckpoint(true) else withOutdeg(edges)
     val m0 = nodes.withColumn("mass", lit(1.0))
     (1 to iters).foldLeft(m0) { (m, _) =>
       stepPrepared(nodes, wedges, m.select("node_id", "mass"), damping)

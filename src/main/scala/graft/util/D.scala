@@ -89,10 +89,6 @@ object D {
     case _                  => df
   }
 
-  /** Population variance from decimal-exact moments. */
-  def varPop(sumd: Column, sumsq: Column, n: Column): Column =
-    (sumsq - sumd * sumd / n) / n
-
   /** Sample variance from decimal-exact moments. */
   def varSamp(sumd: Column, sumsq: Column, n: Column): Column =
     // n ≤ 1 must yield NULL, not an ANSI DIVIDE_BY_ZERO: DuckDB's

@@ -1,24 +1,33 @@
 package graft.util
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions._
+import java.math.{BigDecimal => JBigDecimal}
+import java.util.{HashMap => JHashMap}
 
-/** Fail-fast guards for documented cardinality contracts.
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, Literal, UnsafeProjection,
+  UnsafeRow}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+
+/** Fail-fast guards for documented cardinality contracts, and the
+  * bounded gather the driver-finished explainers build their tables with.
   *
   * The explainers gather explanation-grade cell sets — bins and
-  * low-cardinality dimensions — either on the driver through one bounded
-  * collect ([[gatherCells]]: Outlier.explain's cube, the Fedex count
-  * table, GroupByExplain.zdev's melt, the cells table of every
-  * MetaInsight auto-search scope in MetaInsight.autoSearch), or into one
-  * row per group via collect_list ([[cellCap]]: the single-scope
-  * MetaInsight.catPatternsKeyed). The
-  * contract "don't feed ID-like grouping keys" used to be documentation
-  * only: a violating caller got a driver or executor OOM with no hint of
-  * the cause. Both guards turn the violation into an immediate,
-  * diagnosable error. The collect is limit()-bounded to one row past the
-  * bound, so no more than that reaches the driver; the in-plan cap is
-  * one comparison per group row, evaluated executor-side next to the
-  * gathered array itself.
+  * low-cardinality dimensions — on the driver through one exchange-free
+  * kernel ([[gatherCells]]), or into one row per group via collect_list
+  * ([[cellCap]]: the single-scope MetaInsight.catPatternsKeyed). The
+  * contract "don't feed ID-like grouping keys" is enforced, not only
+  * documented: the kernel fails a partition, or the driver's merge, on
+  * the cell one past the bound, and the in-plan cap is one comparison
+  * per group row, evaluated executor-side next to the gathered array —
+  * a diagnosable error instead of a driver or executor OOM.
   */
 object Guard {
 
@@ -89,16 +98,166 @@ object Guard {
       .otherwise(value)
   }
 
-  /** Collects `cells` to the driver for a driver-side finish. The collect
-    * is bounded at [[MaxGatheredCells]] + 1 rows, and holding more than
-    * the bound raises the [[cellCap]] error, so an ID-like key fails
-    * before more than one row past the bound reaches the driver. */
-  def gatherCells(cells: DataFrame, site: String): Array[Row] = {
-    val cap = MaxGatheredCells
-    val rows = cells.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
-    if (rows.length > cap)
-      throw new IllegalArgumentException(
-        s"$site: the collect gathered more than $cap" + idLike(cap))
-    rows
+  /** One cell of a gathered table: its set, its key, its row count, its
+    * count of rows per flag, and its exact sum per summed column (NULL
+    * when every summed value is NULL). */
+  final case class Cell(set: Int, key: Row, n: Long, flags: IndexedSeq[Long],
+                        sums: IndexedSeq[JBigDecimal])
+
+  /** A cell while it is folded; a row enters as a one-row Acc. */
+  private final class Acc(nFlags: Int, nSums: Int, nExt: Int) extends Serializable {
+    var n = 0L
+    val flags = new Array[Long](nFlags)
+    val sums = new Array[JBigDecimal](nSums)
+    val lo, hi = new Array[Any](nExt)
+
+    def merge(o: Acc, ords: Array[Ordering[Any]]): Unit = {
+      n += o.n
+      for (i <- flags.indices) flags(i) += o.flags(i)
+      for (i <- sums.indices) sums(i) = if (sums(i) == null) o.sums(i)
+        else if (o.sums(i) == null) sums(i) else sums(i).add(o.sums(i))
+      for (i <- lo.indices) {
+        if (lo(i) == null || (o.lo(i) != null && ords(i).lt(o.lo(i), lo(i)))) lo(i) = o.lo(i)
+        if (hi(i) == null || (o.hi(i) != null && ords(i).gt(o.hi(i), hi(i)))) hi(i) = o.hi(i)
+      }
+    }
   }
+
+  private type Partial = Array[JHashMap[UnsafeRow, Acc]]
+
+  /** The gathered projection's columns: set key structs of `widths`
+    * fields, flags, DECIMAL(25,6) sums, extrema. */
+  private final case class Layout(schema: StructType, widths: IndexedSeq[Int], nFlags: Int,
+                                  nSums: Int, extTypes: IndexedSeq[DataType], cap: Long,
+                                  site: String) {
+    def ords: Array[Ordering[Any]] = extTypes.map(PhysicalDataType.ordering).toArray
+    def partial: Partial = Array.fill(widths.size)(new JHashMap[UnsafeRow, Acc]())
+    def tooMany(where: String, held: Long) =
+      new IllegalArgumentException(s"$site: $where gathered $held" + idLike(cap))
+
+    /** One partition's partial table, on an executor. */
+    def fold(rows: Iterator[InternalRow]): Partial = {
+      val (part, o, toUnsafe) = (partial, ords, UnsafeProjection.create(schema))
+      val (f0, s0, e0) = (widths.size, widths.size + nFlags, widths.size + nFlags + nSums)
+      val one = new Acc(nFlags, nSums, extTypes.size)
+      one.n = 1
+      var held = 0L
+      rows.foreach { r =>
+        val row = r match { case u: UnsafeRow => u; case other => toUnsafe(other) }
+        for (i <- 0 until nFlags)
+          one.flags(i) = if (!row.isNullAt(f0 + i) && row.getBoolean(f0 + i)) 1 else 0
+        for (i <- 0 until nSums) one.sums(i) =
+          if (row.isNullAt(s0 + i)) null else row.getDecimal(s0 + i, 25, 6).toJavaBigDecimal
+        for (i <- extTypes.indices) {
+          one.lo(i) = if (row.isNullAt(e0 + i)) null
+            else InternalRow.copyValue(row.get(e0 + i, extTypes(i)))
+          one.hi(i) = one.lo(i)
+        }
+        for (s <- widths.indices if !row.isNullAt(s)) {
+          val key = row.getStruct(s, widths(s))
+          var acc = part(s).get(key)
+          if (acc == null) {
+            held += 1
+            if (held > cap) throw tooMany("a partition", held)
+            acc = new Acc(nFlags, nSums, extTypes.size)
+            part(s).put(key.copy(), acc)
+          }
+          acc.merge(one, o)
+        }
+      }
+      part
+    }
+  }
+
+  /** The kernel: one exchange-free pass over `src`; each partition folds
+    * its rows into a partial table, merged on the driver as the tasks
+    * finish. A row joins set i under the key `sets(i)` (a struct; NULL
+    * leaves it out), and a cell keeps its row count, its count of rows
+    * where each of `flags` holds, the sum of each of `sums` as
+    * `sum(cast(x AS DECIMAL(25,6)))`, and the min and max of each of
+    * `extrema` in its own type (NULL skipped, NaN largest). Keys are equal
+    * when their binary rows are: grouping keys come in [[groupingForm]].
+    * A partition fails on its cell one past [[MaxGatheredCells]], and the
+    * driver on the merged table's, so it holds at most one partial beyond
+    * the bound. The job runs as one SQL execution named `site`. */
+  private def pass(src: DataFrame, sets: Seq[Column], flags: Seq[Column], sums: Seq[Column],
+                   extrema: Seq[Column], site: String): (StructType, Partial) = {
+    val proj = src.select(sets ++ flags ++ sums.map(_.cast(D.dec25)) ++ extrema: _*)
+    val schema = proj.schema
+    val layout = Layout(schema, sets.indices.map(i => schema(i).dataType.asInstanceOf[StructType].size),
+      flags.size, sums.size, extrema.indices.map(i => schema(schema.size - extrema.size + i).dataType),
+      MaxGatheredCells, site)
+    import layout.{cap, tooMany}
+    val (merged, o) = (layout.partial, layout.ords)
+    var held = 0L
+    @volatile var failure: Throwable = null
+    def mergeIn(part: Partial): Unit =
+      for (s <- part.indices; e <- part(s).entrySet.asScala) {
+        val acc = merged(s).get(e.getKey)
+        if (acc != null) acc.merge(e.getValue, o)
+        else {
+          held += 1
+          if (held > cap) throw tooMany("the merged partials", held)
+          merged(s).put(e.getKey, e.getValue)
+        }
+      }
+    val qe = proj.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(site)) {
+      val rdd = qe.toRdd
+      val job = src.sparkSession.sparkContext.submitJob[InternalRow, Partial, Unit](
+        rdd, layout.fold, rdd.partitions.indices,
+        // a handler that throws fails the job at once; later partials are dropped
+        (_, part) => if (failure == null) {
+          try mergeIn(part) catch { case e: Throwable => failure = e; throw e }
+        }, ())
+      Await.ready(job, Duration.Inf)
+      if (failure != null) { job.cancel(); throw failure }
+      job.value.get.get
+    }
+    (schema, merged)
+  }
+
+  /** The cells of `sets` over `src` ([[pass]]) with each set's key
+    * schema, by set and then by key in Spark's ascending order: a
+    * canonical order, so ties in a driver-side sort break the same way
+    * at any partition count. */
+  def gatherCells(src: DataFrame, sets: Seq[Column], site: String, flags: Seq[Column] = Nil,
+                  sums: Seq[Column] = Nil): (IndexedSeq[StructType], Seq[Cell]) = {
+    val (schema, merged) = pass(src, sets, flags, sums, Nil, site)
+    val keys = sets.indices.map(i => schema(i).dataType.asInstanceOf[StructType])
+    (keys, sets.indices.flatMap { s =>
+      val toRow = CatalystTypeConverters.createToScalaConverter(keys(s))
+      merged(s).asScala.toSeq
+        .sortBy[InternalRow](_._1)(InterpretedOrdering.forSchema(keys(s).map(_.dataType)))
+        .map { case (k, a) =>
+          Cell(s, toRow(k).asInstanceOf[Row], a.n, a.flags.toIndexedSeq, a.sums.toIndexedSeq) }
+    })
+  }
+
+  /** Min and max of each of `cols` over `src` as literals of the
+    * column's type (NULL when it has no value): a [[pass]] into one cell. */
+  def extrema(src: DataFrame, cols: Seq[String], site: String): Seq[(Column, Column)] = {
+    val (schema, merged) = pass(src, Seq(struct()), Nil, Nil, cols.map(col), site)
+    val acc = merged(0).values.asScala.headOption
+    cols.indices.map { i =>
+      def typed(v: Acc => Any) = GraftShims.column(Literal(acc.map(v).orNull, schema(1 + i).dataType))
+      (typed(_.lo(i)), typed(_.hi(i)))
+    }
+  }
+
+  /** Every row of `table` on the driver, as often as it occurs, in
+    * [[gatherCells]]' order: the bound counts distinct rows. */
+  def gatherRows(table: DataFrame, site: String): Mirror.Table = {
+    val named = table.toDF(table.columns.indices.map(i => s"c$i"): _*)
+    val (_, cells) = gatherCells(named, Seq(struct(named.columns.map(col): _*)), site)
+    Mirror.Table(table.schema, cells.flatMap(c => Seq.fill(c.n.toInt)(c.key)))
+  }
+
+  /** `df` with the floating-point values of `cols` as Spark's grouping
+    * compares them: -0.0 as 0.0 and one NaN, nested fields included. */
+  def groupingForm(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.select(df.queryExecution.analyzed.output.map { a =>
+      if (cols.contains(a.name)) GraftShims.column(GraftShims.groupingForm(a)).as(a.name)
+      else GraftShims.column(a)
+    }: _*)
 }

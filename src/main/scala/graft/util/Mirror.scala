@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Driver-side mirrors of Spark expressions, for the operators that
-  * finish a bounded collect in Scala: MetaInsight.autoSearch,
+  * finish a gathered table in Scala (Guard.gatherCells): MetaInsight.autoSearch,
   * Correlation.suite, Outlier.explain, the Fedex tails and
   * GroupByExplain.zdev. Each mirror goes through the entry point the
   * Spark expression itself uses (BigDecimal.valueOf for a double→decimal

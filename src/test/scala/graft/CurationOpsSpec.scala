@@ -137,11 +137,13 @@ class CurationOpsSpec extends AnyFunSuite {
     // row_number+WindowGroupLimit (partial+final double sort, ~18 s)
     // nor a max_by SortAggregate (interpreted struct comparisons,
     // ~2.8 s + a 30 s first-position JIT cliff) — measured head-to-head
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("lead("), s"offset window gone:\n${plan.take(1200)}")
-    assert(!plan.contains("WindowGroupLimit") && !plan.contains("row_number"),
-      s"latest-per-key regressed to a top-1 sort:\n${plan.take(1200)}")
-    assert(!plan.contains("max_by"), s"regressed to SortAggregate:\n${plan.take(1200)}")
+    import graft.util.PlanShape.{all, evaluating}
+    val plan = df.queryExecution.executedPlan
+    assert(evaluating(plan, "lead").nonEmpty, s"offset window gone:\n$plan")
+    assert(all[org.apache.spark.sql.execution.window.WindowGroupLimitExec](plan).isEmpty &&
+      evaluating(plan, "row_number").isEmpty,
+      s"latest-per-key regressed to a top-1 sort:\n$plan")
+    assert(evaluating(plan, "max_by").isEmpty, s"regressed to SortAggregate:\n$plan")
   }
 
   test("q_scd2_history reconciles with q_upsert_merge: current versions = " +

@@ -629,6 +629,16 @@ class ExplainFrameSpec extends AnyFunSuite {
     val pats = graft.explain.MetaInsight.catPatterns(rows, "f", "g", "v", "v_mean")
     val subs = pats.select("subspace").distinct().collect().map(_.getString(0)).toSet
     assert(subs === Set("a", "*"), s"unexpected subspaces: $subs")
+    // the trend family of the same scope counts the same subspaces, as
+    // the auto-search and MetaInsight.sql do
+    val dated = Seq(
+      (Some("a"), "2024-01-05", 1.0), (Some("a"), "2024-02-05", 2.0), (Some("a"), "2024-03-05", 3.0),
+      (None: Option[String], "2024-01-09", 9.0), (None: Option[String], "2024-03-09", 1.0))
+      .toDF("f", "d", "v").withColumn("d", to_date(col("d")))
+    val trend = graft.explain.MetaInsight.trendPatterns(dated, "f", month(col("d")), "d_month",
+      "v", "v_mean")
+    val trendSubs = trend.select("subspace").distinct().collect().map(_.getString(0)).toSet
+    assert(trendSubs === Set("a", "*"), s"unexpected trend subspaces: $trendSubs")
   }
 
   test("metainsight highlights skip cells whose metric is NULL") {
@@ -677,36 +687,43 @@ class ExplainFrameSpec extends AnyFunSuite {
 
   test("gathered-cell cardinality guard fails fast on ID-like keys") {
     import spark.implicits._
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     val before = graft.util.Guard.MaxGatheredCells
     try {
       graft.util.Guard.MaxGatheredCells = 10L
-      // 20 groups for one measure > bound 10 -> diagnosable error, not OOM
+      // 20 groups for one measure > bound 10 -> diagnosable error, not
+      // OOM. Spread over 4 partitions of 5 rows, no partition passes the
+      // bound: the driver's merge fails as it takes the 11th cell
       val m = (1 to 20).map(i => ("m", s"g$i", i.toDouble)).toDF("measure", "grp", "v")
+        .repartition(4)
       val e = intercept[Exception](graft.explain.GroupByExplain.zdev(m).collect())
-      def msgs(t: Throwable): Seq[String] =
-        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(e).exists(_.contains("the merged partials gathered 11 cells (bound 10)")),
+        s"wrong error: $e")
       assert(msgs(e).exists(_.contains("ID-like")), s"wrong error: $e")
       // under the bound the same plan runs (guard is transparent)
       graft.util.Guard.MaxGatheredCells = 100L
       assert(graft.explain.GroupByExplain.zdev(m).count() === 20)
 
-      // FEDEx and outlier explanations gather their count table / cube
-      // on the driver: an ID-like key must fail with the same diagnosis,
-      // and the only collect that ran must be bounded at cap + 1 rows
+      // FEDEx, outlier and MetaInsight explanations gather their count
+      // table / cube / cells on the driver: an ID-like key must fail with
+      // the same diagnosis, from a partition that stopped at the cell one
+      // past the bound, so no partition returns more than cap + 1 cells
       graft.util.Guard.MaxGatheredCells = 10L
       val lineitem = graft.util.D.t(spark, sf, "lineitem")
-      val fedex = collectLimits(intercept[Exception](graft.explain.Fedex.filterDeviation(
-        graft.explain.Fedex.binCountsFiltered(lineitem, col("l_quantity") >= 30,
-          Seq(graft.explain.Fedex.Attr("l_orderkey", numeric = false))))))
-      val outlier = collectLimits(intercept[Exception](graft.explain.Outlier.explain(
-        lineitem, "l_orderkey", "l_extendedprice", "1", 1, Seq("l_quantity"))))
-      val metainsight = collectLimits(intercept[Exception](
-        ExplainFrame(lineitem, "lineitem").explainMetaInsightAuto(filterDims = Seq("l_returnflag"),
-          breakdowns = Seq("l_orderkey"), measures = Seq("l_quantity"))))
-      for ((name, (err, limits)) <- Seq("fedex" -> fedex, "outlier" -> outlier,
-          "metainsight" -> metainsight)) {
+      val failures = Seq(
+        "fedex" -> intercept[Exception](graft.explain.Fedex.filterDeviation(
+          graft.explain.Fedex.binCountsFiltered(lineitem, col("l_quantity") >= 30,
+            Seq(graft.explain.Fedex.Attr("l_orderkey", numeric = false))))),
+        "outlier" -> intercept[Exception](graft.explain.Outlier.explain(
+          lineitem, "l_orderkey", "l_extendedprice", "1", 1, Seq("l_quantity"))),
+        "metainsight" -> intercept[Exception](
+          ExplainFrame(lineitem, "lineitem").explainMetaInsightAuto(filterDims = Seq("l_returnflag"),
+            breakdowns = Seq("l_orderkey"), measures = Seq("l_quantity"))))
+      for ((name, err) <- failures) {
         assert(msgs(err).exists(_.contains("ID-like")), s"$name: wrong error: $err")
-        assert(limits === Seq(Some(11)), s"$name: collects were not bounded at cap + 1: $limits")
+        assert(msgs(err).exists(_.contains("a partition gathered 11 cells (bound 10)")),
+          s"$name: a partition held more than cap + 1 cells: $err")
       }
     } finally graft.util.Guard.MaxGatheredCells = before
   }
@@ -734,38 +751,50 @@ class ExplainFrameSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  /** Runs `f` and returns its result with the row limit of every Dataset
-    * action it ran (None for an action without a CollectLimit). */
-  private def collectLimits[T](f: => T): (T, Seq[Option[Int]]) = {
-    import org.apache.spark.sql.execution.CollectLimitExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    val helper = new AdaptiveSparkPlanHelper {}
-    val (out, plans) = actions(f)
-    (out, plans.map(p => helper.collect(p) { case c: CollectLimitExec => c.limit }.headOption))
-  }
-
   test("driver-finished explanations consume without a Spark job") {
     import org.apache.spark.sql.catalyst.expressions.Cast
-    import org.apache.spark.sql.execution.ExpandExec
+    import org.apache.spark.sql.execution.{ExpandExec, GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    import graft.util.PlanShape.all
     val o = graft.util.D.t(spark, sf, "orders")
     val lineitem = graft.util.D.t(spark, sf, "lineitem")
-    // the auto-search's only action is its bounded cells collect, whose
-    // double→decimal casts sit below the grouping sets' Expand: they run
-    // once per source row, not once per grouping set
-    val (auto, plans) = actions(ExplainFrame(o, "orders").explainMetaInsightAuto(topK = 5,
-      measures = Seq("o_totalprice")))
-    import graft.util.PlanShape.all
-    import org.apache.spark.sql.execution.SparkPlan
-    assert(plans.size === 1, s"auto-search ran ${plans.size} actions")
-    val nodes = all[SparkPlan](plans.head)
-    val expand = all[ExpandExec](plans.head)
-    assert(expand.size === 1, s"expected one Expand: ${plans.head}")
-    val below = all[SparkPlan](expand.head.child).toSet
+    // every gather is one job of one stage that shuffles nothing: the
+    // auto-search one pass, FEDEx and outlier a min/max pass and a count
+    // pass, the groupby melt one pass
+    val explained = {
+      val meter = new Bench.Meter(spark)
+      try Seq[(String, Int, () => Any)](
+        ("metainsight auto", 1, () => ExplainFrame(o, "orders").explainMetaInsightAuto(topK = 5,
+          measures = Seq("o_totalprice"))),
+        ("fedex", 2, () => ExplainFrame(lineitem, "lineitem").filter(col("l_quantity") >= 30)
+          .explainFedex(topK = 3)),
+        ("outlier", 2, () => ExplainFrame(o, "orders").groupBy("o_orderpriority")
+          .mean("o_totalprice").explainOutlier("1-URGENT", "high")),
+        ("groupby", 1, () => ExplainFrame(o, "orders").groupBy("o_orderpriority")
+          .mean("o_totalprice").explainFedex(topK = 3))
+      ).map { case (name, jobs, f) =>
+        meter.drain(); meter.reset()
+        val (_, plans) = actions(f())
+        meter.drain()
+        assert(meter.jobs.get === jobs.toLong, s"$name: ${meter.jobs.get} jobs")
+        assert(meter.stages.get === jobs.toLong, s"$name: ${meter.stages.get} stages")
+        assert(meter.shuffleBytes.get === 0L, s"$name: ${meter.shuffleBytes.get} shuffle bytes")
+        assert(plans.size === jobs, s"$name ran ${plans.size} actions")
+        name -> plans
+      }.toMap
+      finally meter.close()
+    }
+    // the auto-search's pass casts its measure to decimal once per source
+    // row: one cast, and no Expand or Generate multiplying rows under it
+    val plan = explained("metainsight auto").head
     def decimalCasts(p: SparkPlan) = p.expressions.flatMap(_.collect {
       case c: Cast if c.child.dataType == DoubleType && c.dataType.isInstanceOf[DecimalType] => c })
-    assert(nodes.filterNot(below).flatMap(decimalCasts).isEmpty, "a decimal cast runs above the Expand")
-    assert(below.toSeq.flatMap(decimalCasts).nonEmpty, "no decimal cast below the Expand")
+    assert(all[SparkPlan](plan).flatMap(decimalCasts).size === 1, s"decimal casts in $plan")
+    assert(all[ExpandExec](plan).isEmpty && all[GenerateExec](plan).isEmpty &&
+      all[ShuffleExchangeLike](plan).isEmpty, s"rows multiplied or shuffled: $plan")
+    val auto = ExplainFrame(o, "orders").explainMetaInsightAuto(topK = 5,
+      measures = Seq("o_totalprice"))
     val meter = new Bench.Meter(spark)
     try {
       val built = Seq(

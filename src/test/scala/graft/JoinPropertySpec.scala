@@ -90,23 +90,30 @@ class JoinPropertySpec extends AnyFunSuite {
     // dim behaves like a corpus-sized side): a union of one broadcast
     // hash join (the EXPLICIT hot-slice hint survives the conf) and one
     // shuffle join (cold remainder) — hot rows never enter the exchange
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec,
+      SortMergeJoinExec}
+    import graft.util.PlanShape.all
+    def shape(p: SparkPlan) = (all[BroadcastHashJoinExec](p).size, all[UnionExec](p).size,
+      all[SortMergeJoinExec](p).size + all[ShuffledHashJoinExec](p).size)
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val plan = graft.util.Scale.skewJoin(fact, dim, "k", "dk",
           sampleMod = 5, hotSampleMin = 100, maxHotKeys = 16)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastHashJoin"), s"no broadcast hot path:\n${plan.take(1200)}")
-      assert(plan.contains("Union"), s"no hot/cold union:\n${plan.take(1200)}")
-      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"),
-        s"no shuffle cold path:\n${plan.take(1200)}")
+        .queryExecution.executedPlan
+      val (bhj, unions, shuffled) = shape(plan)
+      assert(bhj > 0, s"no broadcast hot path:\n$plan")
+      assert(unions > 0, s"no hot/cold union:\n$plan")
+      assert(shuffled > 0, s"no shuffle cold path:\n$plan")
       // no detected skew -> the plan IS the plain join (no union, no split)
       val uniformPlan = graft.util.Scale.skewJoin(
           (1 to 2000).map(i => (i.toLong % 400, i.toLong)).toDF("k", "payload"),
           dim, "k", "dk", sampleMod = 5, hotSampleMin = 100, maxHotKeys = 16)
-        .queryExecution.executedPlan.toString
-      assert(!uniformPlan.contains("Union"))
-      assert(!uniformPlan.contains("BroadcastHashJoin"))
+        .queryExecution.executedPlan
+      val (uniformBhj, uniformUnions, _) = shape(uniformPlan)
+      assert(uniformUnions === 0, s"a uniform key split:\n$uniformPlan")
+      assert(uniformBhj === 0, s"a uniform key broadcast:\n$uniformPlan")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 }

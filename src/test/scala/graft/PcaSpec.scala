@@ -120,12 +120,17 @@ class PcaSpec extends AnyFunSuite {
   }
 
   test("gramMatrix plans scan-local: no self-join, no extra shuffle of the corpus") {
-    val plan = graft.sim.Ann.gramMatrix(df).queryExecution.executedPlan.toString
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin") &&
-      !plan.contains("BroadcastHashJoin"),
-      s"gramMatrix should not join:\n${plan.take(1500)}")
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec,
+      SortMergeJoinExec}
+    import graft.util.PlanShape.all
+    val plan = graft.sim.Ann.gramMatrix(df).queryExecution.executedPlan
+    assert(all[SortMergeJoinExec](plan).isEmpty && all[ShuffledHashJoinExec](plan).isEmpty &&
+      all[BroadcastHashJoinExec](plan).isEmpty, s"gramMatrix should not join:\n$plan")
     // exactly the aggregation exchange (2080 partials/task), nothing else
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(exchanges <= 1, s"unexpected extra shuffles ($exchanges):\n${plan.take(1500)}")
+    val exchanges = all[ShuffleExchangeLike](plan)
+      .count(_.outputPartitioning.isInstanceOf[HashPartitioning])
+    assert(exchanges <= 1, s"unexpected extra shuffles ($exchanges):\n$plan")
   }
 }
