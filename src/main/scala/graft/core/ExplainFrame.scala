@@ -1,10 +1,11 @@
 package graft.core
 
 import graft.explain._
-import graft.util.{D, Mirror}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.util.{D, Guard, Mirror}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, DateType, DoubleType, LongType, NumericType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{BinaryType, DataType, DateType, DoubleType, LongType, NumericType, StringType,
+  StructField, StructType, TimestampNTZType, TimestampType}
 
 /** Provenance of the last query operation on an [[ExplainFrame]] — the
   * Spark-native equivalent of pd-explain's `operation` field on
@@ -121,38 +122,67 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
     }
   }
 
+  /** pandas `value_counts`: (c, cnt, share) per distinct value of `c`,
+    * by cnt descending and then by value ascending; share =
+    * round(cnt / rows, 6). Values group as Spark's groupBy groups them:
+    * NULL is its own group, −0.0 is 0.0 and every NaN is one NaN.
+    *
+    * Scale: one exchange-free pass ([[Guard.gatherCells]]) counts the
+    * groups, bounded by [[Guard.MaxGatheredCells]] (an ID-like column
+    * fails with the shared "ID-like" error); the shares and the order
+    * finish on the driver, and the result is a LocalRelation, so
+    * consuming it launches no Spark job. */
   def valueCounts(c: String): DataFrame = {
-    // total re-sums the group counts: identical subtrees → one scan via
-    // exchange reuse (a direct df count would prune differently and
-    // scan again)
-    val grouped = df.groupBy(c).agg(count(lit(1)).as("cnt"))
-    val total = grouped.agg(sum(col("cnt")).as("total"))
-    grouped.crossJoin(broadcast(total))
-      .select(col(c), col("cnt"), D.r(col("cnt").cast(DoubleType) / col("total")).as("share"))
-      .orderBy(col("cnt").desc, col(c))
+    val (keys, cells) = Guard.gatherCells(Guard.groupingForm(df, Seq(c)), Seq(struct(col(c))),
+      "ExplainFrame.valueCounts")
+    val total = cells.map(_.n).sum
+    // cells come in ascending key order, so a stable sort by count
+    // breaks count ties by value
+    Mirror.Table(StructType(Seq(keys(0).head, StructField("cnt", LongType, nullable = false),
+        StructField("share", DoubleType))),
+      cells.map(x => Row(x.key.get(0), x.n, Mirror.r(x.n.toDouble / total))))
+      .orderBy(Mirror.desc("cnt")).toDF(df.sparkSession)
   }
 
+  /** pandas `describe`: (col, n, mean, std, min_v, max_v) per column of
+    * `cols`, by column name (a repeated column repeats its row). n counts
+    * the non-NULL values; mean and std (sample, NULL for n ≤ 1) come from
+    * exact decimal moments rounded to 6 dp ([[D.dsum]], [[D.dsumsq]],
+    * [[D.varSamp]]); min_v and max_v take the common type Spark's
+    * `array(struct…)` coercion gives the columns' types.
+    *
+    * Scale: one exchange-free pass ([[Guard.gatherCells]]) into a single
+    * cell holding each column's count, moments and extrema; the stats
+    * finish on the driver through [[Mirror]], and the result is a
+    * LocalRelation, so consuming it launches no Spark job. */
   def describeStats(cols: Seq[String]): DataFrame = {
-    // ONE scan for all columns; per-column rows explode from the single
-    // aggregated row (per-column aggs unioned would scan once per
-    // column). Aliases carry the column INDEX so a repeated column
-    // (legal in the pandas mirror) stays unambiguous and yields its
-    // duplicate row as before.
-    val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
-      val n = count(col(c))
-      val sm = D.emit6(D.dsum(col(c)))
-      val sq = D.dsumsq(col(c))
-      Seq(n.as(s"__${i}_n"), D.r(sm / n).as(s"__${i}_mean"),
-        D.r(sqrt(D.varSamp(sm, sq, n))).as(s"__${i}_std"),
-        min(col(c)).as(s"__${i}_min_v"), max(col(c)).as(s"__${i}_max_v"))
+    val src = df.select(cols.zipWithIndex.map { case (c, i) => col(c).as(s"c$i") }: _*)
+    val xs = src.columns.toSeq.map(col)
+    val (_, cells) = Guard.gatherCells(src, Seq(struct()), "ExplainFrame.describeStats",
+      flags = xs.map(_.isNotNull), sums = xs.flatMap(x => Seq(x.cast(D.dec25), D.dmul(x, x))),
+      extrema = xs)
+    val types = src.schema.map(_.dataType)
+    def schemaOf(t: DataType) = StructType(Seq(StructField("col", StringType, nullable = false),
+      StructField("n", LongType, nullable = false), StructField("mean", DoubleType),
+      StructField("std", DoubleType), StructField("min_v", t), StructField("max_v", t)))
+    // the rows' common type, as array(struct(...)) coerces them
+    val schema = Mirror.widerType(types.map(schemaOf)).getOrElse(throw new IllegalArgumentException(
+      s"describeStats: the columns ${cols.mkString(", ")} (${types.mkString(", ")}) have no common type"))
+      .asInstanceOf[StructType]
+    val cell = cells.headOption
+    val rows = cols.indices.map { i =>
+      val n = cell.fold(0L)(_.flags(i))
+      // emit6(dsum) and emit0(Σ dmul(x, x)), NULL without values
+      def emitted(j: Int, precision: Int, scale: Int) = cell.map(_.sums(j)).filter(_ != null)
+        .map(Mirror.decCast(_, precision, scale).doubleValue)
+      val (sm, sq) = (emitted(2 * i, 25, 6), emitted(2 * i + 1, 38, 0))
+      val mean = sm.map(v => Mirror.r(v / n))
+      val std = for (v <- sm; v2 <- sq if n > 1) yield Mirror.r(math.sqrt((v2 - v * v / n) / (n - 1)))
+      def typed(v: Option[Any]) = Mirror.cast(v.orNull, types(i), schema("min_v").dataType)
+      Row(cols(i), n, mean.map(Double.box).orNull, std.map(Double.box).orNull,
+        typed(cell.map(_.lo(i))), typed(cell.map(_.hi(i))))
     }
-    df.agg(aggs.head, aggs.tail: _*)
-      .select(explode(array(cols.zipWithIndex.map { case (c, i) => struct(lit(c).as("col"),
-        col(s"__${i}_n").as("n"), col(s"__${i}_mean").as("mean"), col(s"__${i}_std").as("std"),
-        col(s"__${i}_min_v").as("min_v"), col(s"__${i}_max_v").as("max_v")) }: _*)).as("p"))
-      .select(col("p.col").as("col"), col("p.n").as("n"), col("p.mean").as("mean"),
-        col("p.std").as("std"), col("p.min_v").as("min_v"), col("p.max_v").as("max_v"))
-      .orderBy("col")
+    Mirror.Table(schema, rows).orderBy(Mirror.asc("col")).toDF(df.sparkSession)
   }
 
   // ------------------------------------------------------- explainers ---

@@ -325,7 +325,7 @@ object Correlation {
     val (_, gathered) = graft.util.Guard.gatherCells(
       graft.util.Guard.groupingForm(df.select(col(cat).as("ca") +: col(cat2).as("cb") +:
         moments.map { case (n, e) => e.cast(DoubleType).as(n) }: _*), Seq("ca", "cb")),
-      Seq(struct(col("ca"), col("cb"))), "Correlation.suite", sums = moments.map(m => col(m._1)))
+      Seq(struct(col("ca"), col("cb"))), "Correlation.suite", sums = moments.map(m => col(m._1).cast(D.dec25)))
     final case class Cell(ca: Any, cb: Any, o: Long, sums: Map[String, java.math.BigInteger])
     val cells = gathered.map(c => Cell(Mirror.groupKey(c.key.get(0)), Mirror.groupKey(c.key.get(1)),
       c.n, moments.map(_._1).zip(c.sums).collect { case (n, v) if v != null => n -> v.unscaledValue }.toMap))

@@ -1,6 +1,6 @@
 package graft.explain
 
-import graft.util.{Guard, Mirror}
+import graft.util.{D, Guard, Mirror}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -52,7 +52,7 @@ object GroupByExplain {
                           aggCol: String, meanName: String): Mirror.Table = {
     val (schemas, cells) = Guard.gatherCells(Guard.groupingForm(src, keys),
       Seq(struct(keys.map(col) :+ grp(keys.map(col)).as("grp"): _*)), "GroupByExplain.melt",
-      sums = Seq(col(aggCol)))
+      sums = Seq(col(aggCol).cast(D.dec25)))
     Mirror.Table(
       StructType(Seq(StructField("measure", StringType, nullable = false), schemas(0).last,
         StructField("v", DoubleType, nullable = true))),

@@ -164,25 +164,31 @@ object ManyToOne {
   }
 
   /** Per-label centroid rows (label, mean per numeric attr), 6dp-exact
-    * decimal means — shared by the dist and silhouette rankings. The
-    * collect is limit()-bounded: at most cap+1 centroid rows ever reach
-    * the driver, and exceeding the cap fails fast instead of collecting
-    * one row per distinct label of an ID-like column. */
+    * decimal means — shared by the dist and silhouette rankings. One
+    * exchange-free pass ([[graft.util.Guard.gatherCells]]) gathers each
+    * label's non-NULL counts and exact decimal sums, and the means
+    * finish on the driver: mean = round(emit6(Σ cast(a AS DECIMAL(25,6)))
+    * / count(a), 6), NULL without values. More than
+    * [[graft.util.Guard.MaxRankedLabels]] labels fail fast instead of
+    * ranking one centroid per distinct value of an ID-like column. */
   private def centroidRows(src: DataFrame, labelExpr: Column,
-                           numAttrs: Seq[String], what: String): Array[org.apache.spark.sql.Row] = {
-    val meanCols = numAttrs.map(a => graft.util.D.r(
-      graft.util.D.emit6(sum(col(a).cast(graft.util.D.dec25))) / count(col(a)), 6).as(s"m_$a"))
+                           numAttrs: Seq[String], what: String): Seq[org.apache.spark.sql.Row] = {
+    val (_, cells) = graft.util.Guard.gatherCells(src, Seq(when(labelExpr.isNotNull,
+      struct(labelExpr.as("label")))), "ManyToOne.centroids",
+      flags = numAttrs.map(col(_).isNotNull), sums = numAttrs.map(col(_).cast(graft.util.D.dec25)))
     val cap = graft.util.Guard.MaxRankedLabels
-    val rowsAll = src.filter(labelExpr.isNotNull)
-      .groupBy(labelExpr.as("label")).agg(meanCols.head, meanCols.tail: _*)
-      .limit(cap + 1).collect()
-    if (rowsAll.length > cap)
+    if (cells.size > cap)
       throw new IllegalArgumentException(
         s"$what pruning found more than $cap distinct labels. The label column " +
           "looks ID-like — many_to_one label ranking is sized for " +
           "explanation-grade label cardinalities. Use a coarser label, or " +
           "raise graft.util.Guard.MaxRankedLabels if the cardinality is intentional.")
-    rowsAll
+    cells.map(c => org.apache.spark.sql.Row(c.key.get(0) +: numAttrs.indices.map { i =>
+      val sm = c.sums(i)
+      if (sm == null) null
+      else java.lang.Double.valueOf(graft.util.Mirror.r(
+        graft.util.Mirror.decCast(sm, 25, 6).doubleValue / c.flags(i), 6))
+    }: _*))
   }
 
   /** pruning_method='max_silhouette'|'min_silhouette', re-expressed

@@ -294,7 +294,7 @@ object MetaInsight {
     val sets = pairs.map { case (fi, bi) => struct(col(s"__f$fi") +: bKey(bi): _*) } ++
       bs.indices.map(bi => struct(bKey(bi): _*))
     val (_, gathered) = graft.util.Guard.gatherCells(projected, sets, "MetaInsight.autoSearch",
-      sums = ms.indices.map(i => col(s"__v$i")))
+      sums = ms.indices.map(i => col(s"__v$i").cast(D.dec25)))
     final case class Cell(sub: String, b: String, x: Integer, cnt: Long,
                           sm: IndexedSeq[java.math.BigDecimal])
     val cellsOf: Map[(Int, Int), Seq[Cell]] = gathered.map { c =>

@@ -2,7 +2,7 @@ package graft.explain
 
 import java.math.{BigDecimal => JBigDecimal}
 
-import graft.util.{Guard, Mirror}
+import graft.util.{D, Guard, Mirror}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -57,7 +57,7 @@ object Outlier {
     } :+ struct(col(groupCol), lit(0), isT)
     // the measure is summed as its double value cast to DECIMAL(25,6)
     val (_, cube) = Guard.gatherCells(keyed, sets, "Outlier.explain",
-      sums = Seq(col(aggCol).cast(DoubleType)))
+      sums = Seq(col(aggCol).cast(DoubleType).cast(D.dec25)))
     explainRows(cube.map(c => Cell(Mirror.groupKey(c.key.get(0)), (attrs :+ "__total__")(c.set),
       String.valueOf(c.key.get(1)), c.n, c.sums(0), c.key.get(2) == true)), dir)
   }

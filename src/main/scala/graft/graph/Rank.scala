@@ -2,6 +2,7 @@ package graft.graph
 
 import graft.util.D.{dsumd, r}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -18,20 +19,21 @@ import org.apache.spark.sql.types.LongType
   * redistributed — documented contract, mirrored in the oracle.
   *
   * Scale: one iteration = the Pregel shape as two edge-keyed shuffles —
-  * outdeg (map-side combined count on src) and the contribution
-  * aggregation on dst; the mass table is node-cardinality. Nothing is
+  * outdeg (a window count over src) and the contribution aggregation on
+  * dst; the mass table is node-cardinality. Nothing is
   * ever broadcast at corpus size and no iteration's plan grows with
   * iteration count ([[pagerankFit]] truncates lineage per round the
   * dup_clusters/kmeansFit way). */
 object Rank {
 
   /** Edges with their loop-INVARIANT out-degree attached:
-    * (src, dst, outdeg). The outdeg aggregation does not depend on the
-    * iteration's masses, so computing it once and reusing the joined
-    * table across iterations removes one full edge aggregation + join
-    * per round (guide §2.4). */
+    * (src, dst, outdeg). The outdeg count does not depend on the
+    * iteration's masses, so computing it once and reusing the table
+    * across iterations removes one full edge count per round (guide
+    * §2.4). A window count over src: one src-keyed pass, with no
+    * aggregate joined back to the edges. */
   private def withOutdeg(edges: DataFrame): DataFrame =
-    edges.join(edges.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
+    edges.withColumn("outdeg", count(lit(1)).over(Window.partitionBy("src")))
 
   /** The per-iteration work over a prepared (src, dst, outdeg) edge
     * table — the join order and every expression are identical to the

@@ -72,20 +72,21 @@ object Pipeline extends QFamily {
     * engines derive the same edges from doc_id): node v emits
     * 1 + v%3 edges to (7v + 13i + 1) mod N, semi-joined to existing
     * ids so a non-contiguous id space just drops the missing targets
-    * (documented mass-evaporation contract). N = max id + 1 is ONE
-    * bounded long collected once (the qcut convention). */
+    * (documented mass-evaporation contract). N = max id + 1 comes from
+    * one exchange-free extrema pass as a literal (NULL over an empty
+    * corpus, which then has no edges). */
   private def pagerankIters(s: org.apache.spark.sql.SparkSession, dir: String,
       iters: Int): org.apache.spark.sql.DataFrame = {
     // the edge table is materialized once inside
     // Rank.pagerankIterations, so the node scan needs no checkpoint of
-    // its own: it is read by the max-id collect, the edge checkpoint and
+    // its own: it is read by the max-id pass, the edge checkpoint and
     // each iteration's left join
     val ids = t(s, dir, "documents").select(col("doc_id").as("node_id"))
-    val n = ids.agg(max(col("node_id"))).head().getLong(0) + 1
+    val n = graft.util.Guard.extrema(ids, Seq("node_id"), "Pipeline.pagerank").head._2 + 1
     val eraw = ids
       .select(col("node_id").as("src"),
         explode(sequence(lit(0L), pmod(col("node_id"), lit(3L)))).as("i"))
-      .select(col("src"), pmod(col("src") * 7 + col("i") * 13 + 1, lit(n)).as("dst"))
+      .select(col("src"), pmod(col("src") * 7 + col("i") * 13 + 1, n).as("dst"))
     val edges = eraw.join(ids.select(col("node_id").as("dst")), Seq("dst"), "left_semi")
     graft.graph.Rank.pagerankIterations(ids, edges, iters)
       .select(col("node_id").as("doc_id"), col("n_in"), col("mass"))

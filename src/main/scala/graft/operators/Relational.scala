@@ -289,17 +289,9 @@ object Relational extends QFamily {
       """SELECT l_returnflag, COUNT(*) AS cnt,
         |  ROUND(CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM lineitem), 6) AS share
         |FROM lineitem GROUP BY l_returnflag ORDER BY cnt DESC, l_returnflag""".stripMargin) { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-      // scalar total via broadcast cross join (NOT a global window, which
-      // would single-partition the data at scale); the total re-sums the
-      // group counts so both subtrees share one scan via exchange reuse
-      val grouped = li.groupBy("l_returnflag").agg(count(lit(1)).as("cnt"))
-      val total = grouped.agg(sum(col("cnt")).as("total"))
-      grouped
-        .crossJoin(broadcast(total))
-        .select(col("l_returnflag"), col("cnt"),
-          r(col("cnt").cast("double") / col("total")).as("share"))
-        .orderBy(col("cnt").desc, col("l_returnflag"))
+      // the notebook operation itself: a LocalRelation already in
+      // (cnt desc, value) order, so no sort is planned over it
+      graft.core.ExplainFrame(t(s, dir, "lineitem"), "lineitem").valueCounts("l_returnflag")
     },
 
     // ---- describe ------------------------------------------------------

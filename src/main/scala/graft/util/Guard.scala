@@ -14,15 +14,20 @@ import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, Literal, 
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, StructType}
 
 /** Fail-fast guards for documented cardinality contracts, and the
-  * bounded gather the driver-finished explainers build their tables with.
+  * bounded gather the driver-finished explainers and notebook operations
+  * build their tables with.
   *
   * The explainers gather explanation-grade cell sets — bins and
   * low-cardinality dimensions — on the driver through one exchange-free
-  * kernel ([[gatherCells]]), or into one row per group via collect_list
+  * kernel ([[gatherCells]]: per cell a row count, flag counts, exact
+  * decimal sums and extrema), or into one row per group via collect_list
   * ([[cellCap]]: the single-scope MetaInsight.catPatternsKeyed). The
+  * notebook operations `valueCounts` (one cell per value) and
+  * `describeStats` (one cell holding every column's moments and extrema)
+  * build from the same kernel, as do many-to-one's label centroids. The
   * contract "don't feed ID-like grouping keys" is enforced, not only
   * documented: the kernel fails a partition, or the driver's merge, on
   * the cell one past the bound, and the in-plan cap is one comparison
@@ -39,13 +44,13 @@ object Guard {
     * wants huge groups can raise it knowingly. */
   @volatile var MaxGatheredCells: Long = 100000L
 
-  /** Max label centroids the many_to_one dist-pruning ranking may pull
-    * to the driver (ManyToOne.distLabels). The reference's semantics
-    * bound label cardinality at dozens; the cap turns an ID-like label
-    * column (which would otherwise collect one centroid row per
-    * distinct value, unboundedly) into an immediate, diagnosable error.
-    * The collect itself is limit()-bounded to cap+1 rows, so driver
-    * memory is protected even before the check fires. */
+  /** Max label centroids the many_to_one dist and silhouette pruning may
+    * rank (ManyToOne.distLabels, silhouetteLabels). The reference's
+    * semantics bound label cardinality at dozens; the cap turns an
+    * ID-like label column (which would otherwise rank one centroid per
+    * distinct value) into an immediate, diagnosable error. The centroids
+    * are gathered through [[gatherCells]], so [[MaxGatheredCells]] bounds
+    * driver memory before this check fires. */
   @volatile var MaxRankedLabels: Int = 1024
 
   /** Max rows a single self-join block may hold in the exact (bits = 0)
@@ -99,10 +104,11 @@ object Guard {
   }
 
   /** One cell of a gathered table: its set, its key, its row count, its
-    * count of rows per flag, and its exact sum per summed column (NULL
-    * when every summed value is NULL). */
+    * count of rows per flag, its exact sum per summed column (NULL when
+    * every summed value is NULL), and the min and max of each extremum
+    * column (NULL when it has no value). */
   final case class Cell(set: Int, key: Row, n: Long, flags: IndexedSeq[Long],
-                        sums: IndexedSeq[JBigDecimal])
+                        sums: IndexedSeq[JBigDecimal], lo: IndexedSeq[Any], hi: IndexedSeq[Any])
 
   /** A cell while it is folded; a row enters as a one-row Acc. */
   private final class Acc(nFlags: Int, nSums: Int, nExt: Int) extends Serializable {
@@ -126,10 +132,11 @@ object Guard {
   private type Partial = Array[JHashMap[UnsafeRow, Acc]]
 
   /** The gathered projection's columns: set key structs of `widths`
-    * fields, flags, DECIMAL(25,6) sums, extrema. */
+    * fields, flags, decimal sums, extrema. */
   private final case class Layout(schema: StructType, widths: IndexedSeq[Int], nFlags: Int,
-                                  nSums: Int, extTypes: IndexedSeq[DataType], cap: Long,
-                                  site: String) {
+                                  sumTypes: IndexedSeq[DecimalType], extTypes: IndexedSeq[DataType],
+                                  cap: Long, site: String) {
+    def nSums: Int = sumTypes.size
     def ords: Array[Ordering[Any]] = extTypes.map(PhysicalDataType.ordering).toArray
     def partial: Partial = Array.fill(widths.size)(new JHashMap[UnsafeRow, Acc]())
     def tooMany(where: String, held: Long) =
@@ -147,7 +154,8 @@ object Guard {
         for (i <- 0 until nFlags)
           one.flags(i) = if (!row.isNullAt(f0 + i) && row.getBoolean(f0 + i)) 1 else 0
         for (i <- 0 until nSums) one.sums(i) =
-          if (row.isNullAt(s0 + i)) null else row.getDecimal(s0 + i, 25, 6).toJavaBigDecimal
+          if (row.isNullAt(s0 + i)) null
+          else row.getDecimal(s0 + i, sumTypes(i).precision, sumTypes(i).scale).toJavaBigDecimal
         for (i <- extTypes.indices) {
           one.lo(i) = if (row.isNullAt(e0 + i)) null
             else InternalRow.copyValue(row.get(e0 + i, extTypes(i)))
@@ -173,19 +181,22 @@ object Guard {
     * its rows into a partial table, merged on the driver as the tasks
     * finish. A row joins set i under the key `sets(i)` (a struct; NULL
     * leaves it out), and a cell keeps its row count, its count of rows
-    * where each of `flags` holds, the sum of each of `sums` as
-    * `sum(cast(x AS DECIMAL(25,6)))`, and the min and max of each of
+    * where each of `flags` holds, the exact sum of each of `sums` (DECIMAL
+    * columns, each read at its own type), and the min and max of each of
     * `extrema` in its own type (NULL skipped, NaN largest). Keys are equal
     * when their binary rows are: grouping keys come in [[groupingForm]].
     * A partition fails on its cell one past [[MaxGatheredCells]], and the
     * driver on the merged table's, so it holds at most one partial beyond
     * the bound. The job runs as one SQL execution named `site`. */
   private def pass(src: DataFrame, sets: Seq[Column], flags: Seq[Column], sums: Seq[Column],
-                   extrema: Seq[Column], site: String): (StructType, Partial) = {
-    val proj = src.select(sets ++ flags ++ sums.map(_.cast(D.dec25)) ++ extrema: _*)
+                   extrema: Seq[Column], site: String): (Layout, Partial) = {
+    val proj = src.select(sets ++ flags ++ sums ++ extrema: _*)
     val schema = proj.schema
     val layout = Layout(schema, sets.indices.map(i => schema(i).dataType.asInstanceOf[StructType].size),
-      flags.size, sums.size, extrema.indices.map(i => schema(schema.size - extrema.size + i).dataType),
+      flags.size, sums.indices.map(i => schema(sets.size + flags.size + i).dataType match {
+        case d: DecimalType => d
+        case t => throw new IllegalArgumentException(s"$site: sum $i is $t, not a DECIMAL")
+      }), extrema.indices.map(i => schema(schema.size - extrema.size + i).dataType),
       MaxGatheredCells, site)
     import layout.{cap, tooMany}
     val (merged, o) = (layout.partial, layout.ords)
@@ -214,33 +225,44 @@ object Guard {
       if (failure != null) { job.cancel(); throw failure }
       job.value.get.get
     }
-    (schema, merged)
+    (layout, merged)
   }
 
   /** The cells of `sets` over `src` ([[pass]]) with each set's key
     * schema, by set and then by key in Spark's ascending order: a
     * canonical order, so ties in a driver-side sort break the same way
-    * at any partition count. */
+    * at any partition count. A sum that does not fit Spark's sum type
+    * for its column (precision + 10, at most 38) raises, as the ANSI sum
+    * does. */
   def gatherCells(src: DataFrame, sets: Seq[Column], site: String, flags: Seq[Column] = Nil,
-                  sums: Seq[Column] = Nil): (IndexedSeq[StructType], Seq[Cell]) = {
-    val (schema, merged) = pass(src, sets, flags, sums, Nil, site)
-    val keys = sets.indices.map(i => schema(i).dataType.asInstanceOf[StructType])
+                  sums: Seq[Column] = Nil, extrema: Seq[Column] = Nil): (IndexedSeq[StructType], Seq[Cell]) = {
+    val (layout, merged) = pass(src, sets, flags, sums, extrema, site)
+    val keys = sets.indices.map(i => layout.schema(i).dataType.asInstanceOf[StructType])
+    val sumTypes = layout.sumTypes.map(t =>
+      DecimalType(math.min(t.precision + 10, DecimalType.MAX_PRECISION), t.scale))
+    def summed(a: Acc) = a.sums.toIndexedSeq.zip(sumTypes).map { case (v, t) =>
+      if (v != null && v.precision > t.precision)
+        throw new ArithmeticException(s"$site: a sum of $v does not fit ${t.sql}")
+      v
+    }
+    val toScala = layout.extTypes.map(CatalystTypeConverters.createToScalaConverter)
+    def scala(vs: Array[Any]) = vs.toIndexedSeq.zip(toScala).map { case (v, f) => f(v) }
     (keys, sets.indices.flatMap { s =>
       val toRow = CatalystTypeConverters.createToScalaConverter(keys(s))
       merged(s).asScala.toSeq
         .sortBy[InternalRow](_._1)(InterpretedOrdering.forSchema(keys(s).map(_.dataType)))
-        .map { case (k, a) =>
-          Cell(s, toRow(k).asInstanceOf[Row], a.n, a.flags.toIndexedSeq, a.sums.toIndexedSeq) }
+        .map { case (k, a) => Cell(s, toRow(k).asInstanceOf[Row], a.n, a.flags.toIndexedSeq,
+          summed(a), scala(a.lo), scala(a.hi)) }
     })
   }
 
   /** Min and max of each of `cols` over `src` as literals of the
     * column's type (NULL when it has no value): a [[pass]] into one cell. */
   def extrema(src: DataFrame, cols: Seq[String], site: String): Seq[(Column, Column)] = {
-    val (schema, merged) = pass(src, Seq(struct()), Nil, Nil, cols.map(col), site)
+    val (layout, merged) = pass(src, Seq(struct()), Nil, Nil, cols.map(col), site)
     val acc = merged(0).values.asScala.headOption
     cols.indices.map { i =>
-      def typed(v: Acc => Any) = GraftShims.column(Literal(acc.map(v).orNull, schema(1 + i).dataType))
+      def typed(v: Acc => Any) = GraftShims.column(Literal(acc.map(v).orNull, layout.extTypes(i)))
       (typed(_.lo(i)), typed(_.hi(i)))
     }
   }

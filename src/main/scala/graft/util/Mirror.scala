@@ -5,14 +5,19 @@ import java.math.{BigDecimal => JBigDecimal, BigInteger, RoundingMode}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.analysis.{AnsiTypeCoercion, TypeCoercion}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Driver-side mirrors of Spark expressions, for the operators that
   * finish a gathered table in Scala (Guard.gatherCells): MetaInsight.autoSearch,
-  * Correlation.suite, Outlier.explain, the Fedex tails and
-  * GroupByExplain.zdev. Each mirror goes through the entry point the
-  * Spark expression itself uses (BigDecimal.valueOf for a double→decimal
-  * cast, StrictMath.log, UTF8String's byte order), so a driver finish is
+  * Correlation.suite, Outlier.explain, the Fedex tails, GroupByExplain.zdev,
+  * ManyToOne's centroids and ExplainFrame's valueCounts and describeStats.
+  * Each mirror goes through the entry point the Spark expression itself
+  * uses (BigDecimal.valueOf for a double→decimal cast, StrictMath.log,
+  * UTF8String's byte order, Spark's own Cast), so a driver finish is
   * bit-identical to the in-plan expression chain it replaces. The
   * operators' parity specs pin that against inline copies of the chains.
   */
@@ -29,6 +34,30 @@ object Mirror {
         s"$x cannot be represented as DECIMAL($precision, $scale)")
     d
   }
+
+  /** `d.cast(DecimalType(precision, scale))` on a decimal: rounds HALF_UP
+    * to `scale`, and a value that does not fit `precision` raises, as
+    * the ANSI cast does. */
+  def decCast(d: JBigDecimal, precision: Int, scale: Int): JBigDecimal = {
+    val c = d.setScale(scale, RoundingMode.HALF_UP)
+    if (c.precision > precision)
+      throw new ArithmeticException(s"$d cannot be represented as DECIMAL($precision, $scale)")
+    c
+  }
+
+  /** The type Spark's implicit coercion gives values of `types` that
+    * must share one (the elements of `array(…)`), under the session's
+    * ANSI setting; None when they have none. */
+  def widerType(types: Seq[DataType]): Option[DataType] =
+    if (SQLConf.get.ansiEnabled) AnsiTypeCoercion.findWiderCommonType(types)
+    else TypeCoercion.findWiderCommonType(types)
+
+  /** `lit(v).cast(to)` for a value `v` of type `from`, evaluated by
+    * Spark's own Cast. */
+  def cast(v: Any, from: DataType, to: DataType): Any =
+    if (v == null || from == to) v
+    else CatalystTypeConverters.convertToScala(Cast(Literal.create(v, from), to,
+      Some(SQLConf.get.sessionLocalTimeZone)).eval(), to)
 
   /** Σ of `castDec` terms, NULL (Scala null) over no terms, emitted as
     * double: `sum(x.cast(DecimalType(p, s))).cast(DoubleType)` with the

@@ -761,7 +761,8 @@ class ExplainFrameSpec extends AnyFunSuite {
     val lineitem = graft.util.D.t(spark, sf, "lineitem")
     // every gather is one job of one stage that shuffles nothing: the
     // auto-search one pass, FEDEx and outlier a min/max pass and a count
-    // pass, the groupby melt one pass
+    // pass, the groupby melt one pass, and so are the notebook
+    // operations valueCounts and describeStats
     val explained = {
       val meter = new Bench.Meter(spark)
       try Seq[(String, Int, () => Any)](
@@ -772,7 +773,10 @@ class ExplainFrameSpec extends AnyFunSuite {
         ("outlier", 2, () => ExplainFrame(o, "orders").groupBy("o_orderpriority")
           .mean("o_totalprice").explainOutlier("1-URGENT", "high")),
         ("groupby", 1, () => ExplainFrame(o, "orders").groupBy("o_orderpriority")
-          .mean("o_totalprice").explainFedex(topK = 3))
+          .mean("o_totalprice").explainFedex(topK = 3)),
+        ("valueCounts", 1, () => ExplainFrame(lineitem, "lineitem").valueCounts("l_returnflag")),
+        ("describeStats", 1, () => ExplainFrame(o, "orders").describeStats(
+          Seq("o_totalprice", "o_custkey")))
       ).map { case (name, jobs, f) =>
         meter.drain(); meter.reset()
         val (_, plans) = actions(f())
@@ -804,7 +808,9 @@ class ExplainFrameSpec extends AnyFunSuite {
         "outlier" -> graft.explain.Outlier.explain(lineitem, "l_returnflag",
           "l_extendedprice", "R", 1, Seq("l_quantity")),
         "fedex" -> graft.explain.Fedex.filterDeviation(graft.explain.Fedex.binCountsFiltered(
-          lineitem, col("l_quantity") >= 30, Seq(graft.explain.Fedex.Attr("l_returnflag", numeric = false)))))
+          lineitem, col("l_quantity") >= 30, Seq(graft.explain.Fedex.Attr("l_returnflag", numeric = false)))),
+        "valueCounts" -> ExplainFrame(lineitem, "lineitem").valueCounts("l_returnflag"),
+        "describeStats" -> ExplainFrame(o, "orders").describeStats(Seq("o_totalprice", "o_custkey")))
       for ((name, df) <- built) {
         meter.drain(); meter.reset()
         assert(df.collect().nonEmpty, s"$name: empty result")

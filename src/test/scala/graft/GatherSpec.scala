@@ -14,7 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * identical on the natural partitioning, on one partition and on seven
   * — with group keys that Spark's grouping folds together (−0.0 and 0.0,
   * NaNs of two bit patterns) or keeps apart (NULL), and with twin
-  * attributes whose scores tie at the topK cut. */
+  * attributes whose scores tie at the topK cut. The notebook operations
+  * `valueCounts` and `describeStats` finish on the driver from the same
+  * kernel; they are also pinned against inline copies of the in-plan
+  * chains they replaced, rows and schema (nullability included). */
 class GatherSpec extends AnyFunSuite {
   import TestSession._
 
@@ -106,5 +109,101 @@ class GatherSpec extends AnyFunSuite {
       invariant(s"auto-search topK $k")(df => ExplainFrame(df, "t").explainMetaInsightAuto(
         topK = k, filterDims = Seq("cat"), breakdowns = Seq("grp", "cat2"), measures = Seq("y"),
         minCommonness = 0.1))
+  }
+
+  // ---- the notebook operation cells ---------------------------------------
+
+  /** The in-plan `valueCounts` chain the driver finish replaced. */
+  private def valueCountsRef(df: DataFrame, c: String): DataFrame = {
+    val grouped = df.groupBy(c).agg(count(lit(1)).as("cnt"))
+    val total = grouped.agg(sum(col("cnt")).as("total"))
+    grouped.crossJoin(broadcast(total))
+      .select(col(c), col("cnt"), graft.util.D.r(col("cnt").cast(DoubleType) / col("total")).as("share"))
+      .orderBy(col("cnt").desc, col(c))
+  }
+
+  /** The in-plan `describeStats` chain the driver finish replaced. */
+  private def describeRef(df: DataFrame, cols: Seq[String]): DataFrame = {
+    import graft.util.D
+    val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
+      val n = count(col(c))
+      val sm = D.emit6(D.dsum(col(c)))
+      val sq = D.dsumsq(col(c))
+      Seq(n.as(s"__${i}_n"), D.r(sm / n).as(s"__${i}_mean"),
+        D.r(sqrt(D.varSamp(sm, sq, n))).as(s"__${i}_std"),
+        min(col(c)).as(s"__${i}_min_v"), max(col(c)).as(s"__${i}_max_v"))
+    }
+    df.agg(aggs.head, aggs.tail: _*)
+      .select(explode(array(cols.zipWithIndex.map { case (c, i) => struct(lit(c).as("col"),
+        col(s"__${i}_n").as("n"), col(s"__${i}_mean").as("mean"), col(s"__${i}_std").as("std"),
+        col(s"__${i}_min_v").as("min_v"), col(s"__${i}_max_v").as("max_v")) }: _*)).as("p"))
+      .select(col("p.col").as("col"), col("p.n").as("n"), col("p.mean").as("mean"),
+        col("p.std").as("std"), col("p.min_v").as("min_v"), col("p.max_v").as("max_v"))
+      .orderBy("col")
+  }
+
+  /** `op` equals `ref` — schema and rows in order — on every layout of
+    * `frame`, and so does not depend on the partitioning either. */
+  private def parity(what: String, frame: DataFrame)(op: DataFrame => DataFrame,
+                                                     ref: DataFrame => DataFrame): Unit =
+    for ((name, df) <- Seq("natural" -> frame, "1 partition" -> frame.repartition(1),
+      "7 partitions" -> frame.repartition(7))) {
+      val (got, want) = (op(df), ref(df))
+      assert(got.schema === want.schema, s"$what on $name: schema")
+      assert(same(rows(got), rows(want)), s"$what on $name differs:\n${rows(got)}\nvs in-plan\n${rows(want)}")
+    }
+
+  /** `source` plus an int column, an all-NULL column and a constant one. */
+  private def described: DataFrame = source
+    .withColumn("i", (col("x") * 4).cast(IntegerType))
+    .withColumn("nul", lit(null).cast(DoubleType))
+    .withColumn("const", lit(2.5))
+
+  test("valueCounts matches the in-plan chain and groups as Spark does") {
+    // grp: 0.0 and −0.0 one group, two NaN bit patterns one, NULL its
+    // own; 60 rows per grp value, so every count ties with another
+    for (c <- Seq("grp", "cat", "x"))
+      parity(s"valueCounts($c)", source)(ExplainFrame(_, "t").valueCounts(c), valueCountsRef(_, c))
+    assert(rows(ExplainFrame(source, "t").valueCounts("grp")).map(_(1)) === List(120L, 120L, 60L, 60L, 60L))
+    parity("valueCounts on an empty frame", source.filter(lit(false)))(
+      ExplainFrame(_, "t").valueCounts("grp"), valueCountsRef(_, "grp"))
+  }
+
+  test("valueCounts fails with the shared ID-like error past the gathered-cell bound") {
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    val before = graft.util.Guard.MaxGatheredCells
+    try {
+      graft.util.Guard.MaxGatheredCells = 10L
+      // y has hundreds of distinct values
+      val e = intercept[Exception](ExplainFrame(source, "t").valueCounts("y"))
+      assert(msgs(e).exists(_.contains("ID-like")), s"wrong error: $e")
+      assert(ExplainFrame(source, "t").valueCounts("cat").count() === cats.size)
+    } finally graft.util.Guard.MaxGatheredCells = before
+  }
+
+  test("describeStats matches the in-plan chain") {
+    val df = described
+    for (cols <- Seq(Seq("x", "y", "nul", "const", "x"), Seq("i"), Seq("i", "y"), Seq("y", "i", "nul")))
+      parity(s"describeStats(${cols.mkString(",")})", df)(
+        ExplainFrame(_, "t").describeStats(cols), describeRef(_, cols))
+    // mixed int/double columns share a double min_v/max_v
+    assert(ExplainFrame(df, "t").describeStats(Seq("i", "y")).schema("min_v").dataType === DoubleType)
+    // no rows: n = 0 and NULL stats; one row: std NULL, the constant std 0
+    parity("describeStats on an empty frame", df.filter(lit(false)))(
+      ExplainFrame(_, "t").describeStats(Seq("x", "i")), describeRef(_, Seq("x", "i")))
+    val one = df.filter(col("x").isNotNull && col("y").isNotNull).limit(1).localCheckpoint()
+    parity("describeStats on one row", one)(
+      ExplainFrame(_, "t").describeStats(Seq("x", "i", "const")), describeRef(_, Seq("x", "i", "const")))
+    val stats = rows(ExplainFrame(df, "t").describeStats(Seq("const", "nul")))
+    assert(stats === List(List("const", 420L, 2.5, 0.0, 2.5, 2.5), List("nul", 0L, null, null, null, null)))
+  }
+
+  test("describeStats raises on a decimal sum overflow as the in-plan sum does") {
+    // 200 squares of 9.9e11 sum past DECIMAL(38,12)
+    val big = spark.range(200).select(lit(9.9e11).as("v"))
+    intercept[Exception](describeRef(big, Seq("v")).collect())
+    val e = intercept[ArithmeticException](ExplainFrame(big, "t").describeStats(Seq("v")))
+    assert(e.getMessage.contains("DECIMAL(38,12)"), e.getMessage)
   }
 }

@@ -391,13 +391,12 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("derived totals reuse the grouped exchange at runtime") {
-    // value_counts' total, many_to_one's lt/ct, and the outlier
-    // explainer's per-group totals are RE-AGGREGATIONS of the same
-    // aggregate (identical subtrees) precisely so the runtime exchange
-    // reuse collapses them to one scan — assert the final adaptive
-    // plan actually contains ReusedExchange nodes
-    for (name <- Seq("q_value_counts", "q_dsir",
-                     "q_tfidf_terms", "q_bm25")) {
+    // many_to_one's lt/ct and the outlier explainer's per-group totals
+    // are RE-AGGREGATIONS of the same aggregate (identical subtrees)
+    // precisely so the runtime exchange reuse collapses them to one
+    // scan — assert the final adaptive plan actually contains
+    // ReusedExchange nodes
+    for (name <- Seq("q_dsir", "q_tfidf_terms", "q_bm25")) {
       val df = graft.SparkEntry.queries(name)(spark, sf)
       df.collect()
       val p = df.queryExecution.executedPlan.toString
@@ -419,11 +418,13 @@ class ScaleSpec extends AnyFunSuite {
     // consumers (the r6 regression — the exploded corpus scan ran three
     // times). Outlier.explain and the FEDEx count-table tails now
     // collect their cube / count table ONCE and finish on the driver,
-    // returning a LocalRelation. The sharp pin for that design: the
+    // returning a LocalRelation, and so does value_counts (its total
+    // no longer re-aggregates the groups: the counts are gathered once).
+    // The sharp pin for that design: the
     // returned plan is a local table scan with no file source and no
     // shuffle — the corpus scan provably ran exactly once (inside the
     // single bounded collect), and consuming the result launches no job.
-    for (name <- Seq("q_outlier_explain", "q_fedex_filter", "q_fedex_filter_influence",
+    for (name <- Seq("q_value_counts", "q_outlier_explain", "q_fedex_filter", "q_fedex_filter_influence",
                      "q_fedex_shapley", "q_fedex_groupby", "q_fedex_groupby_influence")) {
       val df = graft.SparkEntry.queries(name)(spark, sf)
       df.collect()
