@@ -123,7 +123,7 @@ object GenScale {
     require(parts.forall(p =>
       p == "zipf" || p == "rev" || p == "dirty" || p == "dup" || p.startsWith("seed=")),
       s"unknown mode '$mode' (supported: zipf, rev, dirty, dup, seed=N, '+'-composed)")
-    def t(n: String): DataFrame = spark.read.parquet(s"$src/$n.parquet")
+    def t(n: String): DataFrame = graft.sources.IO.readParquet(spark, s"$src/$n.parquet")
 
     val cons = "bcdfghjklmnpqrstvwxyz"
     def perm(i: Int): String = cons.drop(i % cons.length) + cons.take(i % cons.length)

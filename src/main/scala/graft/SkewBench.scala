@@ -38,7 +38,7 @@ object SkewBench {
     // write volume per form — the scale-honest second axis.
     val meter = new Bench.Meter(spark)
     spark.range(1000000L).selectExpr("sum(id)").collect() // JIT warmup
-    def t(n: String): DataFrame = spark.read.parquet(s"$sfDir/$n.parquet")
+    def t(n: String): DataFrame = graft.sources.IO.readParquet(spark, s"$sfDir/$n.parquet")
 
     def li = t("lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
     def ord = t("orders").select("o_orderkey", "o_orderpriority")

@@ -38,8 +38,10 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
   private def next(d: DataFrame, o: Operation): ExplainFrame = new ExplainFrame(d, Some(o), name)
 
   // ------------------------------------------------------ operations ----
-  def filter(cond: Column): ExplainFrame =
-    next(df.filter(cond), FilterOp(df, df.filter(cond), cond.toString, Some(cond)))
+  def filter(cond: Column): ExplainFrame = {
+    val res = df.filter(cond)
+    next(res, FilterOp(df, res, cond.toString, Some(cond)))
+  }
 
   def where(cond: Column): ExplainFrame = filter(cond)
 

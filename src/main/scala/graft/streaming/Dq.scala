@@ -150,14 +150,14 @@ object Dq {
     // Select by NAME, not position: the saved column order must never be
     // load-bearing — a field added or reordered in save() would otherwise
     // silently scramble the counters here.
-    val r = spark.read.parquet(s"$path/counts.parquet")
+    val r = graft.sources.IO.readParquet(spark, s"$path/counts.parquet")
       .select("n", "null_ck", "dup_ok", "bad_price", "bad_prio", "fk_orphans")
       .collect()(0)
     val gate = new Gate(customers)
     gate.restore(
       DqCounts(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)),
-      spark.read.parquet(s"$path/seen.parquet"))
+      graft.sources.IO.readParquet(spark, s"$path/seen.parquet"))
     gate
   }
 }

@@ -12,7 +12,9 @@ workload it prints:
   or with `--trace 1` every per-layer metric that is not 0 on both sides:
   the values of each pair in seed order, the median ratio change/parent,
   and how many pairs the change won (lower is better; ties count for
-  neither side);
+  neither side); setup_s is followed by each of its set-up rounds
+  (`setup_rounds_s`), since round 1 counts from JVM start and the median
+  hides it;
 - each side's quartiles and the distance between them (inclusive method,
   linear interpolation);
 - the failed operations and the output checks of every run;
@@ -64,6 +66,21 @@ def fmt(xs: list) -> str:
     return " ".join(f"{x:8.3f}" for x in xs)
 
 
+def compare(name: str, p: list, c: list) -> None:
+    """One metric's values per pair, median ratio, wins and quartiles."""
+    ratio = statistics.median(c) / statistics.median(p) if statistics.median(p) else float("nan")
+    wins = sum(1 for a, b in zip(p, c) if b < a)
+    losses = sum(1 for a, b in zip(p, c) if b > a)
+    print(f"{name:12s} parent {fmt(p)}")
+    print(f"{'':12s} change {fmt(c)}")
+    pq, cq = quartiles(p), quartiles(c)
+    print(f"{'':12s} median ratio {ratio:.3f}; change better in {wins}/{len(p)} pairs, "
+          f"worse in {losses}")
+    print(f"{'':12s} parent q1 {pq[0]:.3f} median {pq[1]:.3f} q3 {pq[2]:.3f} (IQR {pq[2] - pq[0]:.3f}); "
+          f"change q1 {cq[0]:.3f} median {cq[1]:.3f} q3 {cq[2]:.3f} (IQR {cq[2] - cq[0]:.3f}); "
+          f"median gap {pq[1] - cq[1]:+.3f}")
+
+
 def report(workload: str, pairs: list, top: int) -> None:
     seeds = [s for s, _, _ in pairs]
     print(f"## {workload}: {len(pairs)} pairs, seeds {seeds}")
@@ -71,19 +88,13 @@ def report(workload: str, pairs: list, top: int) -> None:
         m for m in pairs[0][1]["metrics"]
         if any(r["metrics"][m]["value"] for _, pr, cr in pairs for r in (pr, cr))]
     for m in names:
-        p = [pr["metrics"][m]["value"] for _, pr, _ in pairs]
-        c = [cr["metrics"][m]["value"] for _, _, cr in pairs]
-        ratio = statistics.median(c) / statistics.median(p) if statistics.median(p) else float("nan")
-        wins = sum(1 for a, b in zip(p, c) if b < a)
-        losses = sum(1 for a, b in zip(p, c) if b > a)
-        print(f"{m:12s} parent {fmt(p)}")
-        print(f"{'':12s} change {fmt(c)}")
-        pq, cq = quartiles(p), quartiles(c)
-        print(f"{'':12s} median ratio {ratio:.3f}; change better in {wins}/{len(pairs)} pairs, "
-              f"worse in {losses}")
-        print(f"{'':12s} parent q1 {pq[0]:.3f} median {pq[1]:.3f} q3 {pq[2]:.3f} (IQR {pq[2] - pq[0]:.3f}); "
-              f"change q1 {cq[0]:.3f} median {cq[1]:.3f} q3 {cq[2]:.3f} (IQR {cq[2] - cq[0]:.3f}); "
-              f"median gap {pq[1] - cq[1]:+.3f}")
+        compare(m, [pr["metrics"][m]["value"] for _, pr, _ in pairs],
+                [cr["metrics"][m]["value"] for _, _, cr in pairs])
+        if m == "setup_s":
+            rounds = min(len(r.get("setup_rounds_s", [])) for _, pr, cr in pairs for r in (pr, cr))
+            for i in range(rounds):
+                compare(f"  round {i + 1}", [pr["setup_rounds_s"][i] for _, pr, _ in pairs],
+                        [cr["setup_rounds_s"][i] for _, _, cr in pairs])
     print(f"failed ops   parent {[pr['failed'] for _, pr, _ in pairs]} "
           f"change {[cr['failed'] for _, _, cr in pairs]}; correct parent "
           f"{[pr['failed'] == 0 for _, pr, _ in pairs]} change {[cr['failed'] == 0 for _, _, cr in pairs]}")
