@@ -536,7 +536,7 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
       .limit(topK).toDF(df.sparkSession)
 
   private def meltGroupBy(g: GroupByOp): Mirror.Table =
-    GroupByExplain.melt(g.source, g.groupCols, concat_ws("|", _: _*), g.aggCol,
+    GroupByExplain.meltGroups(g.source, g.groupCols, concat_ws("|", _: _*), g.aggCol,
       s"${g.aggCol}_${g.aggFn}")
 
   /** Scorpion-style outlier explanation for a groupBy result. */
@@ -562,14 +562,15 @@ final class ExplainFrame(val df: DataFrame, val op: Option[Operation], val name:
   def explainManyToOne(labelCol: String, catAttrs: Seq[String], numAttrs: Seq[String]): DataFrame =
     ManyToOne.explain(df, labelCol, catAttrs, numAttrs)
 
-  /** MetaInsight pattern mining over a filter dimension + breakdown.
-    * Reference defaults: min_commonness 0.5, no_exception_penalty 0.1,
-    * balance_factor 1. */
+  /** MetaInsight pattern mining over a filter dimension + categorical
+    * breakdown, from one gather finished on the driver
+    * (MetaInsight.explain). Reference defaults: min_commonness 0.5,
+    * no_exception_penalty 0.1, balance_factor 1. */
   def explainMetaInsight(filterDim: String, breakdown: String, aggCol: String,
                          minCommonness: Double = 0.5,
                          noExceptionPenaltyWeight: Double = 0.1,
                          balanceFactor: Double = 1.0): DataFrame =
-    MetaInsight.mine(MetaInsight.catPatterns(df, filterDim, breakdown, aggCol, s"${aggCol}_mean"),
+    MetaInsight.explain(df, filterDim, Seq(MetaInsight.Breakdown(breakdown, col(breakdown))), aggCol,
       minCommonness = minCommonness, noExceptionPenaltyWeight = noExceptionPenaltyWeight,
       balanceFactor = balanceFactor)
 

@@ -29,7 +29,7 @@ object Explainers extends QFamily {
   // GroupBy operation explained: orders.groupby(o_orderpriority)
   //   .agg({'o_totalprice': 'mean'}) (+ group sizes)
   private def gbMelt(s: SparkSession, dir: String) =
-    GroupByExplain.melt(t(s, dir, "orders"), Seq("o_orderpriority"), _.head,
+    GroupByExplain.meltGroups(t(s, dir, "orders"), Seq("o_orderpriority"), _.head,
       "o_totalprice", "totalprice_mean")
 
   private val gbMeltSql =
@@ -304,24 +304,19 @@ object Explainers extends QFamily {
 
     // library default min_commonness is the reference's 0.5; the demo
     // passes a relaxed 0.15 explicitly (uniform synthetic data surfaces
-    // no >=0.5-common pattern in this scope) — both engines mirror it
+    // no >=0.5-common pattern in this scope), and the oracle mirrors it
     QDef("q_metainsight",
       Some(MetaInsight.sql("orders", "o_orderpriority", "o_orderstatus",
         "o_orderdate", "o_totalprice", "totalprice_mean", minCommonness = 0.15)),
-      // two direct scans here: at bench scale the source is small enough
-      // that a shared (subspace, status, month) cube costs MORE (extra
-      // materialization job + shuffle level) than the scan it saves —
-      // measured 3.0 s vs 5.7 s. Many scopes at once take one scan in
-      // the auto-search (MetaInsight.autoSearch: one gather of all
-      // scopes' cells).
-      (s, dir) => {
-        val o = t(s, dir, "orders")
-        val cat = MetaInsight.catPatterns(o, "o_orderpriority", "o_orderstatus",
-          "o_totalprice", "totalprice_mean")
-        val tr = MetaInsight.trendPatterns(o, "o_orderpriority", month(col("o_orderdate")),
-          "month", "o_totalprice", "totalprice_mean")
-        MetaInsight.mine(cat.unionByName(tr), minCommonness = 0.15)
-      }),
+      // one gather of the (priority, status) and (priority, month) cells
+      // and their '*' rollups, finished on the driver (MetaInsight.explain,
+      // the auto-search's engine); the measure is renamed so that its mean
+      // is reported as totalprice_mean
+      (s, dir) => MetaInsight.explain(
+        t(s, dir, "orders").withColumnRenamed("o_totalprice", "totalprice"), "o_orderpriority",
+        Seq(MetaInsight.Breakdown("o_orderstatus", col("o_orderstatus")),
+          MetaInsight.Breakdown("month", month(col("o_orderdate")), trend = true)),
+        "totalprice", minCommonness = 0.15)),
 
     // MetaInsight auto-search: explicit candidate lists here so the
     // oracle enumerates the identical scopes; schema-driven derivation is

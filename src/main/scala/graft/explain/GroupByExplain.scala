@@ -18,16 +18,12 @@ object GroupByExplain {
 
   /** Per-term decimal for medium-magnitude values (|v| < 1e9). */
   val dval: DecimalType = DecimalType(18, 6)
-  /** Per-term decimal for large-magnitude values (|v| < 1e13). */
-  val dbig: DecimalType = DecimalType(24, 2)
 
   def dvalSql(c: String) = s"CAST(SUM(CAST($c AS DECIMAL(18,6))) AS DOUBLE)"
   def dbigSql(c: String) = s"CAST(SUM(CAST($c AS DECIMAL(24,2))) AS DOUBLE)"
 
-  def sigmaExpr(sv: Column, svv: Column, k: Column): Column =
-    sqrt(greatest(svv / k - (sv / k) * (sv / k), lit(0.0)))
-
-  /** Driver mirror of the per-term decimal moment sums and [[sigmaExpr]]
+  /** Driver mirror of the per-term decimal moment sums (medium-magnitude
+    * values at [[dval]], squares at DECIMAL(24,2)) and of [[sigmaSql]]
     * over a group of `k` rows whose non-NULL values are `vs`: (Σv, σ).
     * Σv is NULL without values, and σ is then 0 (greatest() skips the
     * NULL moment). */
@@ -48,10 +44,10 @@ object GroupByExplain {
     * keyed by the key columns and `grp`, their label: per group,
     * `meanName` with v = round(Σ cast(aggCol AS DECIMAL(25,6)) as double /
     * count, 6), and `row_count` with v = the count. */
-  private[graft] def melt(src: DataFrame, keys: Seq[String], grp: Seq[Column] => Column,
-                          aggCol: String, meanName: String): Mirror.Table = {
+  private[graft] def meltGroups(src: DataFrame, keys: Seq[String], grp: Seq[Column] => Column,
+                                aggCol: String, meanName: String): Mirror.Table = {
     val (schemas, cells) = Guard.gatherCells(Guard.groupingForm(src, keys),
-      Seq(struct(keys.map(col) :+ grp(keys.map(col)).as("grp"): _*)), "GroupByExplain.melt",
+      Seq(struct(keys.map(col) :+ grp(keys.map(col)).as("grp"): _*)), "GroupByExplain.meltGroups",
       sums = Seq(col(aggCol).cast(D.dec25)))
     Mirror.Table(
       StructType(Seq(StructField("measure", StringType, nullable = false), schemas(0).last,

@@ -1,13 +1,15 @@
 package graft.explain
 
-import graft.util.D
-import org.apache.spark.sql.{Column, DataFrame}
+import java.math.{BigDecimal => JBigDecimal}
+
+import graft.util.{D, Guard, Mirror}
+import graft.util.Mirror.{asc, desc, utf8Lt}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** MetaInsight pattern mining (reference:
-  * /root/reference/src/pd_explain/explainers/beta_explainers/
-  * metainsight_explainer.py; "MetaInsight: Automatic Discovery of
+/** MetaInsight pattern mining (reference: pd-explain's
+  * `metainsight_explainer.py`; "MetaInsight: Automatic Discovery of
   * Structured Knowledge for Exploratory Data Analysis", Ma et al.,
   * SIGMOD'21).
   *
@@ -18,285 +20,77 @@ import org.apache.spark.sql.types._
   *  - dominance (cat breakdown): max share of the measure total ≥ 0.5
   *  - trend_up / trend_down (ordered breakdown): Pearson r of
   *    (breakdown index, v) ≥ 0.5 / ≤ −0.5
-  * A MetaInsight groups scopes by (breakdown, measure, pattern):
-  *   commonness = n_matching / n_subspaces  (kept when > 0)
-  *   score      = commonness − 0.1·[no exceptions]   (the reference's
-  *                no_exception_penalty_weight=0.1 actionability penalty)
+  * A MetaInsight groups scopes by (filter dimension, breakdown, measure,
+  * pattern):
+  *   commonness = n_matching / n_subspaces  (kept when ≥ min_commonness)
+  *   score      = (n_matching − balance·n_exceptions)/n_subspaces
+  *                − penalty·[no exceptions]
   *
-  * Scale: one scope ([[catPatterns]], [[trendPatterns]]) is one
-  * grouping-sets scan for its (filterDim, breakdown) cells and their '*'
-  * rollup, and its pattern math runs in-plan on that tiny cell table.
-  * The auto-search ([[autoSearch]]) gathers the cells of ALL its scopes
-  * in one exchange-free pass ([[graft.util.Guard.gatherCells]], bounded
-  * by Guard.MaxGatheredCells; the table holds the sum of the scopes'
-  * cells) and finishes patterns, mining and ranking on the driver.
+  * Scale: one engine serves the explicit scopes of [[explain]] and the
+  * [[autoSearch]], in three steps on the driver:
+  *  1. [[gather]]: ONE exchange-free pass ([[graft.util.Guard.gatherCells]])
+  *     collects the cells of every scope, bounded by
+  *     Guard.MaxGatheredCells in total over all scopes;
+  *  2. [[patterns]]: each scope's cells melt into (measure, value) rows
+  *     and its patterns are evaluated per subspace and measure;
+  *  3. [[insights]]: the pattern rows are grouped into scored
+  *     MetaInsights.
+  * [[explain]] returns every insight ordered by (breakdown, measure,
+  * pattern); only [[autoSearch]] ranks by score and cuts at topK. The
+  * arithmetic mirrors Spark's expressions exactly ([[graft.util.Mirror]]),
+  * so the results equal the in-plan chain the engine replaced (pinned in
+  * the specs), and both return a LocalRelation: consuming one launches no
+  * Spark job.
   */
 object MetaInsight {
 
   import GroupByExplain._
 
-  /** Cells: (subspace, b, cnt, sm) for subspace ∈ filterDim values ∪ '*'.
-    * One grouping-sets aggregation computes the per-subspace groups AND
-    * the '*' rollup in a single pass (a union of the base groups with a
-    * re-aggregation would reference — and re-plan — the scan twice);
-    * the grouping flag distinguishes '*' rows from a genuine NULL
-    * subspace value. Decimal sums make the two levels exactly equal to
-    * the two-step form. */
-  private[graft] def cells(src: DataFrame, filterDim: String, breakdown: Column): DataFrame =
-    src.withColumn("__sub", col(filterDim).cast("string")).withColumn("__b", breakdown)
-      .groupingSets(Seq(Seq(col("__sub"), col("__b")), Seq(col("__b"))), col("__sub"), col("__b"))
-      .agg(count(lit(1)).as("cnt"), sum(col("v0").cast(D.dec25)).as("sm"),
-        grouping(col("__sub")).as("__g"))
-      .select(when(col("__g") === 1, lit("*")).otherwise(col("__sub")).as("subspace"),
-        col("__b").as("b"), col("cnt"), col("sm"))
-
-  /** Melt cells into (subspace, b, measure, v): mean + row count — both
-    * rows exploded from the single cell (a two-branch union would
-    * recompute the cells aggregation twice). */
-  private[graft] def melt(cells: DataFrame, meanName: String): DataFrame = {
-    val vMean = graft.util.D.r(col("sm").cast(D.dec25).cast(DoubleType) / col("cnt"), 6)
-    cells.select(col("subspace"), col("b").cast("string").as("b"),
-        explode(array(
-          struct(lit(meanName).as("measure"), vMean.as("v")),
-          struct(lit("row_count").as("measure"), col("cnt").cast(DoubleType).as("v")))).as("mv"))
-      .select(col("subspace"), col("b"), col("mv.measure").as("measure"), col("mv.v").as("v"))
-  }
-
-  /** Categorical-breakdown patterns: outlier + dominance per scope. */
-  def catPatterns(src: DataFrame, filterDim: String, breakdown: String,
-                  aggCol: String, meanName: String): DataFrame =
-    catPatternsImpl(
-      melt(cells(src.withColumn("v0", col(aggCol)), filterDim, col(breakdown)), meanName),
-      breakdown)
-
-  private def catPatternsImpl(m: DataFrame, breakdown: String): DataFrame =
-    catPatternsKeyed(m, Seq("subspace", "measure")).withColumn("breakdown", lit(breakdown))
-
-  /** Categorical-pattern evaluation over a melted cell table, grouped by
-    * `keys` (at least (subspace, measure); scope tags prepended to them
-    * evaluate many scopes in one aggregation chain — the form
-    * [[autoSearch]] mirrors on the driver). Per-group math is identical
-    * regardless of the extra keys, so results are bit-identical to
-    * per-scope runs.
-    *
-    * The whole evaluation is ONE aggregation: the group's cells are
-    * gathered with collect_list and the z-score/share math runs as array
-    * expressions over them. The earlier two-pass form (stats aggregate
-    * joined back onto the cell table) referenced the melted subtree
-    * twice, which duplicated every upstream scan/aggregation in the
-    * compiled plan — for KB-sized cell groups the per-stage fixed cost
-    * of that duplication dominates, and a row_number window would
-    * sort-shuffle twice on top. Determinism: the per-group sums are
-    * decimal (exact, order-independent), per-cell terms are pure
-    * functions of (b, v, sums), and the highlight is the head of an
-    * array_sort by (−metric NULLS LAST, b) — none depend on
-    * collect_list's arrival order. */
-  private[graft] def catPatternsKeyed(m: DataFrame, keys: Seq[String]): DataFrame = {
-    val kc = keys.map(col)
-    // NULL subspaces are excluded, as in the SQL mirrors (and the
-    // earlier stats join, whose NULL keys never matched); without this
-    // a NULL filter-dim value would add a subspace on the Spark side
-    // only and shift commonness
-    val g = m.filter(col("subspace").isNotNull).groupBy(kc: _*)
-      .agg(count(lit(1)).as("k"),
-        sum(col("v").cast(dval)).cast(DoubleType).as("sv"),
-        sum((col("v") * col("v")).cast(dbig)).cast(DoubleType).as("svv"),
-        collect_list(struct(col("b"), col("v"))).as("cells"))
-      .withColumn("k",
-        graft.util.Guard.cellCap(col("k"), col("k"), "MetaInsight.catPatternsKeyed"))
-    val mu = col("sv") / col("k")
-    val sigma = sigmaExpr(col("sv"), col("svv"), col("k"))
-    def zOf(c: Column) =
-      when(sigma > 1e-12, abs(c.getField("v") - mu) / sigma).otherwise(lit(0.0))
-    // share of an all-zero cell sum is undefined: NULL like the
-    // oracle's x/0, never an ANSI DIVIDE_BY_ZERO (degenerate-pin class)
-    def shOf(c: Column) =
-      when(col("sv") =!= 0.0, c.getField("v") / col("sv"))
-        .otherwise(lit(null).cast(DoubleType))
-    // the highlight is the top cell by (metric desc NULLS LAST, b asc) =
-    // head of the ascending sort by (coalesce(−metric, MaxValue), b)
-    def topBy(metric: Column => Column) = element_at(array_sort(
-      transform(col("cells"), c => struct(
-        coalesce(-metric(c), lit(Double.MaxValue)).as("o"),
-        c.getField("b").as("b")))), 1).getField("b")
-    val scored = g.select(kc :+
-      array_max(transform(col("cells"), c => when(zOf(c) > 1.5, 1).otherwise(0))).as("z_has") :+
-      array_max(transform(col("cells"), c => zOf(c))).as("z_max") :+
-      topBy(zOf).as("z_top") :+
-      array_max(transform(col("cells"), c => when(shOf(c) >= 0.5, 1).otherwise(0))).as("s_has") :+
-      array_max(transform(col("cells"), c => shOf(c))).as("s_max") :+
-      topBy(shOf).as("s_top"): _*)
-    // both patterns from the single aggregated row via explode — a
-    // union of two selects over `scored` would re-reference (and thus
-    // recompute) the whole aggregation subtree
-    scored.select(kc :+ explode(array(
-        struct(col("z_has").as("has_pat"),
-          when(col("z_max") > 1.5, col("z_top")).as("highlight"),
-          lit("outlier").as("pattern")),
-        struct(col("s_has").as("has_pat"),
-          when(col("s_max") >= 0.5, col("s_top")).as("highlight"),
-          lit("dominance").as("pattern")))).as("p"): _*)
-      .select(kc :+ col("p.has_pat") :+ col("p.highlight") :+ col("p.pattern"): _*)
-  }
-
-  /** Ordered-breakdown patterns: trend_up / trend_down per scope.
-    * Breakdown must be an integer index column (e.g. month). */
-  def trendPatterns(src: DataFrame, filterDim: String, breakdownIdx: Column,
-                    breakdownName: String, aggCol: String, meanName: String): DataFrame =
-    trendPatternsImpl(
-      melt(cells(src.withColumn("v0", col(aggCol)), filterDim, breakdownIdx), meanName)
-        .withColumn("x", col("b").cast(IntegerType)),
-      breakdownName)
-
-  private def trendPatternsImpl(m: DataFrame, breakdownName: String): DataFrame =
-    trendPatternsKeyed(m, Seq("subspace", "measure")).withColumn("breakdown", lit(breakdownName))
-
-  /** Trend-pattern analog of [[catPatternsKeyed]], grouped by `keys`;
-    * NULL subspaces are excluded here too, so both families of one
-    * scope count the same subspaces. */
-  private[graft] def trendPatternsKeyed(m: DataFrame, keys: Seq[String]): DataFrame = {
-    val kc = keys.map(col)
-    val s = m.filter(col("subspace").isNotNull).groupBy(kc: _*)
-      .agg(count(lit(1)).as("k"),
-        sum(col("x")).as("sx"),
-        sum((col("x") * col("x")).cast(LongType)).as("sxx"),
-        sum(col("v").cast(dval)).cast(DoubleType).as("sv"),
-        sum((col("v") * col("v")).cast(dbig)).cast(DoubleType).as("svv"),
-        sum((col("x") * col("v")).cast(dval)).cast(DoubleType).as("sxv"))
-    val num = col("k") * col("sxv") - col("sx") * col("sv")
-    val den = sqrt((col("k") * col("sxx") - col("sx") * col("sx")).cast(DoubleType)) *
-      sqrt(greatest(col("k") * col("svv") - col("sv") * col("sv"), lit(0.0)))
-    val withR = s.withColumn("r_xy", when(den > 1e-9, num / den).otherwise(lit(0.0)))
-    // both trend directions from the single aggregated row via explode
-    // (a union of two selects would recompute the aggregation subtree)
-    withR.select(kc :+ explode(array(
-        struct(when(col("r_xy") >= 0.5, 1).otherwise(0).as("has_pat"),
-          when(col("r_xy") >= 0.5, lit("up")).as("highlight"),
-          lit("trend_up").as("pattern")),
-        struct(when(col("r_xy") <= -0.5, 1).otherwise(0).as("has_pat"),
-          when(col("r_xy") <= -0.5, lit("down")).as("highlight"),
-          lit("trend_down").as("pattern")))).as("p"): _*)
-      .select(kc :+ col("p.has_pat") :+ col("p.highlight") :+ col("p.pattern"): _*)
-  }
-
-  /** Group scope patterns into scored MetaInsights. `extraKeys` joins the
-    * grouping when pattern tables from SEVERAL data scopes are unioned
-    * (`filter_dim`, so commonness is computed within its own scope
-    * family, not across unrelated filter dimensions — the keying
-    * [[autoSearch]] mirrors on the driver).
-    *
-    * Reference-default parity (metainsight_explainer.py:45-46):
-    *  - `minCommonness` (default 0.5): a pattern is kept only when
-    *    commonness ≥ min_commonness — NOT merely > 0.
-    *  - `balanceFactor` (default 1): weight of exceptions relative to
-    *    common patterns in the score. The external miner's exact formula
-    *    is not published; re-expressed deterministically as
-    *      score = (n_matching − balance·n_exceptions)/n_subspaces
-    *              − penalty·[no exceptions]
-    *    where exceptions are the evaluated subspaces the pattern does not
-    *    hold in, and `noExceptionPenaltyWeight` (default 0.1) is the
-    *    reference's actionability regularizer.
-    */
-  def mine(patterns: DataFrame, extraKeys: Seq[String] = Nil,
-           minCommonness: Double = 0.5,
-           noExceptionPenaltyWeight: Double = 0.1,
-           balanceFactor: Double = 1.0): DataFrame = {
-    require(minCommonness > 0 && minCommonness <= 1,
-      "min_commonness must be in the range (0, 1]")
-    val keys = extraKeys ++ Seq("breakdown", "measure", "pattern")
-    patterns.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n_subspaces"),
-        sum(col("has_pat")).as("n_matching"),
-        min(when(col("has_pat") === 1, concat_ws(":", col("subspace"), col("highlight"))))
-          .as("example_highlight"))
-      .withColumn("commonness", graft.util.D.r(col("n_matching").cast(DoubleType) / col("n_subspaces"), 6))
-      .filter(col("n_matching") > 0 && col("commonness") >= minCommonness)
-      .withColumn("score", graft.util.D.r(
-        (col("n_matching").cast(DoubleType) -
-          lit(balanceFactor) * (col("n_subspaces") - col("n_matching"))) / col("n_subspaces") -
-        lit(noExceptionPenaltyWeight) * when(col("n_matching") === col("n_subspaces"), 1).otherwise(0), 6))
-      .select((keys ++ Seq("n_subspaces", "n_matching", "commonness", "score", "example_highlight"))
-        .map(col): _*)
-      .orderBy(keys.map(col): _*)
-  }
-
-  /** One breakdown of an auto-search scope: `name` tags its patterns,
-    * `value` computes it from a source row, and a `trend` breakdown is an
-    * integer index (a month) that carries trend patterns instead of
-    * categorical ones. */
+  /** One breakdown of a scope: `name` tags its patterns, `value`
+    * computes it from a source row, and a `trend` breakdown is an integer
+    * index (a month) that carries trend patterns instead of categorical
+    * ones. */
   final case class Breakdown(name: String, value: Column, trend: Boolean = false)
 
-  /** Auto-search: every (filterDim, breakdown) scope × measure, mined and
-    * ranked by score. The scope set is chosen by the caller (see
-    * ExplainFrame.explainMetaInsightAuto, which mirrors the reference's
-    * auto enumeration, metainsight_explainer.py `max_filter_columns`/
-    * `max_aggregation_columns`/`use_all_groupby_combinations`).
-    *
-    * ONE exchange-free pass ([[graft.util.Guard.gatherCells]]) gathers
-    * the cells of every scope: one cell set per distinct (filterDim,
-    * breakdown) pair and one per breakdown alone (the '*' subspace), each
-    * cell carrying the count and one decimal sum per measure ([[cells]]
-    * for all scopes at once), with each decimal cast evaluated once per
-    * source row. Each scope then picks its cells by set, and the melt,
-    * pattern, mine and rank steps run on the
-    * driver through exact mirrors ([[graft.util.Mirror]]) of [[melt]],
-    * [[catPatternsKeyed]] / [[trendPatternsKeyed]] over the scope tags,
-    * and [[mine]]. NULL subspaces are excluded from every family, as in
-    * [[autoSql]]; a cell whose measure values are all NULL has a NULL mean,
-    * which counts toward k, is skipped in the sums and sorts last for
-    * highlights. The result is a LocalRelation: consuming it launches no
-    * Spark job.
-    *
-    * `allowMultipleAggregations` / `allowMultipleGroupbys` (reference
-    * metainsight_explainer.py:52-53, extend_by_measure/extend_by_breakdown
-    * in its miner): a MetaInsight may extend its scope family along the
-    * measure (resp. breakdown) axis, re-expressed deterministically as
-    * additional candidate insights whose measure (resp. breakdown, resp.
-    * both) key collapses to '*', so commonness is computed across the
-    * extended scope set. */
-  def autoSearch(src: DataFrame, scopes: Seq[(String, Breakdown)], measures: Seq[String],
-                 topK: Int,
-                 minCommonness: Double = 0.5,
-                 noExceptionPenaltyWeight: Double = 0.1,
-                 balanceFactor: Double = 1.0,
-                 allowMultipleAggregations: Boolean = false,
-                 allowMultipleGroupbys: Boolean = false): DataFrame = {
-    import graft.util.Mirror
-    import graft.util.Mirror.{asc, desc, utf8Lt}
-    require(scopes.nonEmpty && measures.nonEmpty,
-      "metainsight auto-search has no pattern table to mine: it needs at least one " +
-        "(filterDim, breakdown) scope and one measure")
-    require(minCommonness > 0 && minCommonness <= 1,
-      "min_commonness must be in the range (0, 1]")
+  /** What tells two breakdowns apart. */
+  private def key(b: Breakdown) = (b.name, b.trend)
 
-    // ---- the cells of every scope: one gather ----
-    def key(b: Breakdown) = (b.name, b.trend)
+  /** One cell of a scope: its subspace ('*' for every row, NULL for a
+    * NULL filter-dimension value), its breakdown value (`b`, the string
+    * label of a categorical breakdown; `x`, the index of a trend one), its
+    * row count and its exact sum per measure (NULL when every value is
+    * NULL). */
+  private final case class Cell(sub: String, b: String, x: Integer, cnt: Long,
+                                sm: IndexedSeq[JBigDecimal])
+
+  /** Step 1: the cells of each of `scopes`, in order, summing each of
+    * `ms`. One gather holds one cell set per distinct (filterDim,
+    * breakdown) pair and one per breakdown alone (the '*' subspace), each
+    * decimal cast evaluated once per source row; a scope takes its pair's
+    * cells, then its breakdown's '*' cells. */
+  private def gather(src: DataFrame, scopes: Seq[(String, Breakdown)],
+                     ms: Seq[String]): Seq[Seq[Cell]] = {
     val fs = scopes.map(_._1).distinct
     val bs = scopes.map(_._2).distinctBy(key)
-    val ms = measures.distinct
     val fIdx = fs.zipWithIndex.toMap
     val bIdx = bs.map(key).zipWithIndex.toMap
-    val projected = graft.util.Guard.groupingForm(src.select(
+    val projected = Guard.groupingForm(src.select(
       fs.zipWithIndex.map { case (f, i) => col(f).cast("string").as(s"__f$i") } ++
         bs.zipWithIndex.map { case (b, i) => b.value.as(s"__b$i") } ++
         ms.zipWithIndex.map { case (m, i) => col(m).as(s"__v$i") }: _*),
       bs.indices.map(i => s"__b$i"))
     // a breakdown keys its cells by its value, and a categorical one of
-    // another type also by melt's string label of that value, last
+    // another type also by the string label of that value, last
     def bKey(i: Int): Seq[Column] = {
       val b = col(s"__b$i")
       if (bs(i).trend || projected.schema(s"__b$i").dataType == StringType) Seq(b)
       else Seq(b, b.cast("string"))
     }
-    // one set per distinct (filterDim, breakdown) pair, then one per
-    // breakdown alone (the '*' subspace)
     val pairs = scopes.map { case (f, b) => (fIdx(f), bIdx(key(b))) }.distinct
     val sets = pairs.map { case (fi, bi) => struct(col(s"__f$fi") +: bKey(bi): _*) } ++
       bs.indices.map(bi => struct(bKey(bi): _*))
-    val (_, gathered) = graft.util.Guard.gatherCells(projected, sets, "MetaInsight.autoSearch",
+    val (_, gathered) = Guard.gatherCells(projected, sets, "MetaInsight.gather",
       sums = ms.indices.map(i => col(s"__v$i").cast(D.dec25)))
-    final case class Cell(sub: String, b: String, x: Integer, cnt: Long,
-                          sm: IndexedSeq[java.math.BigDecimal])
     val cellsOf: Map[(Int, Int), Seq[Cell]] = gathered.map { c =>
       val (fi, bi) = if (c.set < pairs.size) pairs(c.set) else (-1, c.set - pairs.size)
       val (k, last) = (c.key, c.key.length - 1)
@@ -305,19 +99,39 @@ object MetaInsight {
         else (null, if (k.isNullAt(last)) null else Integer.valueOf(k.getInt(last)))
       (fi, bi) -> Cell(if (fi < 0) "*" else k.getString(0), b, x, c.n, c.sums)
     }.groupMap(_._1)(_._2)
+    scopes.map { case (f, b) =>
+      cellsOf.getOrElse((fIdx(f), bIdx(key(b))), Nil) ++ cellsOf.getOrElse((-1, bIdx(key(b))), Nil)
+    }
+  }
 
-    // ---- melt: (measure, v) rows per cell, tagged with the scope ----
-    // several measures over one (filterDim, breakdown) share one
-    // row_count measure, emitted by the first such scope only
+  /** One scope's pattern in one subspace and measure: whether it holds
+    * (`hasPat` 1 or 0) and, when it does, its highlight. */
+  private[graft] final case class Pat(filterDim: String, breakdown: String, sub: String,
+                                      measure: String, hasPat: Int, highlight: String,
+                                      pattern: String)
+
+  /** Step 2: the pattern rows of every scope × measure, from one
+    * [[gather]]. Each cell melts into a `<measure>_mean` row (the exact
+    * decimal sum over the count, rounded to 6 places) and a `row_count`
+    * row; several measures over one (filterDim, breakdown) share one
+    * row_count measure, emitted by the first such scope only. NULL
+    * subspaces are excluded from every family, as in [[autoSql]]; a cell
+    * whose measure values are all NULL has a NULL mean, which counts
+    * toward k, is skipped in the sums and sorts last for highlights. A categorical group scores
+    * outlier and dominance, its highlight the top cell by (metric desc
+    * NULLS LAST, b asc); a trend group scores trend_up and trend_down by
+    * the Pearson r of (x, v) from per-term decimal moments. */
+  private[graft] def patterns(src: DataFrame, scopes: Seq[(String, Breakdown)],
+                              measures: Seq[String]): Seq[Pat] = {
+    val ms = measures.distinct
     final case class MeltRow(f: String, b: Breakdown, sub: String, bv: String, x: Integer,
                              measure: String, v: java.lang.Double)
     val seen = scala.collection.mutable.Set.empty[(String, (String, Boolean))]
     val melted = for {
-      (f, b) <- scopes
+      ((f, b), cells) <- scopes.zip(gather(src, scopes, ms))
       m <- measures
       withRowCount = seen.add((f, key(b)))
-      c <- cellsOf.getOrElse((fIdx(f), bIdx(key(b))), Nil) ++
-        cellsOf.getOrElse((-1, bIdx(key(b))), Nil)
+      c <- cells
       sm = c.sm(ms.indexOf(m))
       mean = if (sm == null) null else java.lang.Double.valueOf(Mirror.r(sm.doubleValue / c.cnt, 6))
       row <- MeltRow(f, b, c.sub, c.b, c.x, s"${m}_mean", mean) +:
@@ -325,9 +139,6 @@ object MetaInsight {
           Seq(MeltRow(f, b, c.sub, c.b, c.x, "row_count", c.cnt.toDouble)) else Nil)
     } yield row
 
-    // ---- pattern rows per (scope, subspace, measure) group ----
-    final case class Pat(filterDim: String, breakdown: String, sub: String,
-                         measure: String, hasPat: Int, highlight: String, pattern: String)
     def catPats(f: String, b: String, sub: String, measure: String, cells: Seq[MeltRow]): Seq[Pat] = {
       val k = cells.size.toLong
       val (sv, sigma) = sumSigma(cells.flatMap(c => Option(c.v)).map(_.doubleValue), k)
@@ -335,6 +146,8 @@ object MetaInsight {
         if (sigma <= 1e-12) 0.0
         else if (v == null) null
         else math.abs(v - sv / k) / sigma
+      // share of an all-zero cell sum is undefined: NULL, like the
+      // oracle's x/0
       def shOf(v: java.lang.Double): java.lang.Double =
         if (sv == null || sv == 0.0 || v == null) null else v / sv
       // head of the ascending sort by (coalesce(−metric, MaxValue), b)
@@ -380,19 +193,44 @@ object MetaInsight {
         Pat(f, b, sub, measure, if (holds(_ <= -0.5)) 1 else 0,
           if (holds(_ <= -0.5)) "down" else null, "trend_down"))
     }
-    val pats = melted.filter(_.sub != null)
+    melted.filter(_.sub != null)
       .groupBy(r => (r.f, key(r.b), r.sub, r.measure)).toSeq
       .flatMap { case ((f, (b, trend), sub, measure), cells) =>
         if (trend) trendPats(f, b, sub, measure, cells) else catPats(f, b, sub, measure, cells) }
+  }
 
-    // ---- rank: variant explode + mine + order + topK ----
+  /** Step 3: the pattern rows grouped by (filter_dim, breakdown, measure,
+    * pattern) into scored MetaInsights, one row each in the columns of
+    * [[autoSchema]], unordered.
+    *
+    * Reference-default parity (metainsight_explainer.py:45-46):
+    *  - `minCommonness` (default 0.5): a pattern is kept only when
+    *    commonness ≥ min_commonness — NOT merely > 0.
+    *  - `balanceFactor` (default 1): weight of exceptions relative to
+    *    common patterns in the score. The external miner's exact formula
+    *    is not published; re-expressed deterministically as
+    *      score = (n_matching − balance·n_exceptions)/n_subspaces
+    *              − penalty·[no exceptions]
+    *    where exceptions are the evaluated subspaces the pattern does not
+    *    hold in, and `noExceptionPenaltyWeight` (default 0.1) is the
+    *    reference's actionability regularizer.
+    *  - `allowMultipleAggregations` / `allowMultipleGroupbys` (reference
+    *    metainsight_explainer.py:52-53, extend_by_measure/
+    *    extend_by_breakdown in its miner): a MetaInsight may extend its
+    *    scope family along the measure (resp. breakdown) axis,
+    *    re-expressed deterministically as additional candidate insights
+    *    whose measure (resp. breakdown, resp. both) key collapses to '*',
+    *    so commonness is computed across the extended scope set. */
+  private def insights(pats: Seq[Pat], minCommonness: Double, noExceptionPenaltyWeight: Double,
+                       balanceFactor: Double, allowMultipleAggregations: Boolean = false,
+                       allowMultipleGroupbys: Boolean = false): Seq[Row] = {
     val variants: Seq[Pat => Pat] =
       Seq((p: Pat) => p) ++
         (if (allowMultipleAggregations) Seq((p: Pat) => p.copy(measure = "*")) else Nil) ++
         (if (allowMultipleGroupbys) Seq((p: Pat) => p.copy(breakdown = "*")) else Nil) ++
         (if (allowMultipleAggregations && allowMultipleGroupbys)
           Seq((p: Pat) => p.copy(measure = "*", breakdown = "*")) else Nil)
-    val mined = pats.flatMap(p => variants.map(_(p)))
+    pats.flatMap(p => variants.map(_(p)))
       .groupBy(p => (p.filterDim, p.breakdown, p.measure, p.pattern)).toSeq
       .flatMap { case ((f, b, m, pat), g) =>
         val nSub = g.size.toLong
@@ -405,20 +243,68 @@ object MetaInsight {
           (nMatch.toDouble - balanceFactor * (nSub - nMatch)) / nSub -
             noExceptionPenaltyWeight * (if (nMatch == nSub) 1 else 0), 6)
         if (nMatch > 0 && commonness >= minCommonness)
-          Seq(org.apache.spark.sql.Row(f, b, m, pat, nSub, nMatch, commonness, score, exHl))
+          Seq(Row(f, b, m, pat, nSub, nMatch, commonness, score, exHl))
         else Nil
       }
-    val schema = StructType(Seq(
-      StructField("filter_dim", StringType, nullable = false),
-      StructField("breakdown", StringType, nullable = false),
-      StructField("measure", StringType, nullable = false),
-      StructField("pattern", StringType, nullable = false),
-      StructField("n_subspaces", LongType, nullable = false),
-      StructField("n_matching", LongType, nullable = true),
-      StructField("commonness", DoubleType, nullable = true),
-      StructField("score", DoubleType, nullable = true),
-      StructField("example_highlight", StringType, nullable = true)))
-    Mirror.Table(schema, mined)
+  }
+
+  /** The columns of a mined MetaInsight, the single-scope result's. */
+  private val insightFields = Seq(
+    StructField("breakdown", StringType, nullable = false),
+    StructField("measure", StringType, nullable = false),
+    StructField("pattern", StringType, nullable = false),
+    StructField("n_subspaces", LongType, nullable = false),
+    StructField("n_matching", LongType, nullable = true),
+    StructField("commonness", DoubleType, nullable = true),
+    StructField("score", DoubleType, nullable = true),
+    StructField("example_highlight", StringType, nullable = true))
+
+  /** The auto-search's columns: the filter dimension, then an insight's. */
+  private val autoSchema =
+    StructType(StructField("filter_dim", StringType, nullable = false) +: insightFields)
+
+  private def requireCommonness(minCommonness: Double): Unit =
+    require(minCommonness > 0 && minCommonness <= 1, "min_commonness must be in the range (0, 1]")
+
+  /** Every MetaInsight of one filter dimension × `breakdowns` × the mean
+    * of `measure` (named `<measure>_mean`) and the row count, ordered by
+    * (breakdown, measure, pattern), in the columns (breakdown, measure,
+    * pattern, n_subspaces, n_matching, commonness, score,
+    * example_highlight). */
+  def explain(src: DataFrame, filterDim: String, breakdowns: Seq[Breakdown], measure: String,
+              minCommonness: Double = 0.5,
+              noExceptionPenaltyWeight: Double = 0.1,
+              balanceFactor: Double = 1.0): DataFrame = {
+    requireCommonness(minCommonness)
+    require(breakdowns.nonEmpty, "metainsight needs at least one breakdown")
+    val rows = insights(patterns(src, breakdowns.map(filterDim -> _), Seq(measure)),
+      minCommonness, noExceptionPenaltyWeight, balanceFactor)
+    Mirror.Table(StructType(insightFields), rows.map(r => Row.fromSeq(r.toSeq.tail)))
+      .orderBy(asc("breakdown"), asc("measure"), asc("pattern")).toDF(src.sparkSession)
+  }
+
+  /** Auto-search: every (filterDim, breakdown) scope × measure, mined and
+    * ranked by (score desc, filter_dim, breakdown, measure, pattern), the
+    * first `topK` kept. The scope set is chosen by the caller (see
+    * ExplainFrame.explainMetaInsightAuto, which mirrors the reference's
+    * auto enumeration, metainsight_explainer.py `max_filter_columns`/
+    * `max_aggregation_columns`/`use_all_groupby_combinations`); commonness
+    * is computed within a filter dimension's own scope family, and the
+    * multiple-aggregation/groupby extensions are [[insights]]'. */
+  def autoSearch(src: DataFrame, scopes: Seq[(String, Breakdown)], measures: Seq[String],
+                 topK: Int,
+                 minCommonness: Double = 0.5,
+                 noExceptionPenaltyWeight: Double = 0.1,
+                 balanceFactor: Double = 1.0,
+                 allowMultipleAggregations: Boolean = false,
+                 allowMultipleGroupbys: Boolean = false): DataFrame = {
+    require(scopes.nonEmpty && measures.nonEmpty,
+      "metainsight auto-search has no pattern table to mine: it needs at least one " +
+        "(filterDim, breakdown) scope and one measure")
+    requireCommonness(minCommonness)
+    val rows = insights(patterns(src, scopes, measures), minCommonness, noExceptionPenaltyWeight,
+      balanceFactor, allowMultipleAggregations, allowMultipleGroupbys)
+    Mirror.Table(autoSchema, rows)
       .orderBy(desc("score"), asc("filter_dim"), asc("breakdown"), asc("measure"), asc("pattern"))
       .limit(topK).toDF(src.sparkSession)
   }
@@ -428,7 +314,7 @@ object MetaInsight {
   /** DuckDB mirror of the auto-search over explicit categorical scopes
     * (filterDim, breakdown, measure): one pattern CTE chain per scope,
     * unioned and mined with `filter_dim` in the grouping, ranked by
-    * score. Mirrors [[catPatterns]] + [[mine]](extraKeys=filter_dim). */
+    * score. Mirrors [[autoSearch]] over categorical and month-trend scopes. */
   def autoSql(table: String, scopes: Seq[(String, String, String)], topK: Int,
               trendScopes: Seq[(String, String, String)] = Nil,
               minCommonness: Double = 0.5,
@@ -547,7 +433,7 @@ object MetaInsight {
        |  UNION ALL
        |  SELECT subspace, CAST(b AS VARCHAR), 'row_count', CAST(cnt AS DOUBLE) FROM $cells""".stripMargin)
 
-  /** [[mine]] over the `pats` CTE, grouped by `keys`. */
+  /** [[insights]] over the `pats` CTE, grouped by `keys`. */
   private def mineSql(keys: Seq[String], minCommonness: Double, noExceptionPenaltyWeight: Double,
                       balanceFactor: Double): String =
     s"""SELECT ${keys.mkString(", ")}, n_subspaces, n_matching,
@@ -563,8 +449,9 @@ object MetaInsight {
        |  HAVING SUM(has_pat) > 0)
        |WHERE commonness >= $minCommonness""".stripMargin
 
-  /** Full DuckDB mirror for orders-style input: filterDim × (cat breakdown,
-    * ordered month breakdown), measures mean(aggCol) + row count. */
+  /** DuckDB mirror of [[explain]] for orders-style input: filterDim ×
+    * (cat breakdown, ordered month breakdown), measures mean(aggCol) +
+    * row count. */
   def sql(table: String, filterDim: String, catBreakdown: String,
           monthCol: String, aggCol: String, meanName: String,
           minCommonness: Double = 0.5,

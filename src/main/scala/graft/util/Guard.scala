@@ -23,25 +23,22 @@ import org.apache.spark.sql.types.{DataType, DecimalType, StructType}
   * The explainers gather explanation-grade cell sets — bins and
   * low-cardinality dimensions — on the driver through one exchange-free
   * kernel ([[gatherCells]]: per cell a row count, flag counts, exact
-  * decimal sums and extrema), or into one row per group via collect_list
-  * ([[cellCap]]: the single-scope MetaInsight.catPatternsKeyed). The
-  * notebook operations `valueCounts` (one cell per value) and
-  * `describeStats` (one cell holding every column's moments and extrema)
-  * build from the same kernel, as do many-to-one's label centroids. The
-  * contract "don't feed ID-like grouping keys" is enforced, not only
-  * documented: the kernel fails a partition, or the driver's merge, on
-  * the cell one past the bound, and the in-plan cap is one comparison
-  * per group row, evaluated executor-side next to the gathered array —
-  * a diagnosable error instead of a driver or executor OOM.
+  * decimal sums and extrema). The notebook operations `valueCounts` (one
+  * cell per value) and `describeStats` (one cell holding every column's
+  * moments and extrema) build from the same kernel, as do many-to-one's
+  * label centroids. The contract "don't feed ID-like grouping keys" is
+  * enforced, not only documented: the kernel fails a partition, or the
+  * driver's merge, on the cell one past the bound — a diagnosable error
+  * instead of a driver or executor OOM.
   */
 object Guard {
 
-  /** Max cells a single gathered group row may hold before the query
+  /** Max cells one gather may hold, over all its sets, before the query
     * fails. Explanation-grade groupings sit orders of magnitude below
-    * this; a group this size (~10 MB of struct cells in ONE row) means
-    * the grouping key is ID-like and the result would be meaningless
-    * noise even if it survived memory. Mutable so a caller who truly
-    * wants huge groups can raise it knowingly. */
+    * this; a table this size means the grouping key is ID-like and the
+    * result would be meaningless noise even if it survived memory.
+    * Mutable so a caller who truly wants huge tables can raise it
+    * knowingly. */
   @volatile var MaxGatheredCells: Long = 100000L
 
   /** Max label centroids the many_to_one dist and silhouette pruning may
@@ -66,10 +63,10 @@ object Guard {
 
   /** Returns `value`, but evaluating it raises a diagnosable error when
     * `n` (the row's self-join block size) exceeds [[MaxPairBlockRows]].
-    * Same evaluation contract as [[cellCap]]: wrap a column the plan is
-    * guaranteed to evaluate. The join streams, so the error fires on the
-    * first rows of the hot block — before the quadratic pair set is
-    * materialized. */
+    * Wrap a column the plan is guaranteed to evaluate — the guard must
+    * not sit in a column that column pruning can drop. The join streams,
+    * so the error fires on the first rows of the hot block — before the
+    * quadratic pair set is materialized. */
   def pairBlockCap(n: Column, value: Column, site: String): Column = {
     val cap = MaxPairBlockRows
     when(n > cap, raise_error(concat(
@@ -90,18 +87,6 @@ object Guard {
       "low-cardinality dimensions). Re-group on a coarser key, or " +
       "raise graft.util.Guard.MaxGatheredCells if the group size is " +
       "intentional."
-
-  /** Returns `value`, but evaluating it raises a diagnosable error when
-    * `n` (the group's gathered cell count) exceeds [[MaxGatheredCells]].
-    * Wrap a column the plan is guaranteed to evaluate (the count itself,
-    * or a stat derived from it) — the guard must not sit in a column
-    * that column pruning can drop. */
-  def cellCap(n: Column, value: Column, site: String): Column = {
-    val cap = MaxGatheredCells
-    when(n > cap, raise_error(concat(
-      lit(s"$site: a single group gathered "), n.cast("string"), lit(idLike(cap)))))
-      .otherwise(value)
-  }
 
   /** One cell of a gathered table: its set, its key, its row count, its
     * count of rows per flag, its exact sum per summed column (NULL when
@@ -144,13 +129,19 @@ object Guard {
 
     /** One partition's partial table, on an executor. */
     def fold(rows: Iterator[InternalRow]): Partial = {
-      val (part, o, toUnsafe) = (partial, ords, UnsafeProjection.create(schema))
+      val (part, o) = (partial, ords)
       val (f0, s0, e0) = (widths.size, widths.size + nFlags, widths.size + nFlags + nSums)
       val one = new Acc(nFlags, nSums, extTypes.size)
       one.n = 1
       var held = 0L
+      // the rows of a compiled plan are UnsafeRows already: the projection
+      // is made only for the first row that is not
+      lazy val toUnsafe = UnsafeProjection.create(schema)
       rows.foreach { r =>
-        val row = r match { case u: UnsafeRow => u; case other => toUnsafe(other) }
+        val row = r match {
+          case u: UnsafeRow => u
+          case other => toUnsafe(other)
+        }
         for (i <- 0 until nFlags)
           one.flags(i) = if (!row.isNullAt(f0 + i) && row.getBoolean(f0 + i)) 1 else 0
         for (i <- 0 until nSums) one.sums(i) =

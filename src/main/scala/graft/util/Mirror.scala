@@ -12,7 +12,7 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Driver-side mirrors of Spark expressions, for the operators that
-  * finish a gathered table in Scala (Guard.gatherCells): MetaInsight.autoSearch,
+  * finish a gathered table in Scala (Guard.gatherCells): MetaInsight,
   * Correlation.suite, Outlier.explain, the Fedex tails, GroupByExplain.zdev,
   * ManyToOne's centroids and ExplainFrame's valueCounts and describeStats.
   * Each mirror goes through the entry point the Spark expression itself

@@ -2,8 +2,8 @@ package graft.util
 
 import scala.reflect.ClassTag
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, LocalTableScanExec,
-  RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, GenerateExec,
+  LocalTableScanExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec,
@@ -32,6 +32,7 @@ object PlanShape extends AdaptiveSparkPlanHelper {
     "aggregates" -> all[BaseAggregateExec](p).size,
     "windows" -> all[WindowExec](p).size,
     "generates" -> all[GenerateExec](p).size,
+    "expands" -> all[ExpandExec](p).size,
     "smj" -> all[SortMergeJoinExec](p).size,
     "bhj" -> all[BroadcastHashJoinExec](p).size,
     "shj" -> all[ShuffledHashJoinExec](p).size,

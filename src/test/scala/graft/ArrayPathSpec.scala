@@ -76,10 +76,9 @@ class ArrayPathSpec extends AnyFunSuite {
       (f, s"g${rnd.nextInt(6)}", v)
     }.toDF("f", "g", "v")
 
-    val got = graft.explain.MetaInsight.catPatterns(rows, "f", "g", "v", "v_mean")
-      .collect()
-      .map(r => (r.getAs[String]("subspace"), r.getAs[String]("measure"), r.getAs[String]("pattern")) ->
-        (r.getAs[Int]("has_pat"), r.getAs[String]("highlight")))
+    import graft.explain.MetaInsight.{Breakdown, patterns}
+    val got = patterns(rows, Seq("f" -> Breakdown("g", col("g"))), Seq("v"))
+      .map(p => (p.sub, p.measure, p.pattern) -> (p.hasPat, p.highlight))
       .toMap
 
     // the REPLACED plan shape: melt (two-branch), stats agg, join back

@@ -16,7 +16,7 @@ class BenchSpec extends AnyFunSuite {
       val record = Bench.splitJson(s)
       for (k <- Seq("build_s", "plan_s", "exec_s", "jobs", "stages", "tasks", "shuffle_bytes", "shape",
         "exchanges", "reused_exchanges", "scans", "aggregates", "windows", "generates",
-        "smj", "bhj", "shj", "bnlj", "cartesian"))
+        "expands", "smj", "bhj", "shj", "bnlj", "cartesian"))
         assert(record.contains("\"" + k + "\":"), s"$name record lacks $k: $record")
       assert(s.jobs >= 1 && s.stages >= 1 && s.tasks >= 1, s"$name counted no work: $record")
       assert(s.buildS >= 0 && s.planS >= 0 && s.execS >= 0, s"$name has a negative phase: $record")

@@ -33,7 +33,7 @@ class DriverFinishSpec extends AnyFunSuite {
         .groupBy("attribute")
         .agg(collect_list(struct(col("bin"), col("ns"), col("nr"))).as("cells"),
           sum(col("ns")).as("n_src"), sum(col("nr")).as("n_res"), count(lit(1)).as("k"))
-        .withColumn("k", graft.util.Guard.cellCap(col("k"), col("k"), "Fedex.attrCells"))
+        .withColumn("k", InPlanRef.cellCap(col("k"), col("k"), "Fedex.attrCells"))
 
     private def klSum(cells: Column, nRes: Column, nSrc: Column, k: Column): Column =
       (aggregate(cells, lit(0L),
@@ -83,7 +83,8 @@ class DriverFinishSpec extends AnyFunSuite {
 
   /** GroupByExplain's array-path zdev and exceptionality. */
   private object ZdevRef {
-    import graft.explain.GroupByExplain.{dbig, dval, sigmaExpr}
+    import graft.explain.GroupByExplain.dval
+    import InPlanRef.{dbig, sigmaExpr}
 
     def zdev(m: DataFrame): DataFrame = {
       val g = m.groupBy("measure")
@@ -92,7 +93,7 @@ class DriverFinishSpec extends AnyFunSuite {
           sum((col("v") * col("v")).cast(dbig)).cast(DoubleType).as("svv"),
           collect_list(struct(col("grp"), col("v"))).as("cells"))
         .withColumn("n_groups",
-          graft.util.Guard.cellCap(col("n_groups"), col("n_groups"), "GroupByExplain.zdev"))
+          InPlanRef.cellCap(col("n_groups"), col("n_groups"), "GroupByExplain.zdev"))
       val mu = col("sv") / col("n_groups")
       val sigma = sigmaExpr(col("sv"), col("svv"), col("n_groups"))
       g.select(col("measure"), col("n_groups"), explode(transform(col("cells"), c => struct(
@@ -111,7 +112,8 @@ class DriverFinishSpec extends AnyFunSuite {
   /** Outlier.explain's in-plan finish over the re-entered cube. */
   private object OutlierRef {
     import graft.explain.{Correlation, Fedex}
-    import graft.explain.GroupByExplain.{dbig, dval, sigmaExpr}
+    import graft.explain.GroupByExplain.dval
+    import InPlanRef.{dbig, sigmaExpr}
     import graft.util.D
 
     def explain(src: DataFrame, groupCol: String, aggCol: String, target: String,

@@ -404,12 +404,11 @@ class ExplainFrameSpec extends AnyFunSuite {
     // 3 subspaces (f in a,b,c); only subspace 'a' has a dominant g value
     // -> dominance commonness 1/3 for the per-subspace scopes... build so
     // exactly one of three subspaces shows the pattern:
-    val rows = Seq(
+    val rows = ExplainFrame(Seq(
       ("a", "x", 100.0), ("a", "x", 100.0), ("a", "x", 100.0), ("a", "y", 1.0),
       ("b", "x", 1.0), ("b", "y", 1.0), ("b", "z", 1.0),
       ("c", "x", 1.0), ("c", "y", 1.0), ("c", "z", 1.0))
-      .toDF("f", "g", "v")
-    val pats = graft.explain.MetaInsight.catPatterns(rows, "f", "g", "v", "v_mean")
+      .toDF("f", "g", "v"), "t")
     val dom = (m: org.apache.spark.sql.DataFrame) =>
       m.filter(col("pattern") === "dominance" && col("measure") === "v_mean").collect()
     // default min_commonness=0.5: 'a'-only dominance (commonness 0.5 of
@@ -417,16 +416,15 @@ class ExplainFrameSpec extends AnyFunSuite {
     // the relative behavior instead of absolute: lowering the threshold
     // can only ADD patterns, and there exists a threshold where the rare
     // pattern is dropped
-    val strict = dom(graft.explain.MetaInsight.mine(pats, minCommonness = 0.9))
-    val loose = dom(graft.explain.MetaInsight.mine(pats, minCommonness = 0.1))
+    val strict = dom(rows.explainMetaInsight("f", "g", "v", minCommonness = 0.9))
+    val loose = dom(rows.explainMetaInsight("f", "g", "v", minCommonness = 0.1))
     assert(loose.length >= strict.length)
     assert(loose.nonEmpty, "pattern should exist at low threshold")
     assert(strict.isEmpty, "commonness < 0.9 pattern must be dropped at 0.9")
     // default (0.5) equals the reference default
-    val default = dom(graft.explain.MetaInsight.mine(pats))
+    val default = dom(rows.explainMetaInsight("f", "g", "v"))
     assert(default.forall(_.getAs[Double]("commonness") >= 0.5))
-    intercept[IllegalArgumentException](
-      graft.explain.MetaInsight.mine(pats, minCommonness = 0.0))
+    intercept[IllegalArgumentException](rows.explainMetaInsight("f", "g", "v", minCommonness = 0.0))
   }
 
   test("influence drops single-bin attributes, deviation keeps them") {
@@ -454,8 +452,8 @@ class ExplainFrameSpec extends AnyFunSuite {
     * breakdowns share, and trend families drop a NULL subspace as the
     * categorical ones do. */
   private object AutoRef {
-    import graft.explain.MetaInsight
     import graft.explain.MetaInsight.Breakdown
+    import InPlanRef.MetaInsight
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.types.IntegerType
 
@@ -599,6 +597,60 @@ class ExplainFrameSpec extends AnyFunSuite {
     }
   }
 
+  test("the single-scope driver engine equals the in-plan chain") {
+    import graft.explain.MetaInsight
+    import graft.explain.MetaInsight.Breakdown
+    import org.apache.spark.sql.DataFrame
+    import spark.implicits._
+    val o = graft.util.D.t(spark, sf, "orders")
+    // x and y tie as outlier (z = 2) and as dominant (share 0.5) in
+    // every subspace, so every subspace has the same highlight
+    val ties = Seq("a", "b", "c").flatMap(f =>
+      (Seq("x" -> 10.0, "y" -> 10.0) ++ (0 until 8).map(i => s"p$i" -> 0.0))
+        .map { case (g, v) => (f, g, v) }).toDF("f", "g", "v")
+    val single = Seq(("s1", "dom", 90.0, "2024-01-05"), ("s1", "tiny", 10.0, "2024-02-05"),
+      ("s1", "mid", 30.0, "2024-03-05")).toDF("f", "g", "v", "d").withColumn("d", to_date(col("d")))
+    val nulls = nullFrame(400).withColumnRenamed("ts", "d")
+    // x is an outlier (z = 1.73) only while the all-NULL w cell counts
+    // toward k; without it z = 1.41
+    val nullCell = Seq("a", "b").flatMap(f => Seq(("x", Some(10.0)), ("y", Some(0.0)), ("z", Some(0.0)),
+      ("w", None: Option[Double])).map { case (g, v) => (f, g, v) }).toDF("f", "g", "v")
+    // (name, source, filter dim, categorical breakdown or none, trend on
+    //  column d, measure, min_commonness)
+    val cases = Seq(
+      ("q_metainsight's scope", o.withColumnRenamed("o_orderdate", "d"), "o_orderpriority",
+        Some("o_orderstatus"), true, "o_totalprice", 0.15),
+      ("NULL subspaces, values and all-NULL cells", nulls, "f1", Some("g"), true, "v1", 0.01),
+      ("highlight ties", ties, "f", Some("g"), false, "v", 0.1),
+      ("an all-NULL cell deciding an outlier", nullCell, "f", Some("g"), false, "v", 0.5),
+      ("a single subspace", single, "f", Some("g"), true, "v", 0.5),
+      ("a trend breakdown alone", nulls, "f1", None, true, "v2", 0.01),
+      ("empty input", o.withColumnRenamed("o_orderdate", "d").filter(lit(false)), "o_orderpriority",
+        Some("o_orderstatus"), true, "o_totalprice", 0.01))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.toList).toList
+    val failed = cases.flatMap { case (name, src, f, cat, trend, m, minC) =>
+      val chain = InPlanRef.MetaInsight
+      val pats = cat.map(chain.catPatterns(src, f, _, m, s"${m}_mean")).toSeq ++
+        (if (trend) Seq(chain.trendPatterns(src, f, month(col("d")), "month", m, s"${m}_mean")) else Nil)
+      val want = chain.mine(pats.reduce(_ unionByName _), minCommonness = minC)
+      val got = MetaInsight.explain(src, f, cat.map(b => Breakdown(b, col(b))).toSeq ++
+        (if (trend) Seq(Breakdown("month", month(col("d")), trend = true)) else Nil), m, minC)
+      if (name != "empty input") assert(rows(want).nonEmpty, s"$name: no insight to compare")
+      // schema with nullability, then every row in order, bit-exact
+      if (got.schema != want.schema) Seq(s"$name: schema ${got.schema} vs ${want.schema}")
+      else if (rows(got) != rows(want)) Seq(s"$name:\n${rows(got)}\nvs in-plan\n${rows(want)}")
+      else Nil
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
+    // q_metainsight runs this engine
+    val q = graft.SparkEntry.queries("q_metainsight")(spark, sf)
+    val ref = InPlanRef.MetaInsight
+    val oq = o.withColumnRenamed("o_totalprice", "totalprice")
+    assert(rows(q) === rows(ref.mine(ref.catPatterns(oq, "o_orderpriority", "o_orderstatus", "totalprice",
+      "totalprice_mean").unionByName(ref.trendPatterns(oq, "o_orderpriority", month(col("o_orderdate")),
+      "month", "totalprice", "totalprice_mean")), minCommonness = 0.15)))
+  }
+
   test("combination breakdowns emit one row_count per (filter dim, breakdown)") {
     val o = ExplainFrame(graft.util.D.t(spark, sf, "orders")
       .withColumn("o_year", year(col("o_orderdate")).cast("string"))
@@ -620,43 +672,40 @@ class ExplainFrameSpec extends AnyFunSuite {
 
   test("metainsight excludes NULL filter-dim subspaces") {
     import spark.implicits._
+    import graft.explain.MetaInsight.{Breakdown, patterns}
     // NULL subspace values must not become pattern scopes (the SQL
     // mirrors' stats join drops them); '*' and real values remain
     val rows = Seq(
       (Some("a"), "x", 90.0), (Some("a"), "y", 10.0),
       (None: Option[String], "x", 50.0))
       .toDF("f", "g", "v")
-    val pats = graft.explain.MetaInsight.catPatterns(rows, "f", "g", "v", "v_mean")
-    val subs = pats.select("subspace").distinct().collect().map(_.getString(0)).toSet
+    val subs = patterns(rows, Seq("f" -> Breakdown("g", col("g"))), Seq("v")).map(_.sub).toSet
     assert(subs === Set("a", "*"), s"unexpected subspaces: $subs")
     // the trend family of the same scope counts the same subspaces, as
-    // the auto-search and MetaInsight.sql do
+    // MetaInsight.sql does
     val dated = Seq(
       (Some("a"), "2024-01-05", 1.0), (Some("a"), "2024-02-05", 2.0), (Some("a"), "2024-03-05", 3.0),
       (None: Option[String], "2024-01-09", 9.0), (None: Option[String], "2024-03-09", 1.0))
       .toDF("f", "d", "v").withColumn("d", to_date(col("d")))
-    val trend = graft.explain.MetaInsight.trendPatterns(dated, "f", month(col("d")), "d_month",
-      "v", "v_mean")
-    val trendSubs = trend.select("subspace").distinct().collect().map(_.getString(0)).toSet
+    val trendSubs = patterns(dated, Seq("f" -> Breakdown("d_month", month(col("d")), trend = true)),
+      Seq("v")).map(_.sub).toSet
     assert(trendSubs === Set("a", "*"), s"unexpected trend subspaces: $trendSubs")
   }
 
   test("metainsight highlights skip cells whose metric is NULL") {
     import spark.implicits._
+    import graft.explain.MetaInsight.{Breakdown, patterns}
     // the 'nullcell' breakdown value has only NULL measures -> its mean,
-    // zscore and share are NULL; min_by over struct(-metric, b) would
-    // pick it (NULL struct field sorts smallest) unless NULLs are pushed
-    // last — the highlight must be the genuinely dominant cell
+    // zscore and share are NULL; a sort by (-metric, b) with NULLs first
+    // would pick it — the highlight must be the genuinely dominant cell
     val rows = Seq(
       ("s1", "dom", Some(90.0)), ("s1", "tiny", Some(10.0)),
       ("s1", "nullcell", None: Option[Double]))
       .toDF("f", "g", "v")
-    val pats = graft.explain.MetaInsight.catPatterns(rows, "f", "g", "v", "v_mean")
-      .filter(col("pattern") === "dominance" && col("has_pat") === 1)
-      .collect()
+    val pats = patterns(rows, Seq("f" -> Breakdown("g", col("g"))), Seq("v"))
+      .filter(p => p.pattern == "dominance" && p.hasPat == 1)
     assert(pats.nonEmpty)
-    assert(pats.forall(_.getAs[String]("highlight") == "dom"),
-      s"NULL-metric cell stole the highlight: ${pats.mkString(";")}")
+    assert(pats.forall(_.highlight == "dom"), s"NULL-metric cell stole the highlight: ${pats.mkString(";")}")
   }
 
   test("many-to-one excludes NULL numeric attribute rows from binning") {
@@ -719,7 +768,10 @@ class ExplainFrameSpec extends AnyFunSuite {
           lineitem, "l_orderkey", "l_extendedprice", "1", 1, Seq("l_quantity"))),
         "metainsight" -> intercept[Exception](
           ExplainFrame(lineitem, "lineitem").explainMetaInsightAuto(filterDims = Seq("l_returnflag"),
-            breakdowns = Seq("l_orderkey"), measures = Seq("l_quantity"))))
+            breakdowns = Seq("l_orderkey"), measures = Seq("l_quantity"))),
+        // the single-scope miner is bounded by the cells it gathers in total
+        "metainsight single scope" -> intercept[Exception](
+          ExplainFrame(lineitem, "lineitem").explainMetaInsight("l_returnflag", "l_orderkey", "l_quantity")))
       for ((name, err) <- failures) {
         assert(msgs(err).exists(_.contains("ID-like")), s"$name: wrong error: $err")
         assert(msgs(err).exists(_.contains("a partition gathered 11 cells (bound 10)")),
@@ -760,7 +812,7 @@ class ExplainFrameSpec extends AnyFunSuite {
     val o = graft.util.D.t(spark, sf, "orders")
     val lineitem = graft.util.D.t(spark, sf, "lineitem")
     // every gather is one job of one stage that shuffles nothing: the
-    // auto-search one pass, FEDEx and outlier a min/max pass and a count
+    // MetaInsight one pass, FEDEx and outlier a min/max pass and a count
     // pass, the groupby melt one pass, and so are the notebook
     // operations valueCounts and describeStats
     val explained = {
@@ -768,6 +820,7 @@ class ExplainFrameSpec extends AnyFunSuite {
       try Seq[(String, Int, () => Any)](
         ("metainsight auto", 1, () => ExplainFrame(o, "orders").explainMetaInsightAuto(topK = 5,
           measures = Seq("o_totalprice"))),
+        ("q_metainsight", 1, () => graft.SparkEntry.queries("q_metainsight")(spark, sf)),
         ("fedex", 2, () => ExplainFrame(lineitem, "lineitem").filter(col("l_quantity") >= 30)
           .explainFedex(topK = 3)),
         ("outlier", 2, () => ExplainFrame(o, "orders").groupBy("o_orderpriority")
@@ -803,6 +856,7 @@ class ExplainFrameSpec extends AnyFunSuite {
     try {
       val built = Seq(
         "metainsight auto" -> auto,
+        "q_metainsight" -> graft.SparkEntry.queries("q_metainsight")(spark, sf),
         "correlation suite" -> graft.explain.Correlation.suite(lineitem,
           Seq(("l_quantity", "l_extendedprice")), "l_returnflag", "l_quantity", "l_linestatus"),
         "outlier" -> graft.explain.Outlier.explain(lineitem, "l_returnflag",

@@ -109,6 +109,15 @@ class GatherSpec extends AnyFunSuite {
       invariant(s"auto-search topK $k")(df => ExplainFrame(df, "t").explainMetaInsightAuto(
         topK = k, filterDims = Seq("cat"), breakdowns = Seq("grp", "cat2"), measures = Seq("y"),
         minCommonness = 0.1))
+    // the explicit scopes run the same engine: a categorical scope, and
+    // q_metainsight's categorical + month-trend pair
+    invariant("categorical scope")(df =>
+      ExplainFrame(df, "t").explainMetaInsight("cat", "grp", "y", minCommonness = 0.1))
+    import graft.explain.MetaInsight.{Breakdown, explain}
+    val day = date_add(to_date(lit("2024-01-01")), col("y").cast(IntegerType))
+    invariant("categorical and month-trend scopes")(df => explain(df, "cat",
+      Seq(Breakdown("grp", col("grp")), Breakdown("month", month(day), trend = true)), "x",
+      minCommonness = 0.01))
   }
 
   // ---- the notebook operation cells ---------------------------------------

@@ -17,6 +17,15 @@ workload it prints:
   hides it;
 - each side's quartiles and the distance between them (inclusive method,
   linear interpolation);
+- for each end-to-end metric, a verdict against its bound in the
+  `BENCHMARK.json` at the root of this tree, in the metric's own direction:
+  `regressed` when the change's median is worse than the parent's by more
+  than the bound (as a fraction of the parent's median); else `unresolved`
+  when either side's runs spread wider than the bound (quartile distance
+  over median), unless every change run reads better than every parent run;
+  else `gain` when the change wins at least 9 of 10 pairs and its median
+  beats the parent's by more than the parent's quartile distance; else
+  `neutral`;
 - the failed operations and the output checks of every run;
 - per operation, the median over the untraced warm passes of all runs of
   each side, for the operations whose medians differ most.
@@ -29,6 +38,7 @@ import statistics
 import sys
 
 METRICS = ("setup_s", "cold_pass_s", "warm_pass_s", "peak_rss_mb")
+BENCHMARK = os.path.join(os.path.dirname(os.path.abspath(__file__)), os.pardir, "BENCHMARK.json")
 
 
 def load(d: str, trace: int) -> dict:
@@ -66,11 +76,28 @@ def fmt(xs: list) -> str:
     return " ".join(f"{x:8.3f}" for x in xs)
 
 
-def compare(name: str, p: list, c: list) -> None:
-    """One metric's values per pair, median ratio, wins and quartiles."""
+def verdict(p: list, c: list, bound: float, lower: bool) -> str:
+    """regressed / unresolved / gain / neutral for one end-to-end metric."""
+    sign = 1 if lower else -1
+    pq, cq = quartiles(p), quartiles(c)
+    worse = sign * (cq[1] - pq[1])
+    if worse > bound * abs(pq[1]):
+        return "regressed"
+    spread = max((q[2] - q[0]) / abs(q[1]) if q[1] else float("inf") for q in (pq, cq))
+    if spread > bound and not all(sign * (b - a) < 0 for a in p for b in c):
+        return "unresolved"
+    wins = sum(1 for a, b in zip(p, c) if sign * (b - a) < 0)
+    if wins * 10 >= 9 * len(p) and -worse > pq[2] - pq[0]:
+        return "gain"
+    return "neutral"
+
+
+def compare(name: str, p: list, c: list, bound=None, lower: bool = True) -> None:
+    """One metric's values per pair, median ratio, wins and quartiles, and
+    its verdict when it has a bound."""
     ratio = statistics.median(c) / statistics.median(p) if statistics.median(p) else float("nan")
-    wins = sum(1 for a, b in zip(p, c) if b < a)
-    losses = sum(1 for a, b in zip(p, c) if b > a)
+    wins = sum(1 for a, b in zip(p, c) if (b < a if lower else b > a))
+    losses = sum(1 for a, b in zip(p, c) if (b > a if lower else b < a))
     print(f"{name:12s} parent {fmt(p)}")
     print(f"{'':12s} change {fmt(c)}")
     pq, cq = quartiles(p), quartiles(c)
@@ -79,17 +106,20 @@ def compare(name: str, p: list, c: list) -> None:
     print(f"{'':12s} parent q1 {pq[0]:.3f} median {pq[1]:.3f} q3 {pq[2]:.3f} (IQR {pq[2] - pq[0]:.3f}); "
           f"change q1 {cq[0]:.3f} median {cq[1]:.3f} q3 {cq[2]:.3f} (IQR {cq[2] - cq[0]:.3f}); "
           f"median gap {pq[1] - cq[1]:+.3f}")
+    if bound is not None:
+        print(f"{'':12s} verdict {verdict(p, c, bound, lower)} (bound {bound})")
 
 
-def report(workload: str, pairs: list, top: int) -> None:
+def report(workload: str, pairs: list, top: int, bounds: dict) -> None:
     seeds = [s for s, _, _ in pairs]
     print(f"## {workload}: {len(pairs)} pairs, seeds {seeds}")
     names = [m for m in METRICS if m in pairs[0][1]["metrics"]] or [
         m for m in pairs[0][1]["metrics"]
         if any(r["metrics"][m]["value"] for _, pr, cr in pairs for r in (pr, cr))]
     for m in names:
+        bound, lower = bounds.get(m, (None, True))
         compare(m, [pr["metrics"][m]["value"] for _, pr, _ in pairs],
-                [cr["metrics"][m]["value"] for _, _, cr in pairs])
+                [cr["metrics"][m]["value"] for _, _, cr in pairs], bound, lower)
         if m == "setup_s":
             rounds = min(len(r.get("setup_rounds_s", [])) for _, pr, cr in pairs for r in (pr, cr))
             for i in range(rounds):
@@ -121,13 +151,16 @@ def main() -> None:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--top", type=int, default=8)
     a = ap.parse_args()
+    with open(BENCHMARK) as f:
+        bounds = {m["name"]: (float(m["bound"]), m.get("better", "lower") == "lower")
+                  for m in json.load(f)["end_to_end"] if "bound" in m}
     parent, change = load(a.parent, a.trace), load(a.change, a.trace)
     for key in sorted(set(parent) ^ set(change)):
         print(f"unpaired: {key} only in {'parent' if key in parent else 'change'}")
     for workload in sorted({w for w, _ in set(parent) & set(change)}):
         pairs = [(s, parent[(w, s)], change[(w, s)])
                  for (w, s) in sorted(set(parent) & set(change)) if w == workload]
-        report(workload, pairs, a.top)
+        report(workload, pairs, a.top, bounds)
 
 
 if __name__ == "__main__":
